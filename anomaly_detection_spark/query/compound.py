@@ -90,34 +90,14 @@ class _Target:
             raise ValueError(
                 f"scored match inside a compound query supports the "
                 f"indexed text field {self.text_field!r}; got {fld!r}")
-        if self.is_index:
-            from .index_search import bm25_scores_indexed
-            out = bm25_scores_indexed(self.target, text)
-            if conjunctive:
-                # operator:and on the index path: every query term must
-                # match — intersect with the conjunctive top-all set via
-                # the filter-context predicate on the docs side
-                from ..functions.tokenizer import tokenize_query
-
-                terms = sorted(set(tokenize_query(text)))
-                # docid lists per term are exactly the postings; a doc
-                # matches all terms iff it appears under every term.
-                # Cheap set algebra on (term, docid) pairs:
-                pairs = self._term_doc_pairs(terms)
-                need = len(terms)
-                keep = (pairs.groupBy("docid")
-                        .agg(F.countDistinct("term").alias("_nt"))
-                        .filter(F.col("_nt") == need).select("docid"))
-                out = out.join(keep, "docid")
-            return out
+        from ..functions.tokenizer import tokenize_query
         from .brute_force import bm25_scores
+        from .index_search import bm25_scores_indexed
 
-        return bm25_scores(self.target, text, conjunctive=conjunctive)
-
-    def _term_doc_pairs(self, terms: list[str]) -> DataFrame:
-        from .index_search import term_doc_pairs
-
-        return term_doc_pairs(self.target, terms)
+        # operator:and: a doc must match every distinct query term
+        need = len(set(tokenize_query(text))) if conjunctive else 0
+        scores = bm25_scores_indexed if self.is_index else bm25_scores
+        return scores(self.target, text, min_match=need)
 
     def filter_docids(self, query: dict[str, Any]) -> DataFrame:
         """docids matching ``query`` in filter context."""

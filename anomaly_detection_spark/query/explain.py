@@ -50,8 +50,7 @@ def explain_match(target, query_text: str, docids: list[int] | None = None,
 
         meta = target.meta
         n_docs, avgdl = meta.n_docs, meta.avgdl
-        dfs = {r["term"]: r["df"] for r in target.term_stats()
-               .filter(F.col("term").isin(uniq)).collect()}
+        dfs = target.term_dfs(uniq)
         tf = (term_doc_tfs(target, [t for t in uniq if t in dfs])
               .join(target.doc_stats().select("docid", "doc_len"),
                     "docid"))

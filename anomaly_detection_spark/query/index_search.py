@@ -1,22 +1,29 @@
-"""Index-backed BM25 top-k with block-max pruning (SURVEY.md §2.6 L4/L5).
+"""Index-backed query execution: one segment-scan executor under every
+indexed query type (SURVEY.md §2.6 L4/L5).
 
-Execution shape (scale-first):
+Every indexed query runs Lucene's pipeline — term statistics → weight
+→ per-segment scorer → top-k collector — on the same pieces:
 
-- term_stats lookup for the query's terms → per-term idf (tiny, driver).
-- postings scan filtered to query terms — postings files are sorted by
-  term, so Parquet row-group min/max stats prune everything else.
-- doc_stats scan projected to (docid, doc_len) + the filter predicate —
-  column-pruned and pushed down; range-partitioned by docid.
-- cogroup both by ``seg_id`` → one Arrow batch per segment → numpy
-  scorer: block-max upper bounds summed per bucket of docids; buckets
-  visited in descending-UB order with a running top-k threshold θ and
-  a per-block decode cache — once θ (the k-th best accumulated score)
-  reaches the next bucket's UB, all remaining buckets' undecoded blocks
-  are skipped (block-max WAND at bucket granularity, vectorized — like
-  Lucene's BMW this only *skips* work, never changes results).
-- per-segment top-k under the total order (score desc, docid asc) →
-  global ``orderBy(...).limit(k)`` (TakeOrderedAndProject; only
-  n_segments × k tiny rows cross the final exchange).
+- :meth:`IndexReader.term_dfs`, the one term-dictionary reader: one
+  small collect gives the query terms' df (→ idf weights) or a
+  dictionary range (prefix and span_multi expansion).
+- :func:`_segment_scan`, the executor: postings filtered to the query
+  terms (files are sorted by term, so Parquet row-group stats prune
+  the rest) and the doc-length side (:func:`_docs_side`: norms blobs,
+  or doc_stats rows under a filter) are cogrouped by ``seg_id`` → one
+  Arrow batch per segment; :func:`_run_segment` decodes the segment's
+  doc lengths, runs the kernel and keeps the segment's top-k under
+  (score desc, docid asc); a global ``orderBy(...).limit(k)``
+  (TakeOrderedAndProject) merges n_segments × k rows.
+- one kernel per query type, the only code that differs:
+  :func:`_bm25_kernel` (block-max WAND at bucket granularity: buckets
+  visited in descending upper-bound order with a running top-k θ and a
+  decode cache — like Lucene's BMW it only skips work, never changes
+  results — plus a matched-term floor for ``operator: and`` /
+  ``minimum_should_match``); :func:`_phrase_topk`'s phrase kernel
+  (exact, sloppy, and phrase-prefix as a MultiPhraseQuery) and the span
+  kernels over :func:`_decode_occurrences`; the SynonymQuery group-tf
+  kernel in :mod:`.synonyms`.
 
 Filters (term/range on role/tool/ts) restrict candidate docs via the
 doc_stats side; corpus stats stay index-wide, matching Lucene
@@ -27,6 +34,7 @@ from __future__ import annotations
 
 from collections import Counter
 from dataclasses import dataclass, field
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -34,10 +42,18 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from ..localdf import local_df
 
-from ..functions.bm25 import B_DEFAULT, K1_DEFAULT, bm25_idf
-from ..functions.codecs import BLOB_DECODERS, codec_name, varint_decode
+from ..functions.bm25 import B_DEFAULT, K1_DEFAULT, bm25_idf, quantize_doc_len
+from ..functions.codecs import (BLOB_DECODERS, codec_name, decode_positions,
+                                varint_decode)
 from ..functions.tokenizer import tokenize_query
 from ..index.storage import IndexMeta, IndexPaths, read_meta
+
+_HITS = "docid long, score double"
+_DOCIDS = "docid long"
+_BM25_COLS = ("first_docid", "last_docid", "gaps", "tfs", "max_tf", "n")
+# block-max bound inputs, read only when pruning may run
+_BLOCK_MAX_COLS = ("min_dl", "bm_buckets", "bm_tf", "bm_dl")
+_POSITIONAL_COLS = ("first_docid", "gaps", "tfs", "pos")
 
 
 @dataclass
@@ -62,6 +78,23 @@ class IndexReader:
     def term_stats(self) -> DataFrame:
         return self.spark.read.parquet(self.paths.term_stats)
 
+    def term_dfs(self, terms, limit: int | None = None) -> dict[str, int]:
+        """term → df from the term dictionary, in one collect: for the
+        terms of a list that the index holds, or for the dictionary
+        terms matching a Column predicate — the first ``limit`` of them
+        in term order when a limit is given."""
+        if isinstance(terms, Column):
+            cond = terms
+        else:
+            terms = list(terms)
+            if not terms:
+                return {}
+            cond = F.col("term").isin(terms)
+        rows = self.term_stats().filter(cond).select("term", "df")
+        if limit is not None:
+            rows = rows.orderBy("term").limit(limit)
+        return {r["term"]: r["df"] for r in rows.collect()}
+
     def manifest(self) -> DataFrame:
         return self.spark.read.parquet(self.paths.manifest)
 
@@ -75,7 +108,7 @@ def _segment_doclens(docs: pd.DataFrame, seg_base: int,
                      seg_size: int, quantize_norms: bool) -> np.ndarray:
     """Per-local-docid doc lengths for one segment (−1 = filtered out /
     absent), from either compact norms blobs or filtered doc_stats
-    rows.  Shared by the BM25 and the positional phrase scorers."""
+    rows."""
     dl = np.full(seg_size, -1.0)
     if "docid_gaps" in docs.columns:
         # compact per-segment norms blobs (no doc_stats shuffle).  A
@@ -91,18 +124,118 @@ def _segment_doclens(docs: pd.DataFrame, seg_base: int,
         dl[docs["docid"].to_numpy(dtype=np.int64) - seg_base] = \
             docs["doc_len"].to_numpy(dtype=np.float64)
     if quantize_norms:
-        from ..functions.bm25 import quantize_doc_len
-
         present = dl >= 0
         dl[present] = quantize_doc_len(dl[present].astype(np.int64))
     return dl
 
 
-def _score_segment(
+def _saturate(w, tf, dl, k1: float, b: float, avgdl: float):
+    """BM25 contribution w · tf(k1+1) / (tf + k1(1 − b + b·dl/avgdl))."""
+    return w * (tf * (k1 + 1.0)) / (
+        tf + k1 * (1.0 - b + b * dl / max(avgdl, 1e-12)))
+
+
+_NO_HITS = (np.empty(0, dtype=np.int64), np.empty(0))
+
+
+def _run_segment(posts: pd.DataFrame, docs: pd.DataFrame, kernel,
+                 seg_size: int, k: int | None, scored: bool = True,
+                 quantize_norms: bool = False) -> pd.DataFrame:
+    """One segment through a kernel: decode the segment's doc lengths,
+    call ``kernel(posts, dl, seg_base)`` for its local hits — (docids,
+    scores), or bare docids when not ``scored`` — and keep the top-k
+    under (score desc, docid asc) when ``k`` is given."""
+    seg_base = 0
+    cand, sc = _NO_HITS
+    if len(posts) and len(docs):
+        seg_base = int(posts["seg_id"].iloc[0]) * seg_size
+        dl = _segment_doclens(docs, seg_base, seg_size, quantize_norms)
+        hits = kernel(posts, dl, seg_base)
+        cand, sc = hits if scored else (hits, None)
+    docid = np.asarray(cand, dtype=np.int64) + seg_base
+    if not scored:
+        return pd.DataFrame({"docid": docid})
+    if k is not None:
+        order = np.lexsort((cand, -sc))[:k]
+        docid, sc = docid[order], sc[order]
+    return pd.DataFrame({"docid": docid,
+                         "score": np.asarray(sc, dtype=np.float64)})
+
+
+def _docs_side(reader: IndexReader, filter_cond: Column | None) -> DataFrame:
+    """Doc-length side of a scored query: compact norms blobs (~1
+    byte/doc, no doc_stats shuffle) on pure match; filtered doc_stats
+    rows when a filter context restricts candidates."""
+    if filter_cond is None:
+        return reader.doc_norms().select("seg_id", "docid_gaps", "dls")
+    return reader.doc_stats().filter(filter_cond).select(
+        "docid", "doc_len",
+        (F.col("docid") / reader.meta.seg_size).cast("int").alias("seg_id"))
+
+
+def _segment_scan(reader: IndexReader, terms, cols, kernel,
+                  filter_cond: Column | None = None, k: int | None = None,
+                  scored: bool = True, quantize_norms: bool = False,
+                  two_phase: bool = False) -> DataFrame:
+    """The segment-scan executor every indexed query type runs on.
+
+    Reads the posting blocks of ``terms`` (``term``, ``seg_id`` and
+    those of ``cols`` the index carries) and the doc-length side under
+    ``filter_cond``, cogroups them by ``seg_id`` and runs
+    :func:`_run_segment` with ``kernel`` once per segment.  Returns the
+    global top-k by (score desc, docid asc) when ``k`` is given, every
+    scored hit unordered when it is not, and matching docids by docid
+    when not ``scored``.
+
+    ``two_phase`` scores the densest segment (most postings, column
+    ``n``) first and passes its k-th score to every other segment's
+    kernel as ``theta_init`` — the cross-segment competitive-score
+    propagation Lucene does with MaxScoreAccumulator: identical
+    results, more skipping, one extra tiny job."""
+    src = reader.postings()
+    posts = (src.filter(F.col("term").isin(list(terms)))
+             .select("term", "seg_id",
+                     *[c for c in cols if c in src.columns]))
+    docs = _docs_side(reader, filter_cond)
+    seg_size = reader.meta.seg_size
+
+    def scan(p: DataFrame, d: DataFrame, kern) -> DataFrame:
+        def one(pp: pd.DataFrame, dd: pd.DataFrame) -> pd.DataFrame:
+            return _run_segment(pp, dd, kern, seg_size, k, scored,
+                                quantize_norms)
+
+        return (p.groupBy("seg_id").cogroup(d.groupBy("seg_id"))
+                .applyInPandas(one, schema=_HITS if scored else _DOCIDS))
+
+    if not scored:
+        return scan(posts, docs, kernel).orderBy("docid")
+    if k is None:
+        return scan(posts, docs, kernel)
+    hits = None
+    if two_phase:
+        seed = (posts.groupBy("seg_id").agg(F.sum("n").alias("_n"))
+                .orderBy(F.desc("_n"), F.asc("seg_id")).first())
+        if seed is not None:
+            on_seed = F.col("seg_id") == seed["seg_id"]
+            seed_rows = scan(posts.filter(on_seed), docs.filter(on_seed),
+                             kernel).collect()
+            theta0 = (min(r["score"] for r in seed_rows)
+                      if len(seed_rows) >= k else -np.inf)
+            hits = scan(posts.filter(~on_seed), docs.filter(~on_seed),
+                        partial(kernel, theta_init=theta0))
+            if seed_rows:
+                hits = hits.unionByName(
+                    local_df(reader.spark, seed_rows, _HITS))
+    if hits is None:
+        hits = scan(posts, docs, kernel)
+    return hits.orderBy(F.desc("score"), F.asc("docid")).limit(k)
+
+
+def _bm25_kernel(
     posts: pd.DataFrame,
-    docs: pd.DataFrame,
+    dl: np.ndarray,
+    seg_base: int,
     weights: dict[str, float],
-    seg_size: int,
     avgdl: float,
     k: int | None,
     k1: float,
@@ -113,19 +246,20 @@ def _score_segment(
     theta_init: float = -np.inf,
     n_required: int = 0,
     decode=None,
-) -> pd.DataFrame:
+) -> tuple[np.ndarray, np.ndarray]:
+    """BM25 over one segment's posting blocks → (local docids, scores)
+    of every candidate that can reach the top-``k`` (all matches when
+    ``k`` is None).  ``n_required`` > 0 keeps only docs matching at
+    least that many distinct query terms."""
     if decode is None:
         # resolved at CALL time through the module global so test
         # instrumentation (and future codec swaps) see every decode
         decode = varint_decode
-    empty = pd.DataFrame({"docid": pd.Series(dtype="int64"),
-                          "score": pd.Series(dtype="float64")})
-    if len(posts) == 0 or len(docs) == 0:
-        return empty
-    if k is None:
-        prune = False  # all-candidates mode: dense scoring, no cut
-    seg_base = int(posts["seg_id"].iloc[0]) * seg_size
-    dl = _segment_doclens(docs, seg_base, seg_size, quantize_norms)
+    if k is None or len(posts) < 16:
+        # all-candidates mode (no cut to prune toward), or too few
+        # blocks for the pruning overhead to pay: dense scoring
+        prune = False
+    seg_size = len(dl)
 
     terms = posts["term"].to_numpy(dtype=object)
     firsts = posts["first_docid"].to_numpy(dtype=np.int64)
@@ -141,11 +275,8 @@ def _score_segment(
     else:
         min_dls = np.zeros(len(posts))
     if quantize_norms:
-        from ..functions.bm25 import quantize_doc_len as _q
-
-        min_dls = _q(min_dls.astype(np.int64)).astype(np.float64)
-    ub = w_arr * (max_tfs * (k1 + 1.0)) / (
-        max_tfs + k1 * (1.0 - b + b * min_dls / max(avgdl, 1e-12)))
+        min_dls = quantize_doc_len(min_dls.astype(np.int64)).astype(np.float64)
+    ub = _saturate(w_arr, max_tfs, min_dls, k1, b, avgdl)
 
     n_buckets = (seg_size + bucket - 1) // bucket
     bf = (firsts - seg_base) // bucket
@@ -163,13 +294,28 @@ def _score_segment(
         dlv = dl[loc]
         ok = dlv >= 0
         loc, tf, dlv = loc[ok], tf[ok], dlv[ok]
-        contrib = w_arr[i] * (tf * (k1 + 1.0)) / (
-            tf + k1 * (1.0 - b + b * dlv / max(avgdl, 1e-12)))
-        return loc, contrib
+        return loc, _saturate(w_arr[i], tf, dlv, k1, b, avgdl)
 
-    if prune and len(posts) >= 16 and theta_init == -np.inf:
-        # Cheap skip-potential gate (O(blocks), before any impact-table
-        # flattening): skipping exists only where some term's postings
+    n_posts = len(posts)
+    term_ids = pd.factorize(terms)[0]
+    n_terms_q = int(term_ids.max()) + 1
+    # bm columns count as present only when non-null for EVERY row: an
+    # index mixing pre-impact-table batches with new ones (parquet
+    # schema union null-fills the old rows) must fall back wholesale to
+    # the legacy block-level bound instead of raising on np.asarray(None).
+    has_bm = (prune and "bm_buckets" in posts.columns
+              and posts["bm_buckets"].notna().all())
+    if has_bm:
+        # per-bucket impact tables (Lucene-impacts analog), flattened
+        # once: one concat per column, no per-block Python loop
+        bm_b = posts["bm_buckets"].to_numpy(dtype=object)
+        lens_e = np.fromiter((len(x) for x in bm_b), np.int64, n_posts)
+        all_b = np.concatenate(bm_b).astype(np.int64)
+        blk_rep = np.repeat(np.arange(n_posts), lens_e)
+
+    if has_bm and theta_init == -np.inf:
+        # Cheap skip-potential gate (O(impact entries), before any bound
+        # is computed): skipping exists only where some term's postings
         # are CONCENTRATED in docid space (topical clustering) — then
         # tail buckets lack that term's mass and fall below θ.  If every
         # term's blocks touch ≈ as many buckets as they possibly could
@@ -177,30 +323,19 @@ def _score_segment(
         # skips ~nothing on such data either) — score densely and save
         # the bucket machinery.  With a θ_init floor (two-phase), keep
         # pruning: a cross-segment θ can cut uniform tails too.
-        if ("bm_buckets" in posts.columns
-                and posts["bm_buckets"].notna().all()):
-            bmb = posts["bm_buckets"].to_numpy(dtype=object)
-            lens_g = np.fromiter((len(x) for x in bmb), np.int64, len(posts))
-            if lens_g.sum():
-                tid = pd.factorize(terms)[0]
-                n_terms_q = int(tid.max()) + 1
-                flat_t = np.repeat(tid, lens_g)
-                flat_b = np.concatenate(bmb).astype(np.int64)
-                # distinct buckets each TERM's postings touch, vs the
-                # most it could touch given its df (a term spread over
-                # ~every reachable bucket has no concentration for any
-                # exact bound to exploit)
-                pair = np.unique(flat_t * np.int64(n_buckets) + flat_b)
-                touched_t = np.bincount(pair // n_buckets,
-                                        minlength=n_terms_q)
-                n_term = np.zeros(n_terms_q, dtype=np.int64)
-                np.add.at(n_term, tid, posts["n"].to_numpy(np.int64))
-                possible = np.minimum(np.maximum(n_term, 1), n_buckets)
-                cov_t = touched_t / np.maximum(possible, 1)
-                if (cov_t >= 0.85).all():
-                    prune = False
+        # distinct buckets each TERM's postings touch, vs the most it
+        # could touch given its df (a term spread over ~every reachable
+        # bucket has no concentration for any exact bound to exploit)
+        pair = np.unique(term_ids[blk_rep] * np.int64(n_buckets) + all_b)
+        touched_t = np.bincount(pair // n_buckets, minlength=n_terms_q)
+        n_term = np.zeros(n_terms_q, dtype=np.int64)
+        np.add.at(n_term, term_ids, posts["n"].to_numpy(np.int64))
+        possible = np.minimum(np.maximum(n_term, 1), n_buckets)
+        cov_t = touched_t / np.maximum(possible, 1)
+        if (cov_t >= 0.85).all():
+            prune = False
 
-    if prune and len(posts) >= 16:  # pruning overhead only pays at volume
+    if prune:
         # --- block-max WAND at bucket granularity -------------------------
         # Bucket UB = Σ_terms max(block UB over the term's blocks
         # overlapping the bucket) — a doc in the bucket sits in exactly
@@ -214,39 +349,19 @@ def _score_segment(
         # most once (cache), so pruned decode count ≤ unpruned,
         # strictly less whenever a tail bucket holds blocks no
         # processed bucket touched.
-        term_ids = pd.factorize(terms)[0]
-        n_posts = len(posts)
-        # bm columns count as present only when non-null for EVERY row:
-        # an index mixing pre-impact-table batches with new ones (parquet
-        # schema union null-fills the old rows) must fall back wholesale
-        # to the legacy block-level bound instead of raising on
-        # np.asarray(None).
-        has_bm = ("bm_buckets" in posts.columns
-                  and posts["bm_buckets"].notna().all())
         if has_bm:
-            # per-bucket impact tables (Lucene-impacts analog): bound =
-            # w · f(bucket max_tf, bucket min_dl), only where the term
-            # actually has postings — a rare term's single segment-wide
-            # block no longer paints every bucket with its global max.
-            # Flattened once: one concat + one ufunc per column, no
-            # per-block Python loop.
-            bm_b = posts["bm_buckets"].to_numpy(dtype=object)
-            lens_e = np.fromiter((len(x) for x in bm_b), np.int64, n_posts)
-            all_b = (np.concatenate(bm_b).astype(np.int64) if lens_e.sum()
-                     else np.empty(0, np.int64))
+            # bound = w · f(bucket max_tf, bucket min_dl), only where the
+            # term actually has postings — a rare term's single
+            # segment-wide block does not paint every bucket with its
+            # global max
             all_t = np.concatenate(
-                posts["bm_tf"].to_numpy(dtype=object)).astype(np.float64) \
-                if lens_e.sum() else np.empty(0)
+                posts["bm_tf"].to_numpy(dtype=object)).astype(np.float64)
             all_d = np.concatenate(
-                posts["bm_dl"].to_numpy(dtype=object)).astype(np.float64) \
-                if lens_e.sum() else np.empty(0)
+                posts["bm_dl"].to_numpy(dtype=object)).astype(np.float64)
             if quantize_norms:
-                from ..functions.bm25 import quantize_doc_len as _qq
-
-                all_d = _qq(all_d.astype(np.int64)).astype(np.float64)
-            blk_rep = np.repeat(np.arange(n_posts), lens_e)
-            all_u = w_arr[blk_rep] * (all_t * (k1 + 1.0)) / (
-                all_t + k1 * (1.0 - b + b * all_d / max(avgdl, 1e-12)))
+                all_d = quantize_doc_len(
+                    all_d.astype(np.int64)).astype(np.float64)
+            all_u = _saturate(w_arr[blk_rep], all_t, all_d, k1, b, avgdl)
         else:
             # legacy blocks: block-level (max_tf, min_dl) painted over
             # the whole docid span — expand each block's bucket range
@@ -257,7 +372,7 @@ def _score_segment(
                      - np.repeat(starts, lens_e))
             blk_rep = np.repeat(np.arange(n_posts), lens_e)
             all_u = np.repeat(ub, lens_e)
-        tb_ub = np.zeros((int(term_ids.max()) + 1, n_buckets))
+        tb_ub = np.zeros((n_terms_q, n_buckets))
         np.maximum.at(tb_ub, (term_ids[blk_rep], all_b), all_u)
         s_bucket = tb_ub.sum(axis=0)
         # CSR bucket → blocks (replaces per-entry Python list appends)
@@ -286,7 +401,27 @@ def _score_segment(
         theta = theta_init
         full = np.zeros(seg_size)
         decoded_blk = np.zeros(n_posts, dtype=bool)
-        n_decoded = 0
+
+        def add_blocks(blocks) -> None:
+            for i in blocks:
+                i = int(i)
+                if not decoded_blk[i]:
+                    loc, contrib = decode_block(i)
+                    full[loc] += contrib
+                    decoded_blk[i] = True
+
+        def collect(bkts: np.ndarray) -> np.ndarray:
+            """Scored docs of the buckets ``bkts`` (complete: all their
+            blocks are decoded)."""
+            bmask = np.zeros(n_buckets, dtype=bool)
+            bmask[bkts] = True
+            cand_r = np.flatnonzero(
+                (full > 0) & np.repeat(bmask, bucket)[:seg_size])
+            if len(cand_r):
+                col_doc.append(cand_r)
+                col_sc.append(full[cand_r])
+            return cand_r
+
         pos_v = 0
         round_sz = 1
         # weakest bucket that actually holds postings: while θ ≤ s_min
@@ -302,23 +437,11 @@ def _score_segment(
                 take = take[s_bucket[take] >= theta]
             if len(take) == 0:
                 break               # visit order is UB-descending: done
-            segs = [csr_blocks[boff[b]:boff[b + 1]] for b in take]
-            need = np.unique(np.concatenate(segs)) if segs else []
-            for i in need:
-                i = int(i)
-                if not decoded_blk[i]:
-                    loc, contrib = decode_block(i)
-                    full[loc] += contrib
-                    decoded_blk[i] = True
-                    n_decoded += 1
-            bmask = np.zeros(n_buckets, dtype=bool)
-            bmask[take] = True
-            flat = np.repeat(bmask, bucket)[:seg_size]
-            cand_r = np.flatnonzero((full > 0) & flat)
+            add_blocks(np.unique(np.concatenate(
+                [csr_blocks[boff[b]:boff[b + 1]] for b in take])))
+            cand_r = collect(take)
             if len(cand_r) == 0:
                 continue
-            col_doc.append(cand_r)
-            col_sc.append(full[cand_r])
             best = np.sort(np.concatenate([best, full[cand_r]]))[-k:]
             if len(best) >= k:
                 theta = max(theta, float(best[0]))
@@ -332,55 +455,102 @@ def _score_segment(
                     rest = visit[pos_v:]
                     rest = rest[s_bucket[rest] > 0]
                     if len(rest):
-                        for i in np.flatnonzero(~decoded_blk):
-                            loc, contrib = decode_block(int(i))
-                            full[loc] += contrib
-                            n_decoded += 1
-                        bmask = np.zeros(n_buckets, dtype=bool)
-                        bmask[rest] = True
-                        flat = np.repeat(bmask, bucket)[:seg_size]
-                        cand_r = np.flatnonzero((full > 0) & flat)
-                        if len(cand_r):
-                            col_doc.append(cand_r)
-                            col_sc.append(full[cand_r])
+                        add_blocks(np.flatnonzero(~decoded_blk))
+                        collect(rest)
                     break
         if not col_doc:
-            return empty
+            return _NO_HITS
         cand = np.concatenate(col_doc)
         sc = np.concatenate(col_sc)
     else:
         scores = np.zeros(seg_size)
         cnts = np.zeros(seg_size, dtype=np.int32) if n_required else None
-        for i in range(len(posts)):
+        for i in range(n_posts):
             loc, contrib = decode_block(i)
             scores[loc] += contrib  # docids unique within a block
             if cnts is not None:
                 # one block per (term, doc) in a segment, so this counts
-                # distinct matched terms (conjunctive match support)
+                # distinct matched terms (operator:and,
+                # minimum_should_match)
                 cnts[loc] += 1
         if cnts is not None:
-            cand = np.flatnonzero((scores > 0) & (cnts == n_required))
+            cand = np.flatnonzero((scores > 0) & (cnts >= n_required))
         else:
             cand = np.flatnonzero(scores > 0)
-        if len(cand) == 0:
-            return empty
         sc = scores[cand]
-
-    if k is None:
-        return pd.DataFrame({"docid": cand + seg_base, "score": sc})
-    order = np.lexsort((cand, -sc))[:k]
-    return pd.DataFrame({"docid": cand[order] + seg_base, "score": sc[order]})
+    return cand, sc
 
 
-def _docs_side(reader: IndexReader, filter_cond: Column | None) -> DataFrame:
-    """Doc-length side of a scored query: compact norms blobs (~1
-    byte/doc, no doc_stats shuffle) on pure match; filtered doc_stats
-    rows when a filter context restricts candidates."""
-    if filter_cond is None:
-        return reader.doc_norms().select("seg_id", "docid_gaps", "dls")
-    return reader.doc_stats().filter(filter_cond).select(
-        "docid", "doc_len",
-        (F.col("docid") / reader.meta.seg_size).cast("int").alias("seg_id"))
+def _score_segment(
+    posts: pd.DataFrame,
+    docs: pd.DataFrame,
+    weights: dict[str, float],
+    seg_size: int,
+    avgdl: float,
+    k: int | None,
+    k1: float,
+    b: float,
+    prune: bool,
+    bucket: int = 1024,
+    quantize_norms: bool = False,
+    theta_init: float = -np.inf,
+    n_required: int = 0,
+    decode=None,
+) -> pd.DataFrame:
+    """One segment of the BM25 scan run locally — the executor's
+    :func:`_run_segment` over :func:`_bm25_kernel` — for kernel-level
+    checks and pruning statistics."""
+    kernel = partial(_bm25_kernel, weights=weights, avgdl=avgdl, k=k,
+                     k1=k1, b=b, prune=prune, bucket=bucket,
+                     quantize_norms=quantize_norms, theta_init=theta_init,
+                     n_required=n_required, decode=decode)
+    return _run_segment(posts, docs, kernel, seg_size, k,
+                        quantize_norms=quantize_norms)
+
+
+def _bm25(reader: IndexReader, qcounts: Counter, k: int | None,
+          filter_cond: Column | None, k1: float, b: float,
+          min_match: int = 0, prune: bool = False,
+          quantize_norms: bool = False, bucket: int | None = None,
+          two_phase: bool = False) -> DataFrame:
+    """BM25 of a bag of query terms (term → multiplicity) on the
+    segment-scan executor: top-``k``, or every match when ``k`` is
+    None; ``min_match`` is the matched-distinct-term floor."""
+    meta = reader.meta
+    uniq = sorted(qcounts)
+    dfs = reader.term_dfs(uniq)
+    present = [t for t in uniq if t in dfs]
+    # a term absent from the corpus matches nothing, so it cannot count
+    # toward the floor (operator:and: no doc can match every clause)
+    if len(present) < max(min_match, 1):
+        return local_df(reader.spark, [], _HITS)
+    if min_match or k is None:
+        # dense scoring: no cut to prune toward, or a matched-term floor
+        # that block-max's OR-shaped upper bounds do not model
+        prune = two_phase = False
+    # duplicate query terms sum their contribution (bool SHOULD), so the
+    # per-term weight is idf × multiplicity
+    weights = {t: float(bm25_idf(dfs[t], meta.n_docs)) * qcounts[t]
+               for t in present}
+    dec = BLOB_DECODERS[codec_name(meta.codec)]
+    avgdl, bucket_size = meta.avgdl, meta.bucket_size
+
+    def kernel(p: pd.DataFrame, dl: np.ndarray, seg_base: int,
+               theta_init: float = -np.inf):
+        # indexes carrying per-bucket impact tables pin the pruning
+        # grid to the one the tables were cut on
+        grid = (bucket_size if "bm_buckets" in p.columns
+                else 1024 if bucket is None else bucket)
+        return _bm25_kernel(p, dl, seg_base, weights, avgdl, k, k1, b,
+                            prune, bucket=grid,
+                            quantize_norms=quantize_norms,
+                            theta_init=theta_init, n_required=min_match,
+                            decode=dec)
+
+    cols = _BM25_COLS + (_BLOCK_MAX_COLS if prune else ())
+    return _segment_scan(reader, present, cols, kernel, filter_cond, k,
+                         quantize_norms=quantize_norms,
+                         two_phase=two_phase)
 
 
 def bm25_topk_indexed(
@@ -404,85 +574,14 @@ def bm25_topk_indexed(
     (the grid the tables were cut on).
 
     ``two_phase`` scores the densest segment first and broadcasts its
-    k-th score as every other segment's starting θ (the cross-segment
-    competitive-score propagation Lucene does with MaxScoreAccumulator)
-    — identical results, strictly more skipping, one extra tiny job."""
-    spark = reader.spark
-    meta = reader.meta
+    k-th score as every other segment's starting θ (see
+    :func:`_segment_scan`).  ``conjunctive`` is match ``operator: and``:
+    only docs holding every query term score (scored densely)."""
     qcounts = Counter(tokenize_query(query_text))
-    uniq = sorted(qcounts)
-    empty = local_df(spark, [], "docid long, score double")
-    if not uniq:
-        return empty
-
-    stats = {r["term"]: r["df"]
-             for r in reader.term_stats().filter(F.col("term").isin(uniq)).collect()}
-    present = [t for t in uniq if t in stats]
-    if not present:
-        return empty
-    if conjunctive:
-        # match operator:and — a query term absent from the corpus means
-        # no doc can satisfy every clause (OpenSearch semantics)
-        if len(present) < len(uniq):
-            return empty
-        # the conjunctive candidate set is already tiny; block-max
-        # pruning's OR-shaped upper bounds don't model the AND filter,
-        # so score densely and filter on matched-term count instead
-        prune = False
-        two_phase = False
-    # duplicate query terms sum their contribution (bool SHOULD), so the
-    # per-term weight is idf × multiplicity
-    weights = {t: float(bm25_idf(stats[t], meta.n_docs)) * qcounts[t]
-               for t in present}
-
-    post_cols = ["term", "seg_id", "first_docid", "last_docid", "gaps",
-                 "tfs", "max_tf", "n"]
-    src = reader.postings()
-    if "min_dl" in src.columns:
-        post_cols.append("min_dl")
-    if "bm_buckets" in src.columns:
-        post_cols += ["bm_buckets", "bm_tf", "bm_dl"]
-        bucket = meta.bucket_size  # the grid the impact tables live on
-    elif bucket is None:
-        bucket = 1024
-    posts = src.filter(F.col("term").isin(present)).select(*post_cols)
-    docs = _docs_side(reader, filter_cond)
-
-    seg_size, avgdl = meta.seg_size, meta.avgdl
-    dec = BLOB_DECODERS[codec_name(meta.codec)]
-
-    n_required = len(uniq) if conjunctive else 0
-
-    def _cogroup_score(p, d, theta_init=-np.inf):
-        def _score(pleft: pd.DataFrame, pright: pd.DataFrame) -> pd.DataFrame:
-            return _score_segment(pleft, pright, weights, seg_size, avgdl,
-                                  k, k1, b, prune, bucket=bucket,
-                                  quantize_norms=quantize_norms,
-                                  theta_init=theta_init,
-                                  n_required=n_required, decode=dec)
-
-        return (p.groupBy("seg_id").cogroup(d.groupBy("seg_id"))
-                .applyInPandas(_score, schema="docid long, score double"))
-
-    if two_phase and prune:
-        seed = (posts.groupBy("seg_id").agg(F.sum("n").alias("_n"))
-                .orderBy(F.desc("_n"), F.asc("seg_id")).first())
-        if seed is not None:
-            seed_seg = seed["seg_id"]
-            seed_rows = _cogroup_score(
-                posts.filter(F.col("seg_id") == seed_seg),
-                docs.filter(F.col("seg_id") == seed_seg)).collect()
-            theta0 = (min(r["score"] for r in seed_rows)
-                      if len(seed_rows) >= k else -np.inf)
-            rest = _cogroup_score(posts.filter(F.col("seg_id") != seed_seg),
-                                  docs.filter(F.col("seg_id") != seed_seg),
-                                  theta_init=theta0)
-            both = rest if not seed_rows else rest.unionByName(
-                local_df(spark, seed_rows, "docid long, score double"))
-            return both.orderBy(F.desc("score"), F.asc("docid")).limit(k)
-
-    local = _cogroup_score(posts, docs)
-    return local.orderBy(F.desc("score"), F.asc("docid")).limit(k)
+    return _bm25(reader, qcounts, k, filter_cond, k1, b,
+                 min_match=len(qcounts) if conjunctive else 0,
+                 prune=prune, quantize_norms=quantize_norms,
+                 bucket=bucket, two_phase=two_phase)
 
 
 def bm25_scores_indexed(
@@ -491,41 +590,145 @@ def bm25_scores_indexed(
     filter_cond: Column | None = None,
     k1: float = K1_DEFAULT,
     b: float = B_DEFAULT,
+    min_match: int | None = None,
 ) -> DataFrame:
     """Per-doc BM25 scores of EVERY matching doc via the posting index
     (no top-k cut) — the index twin of ``brute_force.bm25_scores``.
     Cost is bounded by the query terms' posting lists (a scan of only
     those parquet row groups), never a corpus re-analysis; the
-    combining consumer (multi_match) needs full score sets, so no
-    pruning applies.  Returns (docid, score), unordered."""
-    spark = reader.spark
+    combining consumers (multi_match, compounds, more_like_this) need
+    full score sets, so no pruning applies.  ``min_match`` keeps only
+    docs matching at least that many distinct query terms (operator:and,
+    minimum_should_match).  Returns (docid, score), unordered."""
+    return _bm25(reader, Counter(tokenize_query(query_text)), None,
+                 filter_cond, k1, b, min_match=min_match or 0)
+
+
+def _require_positions(reader: IndexReader, what: str) -> None:
+    if not reader.meta.positions:
+        raise ValueError(
+            f"index at {reader.index_dir} was built without positions; "
+            f"rebuild with build_index(..., positions=True) for {what}, "
+            f"or use the brute-force path")
+
+
+def _decode_occurrences(p: pd.DataFrame, seg_base: int, dec, codec: str,
+                        ordered: bool = False) -> dict:
+    """term → (local docids, positions), one entry per occurrence, from
+    a segment's positional posting blocks; ``ordered`` sorts each
+    term's stream by (docid, position)."""
+    occ: dict[str, tuple[np.ndarray, np.ndarray]] = {}
+    for t, grp in p.groupby("term", sort=False):
+        locs, poss = [], []
+        for first, gaps, tfs_blob, pos_blob in zip(
+                grp["first_docid"], grp["gaps"], grp["tfs"], grp["pos"]):
+            docids = np.cumsum(dec(gaps)).astype(np.int64) + first
+            tfs = dec(tfs_blob).astype(np.int64)
+            locs.append(np.repeat(docids - seg_base, tfs))
+            poss.append(decode_positions(pos_blob, tfs, codec=codec))
+        loc, pos = np.concatenate(locs), np.concatenate(poss)
+        if ordered:
+            order = np.lexsort((pos, loc))
+            loc, pos = loc[order], pos[order]
+        occ[t] = (loc, pos)
+    return occ
+
+
+_STRIDE = np.int64(1) << np.int64(32)   # local docid ⊕ position key
+
+
+def _phrase_topk(reader: IndexReader, offsets: list[list[str]],
+                 dfs: dict[str, int], k: int, filter_cond: Column | None,
+                 k1: float, b: float, slop: int = 0,
+                 slop_semantics: str = "anchor") -> DataFrame:
+    """Scored phrase over positional postings, MultiPhraseQuery shape:
+    offset j of the phrase matches any term of ``offsets[j]`` (one term
+    for match_phrase; the prefix expansions at the last offset of
+    match_phrase_prefix).  The weight is Σ over offsets of the idf of
+    the offset's max df; tf is the phrase frequency; BM25 saturation.
+
+    Per segment each offset j contributes the sorted keys (docid,
+    pos − j) of its terms' occurrences.  Exact (``slop=0``): the
+    intersection across offsets is exactly the phrase start positions
+    (overlapping occurrences counted, like Lucene's position
+    enumeration) — m−1 sorted ``intersect1d`` passes.  ``slop > 0``,
+    ``"anchor"``: each offset-0 key looks up its NEAREST neighbor in
+    every other offset's keys (two ``searchsorted`` probes per offset),
+    matchLength = Σ distances, tf = Σ 1/(1+matchLength) over anchors
+    within slop.  ``"lucene"``: candidate docs (holding every offset)
+    come from the same key sets, then each candidate's adjusted
+    position lists are sliced out and swept by the reference-exact
+    SloppyPhraseScorer (:mod:`.sloppy`)."""
+    if any(not any(t in dfs for t in off) for off in offsets):
+        return local_df(reader.spark, [], _HITS)  # an offset can't match
     meta = reader.meta
-    qcounts = Counter(tokenize_query(query_text))
-    uniq = sorted(qcounts)
-    empty = local_df(spark, [], "docid long, score double")
-    if not uniq:
-        return empty
-    stats = {r["term"]: r["df"] for r in reader.term_stats()
-             .filter(F.col("term").isin(uniq)).collect()}
-    present = [t for t in uniq if t in stats]
-    if not present:
-        return empty
-    weights = {t: float(bm25_idf(stats[t], meta.n_docs)) * qcounts[t]
-               for t in present}
-    post_cols = ["term", "seg_id", "first_docid", "last_docid", "gaps",
-                 "tfs", "max_tf", "n"]
-    posts = (reader.postings().filter(F.col("term").isin(present))
-             .select(*post_cols))
-    docs = _docs_side(reader, filter_cond)
-    seg_size, avgdl = meta.seg_size, meta.avgdl
-    dec = BLOB_DECODERS[codec_name(meta.codec)]
+    idf = sum(float(bm25_idf(max(dfs.get(t, 0) for t in off), meta.n_docs))
+              for off in offsets)
+    m = len(offsets)
+    cname = codec_name(meta.codec)
+    dec = BLOB_DECODERS[cname]
+    avgdl = meta.avgdl
 
-    def _score(p: pd.DataFrame, d: pd.DataFrame) -> pd.DataFrame:
-        return _score_segment(p, d, weights, seg_size, avgdl, None,
-                              k1, b, prune=False, decode=dec)
+    def kernel(p: pd.DataFrame, dl: np.ndarray, seg_base: int):
+        occ = _decode_occurrences(p, seg_base, dec, cname)
+        if any(not any(t in occ for t in off) for off in offsets):
+            return _NO_HITS
+        # keys pack (local docid, adjusted pos + m): adjusted positions
+        # (≥ −m) stay non-negative, and a neighbor from a different doc
+        # lands ≥ STRIDE−2m away, beyond any sane slop.  Blocks arrive
+        # in arbitrary order (several batch dirs per segment), so sort.
+        # Expansions are distinct terms and a position hosts one term,
+        # so every offset's keys are duplicate-free.
+        sets = [np.sort(np.concatenate(
+            [occ[t][0] * _STRIDE + (occ[t][1] - j) + m
+             for t in off if t in occ]))
+            for j, off in enumerate(offsets)]
+        if slop > 0 and slop_semantics == "lucene":
+            from .sloppy import lucene_sloppy_freq
 
-    return (posts.groupBy("seg_id").cogroup(docs.groupBy("seg_id"))
-            .applyInPandas(_score, schema="docid long, score double"))
+            cand = None
+            for kj in sets:
+                u = np.unique(kj // _STRIDE)
+                cand = u if cand is None else np.intersect1d(
+                    cand, u, assume_unique=True)
+            pf = np.zeros(len(cand), dtype=np.float64)
+            for ci, dloc in enumerate(cand):
+                lo_key, hi_key = dloc * _STRIDE, (dloc + 1) * _STRIDE
+                pls = []
+                for kj in sets:
+                    a, bnd = np.searchsorted(kj, (lo_key, hi_key))
+                    pls.append(kj[a:bnd] - lo_key - m)
+                pf[ci] = lucene_sloppy_freq(pls, slop)
+            keep = pf > 0.0
+            cand, pf = cand[keep].astype(np.int64), pf[keep]
+        elif slop > 0:
+            anchors = sets[0]
+            ml = np.zeros(len(anchors), dtype=np.float64)
+            for kj in sets[1:]:
+                idx = np.searchsorted(kj, anchors)
+                left = np.abs(anchors - kj[np.clip(idx - 1, 0, len(kj) - 1)])
+                right = np.abs(kj[np.clip(idx, 0, len(kj) - 1)] - anchors)
+                ml += np.minimum(left, right).astype(np.float64)
+            w = np.where(ml <= slop, 1.0 / (1.0 + ml), 0.0)
+            keep = w > 0.0
+            cand, inv = np.unique((anchors[keep] // _STRIDE)
+                                  .astype(np.int64), return_inverse=True)
+            pf = np.bincount(inv, weights=w[keep])
+        else:
+            keys = sets[0]
+            for kj in sets[1:]:
+                keys = np.intersect1d(keys, kj, assume_unique=True)
+                if len(keys) == 0:
+                    return _NO_HITS
+            cand, pf = np.unique((keys // _STRIDE).astype(np.int64),
+                                 return_counts=True)
+        dlv = dl[cand]
+        ok = dlv >= 0
+        return cand[ok], _saturate(idf, pf[ok].astype(np.float64),
+                                   dlv[ok], k1, b, avgdl)
+
+    return _segment_scan(reader, sorted({t for off in offsets for t in off}),
+                         _POSITIONAL_COLS, kernel, filter_cond, k)
 
 
 def match_phrase_topk_indexed(
@@ -545,174 +748,27 @@ def match_phrase_topk_indexed(
     to ``brute_force.match_phrase_topk``: tf = positional phrase
     frequency, weight = Σ idf over phrase positions, BM25 saturation.
 
-    Per segment: each phrase offset j contributes the set
-    {(docid, pos − j)} of its term's occurrences; the intersection
-    across offsets is exactly the phrase start positions (overlapping
-    occurrences counted, like Lucene's position enumeration) —
-    m−1 sorted ``intersect1d`` passes, fully vectorized.
-
     ``slop > 0`` switches to the sloppy anchor-nearest semantics of
     :func:`~anomaly_detection_spark.query.brute_force.
-    sloppy_phrase_freq` (score-identical to that brute-force twin):
-    instead of intersecting, each anchor key of offset 0 looks up its
-    NEAREST neighbor in every other offset's sorted key set (two
-    ``searchsorted`` probes per offset), matchLength = Σ distances,
-    tf = Σ 1/(1+matchLength) over anchors within slop — still one
-    pass over only the phrase terms' postings.
-
-    ``slop_semantics="lucene"`` runs the reference-exact
-    SloppyPhraseScorer sweep instead (:mod:`.sloppy`): candidate docs
-    (those containing every phrase term) are found with the same
-    vectorized key intersection, then each candidate's adjusted
-    position lists are sliced out of the sorted key arrays and swept —
-    score-identical to ``match_phrase_topk(slop_semantics="lucene")``,
-    distinct terms only."""
-    from ..functions.codecs import decode_positions
-
+    sloppy_phrase_freq`; ``slop_semantics="lucene"`` to the
+    reference-exact SloppyPhraseScorer sweep (distinct terms only) —
+    each score-identical to its brute-force twin (see
+    :func:`_phrase_topk`)."""
     if slop_semantics not in ("anchor", "lucene"):
         raise ValueError(
             f"slop_semantics must be 'anchor' or 'lucene': "
             f"{slop_semantics!r}")
+    terms = tokenize_query(phrase)
     if slop > 0 and slop_semantics == "lucene":
         from .sloppy import require_distinct
 
-        require_distinct(tokenize_query(phrase))
-    spark = reader.spark
-    meta = reader.meta
-    if not meta.positions:
-        raise ValueError(
-            f"index at {reader.index_dir} was built without positions; "
-            f"rebuild with build_index(..., positions=True) for scored "
-            f"match_phrase, or use the brute-force path")
-    terms = tokenize_query(phrase)
-    empty = local_df(spark, [], "docid long, score double")
+        require_distinct(terms)
+    _require_positions(reader, "scored match_phrase")
     if not terms:
-        return empty
-    m = len(terms)
-    uniq = sorted(set(terms))
-    stats = {r["term"]: r["df"] for r in reader.term_stats()
-             .filter(F.col("term").isin(uniq)).collect()}
-    if any(t not in stats for t in terms):
-        return empty  # a phrase term absent from the corpus ⇒ no match
-    import math
-
-    idf_sum = sum(
-        math.log(1.0 + (meta.n_docs - stats[t] + 0.5) / (stats[t] + 0.5))
-        for t in terms)
-
-    posts = (reader.postings().filter(F.col("term").isin(uniq))
-             .select("term", "seg_id", "first_docid", "gaps", "tfs", "pos"))
-    docs = _docs_side(reader, filter_cond)
-    seg_size, avgdl = meta.seg_size, meta.avgdl
-    cname = codec_name(meta.codec)
-    dec = BLOB_DECODERS[cname]
-    kk1, bb = k1, b
-    STRIDE = np.int64(1) << np.int64(32)   # local docid ⊕ position key
-
-    def _phrase(p: pd.DataFrame, d: pd.DataFrame) -> pd.DataFrame:
-        out_empty = pd.DataFrame({"docid": pd.Series(dtype="int64"),
-                                  "score": pd.Series(dtype="float64")})
-        if len(p) == 0 or len(d) == 0:
-            return out_empty
-        seg_base = int(p["seg_id"].iloc[0]) * seg_size
-        dl = _segment_doclens(d, seg_base, seg_size, False)
-        # decode each term's (docid, position) occurrence stream
-        occ: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        for t, grp in p.groupby("term", sort=False):
-            locs, poss = [], []
-            for i in range(len(grp)):
-                docids = (np.cumsum(dec(grp["gaps"].iloc[i]))
-                          .astype(np.int64) + grp["first_docid"].iloc[i])
-                tfs = dec(grp["tfs"].iloc[i]).astype(np.int64)
-                pos = decode_positions(grp["pos"].iloc[i], tfs, codec=cname)
-                locs.append(np.repeat(docids - seg_base, tfs))
-                poss.append(pos)
-            occ[t] = (np.concatenate(locs), np.concatenate(poss))
-        if any(t not in occ for t in terms):
-            return out_empty
-        if slop > 0 and slop_semantics == "lucene":
-            # reference-exact sweep: intersect candidate docids
-            # vectorized, then slice each candidate's adjusted
-            # positions out of the packed sorted keys (one
-            # searchsorted pair per term per doc) and sweep
-            from .sloppy import lucene_sloppy_freq
-
-            sets = []
-            cand = None
-            for j, t in enumerate(terms):
-                loc, pos = occ[t]
-                sets.append(np.sort(loc * STRIDE + (pos - j) + m))
-                u = np.unique(loc)
-                cand = u if cand is None else np.intersect1d(
-                    cand, u, assume_unique=True)
-            if cand is None or len(cand) == 0:
-                return out_empty
-            pf = np.zeros(len(cand), dtype=np.float64)
-            for ci, dloc in enumerate(cand):
-                lo_key, hi_key = dloc * STRIDE, (dloc + 1) * STRIDE
-                pls = []
-                for kj in sets:
-                    a, bnd = np.searchsorted(kj, (lo_key, hi_key))
-                    pls.append(kj[a:bnd] - lo_key - m)
-                pf[ci] = lucene_sloppy_freq(pls, slop)
-            keepc = pf > 0.0
-            if not keepc.any():
-                return out_empty
-            cand, pf = cand[keepc].astype(np.int64), pf[keepc]
-        elif slop > 0:
-            # sloppy: anchors are offset-0 keys; every other offset
-            # contributes its nearest same-doc neighbor's distance.
-            # Keys pack (local docid, adjusted pos + m) so adjusted
-            # positions (≥ −m) stay non-negative; a neighbor from a
-            # different doc lands ≥ STRIDE−2m away and can never pass
-            # a sane slop.
-            sets = []
-            for j, t in enumerate(terms):
-                loc, pos = occ[t]
-                sets.append(np.sort(loc * STRIDE + (pos - j) + m))
-            anchors = sets[0]
-            ml = np.zeros(len(anchors), dtype=np.float64)
-            for kj in sets[1:]:
-                idx = np.searchsorted(kj, anchors)
-                left = np.abs(anchors - kj[np.clip(idx - 1, 0, len(kj) - 1)])
-                right = np.abs(kj[np.clip(idx, 0, len(kj) - 1)] - anchors)
-                ml += np.minimum(left, right).astype(np.float64)
-            w = np.where(ml <= slop, 1.0 / (1.0 + ml), 0.0)
-            keep = w > 0.0
-            if not keep.any():
-                return out_empty
-            loc = (anchors[keep] // STRIDE).astype(np.int64)
-            cand, inv = np.unique(loc, return_inverse=True)
-            pf = np.bincount(inv, weights=w[keep])
-        else:
-            keys = None
-            for j, t in enumerate(terms):
-                loc, pos = occ[t]
-                ok = pos >= j
-                # blocks arrive in arbitrary order (multiple batch dirs
-                # per segment) — sort each offset's key set before
-                # intersecting
-                kj = np.sort(loc[ok] * STRIDE + (pos[ok] - j))
-                keys = kj if keys is None else np.intersect1d(
-                    keys, kj, assume_unique=True)
-                if len(keys) == 0:
-                    return out_empty
-            loc = (keys // STRIDE).astype(np.int64)
-            cand, pf = np.unique(loc, return_counts=True)
-        dlv = dl[cand]
-        okd = dlv >= 0
-        cand, pf, dlv = cand[okd], pf[okd].astype(np.float64), dlv[okd]
-        if len(cand) == 0:
-            return out_empty
-        score = idf_sum * (pf * (kk1 + 1.0)) / (
-            pf + kk1 * (1.0 - bb + bb * dlv / max(avgdl, 1e-12)))
-        order = np.lexsort((cand, -score))[:k]
-        return pd.DataFrame({"docid": cand[order] + seg_base,
-                             "score": score[order]})
-
-    local = (posts.groupBy("seg_id").cogroup(docs.groupBy("seg_id"))
-             .applyInPandas(_phrase, schema="docid long, score double"))
-    return local.orderBy(F.desc("score"), F.asc("docid")).limit(k)
+        return local_df(reader.spark, [], _HITS)
+    return _phrase_topk(reader, [[t] for t in terms],
+                        reader.term_dfs(sorted(set(terms))), k,
+                        filter_cond, k1, b, slop, slop_semantics)
 
 
 def match_phrase_prefix_topk_indexed(
@@ -724,120 +780,23 @@ def match_phrase_prefix_topk_indexed(
     b: float = B_DEFAULT,
     max_expansions: int = 50,
 ) -> DataFrame:
-    """Scored ``match_phrase_prefix`` over positional postings: the
-    trailing prefix expands to the first ``max_expansions`` dictionary
-    terms from term_stats (Lucene MultiPhraseQuery), the m−1 exact
-    offsets intersect positionally as in
-    :func:`match_phrase_topk_indexed`, and the last offset's key set
-    is the UNION of the expansions' occurrence streams.  tf and the
-    blended idf match the brute-force twin
+    """Scored ``match_phrase_prefix`` over positional postings (Lucene
+    MultiPhraseQuery): the trailing prefix expands to the first
+    ``max_expansions`` dictionary terms, which share the last phrase
+    offset; the other offsets are the exact terms.  tf and the blended
+    idf (the max df of the expansions) match the brute-force twin
     ``brute_force.match_phrase_prefix_topk`` exactly."""
-    from ..functions.codecs import decode_positions
-
-    spark = reader.spark
-    meta = reader.meta
-    if not meta.positions:
-        raise ValueError(
-            f"index at {reader.index_dir} was built without positions; "
-            f"rebuild with build_index(..., positions=True) for scored "
-            f"match_phrase_prefix, or use the brute-force path")
+    _require_positions(reader, "scored match_phrase_prefix")
     terms = tokenize_query(phrase)
-    empty = local_df(spark, [], "docid long, score double")
     if not terms:
-        return empty
-    first, prefix = terms[:-1], terms[-1]
-    m = len(terms)
-    exps = [r["term"] for r in reader.term_stats()
-            .filter(F.col("term").startswith(prefix))
-            .select("term").orderBy("term").limit(max_expansions)
-            .collect()]
+        return local_df(reader.spark, [], _HITS)
+    exps = reader.term_dfs(F.col("term").startswith(terms[-1]),
+                           limit=max_expansions)
     if not exps:
-        return empty
-    uniq = sorted(set(first) | set(exps))
-    stats = {r["term"]: r["df"] for r in reader.term_stats()
-             .filter(F.col("term").isin(uniq)).collect()}
-    if any(t not in stats for t in first):
-        return empty
-    import math
-
-    def _idf(df: int) -> float:
-        return math.log(1.0 + (meta.n_docs - df + 0.5) / (df + 0.5))
-
-    idf_sum = sum(_idf(stats[t]) for t in first) \
-        + _idf(max(stats.get(t, 0) for t in exps))
-
-    posts = (reader.postings().filter(F.col("term").isin(uniq))
-             .select("term", "seg_id", "first_docid", "gaps", "tfs", "pos"))
-    docs = _docs_side(reader, filter_cond)
-    seg_size, avgdl = meta.seg_size, meta.avgdl
-    cname = codec_name(meta.codec)
-    dec = BLOB_DECODERS[cname]
-    kk1, bb = k1, b
-    exp_set = set(exps)
-    STRIDE = np.int64(1) << np.int64(32)
-
-    def _pp(p: pd.DataFrame, d: pd.DataFrame) -> pd.DataFrame:
-        out_empty = pd.DataFrame({"docid": pd.Series(dtype="int64"),
-                                  "score": pd.Series(dtype="float64")})
-        if len(p) == 0 or len(d) == 0:
-            return out_empty
-        seg_base = int(p["seg_id"].iloc[0]) * seg_size
-        dl = _segment_doclens(d, seg_base, seg_size, False)
-        occ: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        for t, grp in p.groupby("term", sort=False):
-            locs, poss = [], []
-            for i in range(len(grp)):
-                docids = (np.cumsum(dec(grp["gaps"].iloc[i]))
-                          .astype(np.int64) + grp["first_docid"].iloc[i])
-                tfs = dec(grp["tfs"].iloc[i]).astype(np.int64)
-                pos = decode_positions(grp["pos"].iloc[i], tfs, codec=cname)
-                locs.append(np.repeat(docids - seg_base, tfs))
-                poss.append(pos)
-            occ[t] = (np.concatenate(locs), np.concatenate(poss))
-        if any(t not in occ for t in first):
-            return out_empty
-        keys = None
-        for j, t in enumerate(first):
-            loc, pos = occ[t]
-            ok = pos >= j
-            kj = np.sort(loc[ok] * STRIDE + (pos[ok] - j))
-            keys = kj if keys is None else np.intersect1d(
-                keys, kj, assume_unique=True)
-            if len(keys) == 0:
-                return out_empty
-        # last offset: union of the expansions' adjusted keys
-        j = m - 1
-        parts = []
-        for t in exp_set:
-            if t in occ:
-                loc, pos = occ[t]
-                ok = pos >= j
-                parts.append(loc[ok] * STRIDE + (pos[ok] - j))
-        if not parts:
-            return out_empty
-        # expansions are distinct terms: a position can host only one
-        # term, so the union is duplicate-free
-        klast = np.sort(np.concatenate(parts))
-        keys = (klast if keys is None
-                else np.intersect1d(keys, klast, assume_unique=True))
-        if len(keys) == 0:
-            return out_empty
-        loc = (keys // STRIDE).astype(np.int64)
-        cand, pf = np.unique(loc, return_counts=True)
-        dlv = dl[cand]
-        okd = dlv >= 0
-        cand, pf, dlv = cand[okd], pf[okd].astype(np.float64), dlv[okd]
-        if len(cand) == 0:
-            return out_empty
-        score = idf_sum * (pf * (kk1 + 1.0)) / (
-            pf + kk1 * (1.0 - bb + bb * dlv / max(avgdl, 1e-12)))
-        order = np.lexsort((cand, -score))[:k]
-        return pd.DataFrame({"docid": cand[order] + seg_base,
-                             "score": score[order]})
-
-    local = (posts.groupBy("seg_id").cogroup(docs.groupBy("seg_id"))
-             .applyInPandas(_pp, schema="docid long, score double"))
-    return local.orderBy(F.desc("score"), F.asc("docid")).limit(k)
+        return local_df(reader.spark, [], _HITS)
+    dfs = {**reader.term_dfs(set(terms[:-1])), **exps}
+    return _phrase_topk(reader, [[t] for t in terms[:-1]] + [list(exps)],
+                        dfs, k, filter_cond, k1, b)
 
 
 def multi_match_topk_indexed(
@@ -871,32 +830,34 @@ def multi_match_topk_indexed(
                                 id_col="docid", k=k)
 
 
-def term_doc_pairs(reader: IndexReader, terms: list[str]) -> DataFrame:
-    """(term, docid) pairs decoded from the posting lists of ``terms``
-    — bounded by those terms' postings only.  The building block for
-    matched-term-count predicates (conjunctive compounds,
-    more_like_this minimum_should_match)."""
-    dec = BLOB_DECODERS[codec_name(reader.meta.codec)]
-    posts = (reader.postings().filter(F.col("term").isin(list(terms)))
-             .select("term", "first_docid", "gaps"))
+def _span_docs(reader: IndexReader, uniq: list[str],
+               filter_cond: Column | None, candidates, matches) -> DataFrame:
+    """Docids matching a span kernel over the positional postings of
+    ``uniq``.  Per segment, ``candidates(occ)`` narrows the docs from
+    the (docid, position)-ordered occurrences (None: no doc can match)
+    and ``matches(positions)`` decides each candidate from its per-term
+    position lists."""
+    cname = codec_name(reader.meta.codec)
+    dec = BLOB_DECODERS[cname]
 
-    def _expand(it):
-        for pdf in it:
-            ts, ds = [], []
-            for t, first, gaps in zip(pdf["term"], pdf["first_docid"],
-                                      pdf["gaps"]):
-                docids = dec(bytes(gaps)).cumsum() + int(first)
-                ds.append(docids)
-                ts.append([t] * len(docids))
-            if not ts:
-                yield pd.DataFrame({"term": pd.Series(dtype="object"),
-                                    "docid": pd.Series(dtype="int64")})
-                continue
-            yield pd.DataFrame({
-                "term": [x for sub in ts for x in sub],
-                "docid": np.concatenate(ds).astype("int64")})
+    def kernel(p: pd.DataFrame, dl: np.ndarray, seg_base: int):
+        occ = _decode_occurrences(p, seg_base, dec, cname, ordered=True)
+        cand = candidates(occ)
+        if cand is None:
+            return _NO_HITS[0]
+        hits = []
+        for doc in cand[dl[cand] >= 0]:
+            positions = {}
+            for t, (loc, ps) in occ.items():
+                a = np.searchsorted(loc, doc, side="left")
+                z = np.searchsorted(loc, doc, side="right")
+                positions[t] = ps[a:z]
+            if matches(positions):
+                hits.append(doc)
+        return np.asarray(hits, dtype=np.int64)
 
-    return posts.mapInPandas(_expand, schema="term string, docid long")
+    return _segment_scan(reader, uniq, _POSITIONAL_COLS, kernel,
+                         filter_cond, scored=False)
 
 
 def span_near_docs_indexed(
@@ -916,89 +877,37 @@ def span_near_docs_indexed(
 
     Cost is bounded by the rarest clause term's postings — the same
     posture as the phrase kernels; never a corpus re-analysis."""
-    from collections import Counter as _Counter
-
-    from ..functions.codecs import decode_positions
     from ..functions.spans import _ordered_match, _unordered_match
 
-    spark = reader.spark
-    meta = reader.meta
-    if not meta.positions:
-        raise ValueError(
-            f"index at {reader.index_dir} was built without positions; "
-            f"rebuild with build_index(..., positions=True) for span "
-            f"queries, or use the brute-force path")
-    empty = local_df(spark, [], "docid long")
+    _require_positions(reader, "span queries")
     if not terms:
-        return empty
-    req = _Counter(terms)
+        return local_df(reader.spark, [], _DOCIDS)
+    req = Counter(terms)
     uniq = sorted(req)
-    present = {r["term"] for r in reader.term_stats()
-               .filter(F.col("term").isin(uniq)).select("term").collect()}
-    if any(t not in present for t in uniq):
-        return empty
-    posts = (reader.postings().filter(F.col("term").isin(uniq))
-             .select("term", "seg_id", "first_docid", "gaps", "tfs",
-                     "pos"))
-    docs = _docs_side(reader, filter_cond)
-    seg_size = meta.seg_size
-    cname = codec_name(meta.codec)
-    dec = BLOB_DECODERS[cname]
-    terms_l, slop_i, ord_b, end_i = list(terms), int(slop), bool(in_order), end
+    dfs = reader.term_dfs(uniq)
+    if any(t not in dfs for t in uniq):
+        return local_df(reader.spark, [], _DOCIDS)
+    terms_l, slop_i = list(terms), int(slop)
 
-    def _spans(p: pd.DataFrame, d: pd.DataFrame) -> pd.DataFrame:
-        out_empty = pd.DataFrame({"docid": pd.Series(dtype="int64")})
-        if len(p) == 0 or len(d) == 0:
-            return out_empty
-        seg_base = int(p["seg_id"].iloc[0]) * seg_size
-        dl = _segment_doclens(d, seg_base, seg_size, False)
-        occ: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        for t, grp in p.groupby("term", sort=False):
-            locs, poss = [], []
-            for i in range(len(grp)):
-                docids = (np.cumsum(dec(grp["gaps"].iloc[i]))
-                          .astype(np.int64) + grp["first_docid"].iloc[i])
-                tfs = dec(grp["tfs"].iloc[i]).astype(np.int64)
-                pos = decode_positions(grp["pos"].iloc[i], tfs,
-                                       codec=cname)
-                locs.append(np.repeat(docids - seg_base, tfs))
-                poss.append(pos)
-            loc = np.concatenate(locs)
-            ps = np.concatenate(poss)
-            order = np.lexsort((ps, loc))
-            occ[t] = (loc[order], ps[order])
+    def candidates(occ: dict):
         if any(t not in occ for t in uniq):
-            return out_empty
-        # candidate docs: enough occurrences of every clause term
+            return None
+        # docs with enough occurrences of every clause term
         cand = None
         for t, c in req.items():
             docs_t, counts_t = np.unique(occ[t][0], return_counts=True)
             ok = docs_t[counts_t >= c]
             cand = ok if cand is None else np.intersect1d(
                 cand, ok, assume_unique=True)
-            if len(cand) == 0:
-                return out_empty
-        cand = cand[dl[cand] >= 0]
-        hits = []
-        for doc in cand:
-            positions = {}
-            for t in uniq:
-                loc, ps = occ[t]
-                a = np.searchsorted(loc, doc, side="left")
-                b_ = np.searchsorted(loc, doc, side="right")
-                positions[t] = ps[a:b_]
-            if ord_b:
-                m_ = _ordered_match([positions[t] for t in terms_l],
-                                    slop_i, end_i)
-            else:
-                m_ = _unordered_match(terms_l, positions, slop_i, end_i)
-            if m_:
-                hits.append(int(doc) + seg_base)
-        return pd.DataFrame({"docid": pd.Series(hits, dtype="int64")})
+        return cand
 
-    local = (posts.groupBy("seg_id").cogroup(docs.groupBy("seg_id"))
-             .applyInPandas(_spans, schema="docid long"))
-    return local.orderBy("docid")
+    def matches(positions: dict) -> bool:
+        if in_order:
+            return _ordered_match([positions[t] for t in terms_l],
+                                  slop_i, end)
+        return _unordered_match(terms_l, positions, slop_i, end)
+
+    return _span_docs(reader, uniq, filter_cond, candidates, matches)
 
 
 def _expand_span_preds(reader: IndexReader, node: dict,
@@ -1016,22 +925,20 @@ def _expand_span_preds(reader: IndexReader, node: dict,
     preds = tree_preds(node)
     if not preds:
         return node
-    dictionary = reader.postings().select("term").distinct()
     exps: list[list[str]] = []
     for p in preds:
-        d = dictionary
+        cond = F.lit(True)
         if p["kind"] == "prefix":
-            d = d.filter(F.col("term").startswith(p["val"].lower()))
+            cond = F.col("term").startswith(p["val"].lower())
         elif p["kind"] == "wildcard":
             lit = p["val"].lower().split("*")[0].split("?")[0]
             if lit and "\\" not in lit:
-                d = d.filter(F.col("term").startswith(lit))
+                cond = F.col("term").startswith(lit)
         elif p["kind"] == "fuzzy":
             me = int(p["max_edits"])
-            d = d.filter(F.length("term").between(
-                len(p["val"]) - me, len(p["val"]) + me))
-        cand = pd.Series([r["term"] for r in d.collect()],
-                         dtype="object")
+            cond = F.length("term").between(
+                len(p["val"]) - me, len(p["val"]) + me)
+        cand = pd.Series(list(reader.term_dfs(cond)), dtype="object")
         matched = (sorted(cand[pred_matcher(p)(cand)])
                    if len(cand) else [])
         if len(matched) > max_expansions:
@@ -1057,18 +964,9 @@ def span_tree_docs_indexed(
     narrowing, still bounded by the tree terms' postings, never a
     corpus re-analysis.  span_multi preds are expanded against the
     term dictionary first (:func:`_expand_span_preds`)."""
-    from ..functions.codecs import decode_positions
-    from ..functions.spans import enum_spans, tree_terms
+    from ..functions.spans import enum_spans, tree_leaf_fields, tree_terms
 
-    spark = reader.spark
-    meta = reader.meta
-    if not meta.positions:
-        raise ValueError(
-            f"index at {reader.index_dir} was built without positions; "
-            f"rebuild with build_index(..., positions=True) for span "
-            f"queries, or use the brute-force path")
-    from ..functions.spans import tree_leaf_fields
-
+    _require_positions(reader, "span queries")
     if tree_leaf_fields(node) - {None}:
         raise ValueError(
             "field_masking_span trees mix fields — a single-field "
@@ -1076,58 +974,18 @@ def span_tree_docs_indexed(
             "(compile_filter / span_tree_match_expr_fields)")
     node = _expand_span_preds(reader, node, max_expansions)
     uniq = sorted(tree_terms(node))
-    empty = local_df(spark, [], "docid long")
     if not uniq:
-        return empty
-    posts = (reader.postings().filter(F.col("term").isin(uniq))
-             .select("term", "seg_id", "first_docid", "gaps", "tfs",
-                     "pos"))
-    docs = _docs_side(reader, filter_cond)
-    seg_size = meta.seg_size
-    cname = codec_name(meta.codec)
-    dec = BLOB_DECODERS[cname]
+        return local_df(reader.spark, [], _DOCIDS)
     node_l = dict(node)
 
-    def _spans(p: pd.DataFrame, d: pd.DataFrame) -> pd.DataFrame:
-        out_empty = pd.DataFrame({"docid": pd.Series(dtype="int64")})
-        if len(p) == 0 or len(d) == 0:
-            return out_empty
-        seg_base = int(p["seg_id"].iloc[0]) * seg_size
-        dl = _segment_doclens(d, seg_base, seg_size, False)
-        occ: dict[str, tuple[np.ndarray, np.ndarray]] = {}
-        for t, grp in p.groupby("term", sort=False):
-            locs, poss = [], []
-            for i in range(len(grp)):
-                docids = (np.cumsum(dec(grp["gaps"].iloc[i]))
-                          .astype(np.int64) + grp["first_docid"].iloc[i])
-                tfs = dec(grp["tfs"].iloc[i]).astype(np.int64)
-                pos = decode_positions(grp["pos"].iloc[i], tfs,
-                                       codec=cname)
-                locs.append(np.repeat(docids - seg_base, tfs))
-                poss.append(pos)
-            loc = np.concatenate(locs)
-            ps = np.concatenate(poss)
-            order = np.lexsort((ps, loc))
-            occ[t] = (loc[order], ps[order])
-        if not occ:
-            return out_empty
-        cand = np.unique(np.concatenate([occ[t][0] for t in occ]))
-        cand = cand[dl[cand] >= 0]
-        hits = []
-        for doc in cand:
-            positions = {}
-            for t in occ:
-                loc, ps = occ[t]
-                a = np.searchsorted(loc, doc, side="left")
-                b_ = np.searchsorted(loc, doc, side="right")
-                positions[t] = ps[a:b_]
-            if len(enum_spans(positions, node_l)) > 0:
-                hits.append(int(doc) + seg_base)
-        return pd.DataFrame({"docid": pd.Series(hits, dtype="int64")})
+    def candidates(occ: dict):
+        # docs holding any tree term; the enum kernel decides exactly
+        return (np.unique(np.concatenate([loc for loc, _ in occ.values()]))
+                if occ else None)
 
-    local = (posts.groupBy("seg_id").cogroup(docs.groupBy("seg_id"))
-             .applyInPandas(_spans, schema="docid long"))
-    return local.orderBy("docid")
+    return _span_docs(reader, uniq, filter_cond, candidates,
+                      lambda positions: len(enum_spans(positions,
+                                                       node_l)) > 0)
 
 
 def fetch_docs(reader: IndexReader, topk: DataFrame) -> DataFrame:
@@ -1142,31 +1000,22 @@ def fetch_docs(reader: IndexReader, topk: DataFrame) -> DataFrame:
 
 def term_doc_tfs(reader: IndexReader, terms: list[str]) -> DataFrame:
     """(term, docid, tf) triples decoded from the posting lists of
-    ``terms`` — ``term_doc_pairs`` plus the tf stream; the building
-    block for merged-statistics scoring (combined_fields), still
-    bounded by the query terms' postings only."""
+    ``terms`` — the building block for merged-statistics scoring
+    (combined_fields) and explain, bounded by those terms' postings
+    only."""
     dec = BLOB_DECODERS[codec_name(reader.meta.codec)]
     posts = (reader.postings().filter(F.col("term").isin(list(terms)))
              .select("term", "first_docid", "gaps", "tfs"))
 
     def _expand(it):
         for pdf in it:
-            ts, ds, fs = [], [], []
-            for t, first, gaps, tfs in zip(
-                    pdf["term"], pdf["first_docid"], pdf["gaps"],
-                    pdf["tfs"]):
-                docids = dec(bytes(gaps)).cumsum() + int(first)
-                ds.append(docids)
-                fs.append(dec(bytes(tfs)))
-                ts.append([t] * len(docids))
-            if not ts:
-                yield pd.DataFrame({"term": pd.Series(dtype="object"),
-                                    "docid": pd.Series(dtype="int64"),
-                                    "tf": pd.Series(dtype="int64")})
-                continue
+            ds = [dec(bytes(gaps)).cumsum() + int(first)
+                  for first, gaps in zip(pdf["first_docid"], pdf["gaps"])]
+            fs = [dec(bytes(tfs)) for tfs in pdf["tfs"]]
             yield pd.DataFrame({
-                "term": [x for sub in ts for x in sub],
-                "docid": np.concatenate(ds).astype("int64"),
-                "tf": np.concatenate(fs).astype("int64")})
+                "term": np.repeat(pdf["term"].to_numpy(dtype=object),
+                                  [len(d) for d in ds]),
+                "docid": np.concatenate(ds or [[]]).astype("int64"),
+                "tf": np.concatenate(fs or [[]]).astype("int64")})
 
     return posts.mapInPandas(_expand, schema="term string, docid long, tf long")

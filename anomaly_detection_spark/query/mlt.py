@@ -15,8 +15,9 @@ query):
    a matched-distinct-term count, excluding the like docs themselves.
 
 Both target shapes: analyzed DataFrame (brute) and IndexReader (the
-dictionary df lookup is ``term_stats``; the msm count predicate reads
-only the selected terms' postings via ``term_doc_pairs``).
+dictionary df lookup is ``IndexReader.term_dfs``; the msm count is the
+matched-term floor of ``bm25_scores_indexed``, which reads only the
+selected terms' postings).
 """
 
 from __future__ import annotations
@@ -96,7 +97,7 @@ def more_like_this_topk(
     """Top-k (docid, score) similar documents.  See module docstring;
     parameter defaults mirror the reference's MLT defaults."""
     from .brute_force import bm25_scores, term_doc_freqs
-    from .index_search import IndexReader, bm25_scores_indexed, term_doc_pairs
+    from .index_search import IndexReader, bm25_scores_indexed
 
     is_index = isinstance(target, IndexReader)
     spark = target.spark if is_index else target.sparkSession
@@ -109,8 +110,7 @@ def more_like_this_topk(
 
     if is_index:
         n_docs = target.meta.n_docs
-        dfreq = {r["term"]: r["df"] for r in target.term_stats()
-                 .filter(F.col("term").isin(cand)).collect()}
+        dfreq = target.term_dfs(cand)
     else:
         n_docs = target.count()
         dfreq = {r["term"]: r["df"]
@@ -129,16 +129,8 @@ def more_like_this_topk(
     msm = parse_msm(minimum_should_match, len(sel))
     qtext = " ".join(sel)
 
-    if is_index:
-        out = bm25_scores_indexed(target, qtext)
-        if msm > 1:
-            keep = (term_doc_pairs(target, sel)
-                    .groupBy("docid")
-                    .agg(F.countDistinct("term").alias("_nt"))
-                    .filter(F.col("_nt") >= msm).select("docid"))
-            out = out.join(keep, "docid")
-    else:
-        out = bm25_scores(target, qtext, min_match=msm)
+    scores = bm25_scores_indexed if is_index else bm25_scores
+    out = scores(target, qtext, min_match=msm)
     if like_ids and not include:
         out = out.filter(~F.col("docid").isin(like_ids))
     return out.orderBy(F.desc("score"), F.asc("docid")).limit(k)

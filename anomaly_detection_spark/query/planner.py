@@ -1541,31 +1541,6 @@ def search(
             out = fetch_docs(target, out)
         return finish(out)
 
-    if set(query) == {"match_phrase_prefix"}:
-        # scored phrase-prefix (Lucene MultiPhraseQuery expansion)
-        (fld, spec), = query["match_phrase_prefix"].items()
-        text = _field_value(spec, key="query")
-        maxe = (spec.get("max_expansions", 50)
-                if isinstance(spec, dict) else 50)
-        if isinstance(target, IndexReader):
-            from .index_search import match_phrase_prefix_topk_indexed
-
-            if fld != text_field:
-                raise ValueError(
-                    f"scored match_phrase_prefix over an index target "
-                    f"supports the indexed text field {text_field!r}; "
-                    f"got {fld!r}")
-            out = match_phrase_prefix_topk_indexed(
-                target, text, k=size, max_expansions=maxe)
-        else:
-            from .brute_force import analyze_docs, match_phrase_prefix_topk
-
-            tgt = (target if "tokens" in target.columns
-                   else analyze_docs(target, text_col=fld))
-            out = match_phrase_prefix_topk(tgt, text, k=size,
-                                           max_expansions=maxe)
-        return finish(out)
-
     if set(query) == {"combined_fields"}:
         # merged-field BM25 (CombinedFieldQuery / BM25F) — see
         # query/combined_fields.py for the exact statistics model
@@ -1613,38 +1588,50 @@ def search(
                 tie_breaker=float(mm.get("tie_breaker", 0.0)))
         return finish(out)
 
-    if set(query) == {"match_phrase"}:
+    if len(query) == 1 and next(iter(query)) in ("match_phrase",
+                                                 "match_phrase_prefix"):
         # scored phrase (Lucene PhraseQuery): tf = positional phrase
         # frequency (slop=0) or the sloppy anchor-nearest frequency
-        # (slop>0), weight = Σ term idfs.  Over an index target this
+        # (slop>0), weight = Σ term idfs; phrase-prefix expands the
+        # last term (MultiPhraseQuery).  Over an index target this
         # reads the positional posting lists (positions=True builds);
         # otherwise a codegen scan of the analyzed corpus.
-        (fld, spec), = query["match_phrase"].items()
+        (kind, clause), = query.items()
+        (fld, spec), = clause.items()
         text = _field_value(spec, key="query")
-        slop = int(spec.get("slop", 0)) if isinstance(spec, dict) else 0
-        if slop < 0:
-            raise ValueError(f"match_phrase slop must be >= 0: {slop}")
-        # engine extension: "slop_semantics": "lucene" selects the
-        # reference-exact SloppyPhraseScorer sweep (default "anchor"
-        # is the oracle-checkable engine semantics)
-        sem = (spec.get("slop_semantics", "anchor")
-               if isinstance(spec, dict) else "anchor")
+        opts = spec if isinstance(spec, dict) else {}
+        if kind == "match_phrase_prefix":
+            kw = {"max_expansions": opts.get("max_expansions", 50)}
+        else:
+            slop = int(opts.get("slop", 0))
+            if slop < 0:
+                raise ValueError(f"match_phrase slop must be >= 0: {slop}")
+            # engine extension: "slop_semantics": "lucene" selects the
+            # reference-exact SloppyPhraseScorer sweep (default "anchor"
+            # is the oracle-checkable engine semantics)
+            kw = {"slop": slop,
+                  "slop_semantics": opts.get("slop_semantics", "anchor")}
         if isinstance(target, IndexReader):
-            from .index_search import match_phrase_topk_indexed
+            from .index_search import (match_phrase_prefix_topk_indexed,
+                                       match_phrase_topk_indexed)
 
             if fld != text_field:
                 raise ValueError(
-                    f"scored match_phrase over an index target supports "
-                    f"the indexed text field {text_field!r}; got {fld!r}")
-            out = match_phrase_topk_indexed(target, text, k=size,
-                                            slop=slop, slop_semantics=sem)
+                    f"scored {kind} over an index target supports the "
+                    f"indexed text field {text_field!r}; got {fld!r}")
+            run = (match_phrase_prefix_topk_indexed
+                   if kind == "match_phrase_prefix"
+                   else match_phrase_topk_indexed)
+            out = run(target, text, k=size, **kw)
         else:
-            from .brute_force import analyze_docs, match_phrase_topk
+            from .brute_force import (analyze_docs, match_phrase_prefix_topk,
+                                      match_phrase_topk)
 
             tgt = (target if "tokens" in target.columns
                    else analyze_docs(target, text_col=fld))
-            out = match_phrase_topk(tgt, text, k=size, slop=slop,
-                                    slop_semantics=sem)
+            run = (match_phrase_prefix_topk if kind == "match_phrase_prefix"
+                   else match_phrase_topk)
+            out = run(tgt, text, k=size, **kw)
         return finish(out)
 
     if set(query) == {"match"}:
@@ -1653,8 +1640,8 @@ def search(
             # match + minimum_should_match (MatchQueryBuilder): scored
             # disjunction requiring ≥ N distinct query terms per doc.
             # Brute: bm25_scores(min_match=); index: the same
-            # matched-distinct-term count as a posting-pair semi-join
-            # (only the query terms' postings are read).
+            # matched-distinct-term floor in the scoring kernel (only
+            # the query terms' postings are read).
             if mfld != text_field:
                 raise ValueError(
                     f"scored match supports only the indexed text "
@@ -1662,23 +1649,13 @@ def search(
             text = mspec["query"]
             need = parse_msm(mspec["minimum_should_match"],
                              len(set(tokenize_query(text))))
-            if isinstance(target, IndexReader):
-                from .index_search import (bm25_scores_indexed,
-                                           term_doc_pairs)
+            from .brute_force import bm25_scores
+            from .index_search import bm25_scores_indexed
 
-                scored = bm25_scores_indexed(target, text)
-                terms = sorted(set(tokenize_query(text)))
-                keep = (term_doc_pairs(target, terms)
-                        .groupBy("docid")
-                        .agg(F.count_distinct("term").alias("_nt"))
-                        .filter(F.col("_nt") >= need).select("docid"))
-                out = scored.join(keep, "docid")
-            else:
-                from .brute_force import bm25_scores
-
-                out = bm25_scores(target, text, min_match=need)
-            out = (out.orderBy(F.desc("score"), F.asc("docid"))
-                   .limit(size))
+            scores = (bm25_scores_indexed if isinstance(target, IndexReader)
+                      else bm25_scores)
+            out = (scores(target, text, min_match=need)
+                   .orderBy(F.desc("score"), F.asc("docid")).limit(size))
             if isinstance(target, IndexReader):
                 out = fetch_docs(target, out)
             return finish(out)

@@ -142,10 +142,11 @@ def suggest_phrases(
     ``max_errors`` bounds substituted positions (fraction ≤ 1.0 of
     terms, else absolute count, like the reference).
 
-    Distributed shape: TWO bounded aggregations over the corpus — a
-    unigram count of candidate terms and a bigram count of candidate
-    ADJACENT pairs (both keyed by the ≤ m·(candidates+1) candidate
-    vocabulary, so the shuffle is tiny at any corpus size); the beam
+    Distributed shape: THREE bounded passes over the corpus — a
+    scalar token total, a unigram count of candidate terms and a
+    bigram count of candidate ADJACENT pairs (the counts keyed by the
+    ≤ m·(candidates+1) candidate vocabulary, so the shuffle is tiny at
+    any corpus size); the beam
     over combinations runs on the driver over those small maps.
     Needs token sequences, so the target is a docs frame (an
     IndexReader carries no forward index — same honesty as
@@ -172,7 +173,7 @@ def suggest_phrases(
     toks = (F.col("tokens") if "tokens" in target.columns
             else tokenize_column("text"))
     docs = target.select(toks.alias("_t"))
-    docs = docs.localCheckpoint(eager=False)  # two aggs share the scan
+    docs = docs.localCheckpoint(eager=False)  # three passes share the scan
 
     # per-position candidate sets: original + term-suggester options
     opts = suggest_terms(target, text, size=candidates_per_term,

@@ -15,10 +15,10 @@ Two score-identical paths (locked by test):
 
 - brute: one tokens explode, term→group broadcast map join, per-(doc,
   group) counts, saturate, weighted sum.
-- index: posting decode of ONLY the group terms' blocks, segment-local
-  cogroup against the compact norms side (a docid never leaves its
-  segment — the same shape as ``bm25_scores_indexed``), the same
-  sum-then-saturate kernel in numpy.
+- index: a group-tf kernel on the segment-scan executor
+  (``index_search._segment_scan``): posting decode of ONLY the group
+  terms' blocks, per segment against the compact norms side, the same
+  sum-then-saturate scoring in numpy.
 
 Multi-token synonyms (phrase synonyms) are out of subset and raise by
 name.  A group whose every member is absent from the corpus
@@ -30,7 +30,6 @@ from __future__ import annotations
 from collections import Counter
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from ..localdf import local_df
@@ -39,10 +38,11 @@ from ..functions.bm25 import B_DEFAULT, K1_DEFAULT, bm25_idf
 from ..functions.tokenizer import tokenize_query
 from .brute_force import CorpusStats, corpus_stats, term_doc_freqs
 from .index_search import (
+    _HITS,
     BLOB_DECODERS,
     IndexReader,
-    _docs_side,
-    _segment_doclens,
+    _saturate,
+    _segment_scan,
     codec_name,
 )
 
@@ -150,39 +150,27 @@ def synonym_match_topk_indexed(
     """Index-path twin: reads ONLY the group terms' posting blocks,
     scores segment-locally against the norms side, identical scores to
     :func:`synonym_match_topk` (test-locked)."""
-    spark = reader.spark
     meta = reader.meta
-    empty = local_df(spark, [], "docid long, score double")
+    empty = local_df(reader.spark, [], _HITS)
     groups = expand_groups(query_text, synonyms)
     if not groups:
         return empty
-    all_terms = sorted({t for g in groups for t in g})
-    dfs = {r["term"]: r["df"] for r in reader.term_stats()
-           .filter(F.col("term").isin(all_terms)).collect()}
+    dfs = reader.term_dfs(sorted({t for g in groups for t in g}))
     weights, rows = _group_weights(groups, dfs, meta.n_docs)
     if not rows:
         return empty
     term2gids: dict[str, list[int]] = {}
     for t, gid in rows:
         term2gids.setdefault(t, []).append(gid)
-    present = sorted(term2gids)
-    posts = (reader.postings().filter(F.col("term").isin(present))
-             .select("term", "seg_id", "first_docid", "gaps", "tfs"))
-    docs = _docs_side(reader, filter_cond)
-    seg_size, avgdl = meta.seg_size, max(meta.avgdl, 1e-12)
+    avgdl = meta.avgdl
     dec = BLOB_DECODERS[codec_name(meta.codec)]
     gids_sorted = sorted(weights)
     gid_slot = {g: i for i, g in enumerate(gids_sorted)}
     w_arr = np.array([weights[g] for g in gids_sorted])
 
-    def _score(p: pd.DataFrame, d: pd.DataFrame) -> pd.DataFrame:
-        out_empty = pd.DataFrame({"docid": pd.Series(dtype="int64"),
-                                  "score": pd.Series(dtype="float64")})
-        if len(p) == 0 or len(d) == 0:
-            return out_empty
-        seg_base = int(p["seg_id"].iloc[0]) * seg_size
-        dl = _segment_doclens(d, seg_base, seg_size, False)
-        acc = np.zeros((len(gids_sorted), seg_size))
+    def kernel(p, dl: np.ndarray, seg_base: int):
+        # per group: the SUM of its terms' tfs, saturated once
+        acc = np.zeros((len(gids_sorted), len(dl)))
         for t, first, gaps, tfs in zip(p["term"], p["first_docid"],
                                        p["gaps"], p["tfs"]):
             loc = (np.cumsum(dec(bytes(gaps))).astype(np.int64)
@@ -191,19 +179,14 @@ def synonym_match_topk_indexed(
             for gid in term2gids[t]:
                 np.add.at(acc[gid_slot[gid]], loc, tf)
         ok = dl >= 0
-        score = np.zeros(seg_size)
+        score = np.zeros(len(dl))
         for i in range(len(gids_sorted)):
             tfv = acc[i]
             m = (tfv > 0) & ok
-            score[m] += w_arr[i] * (tfv[m] * (k1 + 1.0)) / (
-                tfv[m] + k1 * (1.0 - b + b * dl[m] / avgdl))
-        hit = score > 0
-        if not hit.any():
-            return out_empty
-        return pd.DataFrame({
-            "docid": (np.nonzero(hit)[0] + seg_base).astype("int64"),
-            "score": score[hit]})
+            score[m] += _saturate(w_arr[i], tfv[m], dl[m], k1, b, avgdl)
+        hit = np.flatnonzero(score > 0)
+        return hit, score[hit]
 
-    scored = (posts.groupBy("seg_id").cogroup(docs.groupBy("seg_id"))
-              .applyInPandas(_score, schema="docid long, score double"))
-    return scored.orderBy(F.desc("score"), F.asc("docid")).limit(k)
+    return _segment_scan(reader, sorted(term2gids),
+                         ("first_docid", "gaps", "tfs"), kernel,
+                         filter_cond, k)

@@ -13,6 +13,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _default_driver_mem() -> str:
+    """40% of the host's RAM (``MemTotal``), capped at 48g.  The heap
+    is pinned (-Xms = -Xmx, below), so it must leave room for the
+    Python workers and the OS page cache."""
+    try:
+        with open("/proc/meminfo") as f:
+            total_kb = int(next(ln for ln in f
+                                if ln.startswith("MemTotal:")).split()[1])
+    except (OSError, StopIteration):
+        return "48g"
+    return f"{max(512, min(int(total_kb * 0.4) // 1024, 48 * 1024))}m"
+
+
 def get_spark(
     app_name: str = "anomaly_detection_spark",
     master: str | None = None,
@@ -21,12 +34,16 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (32 in the
-    sandbox).  ``shuffle_partitions`` defaults to the core count —
-    on a real cluster you would size this to ~2-3x total cores and
-    let AQE coalesce.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]``, else one task
+    slot per core this process may run on.  The driver heap is
+    ``$SPARK_DRIVER_MEM``, else a share of the host's RAM
+    (:func:`_default_driver_mem`).  ``shuffle_partitions`` defaults to
+    the core count — on a real cluster you would size this to ~2-3x
+    total cores and let AQE coalesce.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or (
+        len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity")
+        else os.cpu_count() or 1))
     master = master or f"local[{cpus}]"
     inner = master.split("[", 1)[-1].rstrip("]")
     if shuffle_partitions is None:
@@ -58,7 +75,7 @@ def get_spark(
     os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(1 << 30))
     os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(1 << 28))
 
-    driver_mem = os.environ.get("SPARK_DRIVER_MEM", "48g")
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem()
     builder = (
         SparkSession.builder.master(master)
         .appName(app_name)

@@ -149,7 +149,12 @@ def test_search_routes_compounds_with_ranked_output(docs):
     assert list(out.score) == sorted(out.score, reverse=True)
 
 
-def test_compound_brute_equals_index(spark, tiny_transcripts):
+@pytest.mark.parametrize("first_clause", [
+    {"match": {"text": "spark query"}},
+    # operator:and — the matched-term floor of the index scoring path
+    {"match": {"text": {"query": "spark query", "operator": "and"}}},
+], ids=["or", "and"])
+def test_compound_brute_equals_index(spark, tiny_transcripts, first_clause):
     tmp = tempfile.mkdtemp(prefix="adspark_cmp_")
     try:
         paths = build_index(tiny_transcripts, f"{tmp}/idx", seg_size=512,
@@ -158,7 +163,7 @@ def test_compound_brute_equals_index(spark, tiny_transcripts):
         analyzed = analyze_docs(tiny_transcripts).persist()
         q = {"function_score": {
             "query": {"dis_max": {
-                "queries": [{"match": {"text": "spark query"}},
+                "queries": [first_clause,
                             {"match": {"text": "data pipeline"}}],
                 "tie_breaker": 0.4}},
             "functions": [{"filter": {"term": {"role": "user"}},
