@@ -8,10 +8,16 @@ hot-term skew handling (SURVEY.md §7 R3): even ``role:user``-grade
 terms (df ≈ N) produce at most ``seg_size`` postings per task.
 
 Resumability (north_rule): segments are built in batches; each batch
-is one Spark job writing ``postings/batch=K`` + ``manifest/batch=K``
-followed by an atomic checkpoint marker.  Restart skips completed
-batches — granularity modeled on the reference's 10k-interval task
-pieces (``ADBatchTaskRunner.java:1017-1093``).
+runs a few Spark jobs (doc_stats, norms, postings, manifest) writing
+``batch=K`` dirs, followed by an atomic checkpoint marker.  Restart
+skips completed batches — granularity modeled on the reference's
+10k-interval task pieces (``ADBatchTaskRunner.java:1017-1093``).
+
+The segment writer is shared with the merger (``merger.py``), the way
+Lucene's ``SegmentMerger`` reuses the indexing codec consumers:
+``write_postings_batch`` (posting blocks + the manifest aggregated
+from them), ``write_norms`` (doc_stats → per-segment norms blobs) and
+``run_batches`` (pending batch ids run N-deep).
 
 Hot path is numpy end-to-end inside ``applyInPandas``: explode via
 ``Series.explode``, tf via C groupby, block cutting + delta/varint
@@ -349,6 +355,87 @@ def _postings_from_analyzed(analyzed: DataFrame, seg_size: int,
     )
 
 
+def write_postings_batch(spark, posts: DataFrame, paths: IndexPaths,
+                         k: int) -> tuple[list, float]:
+    """Write posting blocks to ``postings/batch={k}`` and their manifest
+    (one lineage row per segment) to ``manifest/batch={k}``.  Returns
+    the manifest rows and the time the postings write finished."""
+    # written straight from the encode tasks: each segment's blocks
+    # come out (term, docid)-sorted already, so parquet row-group
+    # min/max stats serve the term-IN pushdown without a second
+    # shuffle — and repartitionByRange here would run a sampling job
+    # that RE-EXECUTES the whole encode (2× the dominant stage)
+    posts.write.mode("overwrite").parquet(f"{paths.postings}/batch={k}")
+    t_written = time.time()
+    # manifest from what actually landed on disk — aggregated once,
+    # collected (one tiny row per segment) and written back as one file.
+    # n_terms counts block_id==0 rows (one per term run) — same value
+    # as countDistinct(term) with a map-side-combinable sum instead of
+    # a distinct shuffle.
+    written = spark.read.parquet(f"{paths.postings}/batch={k}")
+    man_df = written.groupBy("seg_id").agg(
+        F.min("term").alias("term_min"),
+        F.max("term").alias("term_max"),
+        F.sum(F.when(F.col("block_id") == 0, 1).otherwise(0))
+         .alias("n_terms"),
+        F.count("*").alias("n_blocks"),
+        F.sum("n").alias("n_postings"),
+        F.sum("blob_bytes").alias("bytes"),
+        F.min("first_docid").alias("docid_min"),
+        F.max("last_docid").alias("docid_max"),
+    ).withColumn("batch", F.lit(k))
+    man_rows = man_df.collect()
+    from ..localdf import local_df
+
+    (local_df(spark, man_rows, man_df.schema).coalesce(1)
+     .write.mode("overwrite")
+     .parquet(f"{paths.manifest}/batch={k}"))
+    return man_rows, t_written
+
+
+def write_norms(spark, doc_stats_path: str, out_path: str, seg_size: int,
+                n_files: int) -> None:
+    """(docid, doc_len) parquet → one norms blob per ``docid // seg_size``
+    segment, written as ``n_files`` parquet files.  A build batch passes
+    its own doc_stats; a merge passes the source's at the merged
+    ``seg_size``."""
+    (spark.read.parquet(doc_stats_path)
+     .withColumn("seg_id", (F.col("docid") / seg_size).cast("int"))
+     .select("seg_id", "docid", "doc_len")
+     .groupBy("seg_id")
+     .applyInPandas(encode_norms_pdf, schema=NORMS_SCHEMA)
+     .coalesce(n_files)
+     .write.mode("overwrite").parquet(out_path))
+
+
+def run_batches(pending: list[int], one_batch, depth: int) -> None:
+    """Run ``one_batch(k)`` for every pending batch id, ``depth`` in
+    flight on a thread pool; the first failure is re-raised.
+
+    Batches touch disjoint ``batch=K`` dirs and each writes its own
+    atomic done-marker; the one shared sink (lineage) is lock-serialized
+    in storage.py.  Overlap lets one batch's wide encode stage back-fill
+    the cores its neighbour's narrow stages leave idle, and hides each
+    batch's fixed job latency (guide §2.6 overlap-independent-jobs);
+    FIFO scheduling keeps the earlier batch's tasks first, so this
+    changes utilization, not ordering semantics."""
+    if len(pending) <= 1 or depth <= 1:
+        for k in pending:
+            one_batch(k)
+        return
+    from concurrent import futures
+
+    with futures.ThreadPoolExecutor(max_workers=depth) as pool:
+        futs = [pool.submit(one_batch, k) for k in pending]
+        for f in futs:
+            f.result()
+
+
+# batches in flight during a build; measured on local[32] at 6M turns:
+# 2 → 38.0s, 3 → 34.4s, 4 → 67.5s (token-cache pressure collapse)
+BUILD_PIPELINE_DEPTH = 3
+
+
 def _run_batch(spark, docs: DataFrame, paths: IndexPaths, k: int,
                lo: int, hi: int, seg_size: int, block_size: int,
                segments_per_batch: int, bucket_size: int,
@@ -377,14 +464,9 @@ def _run_batch(spark, docs: DataFrame, paths: IndexPaths, k: int,
     def _run_norms():
         # norms re-read the just-written (docid, doc_len) parquet —
         # a pass over ~9 bytes/doc instead of a second tokenize
-        norms = (spark.read.parquet(f"{paths.doc_stats}/batch={k}")
-                 .withColumn("seg_id",
-                             (F.col("docid") / seg_size).cast("int"))
-                 .select("seg_id", "docid", "doc_len")
-                 .groupBy("seg_id")
-                 .applyInPandas(encode_norms_pdf, schema=NORMS_SCHEMA))
-        (norms.coalesce(max(1, segments_per_batch // 16))
-         .write.mode("overwrite").parquet(f"{paths.doc_norms}/batch={k}"))
+        write_norms(spark, f"{paths.doc_stats}/batch={k}",
+                    f"{paths.doc_norms}/batch={k}", seg_size,
+                    max(1, segments_per_batch // 16))
         timing["t_no"] = time.time()
 
     man_box: list = []
@@ -393,38 +475,8 @@ def _run_batch(spark, docs: DataFrame, paths: IndexPaths, k: int,
         posts = _postings_from_analyzed(analyzed, seg_size, block_size,
                                         bucket_size=bucket_size,
                                         positions=positions, codec=codec)
-        # written straight from the encode tasks: each segment's
-        # blocks come out (term, docid)-sorted already, so parquet
-        # row-group min/max stats serve the term-IN pushdown without
-        # a second shuffle — and repartitionByRange here would run a
-        # sampling job that RE-EXECUTES the whole encode (2× the
-        # dominant stage)
-        posts.write.mode("overwrite").parquet(
-            f"{paths.postings}/batch={k}")
-        timing["t_po"] = time.time()
-        # lineage from what actually landed on disk — aggregated
-        # once, collected (≤ segments_per_batch tiny rows), written
-        # from the driver.  n_terms counts block_id==0 rows (one per
-        # term run) — same value as countDistinct(term) with a
-        # map-side-combinable sum instead of a distinct shuffle.
-        written = spark.read.parquet(f"{paths.postings}/batch={k}")
-        man_df = written.groupBy("seg_id").agg(
-            F.min("term").alias("term_min"),
-            F.max("term").alias("term_max"),
-            F.sum(F.when(F.col("block_id") == 0, 1).otherwise(0))
-             .alias("n_terms"),
-            F.count("*").alias("n_blocks"),
-            F.sum("n").alias("n_postings"),
-            F.sum("blob_bytes").alias("bytes"),
-            F.min("first_docid").alias("docid_min"),
-            F.max("last_docid").alias("docid_max"),
-        ).withColumn("batch", F.lit(k))
-        man_rows = man_df.collect()
-        from ..localdf import local_df
-
-        (local_df(spark, man_rows, man_df.schema).coalesce(1)
-         .write.mode("overwrite")
-         .parquet(f"{paths.manifest}/batch={k}"))
+        man_rows, timing["t_po"] = write_postings_batch(spark, posts,
+                                                        paths, k)
         man_box.append(man_rows)
 
     # The norms job is independent of the postings job (it reads the
@@ -532,15 +584,9 @@ def build_index(
                                     codec=f"delta-gap+{codec}"))
 
     # --- per-batch: doc_stats + postings + manifest -------------------------
-    # Two batches in flight (guide §2.6 overlap-independent-jobs):
-    # batch k's wide encode stage back-fills the cores that batch k+1's
-    # narrow scan+tokenize stage (row-group pruned to a docid slice of
-    # the input files) leaves idle, and each batch's fixed job latency
-    # hides inside its neighbor.  Batches touch disjoint batch=K dirs;
-    # the one shared sink (lineage) is lock-serialized in storage.py.
-    # FIFO scheduling keeps the earlier batch's tasks first, so this
-    # changes utilization, not ordering semantics; each batch still
-    # gets its own atomic done-marker on completion.
+    # batches overlap: batch k's wide encode stage back-fills the cores
+    # that batch k+1's narrow scan+tokenize stage (row-group pruned to a
+    # docid slice of the input files) leaves idle
     def _one_batch(k: int) -> None:
         lo = k * segments_per_batch * seg_size
         hi = min(n_docs, (k + 1) * segments_per_batch * seg_size)
@@ -551,20 +597,7 @@ def build_index(
 
     pending = [k for k in range(n_batches)
                if not (resume and is_done(paths, "batch", k))]
-    # depth measured on local[32] at 6M turns: 2 → 38.0s, 3 → 34.4s,
-    # 4 → 67.5s (token-cache pressure collapse) — 3 is the sweet spot;
-    # override for cluster profiles via env
-    depth = int(os.environ.get("ADSPARK_BUILD_PIPELINE", "3"))
-    if len(pending) <= 1 or depth <= 1:
-        for k in pending:
-            _one_batch(k)
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=depth) as pool:
-            futs = [pool.submit(_one_batch, k) for k in pending]
-            for f in futs:
-                f.result()
+    run_batches(pending, _one_batch, BUILD_PIPELINE_DEPTH)
 
     _refresh_stats(spark, paths, seg_size, block_size, bucket_size,
                    resume=resume, positions=positions, codec=codec)

@@ -12,15 +12,20 @@ range), so even a term with df ≈ N contributes at most
 target segments by construction instead of landing on one reducer
 (the skew the reference documents at ``SearchFeatureDao.java:307-331``).
 
-Resumable: target segments are processed in batches, each batch one
-Spark job + an atomic checkpoint marker in the destination index;
-restart skips completed batches (north_rule).
+Resumable: target segments are processed in batches, each ending in an
+atomic checkpoint marker in the destination index; restart skips
+completed batches (north_rule).
+
+A merged segment is written through the build's segment writer
+(``builder.write_postings_batch``, ``write_norms``, ``run_batches``).
+doc_stats and term_stats are segment-layout-independent and are
+copied; norms are re-encoded from the source doc_stats at the merged
+geometry.
 """
 
 from __future__ import annotations
 
 import math
-import os
 import time
 
 import numpy as np
@@ -28,8 +33,13 @@ import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.codecs import varint_decode
-from .builder import blocks_from_sorted
+from .builder import (
+    POSTING_SCHEMA,
+    blocks_from_sorted,
+    run_batches,
+    write_norms,
+    write_postings_batch,
+)
 from .storage import (
     IndexMeta,
     IndexPaths,
@@ -122,6 +132,11 @@ def _merge_new_seg(pdf: pd.DataFrame, block_size: int, src_seg_size: int,
                               codec=codec)
 
 
+# merge batches in flight: one batch's re-encode tasks back-fill the
+# tail of its neighbour
+MERGE_PIPELINE_DEPTH = 2
+
+
 def merge_segments(
     spark: SparkSession,
     src_dir: str,
@@ -133,7 +148,8 @@ def merge_segments(
     """Compact ``src_dir``'s segments by ``factor`` into ``dst_dir``.
 
     doc_stats / term_stats are segment-layout-independent and are
-    carried over; postings are re-encoded per target segment.
+    carried over; postings are re-encoded per target segment and norms
+    re-encoded from doc_stats at the merged segment size.
     """
     src_meta = read_meta(src_dir)
     src, dst = IndexPaths(src_dir), IndexPaths(dst_dir)
@@ -143,9 +159,12 @@ def merge_segments(
     n_new_segs = max(1, math.ceil(src_meta.n_docs / new_seg_size))
     n_batches = max(1, math.ceil(n_new_segs / segments_per_batch))
     # pin merge geometry BEFORE touching dst meta: resuming with a
-    # different factor/batching must error, not remap docid ranges
+    # different factor/batching must error, not remap docid ranges —
+    # and so must resuming against a source that grew or was rebuilt
+    # since, or dst would mix its old batches with the new meta
     pin_geometry(dst, "merge_conf", resume, factor=factor,
-                 segments_per_batch=segments_per_batch)
+                 segments_per_batch=segments_per_batch,
+                 src_n_docs=src_meta.n_docs, src_seg_size=src_meta.seg_size)
     write_meta(dst, IndexMeta(
         n_docs=src_meta.n_docs, avgdl=src_meta.avgdl,
         seg_size=new_seg_size, block_size=block_size,
@@ -176,8 +195,6 @@ def merge_segments(
                                   positions_expected=bool(
                                       getattr(src_meta, "positions", False)))
 
-        from .builder import POSTING_SCHEMA
-
         # merge parallelism = target segments × term shards: posting
         # blocks never span terms, so sharding a target segment's terms
         # re-encodes identical blocks while filling the cluster even
@@ -191,35 +208,11 @@ def merge_segments(
             "_shard", F.pmod(F.xxhash64("term"), F.lit(shards)))
         merged = (sub.groupBy("new_seg", "_shard")
                   .applyInPandas(_m, schema=POSTING_SCHEMA))
-        # written straight from the merge tasks — blocks leave
-        # _merge_new_seg (term, docid)-sorted per segment, and a
-        # repartitionByRange here would run a sampling job that
-        # re-executes the whole merge.  (AQE's byte-based coalescing of
-        # the shard fan-out is left ON: measured on this box, ~20
-        # coalesced tasks beat the full 32-task fan-out — the encode is
-        # bandwidth-bound before it is core-bound.)
-        merged.write.mode("overwrite").parquet(f"{dst.postings}/batch={k}")
-
-        written = spark.read.parquet(f"{dst.postings}/batch={k}")
-        has_bb = "blob_bytes" in written.columns
-        man_df = written.groupBy("seg_id").agg(
-            F.min("term").alias("term_min"), F.max("term").alias("term_max"),
-            # one block_id==0 row per term run ≡ countDistinct(term),
-            # without the distinct shuffle
-            F.sum(F.when(F.col("block_id") == 0, 1).otherwise(0))
-             .alias("n_terms"),
-            F.count("*").alias("n_blocks"), F.sum("n").alias("n_postings"),
-            (F.sum("blob_bytes") if has_bb
-             else F.sum(F.length("gaps")) + F.sum(F.length("tfs")))
-            .alias("bytes"),
-            F.min("first_docid").alias("docid_min"),
-            F.max("last_docid").alias("docid_max"),
-        ).withColumn("batch", F.lit(k))
-        man_rows = man_df.collect()
-        from ..localdf import local_df
-
-        (local_df(spark, man_rows, man_df.schema).coalesce(1)
-         .write.mode("overwrite").parquet(f"{dst.manifest}/batch={k}"))
+        # AQE's byte-based coalescing of the shard fan-out is left ON:
+        # measured on a 32-core host, ~20 coalesced tasks beat the full
+        # 32-task fan-out — the encode is bandwidth-bound before it is
+        # core-bound.
+        man_rows, _ = write_postings_batch(spark, merged, dst, k)
         ext = (min((r["docid_min"] for r in man_rows), default=0),
                max((r["docid_max"] for r in man_rows), default=-1),
                sum(r["n_postings"] for r in man_rows),
@@ -231,24 +224,9 @@ def merge_segments(
         mark_done(dst, "merge_batch", k, wall_s=time.time() - t0)
         log_metric(dst, "merge", batch=k, wall_s=time.time() - t0)
 
-    # merge batches are independent (disjoint batch=K dirs, own atomic
-    # markers; the shared lineage sink is lock-serialized in
-    # storage.py) — run them two-deep so one batch's re-encode tasks
-    # back-fill the tail of its neighbor (guide §2.6), same pattern as
-    # the build's batch pipeline
     pending = [k for k in range(n_batches)
                if not (resume and is_done(dst, "merge_batch", k))]
-    depth = int(os.environ.get("ADSPARK_MERGE_PIPELINE", "2"))
-    if len(pending) <= 1 or depth <= 1:
-        for k in pending:
-            _one_batch(k)
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=depth) as pool:
-            futs = [pool.submit(_one_batch, k) for k in pending]
-            for f in futs:
-                f.result()
+    run_batches(pending, _one_batch, MERGE_PIPELINE_DEPTH)
 
     for stage, src_path, dst_path, parts in (
         ("copy_doc_stats", src.doc_stats, dst.doc_stats, 8),
@@ -264,33 +242,11 @@ def merge_segments(
         mark_done(dst, stage)
         log_metric(dst, stage, wall_s=time.time() - t0)
 
-    # norms re-grouped to the merged segment geometry
+    # norms re-encoded at the merged segment geometry
     if not (resume and is_done(dst, "merge_norms")):
-        from .builder import NORMS_SCHEMA
-        from ..functions.codecs import delta_encode, varint_encode
-
         t0 = time.time()
-        norms = spark.read.parquet(src.doc_norms).withColumn(
-            "seg_id", (F.col("seg_id") / factor).cast("int"))
-
-        def _merge_norms(pdf: pd.DataFrame) -> pd.DataFrame:
-            seg_id = int(pdf["seg_id"].iloc[0])
-            parts_d, parts_l = [], []
-            for g, l in zip(pdf["docid_gaps"], pdf["dls"]):
-                parts_d.append(np.cumsum(varint_decode(g)).astype(np.int64))
-                parts_l.append(varint_decode(l).astype(np.int64))
-            docids = np.concatenate(parts_d)
-            dls = np.concatenate(parts_l)
-            order = np.argsort(docids, kind="stable")
-            docids, dls = docids[order], dls[order]
-            return pd.DataFrame({
-                "seg_id": [seg_id], "n": [len(docids)],
-                "docid_gaps": [varint_encode(delta_encode(docids, 0))],
-                "dls": [varint_encode(dls.astype(np.uint64))],
-            })
-
-        (norms.groupBy("seg_id").applyInPandas(_merge_norms, schema=NORMS_SCHEMA)
-         .coalesce(4).write.mode("overwrite").parquet(f"{dst.doc_norms}/batch=0"))
+        write_norms(spark, src.doc_stats, f"{dst.doc_norms}/batch=0",
+                    new_seg_size, 4)
         mark_done(dst, "merge_norms")
         log_metric(dst, "merge_norms", wall_s=time.time() - t0)
     return dst

@@ -1,6 +1,7 @@
 import shutil
 import tempfile
 
+import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -189,6 +190,70 @@ def test_merge_preserves_results(spark, index_env):
         assert list(a.docid) == list(b.docid)
         if len(a):
             assert (a.score - b.score).abs().max() < 1e-12
+    # norms: one blob per target segment, decoding to the source's
+    # (docid, doc_len) rows, each docid inside its blob's segment
+    from anomaly_detection_spark.functions.codecs import varint_decode
+
+    norms = mreader.doc_norms().toPandas()
+    m = mreader.meta
+    assert sorted(norms.seg_id) == list(range(-(-m.n_docs // m.seg_size)))
+    docids = [np.cumsum(varint_decode(g)).astype(np.int64)
+              for g in norms.docid_gaps]
+    for seg, d in zip(norms.seg_id, docids):
+        assert (d // m.seg_size == seg).all()
+    got = pd.DataFrame({
+        "docid": np.concatenate(docids),
+        "doc_len": np.concatenate([varint_decode(x).astype(np.int64)
+                                   for x in norms.dls]),
+    }).sort_values("docid").reset_index(drop=True)
+    want = (reader.doc_stats().select("docid", "doc_len").orderBy("docid")
+            .toPandas())
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
+
+
+def test_merge_resume_after_interrupt(spark, index_env, monkeypatch):
+    import os
+    import threading
+
+    import anomaly_detection_spark.index.merger as mrg
+
+    reader, _, _, tmp = index_env
+    kw = dict(factor=2, segments_per_batch=1)
+    clean = merge_segments(spark, reader.index_dir, f"{tmp}/mclean", **kw)
+    assert len([d for d in os.listdir(clean.manifest)
+                if d.startswith("batch=")]) >= 2
+
+    # kill the merge right after its first batch marker lands: no later
+    # marker is written, and the stages after the batches never run
+    real_mark = st.mark_done
+    lock, killed = threading.Lock(), []
+
+    def bomb(paths, stage, batch="all", **info):
+        if stage == "merge_batch":
+            with lock:
+                if not killed:
+                    real_mark(paths, stage, batch, **info)
+                killed.append(batch)
+            raise RuntimeError("simulated kill")
+        real_mark(paths, stage, batch, **info)
+
+    monkeypatch.setattr(mrg, "mark_done", bomb)
+    with pytest.raises(RuntimeError):
+        merge_segments(spark, reader.index_dir, f"{tmp}/mresumed", **kw)
+    monkeypatch.undo()
+    ckpts = os.listdir(st.IndexPaths(f"{tmp}/mresumed").ckpt_dir)
+    assert len([c for c in ckpts if c.startswith("merge_batch__")]) == 1
+    assert not any(c.startswith("merge_norms__") for c in ckpts)
+
+    resumed = merge_segments(spark, reader.index_dir, f"{tmp}/mresumed",
+                             **kw)
+    pd.testing.assert_frame_equal(_postings_content(spark, clean.postings),
+                                  _postings_content(spark, resumed.postings))
+    for table in ("manifest", "doc_norms"):
+        a, b = (spark.read.parquet(getattr(p, table)).drop("batch")
+                .orderBy("seg_id").toPandas().reset_index(drop=True)
+                for p in (clean, resumed))
+        pd.testing.assert_frame_equal(a, b)
 
 
 def test_force_merge_hits_target_segment_count(spark, index_env):

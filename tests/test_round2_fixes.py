@@ -109,7 +109,8 @@ def test_fill_presence_not_tied_to_first_column(spark):
 
 
 def test_resume_rejects_geometry_change(spark, tiny_transcripts, tmp_path):
-    from anomaly_detection_spark.index import build_index, merge_segments
+    from anomaly_detection_spark.index import (append_index, build_index,
+                                               merge_segments)
 
     idx = str(tmp_path / "idx")
     docs = tiny_transcripts.filter(F.col("docid") < 512)
@@ -121,6 +122,11 @@ def test_resume_rejects_geometry_change(spark, tiny_transcripts, tmp_path):
     merge_segments(spark, idx, dst, factor=2, segments_per_batch=2)
     with pytest.raises(ValueError, match="geometry mismatch"):
         merge_segments(spark, idx, dst, factor=4, segments_per_batch=2)
+    # a source that grew since the merge must not resume into its dst
+    append_index(tiny_transcripts.filter((F.col("docid") >= 512)
+                                         & (F.col("docid") < 768)), idx)
+    with pytest.raises(ValueError, match="geometry mismatch"):
+        merge_segments(spark, idx, dst, factor=2, segments_per_batch=2)
 
 
 # --- multi-table sources (CompositeRetriever pattern fan-in) ----------------
