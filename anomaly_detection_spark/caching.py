@@ -53,6 +53,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from .index.storage import read_table
 from .localdf import local_df
 
 # TimeSeriesSettings.java:60 — doorkeeper resets every 60 intervals
@@ -235,17 +236,12 @@ def admit_entities(spark: SparkSession, state_dir: str, detector_id: str,
     cpath = _cache_path(state_dir, detector_id)
     key_fields = [f for f in present.schema.fields]
     schema = _cache_schema(key_fields)
-    if os.path.exists(cpath):
-        cache = spark.read.parquet(cpath)
-        if "last_hit_ms" not in cache.columns:
-            cache = cache.withColumn("last_hit_ms",
-                                     F.lit(None).cast("long"))
-        meta = cache.agg(F.min("landmark_ms"), F.min("dk_reset_ms")).first()
-        landmark_ms = meta[0] if meta[0] is not None else now_ms
-        dk_reset_ms = meta[1] if meta[1] is not None else now_ms
-    else:
-        cache = local_df(spark, [], schema)
-        landmark_ms, dk_reset_ms = now_ms, now_ms
+    # a cache written before last_hit_ms existed reads it as null
+    cache = read_table(spark, cpath, schema)
+    meta = (cache.agg(F.min("landmark_ms"), F.min("dk_reset_ms")).first()
+            if os.path.exists(cpath) else (None, None))
+    landmark_ms = meta[0] if meta[0] is not None else now_ms
+    dk_reset_ms = meta[1] if meta[1] is not None else now_ms
     # DoorKeeper.maintenance: whole-map reset every reset-interval
     if now_ms - dk_reset_ms >= (policy.doorkeeper_reset_intervals
                                 * interval_ms):
@@ -519,7 +515,8 @@ def rebalance_shared_cache(
         if evicted:
             _drop_state_keys(spark, state_dir, det_id, evicted,
                              info["key_fields"])
-        cache = spark.read.parquet(info["cache"])
+        cache = read_table(spark, info["cache"],
+                           _cache_schema(info["key_fields"]))
         cols = cache.columns
 
         def _keys_df(keys: list[tuple]):

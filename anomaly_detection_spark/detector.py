@@ -27,7 +27,7 @@ from dataclasses import dataclass, field as dc_field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from .localdf import local_df
+from .index.storage import read_table
 
 from .features import feature_matrix, score_entities
 from .functions.entity import with_entity
@@ -642,19 +642,8 @@ def run_once_stateful(spark: SparkSession, det: Detector, now_ms: int,
                        T.StructField("last_z", T.DoubleType()),
                        T.StructField("model", T.BinaryType()),
                        T.StructField("last_v", T.DoubleType())])
-    state_schema = T.StructType(state_fields)
-    import os
-
-    if os.path.exists(spath):
-        state = spark.read.parquet(spath)
-        # state written before the idempotency / model / imputation
-        # columns existed
-        for c, t in (("last_ms", "long"), ("last_z", "double"),
-                     ("model", "binary"), ("last_v", "double")):
-            if c not in state.columns:
-                state = state.withColumn(c, F.lit(None).cast(t))
-    else:
-        state = local_df(spark, [], state_schema)
+    # older state reads last_ms / last_z / model / last_v as null
+    state = read_table(spark, spath, T.StructType(state_fields))
 
     if cache_policy is not None:
         from .caching import admit_entities
@@ -1027,8 +1016,6 @@ def run_once_stateful_joint(spark: SparkSession, det: Detector,
         F.array(*[F.col(n).cast("double") for n in feats]).alias("_vec"))
 
     spath = _state_path(state_dir, f"{det.detector_id}__joint")
-    import os
-
     state_fields = ([f for f in cur.schema.fields if f.name != "_vec"]
                     + [T.StructField("scored_cnt", T.LongType()),
                        T.StructField("last_ms", T.LongType()),
@@ -1036,14 +1023,8 @@ def run_once_stateful_joint(spark: SparkSession, det: Detector,
                        T.StructField("last_out", T.BinaryType()),
                        T.StructField("last_vec",
                                      T.ArrayType(T.DoubleType()))])
-    state_schema = T.StructType(state_fields)
-    if os.path.exists(spath):
-        state = spark.read.parquet(spath)
-        if "last_vec" not in state.columns:   # pre-imputation tables
-            state = state.withColumn(
-                "last_vec", F.lit(None).cast("array<double>"))
-    else:
-        state = local_df(spark, [], state_schema)
+    # pre-imputation tables read last_vec as null
+    state = read_table(spark, spath, T.StructType(state_fields))
 
     if cache_policy is not None:
         from .caching import admit_entities
@@ -1503,6 +1484,13 @@ def run_historical(
     # UDF's output columns are matched positionally against the schema)
     gstruct = ([src.schema[c] for c in ent] if ent
                else [T.StructField("_g", T.StringType())])
+    state_schema = T.StructType(
+        gstruct
+        + [T.StructField("_feat", T.StringType()),
+           T.StructField("vals", T.ArrayType(T.DoubleType())),
+           T.StructField("scored_cnt", T.LongType()),
+           T.StructField("model", T.BinaryType()),
+           T.StructField("last_v", T.DoubleType())])
     out_schema = T.StructType(
         gstruct
         + [T.StructField("_feat", T.StringType()),
@@ -1550,24 +1538,8 @@ def run_historical(
         # from the live state dir (e.g. a prior run_once_stateful)
         in_state = snap(p - 1) if p > 0 and os.path.exists(snap(p - 1)) \
             else spath
-        if os.path.exists(in_state):
-            state = spark.read.parquet(in_state)
-            # snapshot written before the model / imputation columns
-            for c, t in (("model", "binary"), ("last_v", "double")):
-                if c not in state.columns:
-                    state = state.withColumn(c, F.lit(None).cast(t))
-        else:
-            state = local_df(
-                spark, [], T.StructType(
-                    gstruct
-                    + [T.StructField("_feat", T.StringType()),
-                       T.StructField("vals",
-                                     T.ArrayType(T.DoubleType())),
-                       T.StructField("scored_cnt", T.LongType()),
-                       T.StructField("model", T.BinaryType()),
-                       T.StructField("last_v", T.DoubleType())]))
-        st = state.select(*gcols, "_feat", "vals", "scored_cnt",
-                          "model", "last_v")
+        # an older snapshot reads model / last_v as null
+        st = read_table(spark, in_state, state_schema)
         if impute == "linear":
             # this piece's slice of the precomputed fill table rides
             # the melt itself (no join): fill rows ingest in bucket

@@ -29,16 +29,23 @@ from __future__ import annotations
 import math
 import os
 import time
+from dataclasses import replace
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from ..functions.codecs import codec_name as _codec_name
 from ..functions.codecs import varint_encode_with_widths
 from ..query.brute_force import analyze_docs
 from .storage import (
+    DOC_STATS_SCHEMA,
+    MANIFEST_SCHEMA,
+    NORMS_SCHEMA,
+    POSTING_SCHEMA,
+    TERM_STATS_SCHEMA,
     IndexMeta,
     IndexPaths,
     is_done,
@@ -48,6 +55,7 @@ from .storage import (
     pin_geometry,
     read_ckpt,
     read_meta,
+    read_table,
     write_meta,
 )
 
@@ -72,14 +80,6 @@ def _run_overlapped(side_job, main_job) -> None:
     th.join()
     if errs:
         raise errs[0]
-
-
-POSTING_SCHEMA = (
-    "term string, seg_id int, block_id int, first_docid long, last_docid long, "
-    "n int, gaps binary, tfs binary, max_tf int, sum_tf long, min_dl int, "
-    "bm_buckets array<int>, bm_tf array<int>, bm_dl array<int>, "
-    "blob_bytes int, pos binary"
-)
 
 
 _EMPTY_BLOCKS = pd.DataFrame(
@@ -313,9 +313,6 @@ def blocks_from_sorted(
     })
 
 
-NORMS_SCHEMA = "seg_id int, n int, docid_gaps binary, dls binary"
-
-
 def encode_norms_pdf(pdf: pd.DataFrame) -> pd.DataFrame:
     """One segment's (seg_id, docid, doc_len) rows → a single norms blob
     (docid delta-gaps + doc_len varints, docid-ordered)."""
@@ -372,7 +369,8 @@ def write_postings_batch(spark, posts: DataFrame, paths: IndexPaths,
     # n_terms counts block_id==0 rows (one per term run) — same value
     # as countDistinct(term) with a map-side-combinable sum instead of
     # a distinct shuffle.
-    written = spark.read.parquet(f"{paths.postings}/batch={k}")
+    written = read_table(spark, f"{paths.postings}/batch={k}",
+                         POSTING_SCHEMA)
     man_df = written.groupBy("seg_id").agg(
         F.min("term").alias("term_min"),
         F.max("term").alias("term_max"),
@@ -387,7 +385,7 @@ def write_postings_batch(spark, posts: DataFrame, paths: IndexPaths,
     man_rows = man_df.collect()
     from ..localdf import local_df
 
-    (local_df(spark, man_rows, man_df.schema).coalesce(1)
+    (local_df(spark, man_rows, MANIFEST_SCHEMA).coalesce(1)
      .write.mode("overwrite")
      .parquet(f"{paths.manifest}/batch={k}"))
     return man_rows, t_written
@@ -399,7 +397,7 @@ def write_norms(spark, doc_stats_path: str, out_path: str, seg_size: int,
     segment, written as ``n_files`` parquet files.  A build batch passes
     its own doc_stats; a merge passes the source's at the merged
     ``seg_size``."""
-    (spark.read.parquet(doc_stats_path)
+    (read_table(spark, doc_stats_path, DOC_STATS_SCHEMA)
      .withColumn("seg_id", (F.col("docid") / seg_size).cast("int"))
      .select("seg_id", "docid", "doc_len")
      .groupBy("seg_id")
@@ -577,11 +575,14 @@ def build_index(
                  bucket_size=bucket_size, positions=positions, codec=codec)
     if not (resume and is_done(paths, "finalize")):
         # draft meta only — never clobber a finalized one on resume
+        ds_schema = (analyze_docs(docs, text_col=text_col)
+                     .select("docid", "doc_len", *keep_cols).schema.toDDL())
         write_meta(paths, IndexMeta(n_docs=n_docs, avgdl=0.0, seg_size=seg_size,
                                     block_size=block_size,
                                     bucket_size=bucket_size,
                                     positions=positions,
-                                    codec=f"delta-gap+{codec}"))
+                                    codec=f"delta-gap+{codec}",
+                                    doc_stats_schema=ds_schema))
 
     # --- per-batch: doc_stats + postings + manifest -------------------------
     # batches overlap: batch k's wide encode stage back-fills the cores
@@ -599,29 +600,27 @@ def build_index(
                if not (resume and is_done(paths, "batch", k))]
     run_batches(pending, _one_batch, BUILD_PIPELINE_DEPTH)
 
-    _refresh_stats(spark, paths, seg_size, block_size, bucket_size,
-                   resume=resume, positions=positions, codec=codec)
+    _refresh_stats(spark, paths, resume=resume)
     return paths
 
 
-def _refresh_stats(spark, paths: IndexPaths, seg_size: int, block_size: int,
-                   bucket_size: int, resume: bool,
-                   positions: bool = False,
-                   codec: str = "leb128") -> None:
+def _refresh_stats(spark, paths: IndexPaths, resume: bool) -> None:
     """term_stats (global df/cf) ∥ finalize meta (N, avgdl) —
-    independent single-pass jobs over different tables, overlapped."""
+    independent single-pass jobs over different tables, overlapped.
+    The finalized meta keeps every other field of the draft meta."""
 
     def _term_stats():
         if resume and is_done(paths, "term_stats"):
             return
         t0 = time.time()
-        posts = spark.read.parquet(paths.postings)
+        posts = read_table(spark, paths.postings, POSTING_SCHEMA)
         # written straight from the agg: sortWithinPartitions(term) keeps
         # row-group min/max stats tight for the query-time term lookup,
         # and skipping repartitionByRange avoids a sampling job that
         # would re-read the postings a second time
         (posts.groupBy("term")
          .agg(F.sum("n").alias("df"), F.sum("sum_tf").alias("cf"))
+         .to(T.StructType.fromDDL(TERM_STATS_SCHEMA))
          .sortWithinPartitions("term")
          .write.mode("overwrite").parquet(paths.term_stats))
         mark_done(paths, "term_stats")
@@ -631,14 +630,11 @@ def _refresh_stats(spark, paths: IndexPaths, seg_size: int, block_size: int,
         if resume and is_done(paths, "finalize"):
             return
         t0 = time.time()
-        row = spark.read.parquet(paths.doc_stats).agg(
+        row = read_table(spark, paths.doc_stats, DOC_STATS_SCHEMA).agg(
             F.count("*").alias("n"), F.avg("doc_len").alias("avgdl")
         ).collect()[0]
-        write_meta(paths, IndexMeta(
-            n_docs=int(row["n"]), avgdl=float(row["avgdl"] or 0.0),
-            seg_size=seg_size, block_size=block_size,
-            bucket_size=bucket_size, positions=positions,
-            codec=f"delta-gap+{codec}"))
+        write_meta(paths, replace(read_meta(paths.root), n_docs=int(row["n"]),
+                                  avgdl=float(row["avgdl"] or 0.0)))
         mark_done(paths, "finalize")
         log_metric(paths, "finalize", n_docs=int(row["n"]),
                    avgdl=float(row["avgdl"] or 0.0), wall_s=time.time() - t0)
@@ -710,6 +706,5 @@ def append_index(
             os.remove(paths.ckpt(st))
         except FileNotFoundError:
             pass
-    _refresh_stats(spark, paths, seg_size, block_size, bucket_size,
-                   resume=resume, positions=positions, codec=codec)
+    _refresh_stats(spark, paths, resume=resume)
     return paths

@@ -27,6 +27,7 @@ from __future__ import annotations
 
 import math
 import time
+from dataclasses import replace
 
 import numpy as np
 import pandas as pd
@@ -34,14 +35,14 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from .builder import (
-    POSTING_SCHEMA,
     blocks_from_sorted,
     run_batches,
     write_norms,
     write_postings_batch,
 )
 from .storage import (
-    IndexMeta,
+    POSTING_SCHEMA,
+    TERM_STATS_SCHEMA,
     IndexPaths,
     is_done,
     log_lineage,
@@ -49,6 +50,7 @@ from .storage import (
     mark_done,
     pin_geometry,
     read_meta,
+    read_table,
     write_meta,
 )
 
@@ -165,13 +167,12 @@ def merge_segments(
     pin_geometry(dst, "merge_conf", resume, factor=factor,
                  segments_per_batch=segments_per_batch,
                  src_n_docs=src_meta.n_docs, src_seg_size=src_meta.seg_size)
-    write_meta(dst, IndexMeta(
-        n_docs=src_meta.n_docs, avgdl=src_meta.avgdl,
-        seg_size=new_seg_size, block_size=block_size,
-        bucket_size=src_meta.bucket_size, positions=src_meta.positions,
-        codec=src_meta.codec))
+    # copied unpartitioned: the source's `batch` becomes a data column
+    doc_stats = read_table(spark, src.doc_stats, src_meta.doc_stats_schema)
+    write_meta(dst, replace(src_meta, seg_size=new_seg_size,
+                            doc_stats_schema=doc_stats.schema.toDDL()))
 
-    posts = spark.read.parquet(src.postings).withColumn(
+    posts = read_table(spark, src.postings, POSTING_SCHEMA).withColumn(
         "new_seg", (F.col("seg_id") / factor).cast("int"))
 
     def _one_batch(k: int) -> None:
@@ -192,8 +193,7 @@ def merge_segments(
             return _merge_new_seg(pdf, block_size, src_meta.seg_size,
                                   new_seg_size, src_meta.bucket_size,
                                   codec=_cn(src_meta.codec),
-                                  positions_expected=bool(
-                                      getattr(src_meta, "positions", False)))
+                                  positions_expected=src_meta.positions)
 
         # merge parallelism = target segments × term shards: posting
         # blocks never span terms, so sharding a target segment's terms
@@ -228,15 +228,15 @@ def merge_segments(
                if not (resume and is_done(dst, "merge_batch", k))]
     run_batches(pending, _one_batch, MERGE_PIPELINE_DEPTH)
 
-    for stage, src_path, dst_path, parts in (
-        ("copy_doc_stats", src.doc_stats, dst.doc_stats, 8),
-        ("copy_term_stats", src.term_stats, dst.term_stats, 4),
+    for stage, df, dst_path, parts, order in (
+        ("copy_doc_stats", doc_stats, dst.doc_stats, 8, "docid"),
+        ("copy_term_stats",
+         read_table(spark, src.term_stats, TERM_STATS_SCHEMA),
+         dst.term_stats, 4, "term"),
     ):
         if resume and is_done(dst, stage):
             continue
         t0 = time.time()
-        df = spark.read.parquet(src_path)
-        order = "docid" if stage == "copy_doc_stats" else "term"
         (df.repartitionByRange(parts, order).sortWithinPartitions(order)
          .write.mode("overwrite").parquet(dst_path))
         mark_done(dst, stage)

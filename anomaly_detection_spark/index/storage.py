@@ -1,4 +1,5 @@
-"""Index layout, metadata, checkpoint markers and per-stage metrics.
+"""Index layout, table schemas, metadata, checkpoint markers and
+per-stage metrics.
 
 Layout under ``index_dir`` (the Spark analog of a Lucene index
 directory; lineage/checkpoint design modeled on the reference's task
@@ -6,12 +7,20 @@ piece checkpoints — ``ADBatchTaskRunner.java:1017-1093`` — and its
 checkpoint index ``anomaly-checkpoint.json``):
 
     _meta.json                   corpus stats + codec/analyzer config
-    doc_stats/                   parquet: docid, doc_len, identity + filter cols
-    postings/batch=K/            parquet: per-segment posting blocks
-    term_stats/                  parquet: term, df, cf
-    manifest/batch=K/            parquet: per-segment lineage rows
+    doc_stats/batch=K/           docid, doc_len + the build's keep_cols
+                                 (DOC_STATS_SCHEMA; full DDL in the meta)
+    doc_norms/batch=K/           per-segment norms blobs (NORMS_SCHEMA)
+    postings/batch=K/            per-segment posting blocks (POSTING_SCHEMA)
+    term_stats/                  term, df, cf (TERM_STATS_SCHEMA)
+    manifest/batch=K/            per-segment lineage rows (MANIFEST_SCHEMA)
+    lineage/                     one row per stage × batch (LINEAGE_SCHEMA)
     _ckpt/<stage>__<batch>.json  completion markers (resume skips these)
     metrics.jsonl                per-stage wall/row metrics (append)
+
+Every table is written from its schema constant and read back with it
+through :func:`read_table`, never by Parquet schema inference (a Spark
+job per read).  A merged index's doc_stats carries ``batch`` as a data
+column.
 """
 
 from __future__ import annotations
@@ -20,6 +29,24 @@ import json
 import os
 import time
 from dataclasses import asdict, dataclass
+
+from ..localdf import local_df
+
+POSTING_SCHEMA = (
+    "term string, seg_id int, block_id int, first_docid long, last_docid long, "
+    "n int, gaps binary, tfs binary, max_tf int, sum_tf long, min_dl int, "
+    "bm_buckets array<int>, bm_tf array<int>, bm_dl array<int>, "
+    "blob_bytes int, pos binary"
+)
+NORMS_SCHEMA = "seg_id int, n int, docid_gaps binary, dls binary"
+TERM_STATS_SCHEMA = "term string, df long, cf long"
+MANIFEST_SCHEMA = ("seg_id int, term_min string, term_max string, "
+                   "n_terms long, n_blocks long, n_postings long, "
+                   "bytes long, docid_min long, docid_max long, batch int")
+# the fixed part of doc_stats; the build's keep_cols follow it
+DOC_STATS_SCHEMA = "docid long, doc_len int"
+LINEAGE_SCHEMA = ("stage string, batch int, docid_lo long, docid_hi long, "
+                  "rows long, bytes long, wall_s double, ts double")
 
 
 @dataclass
@@ -39,6 +66,8 @@ class IndexMeta:
     analyzer: str = "lowercase+unicode-word-break"
     codec: str = "delta-gap+leb128"
     version: int = 1
+    # DDL of doc_stats as written (the build's keep_cols and their types)
+    doc_stats_schema: str = DOC_STATS_SCHEMA
 
 
 @dataclass
@@ -93,8 +122,10 @@ class IndexPaths:
 
 def write_meta(paths: IndexPaths, meta: IndexMeta) -> None:
     os.makedirs(paths.root, exist_ok=True)
-    with open(paths.meta, "w") as f:
+    tmp = paths.meta + ".tmp"
+    with open(tmp, "w") as f:
         json.dump(asdict(meta), f, indent=1)
+    os.replace(tmp, paths.meta)  # atomic: a reader never sees half a meta
 
 
 def read_meta(index_dir: str) -> IndexMeta:
@@ -146,8 +177,14 @@ def log_metric(paths: IndexPaths, stage: str, **fields) -> None:
         f.write(json.dumps({"stage": stage, "ts": time.time(), **fields}) + "\n")
 
 
-LINEAGE_SCHEMA = ("stage string, batch int, docid_lo long, docid_hi long, "
-                  "rows long, bytes long, wall_s double, ts double")
+def read_table(spark, path: str, schema):
+    """A table this package wrote, read with its declared ``schema`` (no
+    inference job; discovered partition columns are appended).  An
+    absent table reads as an empty frame of ``schema``."""
+    if not os.path.exists(path):
+        return local_df(spark, [], schema)
+    return spark.read.schema(schema).parquet(path)
+
 
 # append-mode parquet writes into ONE directory share a _temporary
 # staging dir; concurrent appends (overlapped build batches) would
@@ -159,8 +196,6 @@ def log_lineage(spark, paths: IndexPaths, stage: str, batch: int = 0,
                 docid_lo: int = 0, docid_hi: int = 0, rows: int = 0,
                 bytes_: int = 0, wall_s: float = 0.0) -> None:
     """Append one lineage row (parquet, next to the manifest)."""
-    from ..localdf import local_df
-
     with _LINEAGE_LOCK:
         local_df(
             spark,

@@ -67,19 +67,12 @@ def profile_detector(spark: SparkSession, det: Detector,
     st = frames[0]
     for f in frames[1:]:
         st = st.unionByName(f)
-    aggs = [F.count("*").alias("models"),
-            F.min("scored_cnt").alias("min_cnt"),
-            F.max("scored_cnt").alias("max_cnt")]
-    if "model" in st.columns:
-        aggs.append(F.sum(F.coalesce(F.length("model"), F.lit(0)))
-                    .alias("model_bytes"))
-    else:
-        aggs.append(F.lit(0).alias("model_bytes"))
-    if "last_ms" in st.columns:
-        aggs.append(F.max("last_ms").alias("last_ms"))
-    else:
-        aggs.append(F.lit(None).cast("long").alias("last_ms"))
-    row = st.agg(*aggs).collect()[0]
+    row = st.agg(F.count("*").alias("models"),
+                 F.min("scored_cnt").alias("min_cnt"),
+                 F.max("scored_cnt").alias("max_cnt"),
+                 F.sum(F.coalesce(F.length("model"), F.lit(0)))
+                 .alias("model_bytes"),
+                 F.max("last_ms").alias("last_ms")).collect()[0]
     n_entities = (st.select(*ent).distinct().count() if ent
                   else min(1, row["models"]))
     min_cnt = row["min_cnt"] or 0
@@ -233,11 +226,12 @@ def profile_index(spark: SparkSession, index_dir: str) -> dict:
     segment/term/posting/byte counts, docid extent, and per-stage
     wall-time totals — the introspection a profile API serves without
     touching a posting block."""
-    from .index.storage import IndexPaths, read_meta
+    from .index.storage import (LINEAGE_SCHEMA, MANIFEST_SCHEMA, IndexPaths,
+                                read_meta, read_table)
 
     paths = IndexPaths(index_dir)
     meta = read_meta(index_dir)
-    man = spark.read.parquet(paths.manifest)
+    man = read_table(spark, paths.manifest, MANIFEST_SCHEMA)
     row = man.agg(
         F.countDistinct("seg_id").alias("segments"),
         F.sum("n_terms").alias("terms"),
@@ -250,8 +244,8 @@ def profile_index(spark: SparkSession, index_dir: str) -> dict:
         "n_docs": meta.n_docs,
         "avgdl": meta.avgdl,
         "seg_size": meta.seg_size,
-        "positions": bool(getattr(meta, "positions", False)),
-        "codec": getattr(meta, "codec", "leb128") or "leb128",
+        "positions": meta.positions,
+        "codec": meta.codec,
         "segments": int(row["segments"] or 0),
         "terms": int(row["terms"] or 0),
         "postings": int(row["postings"] or 0),
@@ -259,14 +253,11 @@ def profile_index(spark: SparkSession, index_dir: str) -> dict:
         "docid_range": [int(row["docid_lo"] or 0),
                         int(row["docid_hi"] or -1) + 1],
     }
-    try:
-        lin = spark.read.parquet(paths.lineage)
-        out["stage_walls_s"] = {
-            r["stage"]: round(r["wall"], 3)
-            for r in lin.groupBy("stage")
-            .agg(F.sum("wall_s").alias("wall")).collect()}
-    except Exception:
-        out["stage_walls_s"] = {}
+    lin = read_table(spark, paths.lineage, LINEAGE_SCHEMA)
+    out["stage_walls_s"] = {
+        r["stage"]: round(r["wall"], 3)
+        for r in lin.groupBy("stage")
+        .agg(F.sum("wall_s").alias("wall")).collect()}
     return out
 
 

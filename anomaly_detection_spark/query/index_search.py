@@ -33,7 +33,7 @@ doc_stats side; corpus stats stay index-wide, matching Lucene
 from __future__ import annotations
 
 from collections import Counter
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from functools import partial
 
 import numpy as np
@@ -46,7 +46,9 @@ from ..functions.bm25 import B_DEFAULT, K1_DEFAULT, bm25_idf, quantize_doc_len
 from ..functions.codecs import (BLOB_DECODERS, codec_name, decode_positions,
                                 varint_decode)
 from ..functions.tokenizer import tokenize_query
-from ..index.storage import IndexMeta, IndexPaths, read_meta
+from ..index.storage import (LINEAGE_SCHEMA, MANIFEST_SCHEMA, NORMS_SCHEMA,
+                             POSTING_SCHEMA, TERM_STATS_SCHEMA, IndexMeta,
+                             IndexPaths, read_meta, read_table)
 
 _HITS = "docid long, score double"
 _DOCIDS = "docid long"
@@ -58,25 +60,33 @@ _POSITIONAL_COLS = ("first_docid", "gaps", "tfs", "pos")
 
 @dataclass
 class IndexReader:
+    """Each table read re-lists the index files and :attr:`meta` re-reads
+    ``_meta.json`` (no Spark job), so a held reader sees appends."""
+
     spark: SparkSession
     index_dir: str
-    meta: IndexMeta = field(init=False)
 
     def __post_init__(self):
-        self.meta = read_meta(self.index_dir)
         self.paths = IndexPaths(self.index_dir)
+        read_meta(self.index_dir)  # fail fast on a non-index
+
+    @property
+    def meta(self) -> IndexMeta:
+        return read_meta(self.index_dir)
 
     def postings(self) -> DataFrame:
-        return self.spark.read.parquet(self.paths.postings)
+        return read_table(self.spark, self.paths.postings, POSTING_SCHEMA)
 
     def doc_stats(self) -> DataFrame:
-        return self.spark.read.parquet(self.paths.doc_stats)
+        return read_table(self.spark, self.paths.doc_stats,
+                          self.meta.doc_stats_schema)
 
     def doc_norms(self) -> DataFrame:
-        return self.spark.read.parquet(self.paths.doc_norms)
+        return read_table(self.spark, self.paths.doc_norms, NORMS_SCHEMA)
 
     def term_stats(self) -> DataFrame:
-        return self.spark.read.parquet(self.paths.term_stats)
+        return read_table(self.spark, self.paths.term_stats,
+                          TERM_STATS_SCHEMA)
 
     def term_dfs(self, terms, limit: int | None = None) -> dict[str, int]:
         """term → df from the term dictionary, in one collect: for the
@@ -96,12 +106,12 @@ class IndexReader:
         return {r["term"]: r["df"] for r in rows.collect()}
 
     def manifest(self) -> DataFrame:
-        return self.spark.read.parquet(self.paths.manifest)
+        return read_table(self.spark, self.paths.manifest, MANIFEST_SCHEMA)
 
     def lineage(self) -> DataFrame:
         """Build/merge lineage rows (stage, batch, docid range, rows,
         bytes, wall) — the Spark-queryable task-state table."""
-        return self.spark.read.parquet(self.paths.lineage)
+        return read_table(self.spark, self.paths.lineage, LINEAGE_SCHEMA)
 
 
 def _segment_doclens(docs: pd.DataFrame, seg_base: int,
@@ -192,10 +202,8 @@ def _segment_scan(reader: IndexReader, terms, cols, kernel,
     kernel as ``theta_init`` — the cross-segment competitive-score
     propagation Lucene does with MaxScoreAccumulator: identical
     results, more skipping, one extra tiny job."""
-    src = reader.postings()
-    posts = (src.filter(F.col("term").isin(list(terms)))
-             .select("term", "seg_id",
-                     *[c for c in cols if c in src.columns]))
+    posts = (reader.postings().filter(F.col("term").isin(list(terms)))
+             .select("term", "seg_id", *cols))
     docs = _docs_side(reader, filter_cond)
     seg_size = reader.meta.seg_size
 

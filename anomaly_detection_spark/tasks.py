@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from .detector import (Detector, TaskCancelledError, _state_path,
                        run_historical)
+from .index.storage import read_table
 
 __all__ = ["TaskStore", "start_historical_task", "profile_task",
            "update_realtime_task", "run_once_forecast_task",
@@ -217,7 +218,7 @@ def start_historical_task(
     def _init_progress(snap_path: str) -> float | None:
         if not os.path.exists(snap_path):
             return None
-        r = (spark.read.parquet(snap_path)
+        r = (read_table(spark, snap_path, "scored_cnt long")
              .agg(F.min("scored_cnt")).first())
         if r[0] is None:
             return 0.0
@@ -436,7 +437,8 @@ def update_realtime_task(spark: SparkSession, store: TaskStore,
              if os.path.exists(p)]
     min_cnt = None
     for p in paths:
-        r = spark.read.parquet(p).agg(F.min("scored_cnt")).first()
+        r = read_table(spark, p, "scored_cnt long").agg(
+            F.min("scored_cnt")).first()
         if r[0] is not None:
             min_cnt = r[0] if min_cnt is None else min(min_cnt, r[0])
     ip = min(1.0, (min_cnt or 0) / float(NUM_MIN_SAMPLES))

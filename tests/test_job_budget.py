@@ -21,10 +21,10 @@ from anomaly_detection_spark.query.index_search import (
 from anomaly_detection_spark.query.planner import search
 
 BUDGET = {
-    "bm25_topk": 7,
-    "bm25_topk_role_filter": 7,
-    "search_match_msm": 16,
-    "match_phrase": 7,
+    "bm25_topk": 4,
+    "bm25_topk_role_filter": 4,
+    "search_match_msm": 7,
+    "match_phrase": 4,
 }
 
 
