@@ -8,10 +8,24 @@ fields, and a shingle size (``Config.java:97``, the detector mapping in
 results rows (``anomaly-results.json`` mapping: entity as a nested
 name/value list, anomaly_grade/confidence, data_start/end_time).
 
-This module composes the engine's pieces into exactly that surface:
+This module composes the engine's pieces into exactly that surface.
+Every detection path — :func:`preview` (scalar and joint), the two
+realtime ticks :func:`run_once_stateful` / :func:`run_once_stateful_joint`
+and the :func:`run_historical` piece loop — shares one helper per step;
+only the scoring kernels differ:
 
-    load_table(pattern) → compile_filter(query JSON) → feature_matrix
-    per (entity, interval) → per-entity scoring seam → result rows
+    load_table(pattern) → _interval_frame (compile_filter(query JSON)
+    over [lo, hi) → feature_matrix per (entity, interval)) → _melt (one
+    row per feature) → scoring kernel → _join_scores (pivot the
+    per-feature scores back) → _result_rows (grade, confidence, rules,
+    entity list, feature_imputed)
+
+The joint paths skip the melt and the pivot: their kernels score the
+whole feature vector of an entity.
+
+The ticks add ``_admit`` (entity-cache admission), ``_with_presence``
+(which entities produced a bucket) and ``_swap_state_dir`` (the state
+rewrite) around their kernels.
 
 The model stand-in is the deterministic trailing-window z-score from
 :mod:`features.scoring` (RCF lives in a library the survey scopes
@@ -23,7 +37,11 @@ handling (``ResultProcessor.java:204-331`` fan-out; scores per entity).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field as dc_field
+import functools
+import operator
+import os
+import shutil
+from dataclasses import dataclass, field as dc_field, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -172,36 +190,6 @@ def _check_attr_threshold(alert_threshold, det: Detector) -> None:
             f"alert_threshold={det.anomaly_threshold} to the model")
 
 
-def _swap_state_dir(frame: DataFrame, spath: str,
-                    field_names: list[str]) -> None:
-    """Atomic-ish state rewrite: write ``frame[field_names]`` to a tmp
-    dir, then swap directories (the crash window is two renames, and
-    the rewritten data survives either way)."""
-    import os
-    import shutil
-
-    tmp, trash = spath + ".__tmp__", spath + ".__old__"
-    frame.select(*field_names).write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(trash, ignore_errors=True)
-    if os.path.exists(spath):
-        shutil.move(spath, trash)
-    shutil.move(tmp, spath)
-    shutil.rmtree(trash, ignore_errors=True)
-
-
-def _feature_imputed(feats: list[str]) -> F.Column:
-    """``feature_imputed`` result field (anomaly-results.json nested
-    {feature_id, imputed}; ``ModelUtil.calculateImputedFeatures``):
-    a bucket the imputation step materialized carries ``doc_count``
-    0 — this engine's imputation fills whole missing buckets, so the
-    flag is uniform across features (the reference flags per-NaN
-    coordinate; a present bucket here never has a filled feature)."""
-    return F.array(*[
-        F.struct(F.lit(n).alias("feature_id"),
-                 (F.col("doc_count") == 0).alias("imputed"))
-        for n in feats])
-
-
 def _rule_suppressed(det: Detector, feats: list[str]) -> F.Column:
     """Compile ``det.suppression_rules`` to a boolean Column over the
     per-feature actual (`<f>`) and expected (`_exp_<f>`) columns.
@@ -244,6 +232,235 @@ def _rule_suppressed(det: Detector, feats: list[str]) -> F.Column:
     return any_rule
 
 
+def _state_path(state_dir: str, detector_id: str) -> str:
+    return os.path.join(state_dir, detector_id)
+
+
+def _swap_in(tmp: str, spath: str) -> None:
+    """Replace dir ``spath`` with the finished dir ``tmp`` (the crash
+    window is two renames, and the new data survives either way)."""
+    trash = spath + ".__old__"
+    shutil.rmtree(trash, ignore_errors=True)
+    if os.path.exists(spath):
+        shutil.move(spath, trash)
+    shutil.move(tmp, spath)
+    shutil.rmtree(trash, ignore_errors=True)
+
+
+def _swap_state_dir(frame: DataFrame, spath: str,
+                    field_names: list[str]) -> None:
+    """Atomic-ish state rewrite: write ``frame[field_names]`` to a tmp
+    dir, then swap it in (:func:`_swap_in`)."""
+    tmp = spath + ".__tmp__"
+    frame.select(*field_names).write.mode("overwrite").parquet(tmp)
+    _swap_in(tmp, spath)
+
+
+def _check_imputation(det: Detector, realtime: bool) -> None:
+    """Reject an imputation setting the detection path cannot honor."""
+    if realtime and det.imputation_method == "linear":
+        raise NotImplementedError(
+            "linear imputation interpolates toward the NEXT sample, "
+            "which a single realtime interval cannot observe — use "
+            "zero/fixed_values/previous here, or preview/"
+            "run_historical for linear series")
+    if det.imputation_method == "fixed_values":
+        missing = [f for f in det.feature_specs
+                   if f not in (det.imputation_values or {})]
+        if missing:
+            raise ValueError(
+                f"fixed_values imputation needs a value per feature; "
+                f"missing {missing}")
+
+
+def _closed_interval(det: Detector, now_ms: int) -> tuple[int, int]:
+    """``[start, end)`` of the latest interval closed at ``now -
+    window_delay``."""
+    end = ((now_ms - det.window_delay_ms) // det.interval_ms) \
+        * det.interval_ms
+    return end - det.interval_ms, end
+
+
+def _range_query(det: Detector, lo: int, hi: int) -> dict:
+    """The detector's filter query restricted to ``[lo, hi)``."""
+    rng = {"range": {det.time_field: {"gte": lo, "lt": hi}}}
+    return ({"bool": {"filter": [rng, det.filter_query]}}
+            if det.filter_query else rng)
+
+
+def _interval_frame(src: DataFrame, det: Detector, lo: int | None = None,
+                    hi: int | None = None) -> DataFrame:
+    """Feature rows per (entity, bucket) of the filtered source over
+    ``[lo, hi)`` (the whole source when ``lo`` is None).  A
+    single-stream detector gets the constant group column ``_g``, so
+    every path groups by ``category_fields or ["_g"]``."""
+    q = det.filter_query if lo is None else _range_query(det, lo, hi)
+    fm = feature_matrix(src, det.time_field, det.interval_ms,
+                        det.feature_specs,
+                        entity_cols=tuple(det.category_fields),
+                        filter_cond=compile_filter(src, q) if q else None)
+    return fm if det.category_fields else fm.withColumn("_g", F.lit("_"))
+
+
+def _bucket_ms() -> F.Column:
+    """``bucket_start`` as epoch milliseconds."""
+    return F.unix_millis(F.col("bucket_start").cast("timestamp"))
+
+
+def _melt(frame: DataFrame, feats: list[str], *cols) -> DataFrame:
+    """One row per (``cols``, feature): ``_feat`` names the feature and
+    ``_v`` holds its value as a double."""
+    pairs = ", ".join(f"'{n}', cast(`{n}` as double)" for n in feats)
+    return frame.select(
+        *cols, F.expr(f"stack({len(feats)}, {pairs})").alias("_feat", "_v"))
+
+
+def _complete(feats: list[str]) -> F.Column:
+    """Every feature aggregated to a value: the joint model needs the
+    whole vector."""
+    return functools.reduce(operator.and_,
+                            [F.col(n).isNotNull() for n in feats])
+
+
+def _join_scores(scored: DataFrame, keys: list[str], feats: list[str],
+                 det: Detector, onto: DataFrame | None = None,
+                 cnt_col: str | None = None) -> DataFrame:
+    """Pivot per-feature score rows (one per ``keys`` + ``_feat``) to
+    one row per ``keys`` with ``_z_<f>``, plus ``_exp_<f>`` (the model's
+    expected value) when the detector has rules, and join them onto the
+    ``onto`` feature rows.  With no ``onto`` the feature values come
+    from the score rows themselves (``_vu`` → ``<f>``, ``_imp`` →
+    ``_imp_<f>``): an imputed entity has no feature row this interval.
+    ``cnt_col`` adds ``_cnt``, its min across features — the preview
+    definition of scored history (a feature that missed an interval
+    holds the entity's count back)."""
+    aggs = {"z": "_z"}
+    if det.suppression_rules:
+        aggs["exp"] = "_exp"
+    if onto is None:
+        aggs.update(v="_vu", imp="_imp")
+    names = {"z": "_z_{}", "exp": "_exp_{}", "v": "{}", "imp": "_imp_{}"}
+    wide = (scored.groupBy(*keys).pivot("_feat", feats)
+            .agg(*[F.first(c).alias(a) for a, c in aggs.items()]))
+    for n in feats:
+        for a in aggs:
+            wide = wide.withColumnRenamed(
+                f"{n}_{a}" if len(aggs) > 1 else n, names[a].format(n))
+    out = wide if onto is None else onto.join(wide, keys)
+    if cnt_col is not None:
+        out = out.join(scored.groupBy(*keys)
+                       .agg(F.min(cnt_col).alias("_cnt")), keys)
+    return out
+
+
+def _result_rows(det: Detector, out: DataFrame, feats: list[str],
+                 z_cols: list[str], imputed: list[F.Column],
+                 ring: bool = False) -> DataFrame:
+    """Anomaly-result rows from scored feature rows.
+
+    ``out`` holds the group columns, ``bucket_start``, the feature
+    values, the ``z_cols`` scores (a row is kept only if every one is
+    present; the score is the largest |z|), ``_cnt`` (scored history,
+    for the confidence ramp), ``_exp_<f>`` when the detector has rules,
+    and the :func:`_attribution_ring` inputs when ``ring``.
+    ``imputed`` holds one boolean Column per feature for the
+    ``feature_imputed`` field, emitted when the detector imputes."""
+    for c in z_cols:
+        out = out.filter(F.col(c).isNotNull())
+    score = F.greatest(*[F.abs(F.col(c)) for c in z_cols]) \
+        if len(z_cols) > 1 else F.abs(F.col(z_cols[0]))
+    grade = F.round(_grade(score, det.anomaly_threshold), 6)
+    if det.suppression_rules:
+        # ignore_anomaly: a matching rule forces the grade to 0 (the
+        # anomaly is reported as non-anomalous, like the reference)
+        grade = F.when(_rule_suppressed(det, feats), F.lit(0.0)) \
+            .otherwise(grade)
+    conf = F.least(F.lit(1.0),
+                   F.col("_cnt") / F.lit(float(det.confidence_ramp)))
+    result = (out
+              .withColumn("anomaly_score", F.round(score, 6))
+              .withColumn("anomaly_grade", grade)
+              .withColumn("confidence", F.round(conf, 6))
+              .withColumn("detector_id", F.lit(det.detector_id))
+              .withColumn("data_start_time", F.col("bucket_start"))
+              .withColumn("data_end_time", F.timestamp_millis(
+                  _bucket_ms() + det.interval_ms)))
+    ent = list(det.category_fields)
+    if ent:
+        result = with_entity(result, {c: c for c in ent})
+    else:
+        result = result.withColumn(
+            "entity",
+            F.array().cast("array<struct<name:string,value:string>>"))
+    extra_cols = []
+    if ring:
+        result = _attribution_ring(result, feats, det.interval_ms)
+        extra_cols = list(RING_COLS)
+    imp_cols = []
+    if det.imputation_method:
+        # anomaly-results.json nested {feature_id, imputed}
+        # (ModelUtil.calculateImputedFeatures)
+        result = result.withColumn("feature_imputed", F.array(*[
+            F.struct(F.lit(n).alias("feature_id"),
+                     F.coalesce(c, F.lit(False)).alias("imputed"))
+            for n, c in zip(feats, imputed)]))
+        imp_cols = ["feature_imputed"]
+    return result.select(
+        "detector_id", "entity", "data_start_time", "data_end_time",
+        *feats, "anomaly_score", "anomaly_grade", "confidence",
+        *extra_cols, *ent, "bucket_start", *imp_cols)
+
+
+def _admit(spark: SparkSession, det: Detector, state_dir: str,
+           now_ms: int, cache_policy, state: DataFrame, cur: DataFrame,
+           gcols: list[str]) -> tuple[DataFrame, DataFrame]:
+    """HC entity-cache admission for a tick (:func:`~anomaly_detection_
+    spark.caching.admit_entities`): evicted models drop from ``state``
+    (cold-start on re-admission); cold and doorkeeper-skipped entities
+    drop from ``cur`` and contribute nothing this interval."""
+    if cache_policy is None:
+        return state, cur
+    from .caching import admit_entities
+
+    hot, _cold, evicted = admit_entities(
+        spark, state_dir, det.detector_id, cur.select(*gcols).distinct(),
+        state.select(*gcols).distinct(), cache_policy, now_ms,
+        det.interval_ms)
+    return (state.join(evicted, gcols, "left_anti"),
+            cur.join(hot, gcols, "left_semi"))
+
+
+def _with_presence(joined: DataFrame, present: DataFrame,
+                   gcols: list[str], impute: str | None) -> DataFrame:
+    """Flag ``_ent_present`` on the tick's state ⋈ interval rows: the
+    entity has a bucket row in ``present`` this interval.  Imputation
+    fills only entities with NO bucket row (preview's imputation fills
+    MISSING buckets; a present bucket whose feature aggregated to null
+    stays null there too); without imputation the flag is null."""
+    if not impute:
+        return joined.withColumn("_ent_present",
+                                 F.lit(None).cast("boolean"))
+    return joined.join(
+        present.select(*gcols).distinct()
+        .withColumn("_ent_present", F.lit(True)),
+        gcols, "left_outer")
+
+
+def _training_frame(src: DataFrame, det: Detector, new_ent: DataFrame,
+                    start: int, cold_start_history: int) -> DataFrame:
+    """Cold-start training rows: the ``max(32, cold_start_history)``
+    intervals before ``start`` (selectNumberOfSamples: at least
+    numMinSamples), read only for the entities in ``new_ent`` — a
+    broadcast semi-join before aggregation (at steady state new
+    entities per interval are few)."""
+    n_train = max(32, int(cold_start_history))
+    ent = list(det.category_fields)
+    src_new = (src.join(F.broadcast(new_ent), ent, "left_semi")
+               if ent else src)
+    return _interval_frame(src_new, det,
+                           start - n_train * det.interval_ms, start)
+
+
 def preview(spark: SparkSession, det: Detector,
             scorer=None) -> DataFrame:
     """Historical/preview analysis: score every closed interval
@@ -251,19 +468,17 @@ def preview(spark: SparkSession, det: Detector,
     result-shaped rows; intervals inside the model's warm-up window
     (``shingle_size`` points) are omitted, like the reference's
     cold-start."""
+    from pyspark.sql.window import Window
+
     from .features import zscore_scorer
 
     # detection scores a point against history that EXCLUDES it
     scorer = scorer or zscore_scorer(det.shingle_size,
                                      include_current=False)
-    src = load_table(spark, det.indices)
-    cond = (compile_filter(src, det.filter_query)
-            if det.filter_query else None)
     feats = sorted(det.feature_specs)
-    fm = feature_matrix(src, det.time_field, det.interval_ms,
-                        det.feature_specs,
-                        entity_cols=det.category_fields,
-                        filter_cond=cond)
+    # single-stream detectors score as one constant entity group
+    gcols = list(det.category_fields) or ["_g"]
+    base = _interval_frame(load_table(spark, det.indices), det)
     if det.imputation_method:
         # densify + fill missing buckets per the configured
         # ImputationMethod before scoring (the reference imputes the
@@ -271,19 +486,20 @@ def preview(spark: SparkSession, det: Detector,
         from .features import impute_fill, impute_linear
 
         if det.imputation_method == "linear":
-            fm = impute_linear(fm, det.interval_ms, feats,
-                               entity_cols=det.category_fields)
+            base = impute_linear(base, det.interval_ms, feats,
+                                 entity_cols=tuple(gcols))
         else:
-            fm = impute_fill(fm, det.interval_ms, feats,
-                             entity_cols=det.category_fields,
-                             method=det.imputation_method,
-                             fixed_values=det.imputation_values)
-        fm = fm.withColumn("doc_count", F.coalesce("doc_count", F.lit(0)))
-    # score each feature with the per-entity seam; join scores back.
-    # single-stream detectors score as one constant entity group.
-    ent = list(det.category_fields)
-    gcols = ent or ["_g"]
-    base = fm if ent else fm.withColumn("_g", F.lit("_"))
+            base = impute_fill(base, det.interval_ms, feats,
+                               entity_cols=tuple(gcols),
+                               method=det.imputation_method,
+                               fixed_values=det.imputation_values)
+        base = base.withColumn("doc_count",
+                               F.coalesce("doc_count", F.lit(0)))
+    # a bucket the imputation step materialized carries doc_count 0 —
+    # imputation fills whole missing buckets, so the flag is uniform
+    # across features (the reference flags per-NaN coordinate)
+    imputed = [F.col("doc_count") == 0] * len(feats)
+    conf_w = Window.partitionBy(*gcols).orderBy("bucket_start")
 
     if getattr(scorer, "multivariate", False):
         # JOINT scoring (the reference's model shape): one model per
@@ -296,11 +512,7 @@ def preview(spark: SparkSession, det: Detector,
         import pandas as pd
         from pyspark.sql import types as T
 
-        cond_all = None
-        for n in feats:
-            c = F.col(n).isNotNull()
-            cond_all = c if cond_all is None else cond_all & c
-        basej = base.filter(cond_all)
+        basej = base.filter(_complete(feats))
         # a joint scorer may also attribute each anomaly across the
         # feature vector (returns_attribution — e.g. rcf_scorer_joint's
         # DiVector split): surfaced as the reference's
@@ -336,36 +548,7 @@ def preview(spark: SparkSession, det: Detector,
             return out[[f.name for f in out_fields]]
 
         out = basej.groupBy(*gcols).applyInPandas(fnj, schema=out_schema)
-        from pyspark.sql.window import Window as _Wj
-
-        conf_wj = _Wj.partitionBy(*gcols).orderBy("bucket_start")
-        out = out.withColumn("_cnt", F.count("_z").over(conf_wj))
-        score = F.abs(F.col("_z"))
-        conf = F.least(F.lit(1.0),
-                       F.col("_cnt") / F.lit(float(det.confidence_ramp)))
-        result = (out
-                  .withColumn("anomaly_score", F.round(score, 6))
-                  .withColumn("anomaly_grade",
-                              F.round(_grade(score, det.anomaly_threshold),
-                                      6))
-                  .withColumn("confidence", F.round(conf, 6))
-                  .withColumn("detector_id", F.lit(det.detector_id))
-                  .withColumn("data_start_time", F.col("bucket_start"))
-                  .withColumn("data_end_time", F.timestamp_millis(
-                      F.unix_millis(F.col("bucket_start").cast("timestamp"))
-                      + det.interval_ms)))
-        if det.suppression_rules:
-            result = result.withColumn(
-                "anomaly_grade",
-                F.when(_rule_suppressed(det, feats), F.lit(0.0))
-                .otherwise(F.col("anomaly_grade")))
-        if ent:
-            result = with_entity(result, {c: c for c in ent})
-        else:
-            result = result.withColumn(
-                "entity",
-                F.array().cast("array<struct<name:string,value:string>>"))
-        extra_cols = []
+        out = out.withColumn("_cnt", F.count("_z").over(conf_w))
         if ret_attr:
             _check_attr_threshold(
                 getattr(scorer, "alert_threshold", None), det)
@@ -374,35 +557,23 @@ def preview(spark: SparkSession, det: Detector,
             # (_rel as NaN must be nulled BEFORE the int cast — a raw
             # cast would turn NaN into 0)
             attr_present = ~F.isnan(F.col(f"_attr_{feats[0]}"))
-            result = (result
-                      .withColumn("_attr", F.when(attr_present, F.array(
-                          *[F.col(f"_attr_{n}") for n in feats])))
-                      .withColumn("_exp", F.array(
-                          *[F.col(f"_exp_{n}") for n in feats]))
-                      .withColumn("_rel", F.when(
-                          ~F.isnan("_rel"),
-                          F.col("_rel").cast("int")))
-                      .withColumn("_past", F.when(
-                          ~F.isnan(F.col(f"_past_{feats[0]}")), F.array(
-                              *[F.col(f"_past_{n}") for n in feats]))))
-            result = _attribution_ring(result, feats, det.interval_ms)
-            extra_cols = list(RING_COLS)
-        if det.imputation_method:
-            result = result.withColumn("feature_imputed",
-                                       _feature_imputed(feats))
-            extra_cols = extra_cols + ["feature_imputed"]
-        return result.select(
-            "detector_id", "entity", "data_start_time", "data_end_time",
-            *feats, "anomaly_score", "anomaly_grade", "confidence",
-            *extra_cols, *ent, "bucket_start")
+            out = (out
+                   .withColumn("_attr", F.when(attr_present, F.array(
+                       *[F.col(f"_attr_{n}") for n in feats])))
+                   .withColumn("_exp", F.array(
+                       *[F.col(f"_exp_{n}") for n in feats]))
+                   .withColumn("_rel", F.when(
+                       ~F.isnan("_rel"), F.col("_rel").cast("int")))
+                   .withColumn("_past", F.when(
+                       ~F.isnan(F.col(f"_past_{feats[0]}")), F.array(
+                           *[F.col(f"_past_{n}") for n in feats]))))
+        return _result_rows(det, out, feats, ["_z"], imputed,
+                            ring=ret_attr)
     # Single-pass multi-feature scoring: melt features to rows, run ONE
     # applyInPandas over (entity, feature), pivot the scores back.  An
     # F-feature detector costs one FlatMapGroupsInPandas + one pivot
     # shuffle instead of F stateful passes + F joins.
-    pairs = ", ".join(f"'{n}', cast(`{n}` as double)" for n in feats)
-    melted = base.select(
-        *gcols, "bucket_start",
-        F.expr(f"stack({len(feats)}, {pairs})").alias("_feat", "_v"))
+    melted = _melt(base, feats, *gcols, "bucket_start")
     # a null feature value (e.g. avg over an all-null bucket) is skipped
     # — the window holds the last k SCORED values, exactly like the
     # stateful paths, which never ingest a null
@@ -413,77 +584,23 @@ def preview(spark: SparkSession, det: Detector,
         # expose their own baseline (returns_expected) surface it
         # through the seam as ``_exp``; otherwise it is the z-score
         # stand-in's trailing-window mean (prior shingle_size points)
-        from pyspark.sql.window import Window as _W
-
-        wexp = (_W.partitionBy(*gcols, "_feat").orderBy("bucket_start")
+        wexp = (Window.partitionBy(*gcols, "_feat").orderBy("bucket_start")
                 .rowsBetween(-det.shingle_size, -1))
         melted = melted.withColumn("_exp", F.avg("_v").over(wexp))
     scored = score_entities(melted, "_v", scorer=scorer,
                             entity_cols=(*gcols, "_feat"), score_col="_z")
-    if det.suppression_rules:
-        zw = (scored.groupBy(*gcols, "bucket_start")
-              .pivot("_feat", feats)
-              .agg(F.first("_z").alias("z"), F.first("_exp").alias("exp")))
-        for n in feats:
-            zw = (zw.withColumnRenamed(f"{n}_z", f"_z_{n}")
-                  .withColumnRenamed(f"{n}_exp", f"_exp_{n}"))
-    else:
-        zw = (scored.groupBy(*gcols, "bucket_start")
-              .pivot("_feat", feats).agg(F.first("_z")))
-        for n in feats:
-            zw = zw.withColumnRenamed(n, f"_z_{n}")
-    out = base.join(zw, [*gcols, "bucket_start"])
+    out = _join_scores(scored, [*gcols, "bucket_start"], feats, det,
+                       onto=base)
     # Confidence ramps with scored history per entity (the reference
     # reports <1 confidence until the model is warm).  The count is the
     # MIN across features of each feature's cumulative scored intervals
     # — computed BEFORE the all-features filter so it agrees exactly
     # with the per-feature scored_cnt state run_once_stateful and
     # run_historical carry (min across features there too).
-    from pyspark.sql.window import Window
-
-    conf_w = Window.partitionBy(*gcols).orderBy("bucket_start")
     cum = [F.count(F.col(f"_z_{n}")).over(conf_w) for n in feats]
     out = out.withColumn("_cnt", F.least(*cum) if len(cum) > 1 else cum[0])
-    for n in feats:
-        # a bucket survives only if every feature scored (identical to
-        # the previous per-feature inner joins)
-        out = out.filter(F.col(f"_z_{n}").isNotNull())
-    score = F.greatest(*[F.abs(F.col(f"_z_{n}")) for n in feats]) \
-        if len(feats) > 1 else F.abs(F.col(f"_z_{feats[0]}"))
-    conf = F.least(F.lit(1.0),
-                   F.col("_cnt") / F.lit(float(det.confidence_ramp)))
-    result = (out
-              .withColumn("anomaly_score", F.round(score, 6))
-              .withColumn("anomaly_grade",
-                          F.round(_grade(score, det.anomaly_threshold), 6))
-              .withColumn("confidence", F.round(conf, 6))
-              .withColumn("detector_id", F.lit(det.detector_id))
-              .withColumn("data_start_time", F.col("bucket_start"))
-              .withColumn("data_end_time", F.timestamp_millis(
-                  F.unix_millis(F.col("bucket_start").cast("timestamp"))
-                  + det.interval_ms)))
-    if det.suppression_rules:
-        # ignore_anomaly: a matching rule forces the grade to 0 (the
-        # anomaly is reported as non-anomalous, like the reference)
-        result = result.withColumn(
-            "anomaly_grade",
-            F.when(_rule_suppressed(det, feats), F.lit(0.0))
-            .otherwise(F.col("anomaly_grade")))
-    if ent:
-        result = with_entity(result, {c: c for c in ent})
-    else:
-        result = result.withColumn(
-            "entity",
-            F.array().cast("array<struct<name:string,value:string>>"))
-    imp_cols = []
-    if det.imputation_method:
-        result = result.withColumn("feature_imputed",
-                                   _feature_imputed(feats))
-        imp_cols = ["feature_imputed"]
-    return result.select(
-        "detector_id", "entity", "data_start_time", "data_end_time",
-        *feats, "anomaly_score", "anomaly_grade", "confidence",
-        *imp_cols, *ent, "bucket_start")
+    return _result_rows(det, out, feats, [f"_z_{n}" for n in feats],
+                        imputed)
 
 
 def run_once(spark: SparkSession, det: Detector, now_ms: int,
@@ -491,21 +608,11 @@ def run_once(spark: SparkSession, det: Detector, now_ms: int,
     """One realtime detection interval (ResultProcessor analog): score
     the latest closed interval ending at ``now - window_delay``, using
     the trailing ``history_intervals`` for context."""
-    end = ((now_ms - det.window_delay_ms) // det.interval_ms) * det.interval_ms
-    start = end - det.interval_ms
-    hist_start = end - history_intervals * det.interval_ms
-    base = {"range": {det.time_field: {"gte": hist_start, "lt": end}}}
-    q = ({"bool": {"filter": [base, det.filter_query]}}
-         if det.filter_query else base)
-    scoped = Detector(
-        detector_id=det.detector_id, indices=det.indices,
-        feature_specs=det.feature_specs, time_field=det.time_field,
-        interval_ms=det.interval_ms, window_delay_ms=det.window_delay_ms,
-        filter_query=q, category_fields=det.category_fields,
-        shingle_size=det.shingle_size, confidence_ramp=det.confidence_ramp)
+    start, end = _closed_interval(det, now_ms)
+    scoped = replace(det, filter_query=_range_query(
+        det, end - history_intervals * det.interval_ms, end))
     res = preview(spark, scoped, scorer=scorer)
-    return res.filter(F.unix_millis(F.col("bucket_start").cast("timestamp"))
-                      == start)
+    return res.filter(_bucket_ms() == start)
 
 
 # --- model-state checkpoint for realtime detection --------------------------
@@ -522,12 +629,6 @@ def run_once(spark: SparkSession, det: Detector, now_ms: int,
 # delete_by_query; on a real cluster this is an Iceberg MERGE INTO).
 
 
-def _state_path(state_dir: str, detector_id: str) -> str:
-    import os
-
-    return os.path.join(state_dir, detector_id)
-
-
 def run_once_stateful(spark: SparkSession, det: Detector, now_ms: int,
                       state_dir: str, eps: float = 1e-9,
                       scorer_factory=None, cache_policy=None,
@@ -535,16 +636,20 @@ def run_once_stateful(spark: SparkSession, det: Detector, now_ms: int,
     """One realtime interval using checkpointed per-entity state.
 
     Produces rows identical to :func:`preview`'s output at the same
-    bucket (same trailing-z model, same warm-up and confidence ramp)
-    when called once per interval in order — but reads only the new
-    interval's raw events, not ``history_intervals`` of history.
+    bucket (same trailing-z model, same warm-up and confidence ramp,
+    same ``suppression_rules`` margins against the prior-window mean
+    or the stream's expected value) when called once per interval in
+    order — but reads only the new interval's raw events, not
+    ``history_intervals`` of history.
 
     Idempotent per interval: the state rows carry the last-ingested
     bucket (``last_ms``) and its score (``last_z``), so a retry of the
     same interval (scheduler re-fire, downstream write failure after
     the state swap) REPLAYS the stored score without appending the
     value into the shingle window again.  A call for an interval older
-    than ``last_ms`` is a no-op (no mutation, no rows).
+    than ``last_ms`` is a no-op (no mutation, no rows).  The expected
+    value is not checkpointed, so a replayed row is not checked
+    against ``suppression_rules``.
 
     ``scorer_factory`` (same protocol as :func:`run_historical`'s —
     e.g. :func:`~anomaly_detection_spark.features.rcf_stream_factory`)
@@ -597,42 +702,16 @@ def run_once_stateful(spark: SparkSession, det: Detector, now_ms: int,
     import pandas as pd
     from pyspark.sql import types as T
 
-    from .features import feature_matrix
-
+    _check_imputation(det, realtime=True)
     impute = det.imputation_method
-    if impute == "linear":
-        raise NotImplementedError(
-            "linear imputation interpolates toward the NEXT sample, "
-            "which a single realtime interval cannot observe — use "
-            "zero/fixed_values/previous here, or preview/"
-            "run_historical for linear series")
-    if impute == "fixed_values":
-        missing = [f for f in det.feature_specs
-                   if f not in (det.imputation_values or {})]
-        if missing:
-            raise ValueError(
-                f"fixed_values imputation needs a value per feature; "
-                f"missing {missing}")
     k = det.shingle_size
-    end = ((now_ms - det.window_delay_ms) // det.interval_ms) * det.interval_ms
-    start = end - det.interval_ms
-    ent = list(det.category_fields)
-    gcols = ent or ["_g"]
+    start, end = _closed_interval(det, now_ms)
+    gcols = list(det.category_fields) or ["_g"]
     feats = sorted(det.feature_specs)
 
-    rng = {"range": {det.time_field: {"gte": start, "lt": end}}}
-    q = ({"bool": {"filter": [rng, det.filter_query]}}
-         if det.filter_query else rng)
     src = load_table(spark, det.indices)
-    fm = feature_matrix(src, det.time_field, det.interval_ms,
-                        det.feature_specs,
-                        entity_cols=tuple(det.category_fields),
-                        filter_cond=compile_filter(src, q))
-    base = fm if ent else fm.withColumn("_g", F.lit("_"))
-    pairs = ", ".join(f"'{n}', cast(`{n}` as double)" for n in feats)
-    cur = base.select(
-        *gcols,
-        F.expr(f"stack({len(feats)}, {pairs})").alias("_feat", "_v"))
+    base = _interval_frame(src, det, start, end)
+    cur = _melt(base, feats, *gcols)
 
     spath = _state_path(state_dir, det.detector_id)
     state_fields = ([f for f in cur.schema.fields if f.name != "_v"]
@@ -644,63 +723,25 @@ def run_once_stateful(spark: SparkSession, det: Detector, now_ms: int,
                        T.StructField("last_v", T.DoubleType())])
     # older state reads last_ms / last_z / model / last_v as null
     state = read_table(spark, spath, T.StructType(state_fields))
-
-    if cache_policy is not None:
-        from .caching import admit_entities
-
-        present = cur.select(*gcols).distinct()
-        hosted = state.select(*gcols).distinct()
-        hot, _cold, evicted = admit_entities(
-            spark, state_dir, det.detector_id, present, hosted,
-            cache_policy, now_ms, det.interval_ms)
-        # evicted models drop (cold-start on re-admission); cold and
-        # doorkeeper-skipped entities contribute nothing this interval
-        state = state.join(evicted, gcols, "left_anti")
-        cur = cur.join(hot, gcols, "left_semi")
-
-    joined = state.join(cur, [*gcols, "_feat"], "full_outer")
-    if impute:
-        # impute only for entities with NO bucket row this interval
-        # (preview's impute_fill fills MISSING buckets; a present
-        # bucket whose feature aggregated to null stays null there
-        # too) — flag entity presence before the per-feature melt
-        joined = joined.join(
-            cur.select(*gcols).distinct()
-            .withColumn("_ent_present", F.lit(True)),
-            gcols, "left_outer")
-    else:
-        joined = joined.withColumn("_ent_present", F.lit(None)
-                                   .cast("boolean"))
+    state, cur = _admit(spark, det, state_dir, now_ms, cache_policy,
+                        state, cur, gcols)
+    joined = _with_presence(
+        state.join(cur, [*gcols, "_feat"], "full_outer"), cur, gcols,
+        impute)
     if cold_start_history:
-        # selectNumberOfSamples: at least numMinSamples (32)
-        n_train = max(32, int(cold_start_history))
         new_keys = (cur.select(*gcols, "_feat").distinct()
                     .join(state.select(*gcols, "_feat").distinct(),
                           [*gcols, "_feat"], "left_anti"))
-        src_new = (src.join(F.broadcast(new_keys.select(*ent).distinct()),
-                            ent, "left_semi") if ent else src)
-        rng_h = {"range": {det.time_field: {
-            "gte": start - n_train * det.interval_ms, "lt": start}}}
-        qh = ({"bool": {"filter": [rng_h, det.filter_query]}}
-              if det.filter_query else rng_h)
-        fmh = feature_matrix(src_new, det.time_field, det.interval_ms,
-                             det.feature_specs,
-                             entity_cols=tuple(det.category_fields),
-                             filter_cond=compile_filter(src_new, qh))
-        bh = fmh if ent else fmh.withColumn("_g", F.lit("_"))
-        cs = (bh.select(
-                  *gcols,
-                  F.unix_millis(F.col("bucket_start").cast("timestamp"))
-                  .alias("_bms"),
-                  F.expr(f"stack({len(feats)}, {pairs})")
-                  .alias("_feat", "_hv"))
-              .filter(F.col("_hv").isNotNull())
+        bh = _training_frame(src, det, new_keys.select(*gcols).distinct(),
+                             start, cold_start_history)
+        cs = (_melt(bh, feats, *gcols, _bucket_ms().alias("_bms"))
+              .filter(F.col("_v").isNotNull())
               .groupBy(*gcols, "_feat")
-              .agg(F.array_sort(F.collect_list(F.struct("_bms", "_hv")))
+              .agg(F.array_sort(F.collect_list(F.struct("_bms", "_v")))
                    .alias("_p"))
               .select(*gcols, "_feat",
                       F.col("_p._bms").alias("_cs_ms"),
-                      F.col("_p._hv").alias("_cs_v"))
+                      F.col("_p._v").alias("_cs_v"))
               .join(new_keys, [*gcols, "_feat"], "left_semi"))
         joined = joined.join(cs, [*gcols, "_feat"], "left_outer")
     else:
@@ -711,6 +752,7 @@ def run_once_stateful(spark: SparkSession, det: Detector, now_ms: int,
     fixed_vals = dict(det.imputation_values or {})
     upd_schema = T.StructType(list(state_fields)
                               + [T.StructField("_z", T.DoubleType()),
+                                 T.StructField("_exp", T.DoubleType()),
                                  T.StructField("_vu", T.DoubleType()),
                                  T.StructField("_imp", T.BooleanType())])
 
@@ -758,6 +800,8 @@ def run_once_stateful(spark: SparkSession, det: Detector, now_ms: int,
             replay = havev & (lm == float(start))
             ingest = havev & ~replay & ~(lm > float(start))
             z = np.full(n, np.nan)
+            # the model's expected value, for rule margins
+            exp = np.full(n, np.nan)
             models = list(pdf["model"]) if "model" in pdf.columns \
                 else [None] * n
             extra_cnt = np.zeros(n, dtype=np.int64)
@@ -807,19 +851,21 @@ def run_once_stateful(spark: SparkSession, det: Detector, now_ms: int,
                     stream = (scorer_factory() if mb is None or (
                         isinstance(mb, float) and pd.isna(mb))
                         else scorer_factory.restore(bytes(mb)))
-                    zi, _ = stream.update(float(v[i]))
-                    z[i] = zi
+                    z[i], exp[i] = stream.update(float(v[i]))
                     models[i] = stream.to_bytes()
             else:
                 idx = np.flatnonzero((lens == k) & ingest)
                 if len(idx):
-                    # same float sequence as zscore_scorer (sum/k twice)
+                    # same float sequence as zscore_scorer (sum/k twice);
+                    # expected = the prior-window mean, the baseline
+                    # preview uses for rule margins
                     W = np.array([vals_list[i] for i in idx],
                                  dtype=np.float64)
                     m = W.sum(axis=1) / k
                     m2 = (W * W).sum(axis=1) / k
                     std = np.sqrt(np.maximum(m2 - m * m, 0.0))
                     z[idx] = (v[idx] - m) / (std + eps)
+                    exp[idx] = m
             z[replay] = lz[replay]
             newvals = [
                 (vals_list[i] + [float(v[i])])[-k:]
@@ -843,6 +889,7 @@ def run_once_stateful(spark: SparkSession, det: Detector, now_ms: int,
             out["model"] = models
             out["last_v"] = new_lv
             out["_z"] = z
+            out["_exp"] = exp
             out["_vu"] = np.where(havev, v, np.nan)
             out["_imp"] = imputed
             yield out[[f.name for f in upd_schema.fields]]
@@ -853,61 +900,13 @@ def run_once_stateful(spark: SparkSession, det: Detector, now_ms: int,
     _swap_state_dir(upd, spath, [f.name for f in state_fields])
 
     scored = upd.filter(F.col("_z").isNotNull())
-    zw = (scored.groupBy(*gcols)
-          .pivot("_feat", feats).agg(F.first("_z")))
-    for n in feats:
-        zw = zw.withColumnRenamed(n, f"_z_{n}")
-    # min across features = the preview definition of scored history
-    # (a feature that missed an interval holds the entity's count back)
-    cnt1 = (scored.groupBy(*gcols)
-            .agg(F.min("scored_cnt").alias("_cnt")))
-    if impute:
-        # feature values come from the update rows — an imputed
-        # entity has NO base row this interval, so base can't source
-        # them; the _imp flags feed the feature_imputed result field
-        vw = (scored.groupBy(*gcols)
-              .pivot("_feat", feats)
-              .agg(F.first("_vu").alias("v"),
-                   F.first("_imp").alias("imp")))
-        for n in feats:
-            vw = (vw.withColumnRenamed(f"{n}_v", n)
-                  .withColumnRenamed(f"{n}_imp", f"_imp_{n}"))
-        out = vw.join(zw, gcols).join(cnt1, gcols)
-    else:
-        out = base.join(zw, gcols).join(cnt1, gcols)
-    for n in feats:
-        out = out.filter(F.col(f"_z_{n}").isNotNull())
-    score = F.greatest(*[F.abs(F.col(f"_z_{n}")) for n in feats]) \
-        if len(feats) > 1 else F.abs(F.col(f"_z_{feats[0]}"))
-    conf = F.least(F.lit(1.0),
-                   F.col("_cnt") / F.lit(float(det.confidence_ramp)))
-    result = (out
-              .withColumn("anomaly_score", F.round(score, 6))
-              .withColumn("anomaly_grade",
-                          F.round(_grade(score, det.anomaly_threshold), 6))
-              .withColumn("confidence", F.round(conf, 6))
-              .withColumn("detector_id", F.lit(det.detector_id))
-              .withColumn("bucket_start", F.timestamp_millis(F.lit(start)))
-              .withColumn("data_start_time", F.col("bucket_start"))
-              .withColumn("data_end_time", F.timestamp_millis(F.lit(end))))
-    if ent:
-        result = with_entity(result, {c: c for c in ent})
-    else:
-        result = result.withColumn(
-            "entity",
-            F.array().cast("array<struct<name:string,value:string>>"))
-    imp_cols = []
-    if impute:
-        # same nested {feature_id, imputed} shape as the preview paths
-        result = result.withColumn("feature_imputed", F.array(*[
-            F.struct(F.lit(n).alias("feature_id"),
-                     F.coalesce(F.col(f"_imp_{n}"), F.lit(False))
-                     .alias("imputed")) for n in feats]))
-        imp_cols = ["feature_imputed"]
-    return result.select(
-        "detector_id", "entity", "data_start_time", "data_end_time",
-        *feats, "anomaly_score", "anomaly_grade", "confidence",
-        *ent, "bucket_start", *imp_cols)
+    # an imputed entity has NO base row this interval: its feature
+    # values and _imp flags come from the update rows
+    out = _join_scores(scored, gcols, feats, det,
+                       onto=None if impute else base, cnt_col="scored_cnt")
+    out = out.withColumn("bucket_start", F.timestamp_millis(F.lit(start)))
+    return _result_rows(det, out, feats, [f"_z_{n}" for n in feats],
+                        [F.col(f"_imp_{n}") for n in feats])
 
 
 def run_once_stateful_joint(spark: SparkSession, det: Detector,
@@ -936,8 +935,8 @@ def run_once_stateful_joint(spark: SparkSession, det: Detector,
     (retried intervals replay the stored outputs without double-
     ingesting; the serialized replay outputs ride the state table).
     Buckets missing any feature are skipped, like preview's joint
-    path.  ``imputation_method`` zero/fixed_values/previous imputes
-    the WHOLE vector for stateful entities with no bucket row this
+    path.  ``imputation_method`` zero/fixed_values/previous imputes the
+    WHOLE vector for stateful entities with no bucket row this
     interval (``previous`` carries the last ingested vector via the
     ``last_vec`` state column; partial buckets stay skipped, matching
     preview's impute-then-complete-vector semantics; ``linear``
@@ -964,21 +963,8 @@ def run_once_stateful_joint(spark: SparkSession, det: Detector,
     import pandas as pd
     from pyspark.sql import types as T
 
-    from .features import feature_matrix
-
+    _check_imputation(det, realtime=True)
     impute = det.imputation_method
-    if impute == "linear":
-        raise NotImplementedError(
-            "linear imputation interpolates toward the NEXT sample, "
-            "which a single realtime interval cannot observe — use "
-            "zero/fixed_values/previous here")
-    if impute == "fixed_values":
-        _missing = [f for f in det.feature_specs
-                    if f not in (det.imputation_values or {})]
-        if _missing:
-            raise ValueError(
-                f"fixed_values imputation needs a value per feature; "
-                f"missing {_missing}")
     # scorer_factory is the JobStore.tick runner-seam spelling of the
     # same argument (tick calls run(..., scorer_factory=...)) — accept
     # either name so the joint path schedules like the scalar one
@@ -990,30 +976,20 @@ def run_once_stateful_joint(spark: SparkSession, det: Detector,
                          "n_features=F))")
     _check_attr_threshold(
         getattr(stream_factory, "alert_threshold", None), det)
-    end = ((now_ms - det.window_delay_ms) // det.interval_ms) \
-        * det.interval_ms
-    start = end - det.interval_ms
-    ent = list(det.category_fields)
-    gcols = ent or ["_g"]
+    start, end = _closed_interval(det, now_ms)
+    gcols = list(det.category_fields) or ["_g"]
     feats = sorted(det.feature_specs)
     nf = len(feats)
 
-    rng = {"range": {det.time_field: {"gte": start, "lt": end}}}
-    q = ({"bool": {"filter": [rng, det.filter_query]}}
-         if det.filter_query else rng)
+    def vector(frame: DataFrame, *cols) -> DataFrame:
+        """Complete-feature buckets as one double vector ``_vec``."""
+        return frame.filter(_complete(feats)).select(
+            *cols, F.array(*[F.col(n).cast("double")
+                             for n in feats]).alias("_vec"))
+
     src = load_table(spark, det.indices)
-    fm = feature_matrix(src, det.time_field, det.interval_ms,
-                        det.feature_specs,
-                        entity_cols=tuple(det.category_fields),
-                        filter_cond=compile_filter(src, q))
-    base = fm if ent else fm.withColumn("_g", F.lit("_"))
-    cond_all = None
-    for n in feats:
-        c = F.col(n).isNotNull()
-        cond_all = c if cond_all is None else cond_all & c
-    cur = base.filter(cond_all).select(
-        *gcols,
-        F.array(*[F.col(n).cast("double") for n in feats]).alias("_vec"))
+    base = _interval_frame(src, det, start, end)
+    cur = vector(base, *gcols)
 
     spath = _state_path(state_dir, f"{det.detector_id}__joint")
     state_fields = ([f for f in cur.schema.fields if f.name != "_vec"]
@@ -1025,56 +1001,23 @@ def run_once_stateful_joint(spark: SparkSession, det: Detector,
                                      T.ArrayType(T.DoubleType()))])
     # pre-imputation tables read last_vec as null
     state = read_table(spark, spath, T.StructType(state_fields))
-
-    if cache_policy is not None:
-        from .caching import admit_entities
-
-        present = cur.select(*gcols).distinct()
-        hosted = state.select(*gcols).distinct()
-        hot, _cold, evicted = admit_entities(
-            spark, state_dir, det.detector_id, present, hosted,
-            cache_policy, now_ms, det.interval_ms)
-        state = state.join(evicted, gcols, "left_anti")
-        cur = cur.join(hot, gcols, "left_semi")
-
-    joined = state.join(cur, gcols, "full_outer")
-    if impute:
-        # entity presence = a bucket ROW exists (pre-complete-vector
-        # filter): partial buckets are present-but-skipped, exactly
-        # like preview's joint path over an imputed-fill grid
-        joined = joined.join(
-            base.select(*gcols).distinct()
-            .withColumn("_ent_present", F.lit(True)),
-            gcols, "left_outer")
-    else:
-        joined = joined.withColumn("_ent_present",
-                                   F.lit(None).cast("boolean"))
+    state, cur = _admit(spark, det, state_dir, now_ms, cache_policy,
+                        state, cur, gcols)
+    # entity presence = a bucket ROW exists (pre-complete-vector
+    # filter): partial buckets are present-but-skipped, exactly like
+    # preview's joint path over an imputed-fill grid
+    joined = _with_presence(state.join(cur, gcols, "full_outer"), base,
+                            gcols, impute)
     if cold_start_history:
-        n_train = max(32, int(cold_start_history))
         new_ent = (cur.select(*gcols).distinct()
                    .join(state.select(*gcols).distinct(), gcols,
                          "left_anti"))
-        src_new = (src.join(F.broadcast(new_ent), ent, "left_semi")
-                   if ent else src)
-        rng_h = {"range": {det.time_field: {
-            "gte": start - n_train * det.interval_ms, "lt": start}}}
-        qh = ({"bool": {"filter": [rng_h, det.filter_query]}}
-              if det.filter_query else rng_h)
-        fmh = feature_matrix(src_new, det.time_field, det.interval_ms,
-                             det.feature_specs,
-                             entity_cols=tuple(det.category_fields),
-                             filter_cond=compile_filter(src_new, qh))
-        bhh = fmh if ent else fmh.withColumn("_g", F.lit("_"))
-        csj = (bhh.filter(cond_all)
-               .select(*gcols,
-                       F.unix_millis(F.col("bucket_start")
-                                     .cast("timestamp")).alias("_bms"),
-                       F.array(*[F.col(nm).cast("double")
-                                 for nm in feats]).alias("_hvec"))
+        bh = _training_frame(src, det, new_ent, start, cold_start_history)
+        csj = (vector(bh, *gcols, _bucket_ms().alias("_bms"))
                .groupBy(*gcols)
                .agg(F.array_sort(F.collect_list(
-                   F.struct("_bms", "_hvec"))).alias("_p"))
-               .select(*gcols, F.col("_p._hvec").alias("_cs_vecs"))
+                   F.struct("_bms", "_vec"))).alias("_p"))
+               .select(*gcols, F.col("_p._vec").alias("_cs_vecs"))
                .join(new_ent, gcols, "left_semi"))
         joined = joined.join(csj, gcols, "left_outer")
     else:
@@ -1211,56 +1154,23 @@ def run_once_stateful_joint(spark: SparkSession, det: Detector,
     upd = upd.localCheckpoint()
     _swap_state_dir(upd, spath, [f.name for f in state_fields])
 
-    scored = upd.filter(F.col("_z").isNotNull())
+    scored = (upd.filter(F.col("_z").isNotNull())
+              .withColumnRenamed("scored_cnt", "_cnt"))
+    ring_in = ["_cnt", "_z", "_exp", "_attr", "_rel", "_past"]
     if impute:
         # imputed entities have no base row — feature values come
         # from the vector the model actually ingested
-        out = scored.select(*gcols, "scored_cnt", "_z", "_exp",
-                            "_attr", "_rel", "_past", "_vu", "_imp")
+        out = scored.select(*gcols, *ring_in, "_vu", "_imp")
         for j, nm in enumerate(feats):
             out = out.withColumn(nm, F.element_at("_vu", j + 1))
     else:
-        out = base.join(scored.select(
-            *gcols, "scored_cnt", "_z", "_exp", "_attr", "_rel",
-            "_past"), gcols)
-    score = F.abs(F.col("_z"))
-    conf = F.least(F.lit(1.0), F.col("scored_cnt")
-                   / F.lit(float(det.confidence_ramp)))
-    result = (out
-              .withColumn("anomaly_score", F.round(score, 6))
-              .withColumn("anomaly_grade",
-                          F.round(_grade(score, det.anomaly_threshold), 6))
-              .withColumn("confidence", F.round(conf, 6))
-              .withColumn("detector_id", F.lit(det.detector_id))
-              .withColumn("bucket_start", F.timestamp_millis(F.lit(start)))
-              .withColumn("data_start_time", F.col("bucket_start"))
-              .withColumn("data_end_time", F.timestamp_millis(F.lit(end))))
+        out = base.join(scored.select(*gcols, *ring_in), gcols)
     if det.suppression_rules:
         for j, n in enumerate(feats):
-            result = result.withColumn(f"_exp_{n}",
-                                       F.element_at("_exp", j + 1))
-        result = result.withColumn(
-            "anomaly_grade",
-            F.when(_rule_suppressed(det, feats), F.lit(0.0))
-            .otherwise(F.col("anomaly_grade")))
-    if ent:
-        result = with_entity(result, {c: c for c in ent})
-    else:
-        result = result.withColumn(
-            "entity",
-            F.array().cast("array<struct<name:string,value:string>>"))
-    result = _attribution_ring(result, feats, det.interval_ms)
-    imp_cols = []
-    if impute:
-        result = result.withColumn("feature_imputed", F.array(*[
-            F.struct(F.lit(nm).alias("feature_id"),
-                     F.coalesce(F.col("_imp"), F.lit(False))
-                     .alias("imputed")) for nm in feats]))
-        imp_cols = ["feature_imputed"]
-    return result.select(
-        "detector_id", "entity", "data_start_time", "data_end_time",
-        *feats, "anomaly_score", "anomaly_grade", "confidence",
-        *RING_COLS, *ent, "bucket_start", *imp_cols)
+            out = out.withColumn(f"_exp_{n}", F.element_at("_exp", j + 1))
+    out = out.withColumn("bucket_start", F.timestamp_millis(F.lit(start)))
+    return _result_rows(det, out, feats, ["_z"], [F.col("_imp")] * nf,
+                        ring=True)
 
 
 #: the reference's checkpoint TTL (AnomalyDetectorSettings.java:213-218)
@@ -1289,8 +1199,6 @@ def prune_state(spark: SparkSession, detector_id: str, state_dir: str,
     ``<detector_id>__joint`` (:func:`run_once_stateful_joint`).  Same
     tmp+swap crash posture as the state writes; returns the total
     number of rows pruned.  A retention pass is idempotent."""
-    import os
-
     cutoff = now_ms - ttl_ms
     pruned = 0
     for ident in (detector_id, f"{detector_id}__joint"):
@@ -1388,23 +1296,12 @@ def run_historical(
     n_pieces, snapshot_path)`` fires after piece ``p`` completes (or is
     skipped on resume) so a task store can record progress.
     """
-    import os
-    import shutil
-
     import numpy as np
     import pandas as pd
     from pyspark.sql import types as T
 
-    from .features import feature_matrix
-
+    _check_imputation(det, realtime=False)
     impute = det.imputation_method
-    if impute == "fixed_values":
-        _missing = [f for f in det.feature_specs
-                    if f not in (det.imputation_values or {})]
-        if _missing:
-            raise ValueError(
-                f"fixed_values imputation needs a value per feature; "
-                f"missing {_missing}")
     fixed_vals = dict(det.imputation_values or {})
     k = det.shingle_size
     start_ms = (start_ms // det.interval_ms) * det.interval_ms
@@ -1421,13 +1318,6 @@ def run_historical(
     src = load_table(spark, det.indices)
     ext = None
     fills = None
-    if impute:
-        from .query.aggs import to_millis
-
-        rng_all = {"range": {det.time_field: {"gte": start_ms,
-                                              "lt": end_ms}}}
-        q_all = ({"bool": {"filter": [rng_all, det.filter_query]}}
-                 if det.filter_query else rng_all)
     if impute == "linear":
         # linear's fill values interpolate toward present neighbors
         # that may live in DIFFERENT pieces, but they depend only on
@@ -1450,21 +1340,11 @@ def run_historical(
         # fill table stays preview-identical by construction here.
         from .features import impute_linear
 
-        fm_all = feature_matrix(src, det.time_field, det.interval_ms,
-                                det.feature_specs,
-                                entity_cols=tuple(det.category_fields),
-                                filter_cond=compile_filter(src, q_all))
-        lin = impute_linear(fm_all, det.interval_ms, feats,
-                            entity_cols=tuple(det.category_fields))
-        lin = lin.filter(F.col("is_filled"))
-        lin = lin if ent else lin.withColumn("_g", F.lit("_"))
-        _pairs = ", ".join(f"'{n}', cast(`{n}` as double)" for n in feats)
-        fills = (lin.select(
-            *gcols,
-            F.unix_millis(F.col("bucket_start").cast("timestamp"))
-            .alias("bucket_ms"),
-            F.expr(f"stack({len(feats)}, {_pairs})").alias("_feat", "_v"))
-            .localCheckpoint())
+        lin = impute_linear(_interval_frame(src, det, start_ms, end_ms),
+                            det.interval_ms, feats, entity_cols=tuple(gcols))
+        fills = (_melt(lin.filter(F.col("is_filled")), feats, *gcols,
+                       _bucket_ms().alias("bucket_ms"))
+                 .localCheckpoint())
     elif impute:
         # per-entity bucket extent over the WHOLE range, computed once
         # up front: preview's dense grid spans each entity's extent, so
@@ -1472,9 +1352,12 @@ def run_historical(
         # a piece cannot know that locally.  One raw-event min/max agg
         # (no feature evaluation); output is one small row per entity,
         # broadcast into every piece.
+        from .query.aggs import to_millis
+
         bms = (F.floor(to_millis(det.time_field) / det.interval_ms)
                * det.interval_ms)
-        ev = src.filter(compile_filter(src, q_all))
+        ev = src.filter(compile_filter(
+            src, _range_query(det, start_ms, end_ms)))
         ev = (ev.select(*ent, bms.alias("_bms")) if ent
               else ev.select(F.lit("_").alias("_g"), bms.alias("_bms")))
         ext = (ev.groupBy(*gcols)
@@ -1519,20 +1402,8 @@ def run_historical(
             continue
         lo = start_ms + p * piece_ms
         hi = min(end_ms, lo + piece_ms)
-        rng = {"range": {det.time_field: {"gte": lo, "lt": hi}}}
-        q = ({"bool": {"filter": [rng, det.filter_query]}}
-             if det.filter_query else rng)
-        fm = feature_matrix(src, det.time_field, det.interval_ms,
-                            det.feature_specs,
-                            entity_cols=tuple(det.category_fields),
-                            filter_cond=compile_filter(src, q))
-        base = fm if ent else fm.withColumn("_g", F.lit("_"))
-        pairs = ", ".join(f"'{n}', cast(`{n}` as double)" for n in feats)
-        cur = base.select(
-            *gcols,
-            F.unix_millis(F.col("bucket_start").cast("timestamp"))
-            .alias("bucket_ms"),
-            F.expr(f"stack({len(feats)}, {pairs})").alias("_feat", "_v"))
+        base = _interval_frame(src, det, lo, hi)
+        cur = _melt(base, feats, *gcols, _bucket_ms().alias("bucket_ms"))
 
         # piece p's input state: piece p-1's snapshot; piece 0 starts
         # from the live state dir (e.g. a prior run_once_stateful)
@@ -1556,7 +1427,6 @@ def run_historical(
                                F.col("_elo").alias("_elo_r"),
                                F.col("_ehi").alias("_ehi_r"))
             st = st.join(F.broadcast(ext_r), gcols, "left")
-
         # COGROUP, not a full-outer join: a serialized model checkpoint
         # is ~MBs, and joining it onto every bucket row would shuffle
         # piece_intervals copies of it per entity (measured: a 1.7 MB
@@ -1680,77 +1550,20 @@ def run_historical(
         new_state.write.mode("overwrite").parquet(snap(p))
 
         scored = upd.filter(F.col("_z").isNotNull())
-        if det.suppression_rules:
-            zw = (scored.groupBy(*gcols, "bucket_ms")
-                  .pivot("_feat", feats)
-                  .agg(F.first("_z").alias("z"),
-                       F.first("_exp").alias("exp")))
-            for n in feats:
-                zw = (zw.withColumnRenamed(f"{n}_z", f"_z_{n}")
-                      .withColumnRenamed(f"{n}_exp", f"_exp_{n}"))
-        else:
-            zw = (scored.groupBy(*gcols, "bucket_ms")
-                  .pivot("_feat", feats).agg(F.first("_z")))
-            for n in feats:
-                zw = zw.withColumnRenamed(n, f"_z_{n}")
-        cnt1 = (scored.groupBy(*gcols, "bucket_ms")
-                .agg(F.min("cnt_after").alias("_cnt")))
+        keys = [*gcols, "bucket_ms"]
         if impute:
             # imputed buckets have no base row — feature values come
-            # from what the model actually ingested; _imp flags feed
-            # the feature_imputed result field
-            vw = (scored.groupBy(*gcols, "bucket_ms")
-                  .pivot("_feat", feats)
-                  .agg(F.first("_vu").alias("v"),
-                       F.first("_imp").alias("imp")))
-            for n in feats:
-                vw = (vw.withColumnRenamed(f"{n}_v", n)
-                      .withColumnRenamed(f"{n}_imp", f"_imp_{n}"))
-            wide = vw.withColumn("bucket_start",
-                                 F.timestamp_millis(F.col("bucket_ms")))
+            # from what the model actually ingested
+            out = (_join_scores(scored, keys, feats, det,
+                                cnt_col="cnt_after")
+                   .withColumn("bucket_start",
+                               F.timestamp_millis(F.col("bucket_ms"))))
         else:
-            wide = base.withColumn(
-                "bucket_ms",
-                F.unix_millis(F.col("bucket_start").cast("timestamp")))
-        out = (wide.join(zw, [*gcols, "bucket_ms"])
-               .join(cnt1, [*gcols, "bucket_ms"]))
-        for n in feats:
-            out = out.filter(F.col(f"_z_{n}").isNotNull())
-        score = F.greatest(*[F.abs(F.col(f"_z_{n}")) for n in feats]) \
-            if len(feats) > 1 else F.abs(F.col(f"_z_{feats[0]}"))
-        conf = F.least(F.lit(1.0),
-                       F.col("_cnt") / F.lit(float(det.confidence_ramp)))
-        result = (out
-                  .withColumn("anomaly_score", F.round(score, 6))
-                  .withColumn("anomaly_grade",
-                          F.round(_grade(score, det.anomaly_threshold), 6))
-                  .withColumn("confidence", F.round(conf, 6))
-                  .withColumn("detector_id", F.lit(det.detector_id))
-                  .withColumn("data_start_time", F.col("bucket_start"))
-                  .withColumn("data_end_time", F.timestamp_millis(
-                      F.col("bucket_ms") + det.interval_ms)))
-        if det.suppression_rules:
-            result = result.withColumn(
-                "anomaly_grade",
-                F.when(_rule_suppressed(det, feats), F.lit(0.0))
-                .otherwise(F.col("anomaly_grade")))
-        if ent:
-            result = with_entity(result, {c: c for c in ent})
-        else:
-            result = result.withColumn(
-                "entity",
-                F.array().cast("array<struct<name:string,value:string>>"))
-        imp_cols = []
-        if impute:
-            result = result.withColumn("feature_imputed", F.array(*[
-                F.struct(F.lit(n).alias("feature_id"),
-                         F.coalesce(F.col(f"_imp_{n}"), F.lit(False))
-                         .alias("imputed")) for n in feats]))
-            imp_cols = ["feature_imputed"]
-        (result.select(
-            "detector_id", "entity", "data_start_time", "data_end_time",
-            *feats, "anomaly_score", "anomaly_grade", "confidence",
-            *ent, "bucket_start", *imp_cols)
+            out = _join_scores(
+                scored, keys, feats, det, cnt_col="cnt_after",
+                onto=base.withColumn("bucket_ms", _bucket_ms()))
+        (_result_rows(det, out, feats, [f"_z_{n}" for n in feats],
+                      [F.col(f"_imp_{n}") for n in feats])
          .write.mode("overwrite").parquet(
              os.path.join(results_dir, f"piece={p}")))
         with open(marker, "w") as f:
@@ -1763,14 +1576,10 @@ def run_historical(
     # here re-publishes the same content — idempotent.
     last = snap(n_pieces - 1)
     if os.path.exists(last):
-        tmp, trash = spath + ".__tmp__", spath + ".__old__"
+        tmp = spath + ".__tmp__"
         shutil.rmtree(tmp, ignore_errors=True)
         shutil.copytree(last, tmp)
-        shutil.rmtree(trash, ignore_errors=True)
-        if os.path.exists(spath):
-            shutil.move(spath, trash)
-        shutil.move(tmp, spath)
-        shutil.rmtree(trash, ignore_errors=True)
+        _swap_in(tmp, spath)
         for p in range(n_pieces):
             shutil.rmtree(snap(p), ignore_errors=True)
 

@@ -78,17 +78,37 @@ def test_preview_respects_filter_query(spark, spiky_events):
     assert res.entity.map(len).eq(0).all()
 
 
-def test_run_once_scores_single_interval(spark, spiky_events):
-    det = _detector(spiky_events)
+# ignore_anomaly when the count exceeds its expected value by at most 1000
+# (the B spike's margin is about 95)
+IGNORE_SMALL_MARGIN = ({"action": "ignore_anomaly", "conditions": [{
+    "feature_name": "n_events",
+    "threshold_type": "actual_over_expected_margin",
+    "operator": "lte", "value": 1000}]},)
+
+
+@pytest.mark.parametrize("rules", [(), IGNORE_SMALL_MARGIN],
+                         ids=["no_rules", "ignore_rule"])
+def test_run_once_scores_single_interval(spark, spiky_events, rules):
+    det = _detector(spiky_events, suppression_rules=rules)
     # "now" = spike interval end + 5 min; delay 0
     now_ms = int(pd.Timestamp("2025-03-03 13:05:00").value // 10**6)
+    spike = pd.Timestamp("2025-03-03 12:00:00")
     res = run_once(spark, det, now_ms).toPandas()
-    assert set(res.bucket_start.map(pd.Timestamp)) == {
-        pd.Timestamp("2025-03-03 12:00:00")}
+    assert set(res.bucket_start.map(pd.Timestamp)) == {spike}
     assert len(res) == 2  # one row per live entity
     byent = {r.service: r for r in res.itertuples()}
-    assert byent["B"].anomaly_grade > 0.9
     assert byent["A"].anomaly_grade == 0
+    if not rules:
+        assert byent["B"].anomaly_grade > 0.9
+        return
+    # run_once honors every Detector field: its B row is preview's
+    want = preview(spark, det).toPandas()
+    want = want[(want.service == "B")
+                & (want.bucket_start.map(pd.Timestamp) == spike)]
+    assert len(want) == 1
+    for c in ("n_events", "anomaly_score", "anomaly_grade", "confidence"):
+        assert getattr(byent["B"], c) == want[c].iloc[0], c
+    assert byent["B"].anomaly_grade == 0
 
 
 def test_run_once_window_delay_shifts_interval(spark, spiky_events):

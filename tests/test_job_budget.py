@@ -1,4 +1,4 @@
-"""Spark job budget of the indexed query paths.
+"""Spark job budget of the indexed query paths and the detector tick.
 
 Each operation (plan + collect) runs under its own Spark job group and
 its jobs are counted through the status tracker, the same way
@@ -10,9 +10,11 @@ that adds a job to a query path fails here.
 import shutil
 import tempfile
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from anomaly_detection_spark.detector import Detector, run_once_stateful
 from anomaly_detection_spark.index import build_index
 from anomaly_detection_spark.query import IndexReader, bm25_topk_indexed
 from anomaly_detection_spark.query.index_search import (
@@ -25,7 +27,10 @@ BUDGET = {
     "bm25_topk_role_filter": 4,
     "search_match_msm": 7,
     "match_phrase": 4,
+    "detector_tick": 13,
 }
+
+HOUR_MS = 3600_000
 
 
 @pytest.fixture(scope="module")
@@ -72,3 +77,47 @@ def test_indexed_query_job_budget(spark, reader):
     got = {name: _count_jobs(spark, name, op) for name, op in ops.items()}
     over = {n: (got[n], BUDGET[n]) for n in got if got[n] > BUDGET[n]}
     assert not over, f"jobs over budget (got, budget): {over}; all: {got}"
+
+
+@pytest.fixture(scope="module")
+def tick_source(spark, tmp_path_factory):
+    """Two entities, five to seven events an hour over eight hours."""
+    base = pd.Timestamp("2025-03-01")
+    rows = []
+    for ent in ("A", "B"):
+        for h in range(8):
+            for i in range(5 + h % 3):
+                rows.append((len(rows), ent,
+                             base + pd.Timedelta(hours=h, minutes=7 * i),
+                             float(i % 3)))
+    path = str(tmp_path_factory.mktemp("tick_budget") / "events")
+    spark.createDataFrame(pd.DataFrame(
+        rows, columns=["event_id", "service", "ts", "value"])) \
+        .write.parquet(path)
+    return path, int(base.value // 10**6)
+
+
+def test_detector_tick_job_budget(spark, tick_source, tmp_path):
+    """A steady-state scalar ``run_once_stateful`` tick (every shingle
+    window full, so every entity scores) collected like perfbench's
+    ``serve`` ticks."""
+    path, t0 = tick_source
+    det = Detector(
+        detector_id="budget", indices=path,
+        feature_specs={"n": {"value_count": {"field": "event_id"}},
+                       "v": {"avg": {"field": "value"}}},
+        time_field="ts", interval_ms=HOUR_MS, category_fields=("service",),
+        shingle_size=3)
+    state_dir = str(tmp_path / "state")
+
+    def tick(h):
+        now_ms = t0 + (h + 1) * HOUR_MS + 60_000
+        return run_once_stateful(spark, det, now_ms, state_dir).collect()
+
+    for h in range(5):        # ticks from the 4th on score
+        tick(h)
+    rows = []
+    got = _count_jobs(spark, "detector_tick", lambda: rows.extend(tick(5)))
+    assert len(rows) == 2
+    assert got <= BUDGET["detector_tick"], (
+        f"detector tick ran {got} jobs, budget {BUDGET['detector_tick']}")

@@ -270,11 +270,22 @@ def test_preview_single_pass_multi_feature(spark, steady_events):
 # --- model-state checkpoint: run_once_stateful ≡ preview ---------------------
 
 
-def test_stateful_run_once_matches_preview(spark, tmp_path_factory):
+# ignore_anomaly whenever n_events exceeds its expected value by at most
+# 1000: suppresses every anomaly of the fixture, the B spike included
+IGNORE_SMALL_MARGIN = ({"action": "ignore_anomaly", "conditions": [{
+    "feature_name": "n_events",
+    "threshold_type": "actual_over_expected_margin",
+    "operator": "lte", "value": 1000}]},)
+
+
+@pytest.mark.parametrize("rules", [(), IGNORE_SMALL_MARGIN],
+                         ids=["no_rules", "ignore_rule"])
+def test_stateful_run_once_matches_preview(spark, tmp_path_factory, rules):
     """Sequence of run_once_stateful calls == preview rows at the same
     buckets (scores, grades, confidence), while each call reads only
     one interval of raw events — proven by feeding each call a source
-    table that CONTAINS only that interval."""
+    table that CONTAINS only that interval.  Suppression rules grade
+    the ticks' rows exactly as they grade preview's."""
     from anomaly_detection_spark.detector import (
         Detector, preview, run_once_stateful)
 
@@ -301,7 +312,8 @@ def test_stateful_run_once_matches_preview(spark, tmp_path_factory):
             feature_specs={"n_events": {"value_count": {"field": "event_id"}},
                            "v_avg": {"avg": {"field": "value"}}},
             time_field="ts", interval_ms=HOUR,
-            category_fields=("service",), shingle_size=8)
+            category_fields=("service",), shingle_size=8,
+            suppression_rules=rules)
 
     want = preview(spark, mk(full)).toPandas()
     want = want.set_index(
@@ -329,9 +341,10 @@ def test_stateful_run_once_matches_preview(spark, tmp_path_factory):
         assert abs(r.confidence - float(w.confidence)) < 1e-9
         assert r.n_events == int(w.n_events)
 
-    # spike interval flagged through the stateful path too
+    # spike interval flagged through the stateful path too, unless the
+    # rule suppresses it
     spike = got[got.anomaly_grade > 0]
-    assert list(spike.service) == ["B"]
+    assert list(spike.service) == ([] if rules else ["B"])
 
     # state survives "restart": a fresh read of the parquet state shows
     # full windows and monotone scored counts
