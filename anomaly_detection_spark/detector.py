@@ -1583,4 +1583,7 @@ def run_historical(
         for p in range(n_pieces):
             shutil.rmtree(snap(p), ignore_errors=True)
 
-    return spark.read.parquet(os.path.join(results_dir, "piece=*"))
+    # the listed piece dirs, not a "piece=*" glob: a glob path sends
+    # Spark's streaming-metadata probe into a warning with a stack trace
+    return spark.read.parquet(*[os.path.join(results_dir, f"piece={p}")
+                                for p in range(n_pieces)])

@@ -11,7 +11,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .index_search import IndexReader
+from .index_search import doc_frame
 from .planner import compile_filter, search
 
 
@@ -21,8 +21,7 @@ def validate_query(target, query: dict[str, Any]) -> dict[str, Any]:
     the compiled Catalyst predicate string on success (the closest
     analog of the rewritten-Lucene-query string the reference
     returns with explain=true), ``error`` the rejection reason."""
-    df = (target.doc_stats() if isinstance(target, IndexReader)
-          else target)
+    df = doc_frame(target)
     try:
         cond = compile_filter(df, query)
     except (ValueError, KeyError, TypeError) as e:
@@ -40,10 +39,8 @@ def field_caps(target) -> list[dict[str, Any]]:
     key or feed an aggregation); array/struct columns aggregate only
     through the dedicated scope aggs — reported not aggregatable,
     like non-doc-values fields in the reference."""
-    df = (target.doc_stats() if isinstance(target, IndexReader)
-          else target)
     out = []
-    for f in df.schema.fields:
+    for f in doc_frame(target).schema.fields:
         if f.name in ("tokens", "doc_len"):  # analysis internals
             continue
         scalar = not isinstance(f.dataType,
@@ -71,8 +68,7 @@ def msearch(target, bodies: list[dict[str, Any]],
 def count(target, query: dict[str, Any] | None = None) -> int:
     """_count analog: matching-doc count in filter context (scores
     never computed — the same shortcut the reference takes)."""
-    df = (target.doc_stats() if isinstance(target, IndexReader)
-          else target)
+    df = doc_frame(target)
     if query and query != {"match_all": {}}:
         df = df.filter(compile_filter(df, query))
     return df.count()
@@ -236,9 +232,7 @@ def open_point_in_time(target) -> PointInTime:
     """_pit analog over a table frame (index targets are already
     immutable segment directories — pass ``reader.doc_stats()`` if a
     pinned stats view is wanted)."""
-    df = (target.doc_stats() if isinstance(target, IndexReader)
-          else target)
-    return PointInTime(df)
+    return PointInTime(doc_frame(target))
 
 
 def termvectors(target, docid: int, text_field: str = "text"
@@ -253,11 +247,7 @@ def termvectors(target, docid: int, text_field: str = "text"
 
     from ..functions.tokenizer import tokenize_query
 
-    if isinstance(target, IndexReader):
-        row = (target.doc_stats().filter(F.col("docid") == int(docid))
-               .collect())
-    else:
-        row = target.filter(F.col("docid") == int(docid)).collect()
+    row = doc_frame(target).filter(F.col("docid") == int(docid)).collect()
     if not row:
         raise ValueError(f"docid {docid} not found")
     cols = row[0].asDict()

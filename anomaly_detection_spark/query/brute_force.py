@@ -130,15 +130,12 @@ def bm25_scores(
     scored = contrib.groupBy(id_col).agg(
         F.sum("w").alias("score"),
         F.count("*").alias("_nt"))  # distinct matched terms (one row each)
-    if conjunctive:
-        # operator:and — every query term must match.  A query term
-        # absent from the whole corpus ⇒ no doc can match.
-        n_required = len(set(terms))
-        scored = scored.filter(F.col("_nt") == n_required)
-    elif min_match is not None and min_match > 1:
-        # minimum_should_match as a matched-distinct-term count
-        # (more_like_this's 30%-of-selected-terms semantics)
-        scored = scored.filter(F.col("_nt") >= min_match)
+    # the matched-distinct-term floor: operator:and needs every query
+    # term (one absent from the whole corpus ⇒ no doc can match),
+    # minimum_should_match a count of them
+    need = len(set(terms)) if conjunctive else (min_match or 0)
+    if need > 1:
+        scored = scored.filter(F.col("_nt") >= need)
     return scored.select(id_col, "score")
 
 

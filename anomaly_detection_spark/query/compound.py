@@ -40,6 +40,9 @@ from ..localdf import local_df
 COMPOUND_KINDS = ("dis_max", "constant_score", "boosting",
                   "function_score", "script_score", "pinned",
                   "distance_feature", "rank_feature")
+# every query kind compound_scores scores as a whole (rescore and
+# collapse accept exactly these)
+SCORED_KINDS = COMPOUND_KINDS + ("match", "match_all")
 
 _NEUTRAL = {"multiply": 1.0, "sum": 0.0, "avg": 0.0,
             "max": float("-inf"), "min": float("inf")}
@@ -78,10 +81,11 @@ class _Target:
 
     @property
     def docs(self) -> DataFrame:
-        return (self.target.doc_stats() if self.is_index else self.target)
+        from .index_search import doc_frame
 
-    def match_scores(self, fld: str, text: str,
-                     conjunctive: bool) -> DataFrame:
+        return doc_frame(self.target)
+
+    def match_scores(self, fld: str, text: str, need: int) -> DataFrame:
         # both paths score the one analyzed text field — the brute
         # path's bm25_scores reads the shared `tokens` column, so a
         # different field would be SILENTLY scored against the wrong
@@ -90,12 +94,10 @@ class _Target:
             raise ValueError(
                 f"scored match inside a compound query supports the "
                 f"indexed text field {self.text_field!r}; got {fld!r}")
-        from ..functions.tokenizer import tokenize_query
         from .brute_force import bm25_scores
         from .index_search import bm25_scores_indexed
 
-        # operator:and: a doc must match every distinct query term
-        need = len(set(tokenize_query(text))) if conjunctive else 0
+        # need: the matched-distinct-term floor (planner.match_clause)
         scores = bm25_scores_indexed if self.is_index else bm25_scores
         return scores(self.target, text, min_match=need)
 
@@ -123,13 +125,17 @@ def _scores(tgt: _Target, query: dict[str, Any]) -> DataFrame:
                                F.lit(float(boost)).alias("score"))
 
     if kind == "match":
-        (fld, spec), = body.items()
-        text = spec.get("query") if isinstance(spec, dict) else spec
-        op = (spec.get("operator", "or").lower()
-              if isinstance(spec, dict) else "or")
-        boost = (float(spec.get("boost", 1.0))
-                 if isinstance(spec, dict) else 1.0)
-        out = tgt.match_scores(fld, text, conjunctive=op == "and")
+        from .planner import match_clause
+
+        fld, text, need, syn = match_clause(body)
+        spec = body[fld] if isinstance(body[fld], dict) else {}
+        if syn is not None or spec.get("fuzziness") is not None:
+            raise ValueError(
+                "match synonyms and fuzziness are unsupported inside a "
+                "compound query (scored as plain BM25 they would be "
+                "silently dropped)")
+        boost = float(spec.get("boost", 1.0))
+        out = tgt.match_scores(fld, text, need)
         if boost != 1.0:
             out = out.withColumn("score", F.col("score") * F.lit(boost))
         return out

@@ -36,41 +36,11 @@ from ..localdf import local_df
 
 
 def _knn_scores(df: DataFrame, spec: dict[str, Any]) -> DataFrame:
-    """Full (docid, score) set for a knn sub-query — the same
-    space_type formulas as the planner's knn kind
-    (planner.py knn branch), without the top-k cut."""
-    import numpy as np
+    """Full (docid, score) set for a knn sub-query — the planner's knn
+    rows without the top-k cut."""
+    from .planner import _knn_rows
 
-    from .planner import compile_filter
-
-    (fld, body), = spec.items()
-    qv = [float(x) for x in body["vector"]]
-    space = body.get("space_type", "cosinesimil")
-    base = df
-    if body.get("filter"):
-        base = base.filter(compile_filter(base, body["filter"]))
-    col = F.col(fld)
-    dot = F.aggregate(F.zip_with(col, F.lit(qv), lambda a, b: a * b),
-                      F.lit(0.0), lambda acc, x: acc + x)
-    if space == "cosinesimil":
-        qn = float(np.sqrt(np.dot(qv, qv)))
-        if qn == 0:
-            raise ValueError("knn query vector must be non-zero")
-        cn = F.sqrt(F.aggregate(col, F.lit(0.0),
-                                lambda acc, x: acc + x * x))
-        score = F.when(cn > 0, dot / (cn * F.lit(qn)))
-    elif space == "innerproduct":
-        score = dot
-    elif space == "l2":
-        d2 = F.aggregate(
-            F.zip_with(col, F.lit(qv), lambda a, b: (a - b) * (a - b)),
-            F.lit(0.0), lambda acc, x: acc + x)
-        score = F.lit(1.0) / (F.lit(1.0) + d2)
-    else:
-        raise ValueError(f"unsupported knn space_type {space!r}")
-    return (base.filter(col.isNotNull())
-            .select("docid", score.cast("double").alias("score"))
-            .filter(F.col("score").isNotNull()))
+    return _knn_rows(df, spec).select("docid", "score")
 
 
 def _sub_scores(target, query: dict[str, Any],

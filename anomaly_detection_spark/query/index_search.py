@@ -114,6 +114,12 @@ class IndexReader:
         return read_table(self.spark, self.paths.lineage, LINEAGE_SCHEMA)
 
 
+def doc_frame(target) -> DataFrame:
+    """The per-doc frame of a search target: an index's doc_stats, or
+    the docs DataFrame itself."""
+    return target.doc_stats() if isinstance(target, IndexReader) else target
+
+
 def _segment_doclens(docs: pd.DataFrame, seg_base: int,
                      seg_size: int, quantize_norms: bool) -> np.ndarray:
     """Per-local-docid doc lengths for one segment (−1 = filtered out /

@@ -30,21 +30,9 @@ from pyspark.sql import functions as F
 from ..localdf import local_df
 
 from ..functions.tokenizer import tokenize_query
+from .planner import parse_msm
 
 __all__ = ["more_like_this_topk", "parse_msm"]
-
-
-def parse_msm(spec: str | int, n_terms: int) -> int:
-    """minimum_should_match count from an int or "N%" (floor, like
-    the reference's percentage rule)."""
-    if isinstance(spec, int):
-        v = spec if spec >= 0 else n_terms + spec
-    elif isinstance(spec, str) and spec.endswith("%"):
-        v = int(float(spec[:-1]) * n_terms / 100.0)
-    else:
-        raise ValueError(
-            f"minimum_should_match must be an int or 'N%': {spec!r}")
-    return max(0, min(v, n_terms))
 
 
 def _like_counts_and_ids(target, like, text_field: str,

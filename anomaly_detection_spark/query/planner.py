@@ -1,29 +1,44 @@
-"""Query-DSL planner: the OpenSearch query JSON subset the plugin
-accepts (SURVEY.md §2.1) → Catalyst ``Column`` predicates + scored
-match clauses.
+"""Query-DSL planner: the OpenSearch query JSON the plugin accepts
+(SURVEY.md §2.1) compiled onto a DataFrame or an index.
 
 The plugin parses user ``filter_query`` JSON through the OpenSearch
 registry and wraps it in a bool with a timestamp range
-(``ParseUtils.java:120-123``, ``SearchFeatureDao.java:295-302``); we
-compile the same shapes onto a DataFrame:
+(``ParseUtils.java:120-123``, ``SearchFeatureDao.java:295-302``), so
+any registered query kind can arrive anywhere in the tree, and a
+clause must mean the same thing wherever it sits.
 
-    bool(must/filter/should/must_not)   → &, |, ~ on Columns (Q1)
-    term / terms                        → ==, isin (Q2, Q3)
-    range (gte/gt/lte/lt, epoch_millis) → comparisons (Q4)
-    match_all                           → lit(True) (Q5)
-    match (filter ctx)                  → any-analyzed-token containment (Q6)
-    exists                              → isNotNull (Q7)
-    wildcard                            → LIKE translation (Q8)
-    nested                              → F.exists over array<struct> (Q9)
+:func:`plan_query` compiles a query tree to a :class:`QueryPlan`: one
+filter-context ``Column`` (bool → ``&``/``|``/``~``, term/range/
+wildcard/geo/span/… → codegen predicates) plus the scored ``match``
+clauses.  Every ``match`` goes through one clause model,
+:func:`match_clause`: (field, text, need, synonyms), where ``need``
+is how many distinct analyzed query terms a doc must hold (``or`` 0,
+``and`` all, ``minimum_should_match`` via :func:`parse_msm`).  Filter
+context applies ``need`` as a token-set predicate; scored context
+(top-level ``match``, ``bool.must``/``should``) hands it to the BM25
+engine; :mod:`.compound` scores its leaves with the same model.
 
-Scored ``match`` (top-level must/should) routes to the BM25 engine via
-:func:`search`; everything else is filter-context (ScoreMode.None, as
-the plugin uses nested/filters — ``ParseUtils.java:458-461``).
+:func:`search` routes a body in this order:
+
+1. body modes that reshape the whole result: ``rescore``, then
+   ``collapse``;
+2. top-level scored kinds with their own engines: ``knn``,
+   ``neural_sparse``, ``more_like_this``, the compound kinds,
+   ``combined_fields``, ``multi_match``, ``match_phrase(_prefix)``;
+3. everything else through :func:`plan_query` — scored ``match``
+   clauses to BM25 top-k under the filter, pure filters to the
+   filtered (sorted, ``search_after``-paged) rows;
+4. one hit tail for the scored branches (:func:`_top_hits`: top-k by
+   score desc, docid asc, then the index doc fetch);
+5. ``finish``: doc columns for ``_source``/highlight, then
+   :func:`_finish_search` (min_score, from, highlight, script and
+   docvalue fields, ``_source`` filtering, timeout).
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass, field
+from functools import reduce
 from typing import Any
 
 from pyspark.sql import Column, DataFrame
@@ -38,8 +53,8 @@ from ..functions.tokenizer import tokenize_column, tokenize_query
 class QueryPlan:
     """Filter predicate (may be None = match_all) + scored match clauses."""
     filter_cond: Column | None
-    # (field, text, operator) — operator "or" (default) or "and"
-    matches: list[tuple[str, str, str]] = field(default_factory=list)
+    # (field, text, need) — need from match_clause
+    matches: list[tuple[str, str, int]] = field(default_factory=list)
     # query-time synonym table of the scored match clauses (SynonymQuery
     # blended scoring); one table per query — conflicting tables raise
     synonyms: dict | None = None
@@ -84,14 +99,63 @@ def parse_msm(msm, n_clauses: int) -> int:
     (percent of clauses, rounded DOWN like Lucene), clamped to
     [1, n_clauses]; negative forms mean "all but N" / "all but N%"."""
     s = str(msm).strip()
-    if s.endswith("%"):
-        pct = float(s[:-1])
-        n = (int(n_clauses * pct / 100.0) if pct >= 0
-             else n_clauses + int(n_clauses * pct / 100.0))
-    else:
-        v = int(s)
-        n = v if v >= 0 else n_clauses + v
+    try:
+        if s.endswith("%"):
+            pct = float(s[:-1])
+            n = (int(n_clauses * pct / 100.0) if pct >= 0
+                 else n_clauses + int(n_clauses * pct / 100.0))
+        else:
+            v = int(s)
+            n = v if v >= 0 else n_clauses + v
+    except ValueError:
+        raise ValueError(f"minimum_should_match must be an int, 'N' or "
+                         f"'N%' (negative: all but): {msm!r}") from None
     return max(1, min(n, n_clauses))
+
+
+def match_clause(body: dict[str, Any]) -> tuple[str, str, int,
+                                                dict | None]:
+    """A ``match`` body → (field, text, need, synonyms).  ``need`` is
+    the number of distinct analyzed query terms a doc must hold:
+    0 for ``operator: or``, all of them for ``and``, and
+    :func:`parse_msm` of their count for ``minimum_should_match``
+    (which, as in MatchQuery, counts only under ``or``)."""
+    (fld, spec), = body.items()
+    text = _field_value(spec, key="query")
+    opts = spec if isinstance(spec, dict) else {}
+    op = str(opts.get("operator", "or")).lower()
+    if op not in ("or", "and"):
+        raise ValueError(f"match operator must be or/and: {op!r}")
+    syn = opts.get("synonyms")
+    if syn is not None and not isinstance(syn, dict):
+        raise ValueError("match synonyms must be a "
+                         "{token: [synonyms...]} table")
+    need = 0
+    if op == "and" or "minimum_should_match" in opts:
+        n = len(set(tokenize_query(text)))
+        need = (n if op == "and"
+                else parse_msm(opts["minimum_should_match"], n))
+    return fld, text, need, syn
+
+
+def _at_least(conds: list[Column], need: int) -> Column:
+    """At least ``need`` of ``conds`` hold: any of them for need ≤ 1,
+    all of them for need ≥ len(conds), else a count in which NULL
+    predicates count as non-matching (OpenSearch's null-never-matches
+    semantics)."""
+    if need <= 1:
+        return reduce(lambda a, c: a | c, conds)
+    if need >= len(conds):
+        return reduce(lambda a, c: a & c, conds)
+    total = reduce(lambda a, c: a + c,
+                   [F.coalesce(c, F.lit(False)).cast("int") for c in conds])
+    return total >= F.lit(need)
+
+
+def _n_held(vals: Column, terms: list[str]) -> Column:
+    """How many distinct ``terms`` the array ``vals`` holds."""
+    return F.size(F.array_intersect(
+        vals, F.array(*[F.lit(t) for t in terms])))
 
 
 def compile_filter(df: DataFrame, query: dict[str, Any]) -> Column:
@@ -149,7 +213,7 @@ def plan_query(df: DataFrame, query: dict[str, Any], scoring: bool = True) -> Qu
 
     if kind == "bool":
         conds: list[Column] = []
-        matches: list[tuple[str, str]] = []
+        matches: list[tuple[str, str, int]] = []
         syn_merged: dict | None = None
 
         def _merge_syn(p):
@@ -186,37 +250,17 @@ def plan_query(df: DataFrame, query: dict[str, Any], scoring: bool = True) -> Qu
                 _merge_syn(p)
             pure_scored = scoring and all(
                 p.matches and p.filter_cond is None for p in sub_plans)
-            if msm == 0 or (msm == 1 and pure_scored):
-                # msm=0: scoring-only.  Pure scored disjunction: BM25
-                # SHOULD already enforces msm=1 (score > 0 ⇔ ≥1 clause).
-                pass
-            elif msm == 1:
-                # msm=1 with a mixed disjunction: every clause — scored
-                # match included — contributes its filter-context
-                # predicate to the OR, so docs matching only the match
-                # clause stay in the result set.
-                ors = []
-                for s in shoulds:
-                    fp = plan_query(df, s, scoring=False)
-                    ors.append(F.lit(True) if fp.filter_cond is None
-                               else fp.filter_cond)
-                acc = ors[0]
-                for c in ors[1:]:
-                    acc = acc | c
-                conds.append(acc)
-            else:
-                # msm >= 2 ("at least m of k", BoolQueryBuilder
-                # minimumShouldMatch): Σ int(clause_i) >= m.  NULL
-                # predicates count as non-matching (coalesce→FALSE),
-                # matching OpenSearch's null-never-matches semantics.
-                total = None
-                for s in shoulds:
-                    fp = plan_query(df, s, scoring=False)
-                    c = (F.lit(True) if fp.filter_cond is None
-                         else fp.filter_cond)
-                    hit = F.coalesce(c, F.lit(False)).cast("int")
-                    total = hit if total is None else total + hit
-                conds.append(total >= F.lit(msm))
+            # msm=0 is scoring-only, and in a pure scored disjunction
+            # BM25 SHOULD already enforces msm=1 (score > 0 ⇔ ≥1
+            # clause).  Otherwise "at least msm of k" (BoolQueryBuilder
+            # minimumShouldMatch) over every clause's filter-context
+            # predicate — scored match included, so with msm=1 docs
+            # matching only the match clause stay in the result set.
+            if msm >= 2 or (msm == 1 and not pure_scored):
+                preds = [plan_query(df, s, scoring=False).filter_cond
+                         for s in shoulds]
+                conds.append(_at_least(
+                    [F.lit(True) if c is None else c for c in preds], msm))
         for sub in _as_list(body.get("must_not")):
             p = plan_query(df, sub, scoring=False)
             if p.filter_cond is not None:
@@ -436,75 +480,53 @@ def plan_query(df: DataFrame, query: dict[str, Any], scoring: bool = True) -> Qu
         return QueryPlan(point_in_polygon(lat_c, lon_c, pts))
 
     if kind == "match":
-        (fld, spec), = body.items()
-        text = _field_value(spec, key="query")
-        op = (spec.get("operator", "or").lower()
-              if isinstance(spec, dict) else "or")
-        if op not in ("or", "and"):
-            raise ValueError(f"match operator must be or/and: {op!r}")
+        fld, text, need, syn = match_clause(body)
+        spec = body[fld]
         fz = spec.get("fuzziness") if isinstance(spec, dict) else None
-        if fz is not None:
-            # match fuzziness (MatchQuery#setFuzziness): every analyzed
-            # query token becomes a fuzzy term matcher (OSA distance,
-            # like the fuzzy query kind).  Filter context only — the
-            # scored form needs Lucene's blended-statistics FuzzyQuery
-            # rewrite, which is out of the supported subset and raises
-            # rather than mis-scoring.
-            if scoring:
+        if scoring:
+            if fz is not None:
+                # the scored form needs Lucene's blended-statistics
+                # FuzzyQuery rewrite, which is out of the supported
+                # subset and raises rather than mis-scoring
                 raise ValueError(
                     "match fuzziness is supported in filter context "
                     "only (blended fuzzy BM25 is out of subset) — "
                     "wrap in bool.filter, or use the fuzzy query kind")
+            return QueryPlan(None, matches=[(fld, text, need)],
+                             synonyms=syn)
+        toks = tokenize_query(text)
+        if not toks:
+            return QueryPlan(F.lit(False))
+        doc_toks = tokenize_column(fld)
+        if fz is not None:
+            # match fuzziness (MatchQuery#setFuzziness): every distinct
+            # analyzed query token becomes a fuzzy term matcher (OSA
+            # distance, like the fuzzy query kind)
             from ..functions.fuzzy import parse_fuzziness
             from ..functions.spans import span_tree_match_expr
 
-            toks = tokenize_query(text)
-            if not toks:
-                return QueryPlan(F.lit(False))
-            preds = [{"k": "pred", "kind": "fuzzy", "val": t,
-                      "max_edits": parse_fuzziness(fz, t)}
-                     for t in toks]
-            doc_toks = tokenize_column(fld)
-            conds = [F.coalesce(span_tree_match_expr(doc_toks, p),
-                                F.lit(False)) for p in preds]
-            out = conds[0]
-            for c in conds[1:]:
-                out = (out & c) if op == "and" else (out | c)
-            return QueryPlan(out)
-        syn = spec.get("synonyms") if isinstance(spec, dict) else None
-        if syn is not None and not isinstance(syn, dict):
-            raise ValueError("match synonyms must be a "
-                             "{token: [synonyms...]} table")
-        if scoring:
-            return QueryPlan(None, matches=[(fld, text, op)],
-                             synonyms=syn)
-        doc_toks = tokenize_column(fld)
+            return QueryPlan(_at_least([F.coalesce(span_tree_match_expr(
+                doc_toks, {"k": "pred", "kind": "fuzzy", "val": t,
+                           "max_edits": parse_fuzziness(fz, t)}),
+                F.lit(False)) for t in dict.fromkeys(toks)], need))
         if syn:
             # filter-context synonym match: a group matches through
             # ANY of its members (SynonymQuery matching semantics)
             from .synonyms import expand_groups
 
-            groups = expand_groups(text, syn)
-            if not groups:
-                return QueryPlan(F.lit(False))
-            conds = [F.arrays_overlap(
-                doc_toks, F.array(*[F.lit(t) for t in g]))
-                for g in groups]
-            out = conds[0]
-            for c in conds[1:]:
-                out = (out & c) if op == "and" else (out | c)
-            return QueryPlan(out)
-        toks = tokenize_query(text)
-        if not toks:
-            return QueryPlan(F.lit(False))
+            return QueryPlan(_at_least(
+                [F.arrays_overlap(doc_toks, F.array(*[F.lit(t) for t in g]))
+                 for g in dict.fromkeys(expand_groups(text, syn))], need))
         tok_arr = F.array(*[F.lit(t) for t in toks])
-        if op == "and":
-            # conjunctive match (operator: and): every analyzed query
-            # token present in the doc
+        if need >= len(set(toks)):
+            # every analyzed query token present (operator: and)
             return QueryPlan(
                 F.forall(tok_arr, lambda t: F.array_contains(doc_toks, t)))
-        # operator OR (default): any analyzed token present
-        return QueryPlan(F.arrays_overlap(doc_toks, tok_arr))
+        if need <= 1:
+            # operator OR (default): any analyzed token present
+            return QueryPlan(F.arrays_overlap(doc_toks, tok_arr))
+        return QueryPlan(_n_held(doc_toks, sorted(set(toks)))
+                         >= F.lit(need))
 
     if kind == "match_phrase":
         # filter-context phrase: the analyzed query tokens appear
@@ -636,11 +658,7 @@ def plan_query(df: DataFrame, query: dict[str, Any], scoring: bool = True) -> Qu
         subs = body.get("queries") or []
         if not subs:
             raise ValueError("dis_max requires at least one sub-query")
-        acc = None
-        for s in subs:
-            c = compile_filter(df, s)
-            acc = c if acc is None else acc | c
-        return QueryPlan(acc)
+        return QueryPlan(_at_least([compile_filter(df, s) for s in subs], 1))
 
     if kind == "boosting":
         # filter context: the negative query only DISCOUNTS scores
@@ -684,10 +702,9 @@ def plan_query(df: DataFrame, query: dict[str, Any], scoring: bool = True) -> Qu
             vals = tokenize_column(fld)
         else:
             vals = F.array(F.col(fld).cast("string"))
-        hits = F.size(F.array_intersect(
-            vals, F.array(*[F.lit(t) for t in terms])))
         # Lucene CoveringScorer clamps the per-doc minimum to >= 1
-        return QueryPlan(hits >= F.greatest(msm.cast("long"), F.lit(1)))
+        return QueryPlan(_n_held(vals, terms)
+                         >= F.greatest(msm.cast("long"), F.lit(1)))
 
     if kind == "match_bool_prefix":
         # MatchBoolPrefixQueryBuilder: analyzed terms as term clauses +
@@ -704,10 +721,8 @@ def plan_query(df: DataFrame, query: dict[str, Any], scoring: bool = True) -> Qu
         clauses = [F.array_contains(doc_toks, t) for t in toks[:-1]]
         clauses.append(F.exists(
             doc_toks, lambda t: t.startswith(F.lit(toks[-1]))))
-        acc = clauses[0]
-        for c in clauses[1:]:
-            acc = (acc & c) if op == "and" else (acc | c)
-        return QueryPlan(acc)
+        return QueryPlan(_at_least(clauses,
+                                   len(clauses) if op == "and" else 1))
 
     if kind == "intervals":
         return QueryPlan(_intervals_filter(df, body))
@@ -821,11 +836,7 @@ def _intervals_filter(df: DataFrame, body: dict[str, Any]) -> Column:
                 span_match_expr(doc_toks, toks, slop, ordered, None),
                 F.lit(False))
         if skind == "any_of":
-            subs = [compile_src(s) for s in sbody["intervals"]]
-            acc = subs[0]
-            for c in subs[1:]:
-                acc = acc | c
-            return acc
+            return _at_least([compile_src(s) for s in sbody["intervals"]], 1)
         if skind == "all_of":
             # term-level sub-sources compose into one span_near
             terms: list[str] = []
@@ -939,6 +950,46 @@ def _interval_tree(source: dict[str, Any]) -> dict:
         node = {"k": "ifilter", "rule": rule, "src": node,
                 "flt": _interval_tree(fsrc)}
     return node
+
+
+def _knn_rows(df: DataFrame, knn: dict[str, Any]) -> DataFrame:
+    """The rows of ``df`` a ``knn`` query scores, with their ``score``:
+    non-null vectors, pre-filtered by the spec's ``filter`` (the k-NN
+    plugin's efficient filtering), scored per ``space_type`` with the
+    plugin's published formulas (cosinesimil = cosine, innerproduct =
+    dot, l2 = 1/(1+d²))."""
+    import numpy as np
+
+    (fld, spec), = knn.items()
+    qv = [float(x) for x in spec["vector"]]
+    space = spec.get("space_type", "cosinesimil")
+    base = df
+    if spec.get("filter"):
+        base = base.filter(compile_filter(base, spec["filter"]))
+    col = F.col(fld)
+
+    def pair_sum(f):
+        return F.aggregate(F.zip_with(col, F.lit(qv), f),
+                           F.lit(0.0), lambda acc, x: acc + x)
+
+    if space == "cosinesimil":
+        qn = float(np.sqrt(np.dot(qv, qv)))
+        if qn == 0:
+            raise ValueError("knn query vector must be non-zero")
+        cn = F.sqrt(F.aggregate(col, F.lit(0.0),
+                                lambda acc, x: acc + x * x))
+        score = F.when(cn > 0, pair_sum(lambda a, b: a * b)
+                       / (cn * F.lit(qn)))
+    elif space == "innerproduct":
+        score = pair_sum(lambda a, b: a * b)
+    elif space == "l2":
+        score = F.lit(1.0) / (F.lit(1.0)
+                              + pair_sum(lambda a, b: (a - b) * (a - b)))
+    else:
+        raise ValueError(f"unsupported knn space_type {space!r}")
+    return (base.filter(col.isNotNull())
+            .withColumn("score", score.cast("double"))
+            .filter(F.col("score").isNotNull()))
 
 
 def _norm_sort(s) -> tuple[str, str, object]:
@@ -1061,8 +1112,9 @@ def search(
     (``text_field``) — a ``match`` against any other field raises.
     Multiple scored match clauses are scored as one SHOULD bag over the
     union of their analyzed tokens (disjunctive, like a single bool
-    SHOULD of term queries); conjunctive multi-match (``operator: and``
-    across clauses) is out of the supported subset.  A top-level
+    SHOULD of term queries); a matched-term floor (``operator: and`` or
+    ``minimum_should_match``, see :func:`match_clause`) applies to a
+    single scored match clause only.  A top-level
     ``multi_match`` (best_fields / most_fields, tie_breaker) scores
     every named field with its own corpus statistics — over an index
     target, pass ``field_readers`` (one IndexReader per field, like one
@@ -1070,7 +1122,8 @@ def search(
     an index target needs the index built with ``positions=True``.
     """
     from .brute_force import bm25_topk_bruteforce
-    from .index_search import IndexReader, bm25_topk_indexed, fetch_docs
+    from .index_search import (IndexReader, bm25_topk_indexed, doc_frame,
+                               fetch_docs)
 
     query = body.get("query", {"match_all": {}})
     if body.get("aggs"):
@@ -1148,45 +1201,42 @@ def search(
                 / F.lit(_UNIT_M[unit]))
             new_sort.append({cname: order})
         body = {**body, "sort": new_sort}
-    if isinstance(target, IndexReader):
-        schema_df = target.doc_stats()
-    else:
-        schema_df = target
-        if text_field in target.columns and \
-                "tokens" not in target.columns:
-            # scored brute paths need the analyzed frame (tokens +
-            # doc_len); analysis is implicit in the reference, so a
-            # raw docs frame analyzes here rather than failing with
-            # an unresolved-column error.  Catalyst prunes the two
-            # derived columns whenever a branch doesn't read them, so
-            # filter-only searches pay nothing, and result schemas
-            # are unchanged (finish() joins back through schema_df).
-            from .brute_force import analyze_docs
+    schema_df = doc_frame(target)
+    if not isinstance(target, IndexReader) and \
+            text_field in target.columns and "tokens" not in target.columns:
+        # scored brute paths need the analyzed frame (tokens +
+        # doc_len); analysis is implicit in the reference, so a
+        # raw docs frame analyzes here rather than failing with
+        # an unresolved-column error.  Catalyst prunes the two
+        # derived columns whenever a branch doesn't read them, so
+        # filter-only searches pay nothing, and result schemas
+        # are unchanged (finish() joins back through schema_df).
+        from .brute_force import analyze_docs
 
-            target = analyze_docs(target, text_col=text_field)
+        target = analyze_docs(target, text_col=text_field)
+
+    def with_doc_columns(out):
+        # index: doc fetch join; brute: join back to the docs frame,
+        # minus analysis columns; rank order kept either way
+        if isinstance(target, IndexReader):
+            return fetch_docs(target, out.select("docid", "score"))
+        cols = [c for c in schema_df.columns
+                if c not in ("tokens", "doc_len") and c not in out.columns]
+        return (out.join(schema_df.select("docid", *cols), "docid")
+                .orderBy(F.desc("score"), F.asc("docid")))
 
     def finish(out):
         # shared tail: when a highlight section (or an explicit
         # _source request) needs doc columns a (docid, score)-only
-        # scored result doesn't carry, fetch them first (index: doc
-        # fetch join; brute: join back to the analyzed frame, minus
-        # analysis columns), keeping rank order
+        # scored result doesn't carry, fetch them first
         hl = body.get("highlight")
         src = body.get("_source")
         sfields = body.get("script_fields")
         dvfields = (_field_list(body.get("docvalue_fields"))
                     + _field_list(body.get("stored_fields")))
         if ((src not in (None, False) or sfields or dvfields)
-                and "score" in out.columns
                 and set(out.columns) == {"docid", "score"}):
-            if isinstance(target, IndexReader):
-                out = fetch_docs(target, out)
-            else:
-                cols = [c for c in schema_df.columns
-                        if c not in ("tokens", "doc_len", "docid")]
-                out = (out.join(schema_df.select("docid", *cols),
-                                "docid")
-                       .orderBy(F.desc("score"), F.asc("docid")))
+            out = with_doc_columns(out)
         if hl:
             missing = [f for f in (hl.get("fields") or {text_field: {}})
                        if f not in out.columns]
@@ -1199,15 +1249,7 @@ def search(
                         f"by this target — index-backed highlighting "
                         f"needs the field kept at build time "
                         f"(build_index keep_cols)")
-                if isinstance(target, IndexReader):
-                    out = fetch_docs(target, out.select("docid", "score"))
-                else:
-                    cols = [c for c in schema_df.columns
-                            if c not in ("tokens", "doc_len")
-                            and c not in out.columns]
-                    out = (out.join(schema_df.select("docid", *cols),
-                                    "docid")
-                           .orderBy(F.desc("score"), F.asc("docid")))
+                out = with_doc_columns(out)
         return _finish_search(out, size, timeout_s, page_from,
                               highlight=hl, query=query,
                               text_field=text_field,
@@ -1243,11 +1285,10 @@ def search(
             raise ValueError(
                 "rescore cannot be combined with collapse (the "
                 "reference rejects this combination too)")
-        from .compound import COMPOUND_KINDS, compound_scores
+        from .compound import SCORED_KINDS, compound_scores
 
-        scoreable = COMPOUND_KINDS + ("match", "match_all")
         qkind = next(iter(query)) if query else "match_all"
-        if qkind not in scoreable:
+        if qkind not in SCORED_KINDS:
             raise ValueError(
                 f"rescore needs a scored primary query "
                 f"(match/compound); got {qkind!r}")
@@ -1260,7 +1301,7 @@ def search(
             window = int(spec.get("window_size", 10))
             rq = rs["rescore_query"]
             rkind = next(iter(rq))
-            if rkind not in scoreable:
+            if rkind not in SCORED_KINDS:
                 raise ValueError(
                     f"rescore_query must be scored (match/compound); "
                     f"got {rkind!r}")
@@ -1314,8 +1355,7 @@ def search(
         # bug the reference avoids by collapsing in the collector).
         from pyspark.sql import Window as _W
 
-        from .compound import COMPOUND_KINDS, compound_scores
-        from .index_search import fetch_docs as _fetch
+        from .compound import SCORED_KINDS, compound_scores
 
         cfld = collapse["field"]
         ih = collapse.get("inner_hits")
@@ -1332,7 +1372,7 @@ def search(
                     "inner hits follow the collapse ordering")
             ih_size = int(ih.get("size", 3))
         qkind = next(iter(query)) if query else "match_all"
-        if qkind in COMPOUND_KINDS or qkind in ("match", "match_all"):
+        if qkind in SCORED_KINDS:
             scored = compound_scores(target, query,
                                      text_field=text_field)
             side = schema_df.select("docid", cfld)
@@ -1340,23 +1380,17 @@ def search(
                                              F.asc("docid"))
             ranked = (scored.join(side, "docid")
                       .withColumn("_ck", F.row_number().over(w)))
-            heads = (ranked.filter(F.col("_ck") == 1).drop("_ck")
-                     .orderBy(F.desc("score"), F.asc("docid"))
-                     .limit(size))
-            if ih:
-                keys = heads.select(F.col(cfld),
-                                    F.col("score").alias("_head"))
-                out = (ranked.filter(F.col("_ck") <= ih_size)
-                       .withColumnRenamed("_ck", "_inner_rank")
-                       .join(F.broadcast(keys), cfld)
-                       .orderBy(F.desc("_head"), F.asc("docid"),
-                                F.asc("_inner_rank"))
-                       .drop("_head"))
-                return finish(out)
-            out = heads
-            if isinstance(target, IndexReader):
-                out = _fetch(target, out.select("docid", "score"))
-            return finish(out)
+            heads = _top_hits(
+                target, ranked.filter(F.col("_ck") == 1).drop("_ck"), size)
+            if not ih:
+                return finish(heads)
+            keys = heads.select(F.col(cfld), F.col("score").alias("_head"))
+            return finish(ranked.filter(F.col("_ck") <= ih_size)
+                          .withColumnRenamed("_ck", "_inner_rank")
+                          .join(F.broadcast(keys), cfld)
+                          .orderBy(F.desc("_head"), F.asc("docid"),
+                                   F.asc("_inner_rank"))
+                          .drop("_head"))
         csort = [_norm_sort(s) for s in (body.get("sort") or [])]
         if not csort:
             raise ValueError(
@@ -1381,22 +1415,16 @@ def search(
 
     if set(query) == {"knn"}:
         # k-NN vector query (OpenSearch k-NN plugin's query kind):
-        # exact scored scan over a vector column — score per
-        # space_type (cosinesimil = cosine, innerproduct = dot,
-        # l2 = 1/(1+d²), the plugin's published formulas), optional
-        # pre-FILTER (the plugin's efficient-filtering semantics:
-        # filter first, then k nearest among survivors).  One
-        # broadcast-free codegen pass + TakeOrdered — the exact twin;
-        # the ANN scale paths (IVF/LSH/PQ) live in
-        # pipeline/similarity.py and share the maths.
-        import numpy as np
-
+        # exact scored scan over a vector column (_knn_rows), then
+        # the k nearest or a radial bound.  One broadcast-free codegen
+        # pass + TakeOrdered — the exact twin; the ANN scale paths
+        # (IVF/LSH/PQ) live in pipeline/similarity.py and share the
+        # maths.
         if isinstance(target, IndexReader):
             raise ValueError(
                 "knn runs over a DataFrame with a vector column, not "
                 "a postings index")
-        (fld, spec), = query["knn"].items()
-        qv = [float(x) for x in spec["vector"]]
+        (spec,) = query["knn"].values()
         radial = {k_ for k_ in ("max_distance", "min_score")
                   if k_ in spec}
         if radial and "k" in spec:
@@ -1409,35 +1437,9 @@ def search(
                 "not both")
         kk = int(spec.get("k", size))
         space = spec.get("space_type", "cosinesimil")
-        base = schema_df
-        if spec.get("filter"):
-            base = base.filter(compile_filter(base, spec["filter"]))
-        col = F.col(fld)
-        dot = F.aggregate(
-            F.zip_with(col, F.lit(qv), lambda a, b_: a * b_),
-            F.lit(0.0), lambda acc, x: acc + x)
-        if space == "cosinesimil":
-            qn = float(np.sqrt(np.dot(qv, qv)))
-            if qn == 0:
-                raise ValueError("knn query vector must be non-zero")
-            cn = F.sqrt(F.aggregate(col, F.lit(0.0),
-                                    lambda acc, x: acc + x * x))
-            score = F.when(cn > 0, dot / (cn * F.lit(qn)))
-        elif space == "innerproduct":
-            score = dot
-        elif space == "l2":
-            d2 = F.aggregate(
-                F.zip_with(col, F.lit(qv),
-                           lambda a, b_: (a - b_) * (a - b_)),
-                F.lit(0.0), lambda acc, x: acc + x)
-            score = F.lit(1.0) / (F.lit(1.0) + d2)
-        else:
-            raise ValueError(f"unsupported knn space_type {space!r}")
-        id_sort = ([F.asc("docid")] if "docid" in base.columns
-                   else [F.asc(base.columns[0])])
-        out = (base.filter(col.isNotNull())
-               .withColumn("score", score.cast("double"))
-               .filter(F.col("score").isNotNull()))
+        out = _knn_rows(schema_df, query["knn"])
+        id_sort = ([F.asc("docid")] if "docid" in out.columns
+                   else [F.asc(out.columns[0])])
         if radial:
             # radial search (k-NN plugin 2.14+): every neighbor inside
             # the bound instead of the k nearest.  max_distance is in
@@ -1526,20 +1528,14 @@ def search(
                                   text_field=text_field, **mlt)
         return finish(out)
 
-    if len(query) == 1 and next(iter(query)) in (
-            "dis_max", "constant_score", "boosting", "function_score",
-            "script_score", "pinned", "distance_feature",
-            "rank_feature"):
+    from .compound import COMPOUND_KINDS, compound_scores
+
+    if len(query) == 1 and next(iter(query)) in COMPOUND_KINDS:
         # compound scored queries: exact full-score-set combination,
         # then one top-k over the combined score (query/compound.py)
-        from .compound import compound_scores
-
-        scored = compound_scores(target, query, text_field=text_field)
-        out = (scored.orderBy(F.desc("score"), F.asc("docid"))
-               .limit(size))
-        if isinstance(target, IndexReader):
-            out = fetch_docs(target, out)
-        return finish(out)
+        return finish(_top_hits(
+            target, compound_scores(target, query, text_field=text_field),
+            size))
 
     if set(query) == {"combined_fields"}:
         # merged-field BM25 (CombinedFieldQuery / BM25F) — see
@@ -1634,32 +1630,6 @@ def search(
             out = run(tgt, text, k=size, **kw)
         return finish(out)
 
-    if set(query) == {"match"}:
-        (mfld, mspec), = query["match"].items()
-        if isinstance(mspec, dict) and "minimum_should_match" in mspec:
-            # match + minimum_should_match (MatchQueryBuilder): scored
-            # disjunction requiring ≥ N distinct query terms per doc.
-            # Brute: bm25_scores(min_match=); index: the same
-            # matched-distinct-term floor in the scoring kernel (only
-            # the query terms' postings are read).
-            if mfld != text_field:
-                raise ValueError(
-                    f"scored match supports only the indexed text "
-                    f"field {text_field!r}; got {mfld!r}")
-            text = mspec["query"]
-            need = parse_msm(mspec["minimum_should_match"],
-                             len(set(tokenize_query(text))))
-            from .brute_force import bm25_scores
-            from .index_search import bm25_scores_indexed
-
-            scores = (bm25_scores_indexed if isinstance(target, IndexReader)
-                      else bm25_scores)
-            out = (scores(target, text, min_match=need)
-                   .orderBy(F.desc("score"), F.asc("docid")).limit(size))
-            if isinstance(target, IndexReader):
-                out = fetch_docs(target, out)
-            return finish(out)
-
     plan = plan_query(schema_df, query)
     cond = plan.filter_cond
 
@@ -1669,38 +1639,42 @@ def search(
             raise ValueError(
                 f"scored match supports only the indexed text field "
                 f"{text_field!r}; got match on {bad}")
-        ops = {m[2] for m in plan.matches}
-        if "and" in ops and len(plan.matches) > 1:
+        need = max(m[2] for m in plan.matches)
+        if need >= 2 and len(plan.matches) > 1:
             raise ValueError(
-                "match operator:and is supported for a single match "
-                "clause (conjunctive multi-clause bags are ambiguous)")
-        conjunctive = ops == {"and"}
+                "match operator:and / minimum_should_match is supported "
+                "for a single match clause (a term floor over a "
+                "multi-clause bag is ambiguous)")
         text = " ".join(m[1] for m in plan.matches)
+        is_index = isinstance(target, IndexReader)
         if plan.synonyms:
             # SynonymQuery blended scoring (query/synonyms.py)
-            if conjunctive:
+            if need >= 2:
                 raise ValueError(
-                    "match synonyms with operator:and is unsupported "
-                    "in scored context (group-conjunctive blended "
-                    "scoring is out of subset) — use filter context")
+                    "match synonyms with operator:and or "
+                    "minimum_should_match >= 2 are unsupported in scored "
+                    "context (group-conjunctive blended scoring is out "
+                    "of subset) — use filter context")
             from .synonyms import (synonym_match_topk,
                                    synonym_match_topk_indexed)
 
-            if isinstance(target, IndexReader):
-                top = synonym_match_topk_indexed(
-                    target, text, plan.synonyms, k=size, filter_cond=cond)
-                out = fetch_docs(target, top)
-            else:
-                out = synonym_match_topk(target, text, plan.synonyms,
-                                         k=size, filter_cond=cond)
-        elif isinstance(target, IndexReader):
-            top = bm25_topk_indexed(target, text, k=size, filter_cond=cond,
-                                    conjunctive=conjunctive)
-            out = fetch_docs(target, top)
+            run = (synonym_match_topk_indexed if is_index
+                   else synonym_match_topk)
+            top = run(target, text, plan.synonyms, k=size, filter_cond=cond)
+        elif need >= 2:
+            # a matched-distinct-term floor: dense scoring (block-max
+            # bounds are OR-shaped and do not model the floor)
+            from .brute_force import bm25_scores
+            from .index_search import bm25_scores_indexed
+
+            run = bm25_scores_indexed if is_index else bm25_scores
+            top = run(target, text, filter_cond=cond, min_match=need)
+        elif is_index:
+            top = bm25_topk_indexed(target, text, k=size, filter_cond=cond)
         else:
-            out = bm25_topk_bruteforce(target, text, k=size,
-                                       filter_cond=cond,
-                                       conjunctive=conjunctive)
+            top = bm25_topk_bruteforce(target, text, k=size,
+                                       filter_cond=cond)
+        out = _top_hits(target, top, size)
     else:
         out = schema_df if cond is None else schema_df.filter(cond)
         sort = [_norm_sort(s) for s in (body.get("sort") or [])]
@@ -1744,6 +1718,18 @@ def search(
             out = out.limit(size)
 
     return finish(out)
+
+
+def _top_hits(target, scored: DataFrame, size: int) -> DataFrame:
+    """The one hit tail of the scored branches: the top ``size`` by
+    (score desc, docid asc), joined to their doc columns when the
+    target is an index."""
+    from .index_search import IndexReader, fetch_docs
+
+    top = scored.orderBy(F.desc("score"), F.asc("docid")).limit(size)
+    if isinstance(target, IndexReader):
+        return fetch_docs(target, top.select("docid", "score"))
+    return top
 
 
 def _finish_search(out: DataFrame, size: int, timeout_s: float | None,

@@ -64,6 +64,22 @@ def test_mlt_free_text_and_msm(corpus):
     assert len(none) == 0
 
 
+def test_mlt_negative_percent_msm_is_all_but(spark):
+    # "-25%" over the 4 selected terms is Lucene's "all but 25%" = 3
+    docs = analyze_docs(spark.createDataFrame(
+        [(1, "alpha beta gamma delta"), (2, "alpha beta gamma x"),
+         (3, "alpha beta y z"), (4, "alpha w v u"), (5, "q r s t")],
+        ["docid", "text"]))
+    like = "alpha alpha beta beta gamma gamma delta delta"
+    kw = dict(k=10, min_term_freq=2, min_doc_freq=1)
+    neg = more_like_this_topk(docs, like, minimum_should_match="-25%",
+                              **kw).collect()
+    three = more_like_this_topk(docs, like, minimum_should_match=3,
+                                **kw).collect()
+    assert [tuple(r) for r in neg] == [tuple(r) for r in three]
+    assert sorted(r["docid"] for r in neg) == [1, 2]
+
+
 def test_mlt_search_routing_and_id_on_index_raises(corpus):
     out = search(corpus, {"query": {"more_like_this": {
         "fields": ["text"], "like": [{"_id": 0}],
