@@ -538,9 +538,10 @@ def _bm25(reader: IndexReader, qcounts: Counter, k: int | None,
     # toward the floor (operator:and: no doc can match every clause)
     if len(present) < max(min_match, 1):
         return local_df(reader.spark, [], _HITS)
-    if min_match or k is None:
+    if min_match > 1 or k is None:
         # dense scoring: no cut to prune toward, or a matched-term floor
-        # that block-max's OR-shaped upper bounds do not model
+        # that block-max's OR-shaped upper bounds do not model (a floor
+        # of one term is what every scored doc already holds)
         prune = two_phase = False
     # duplicate query terms sum their contribution (bool SHOULD), so the
     # per-term weight is idf × multiplicity
@@ -579,6 +580,8 @@ def bm25_topk_indexed(
     bucket: int | None = None,
     two_phase: bool = False,
     conjunctive: bool = False,
+    *,
+    _min_match: int = 0,
 ) -> DataFrame:
     """Top-k (docid, score) via the posting index; rank/score-identical
     to :func:`bm25_topk_bruteforce` by construction (tested).
@@ -590,10 +593,14 @@ def bm25_topk_indexed(
     ``two_phase`` scores the densest segment first and broadcasts its
     k-th score as every other segment's starting θ (see
     :func:`_segment_scan`).  ``conjunctive`` is match ``operator: and``:
-    only docs holding every query term score (scored densely)."""
+    only docs holding every query term score (scored densely).
+    ``_min_match`` is the search planner's matched-distinct-term floor
+    (``planner.match_clause``'s need; not part of the public API): a
+    floor above one term scores densely, still cut to ``k`` per
+    segment."""
     qcounts = Counter(tokenize_query(query_text))
     return _bm25(reader, qcounts, k, filter_cond, k1, b,
-                 min_match=len(qcounts) if conjunctive else 0,
+                 min_match=len(qcounts) if conjunctive else _min_match,
                  prune=prune, quantize_norms=quantize_norms,
                  bucket=bucket, two_phase=two_phase)
 

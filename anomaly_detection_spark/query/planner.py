@@ -1121,7 +1121,7 @@ def search(
     Lucene field index each).  A scored top-level ``match_phrase`` over
     an index target needs the index built with ``positions=True``.
     """
-    from .brute_force import bm25_topk_bruteforce
+    from .brute_force import bm25_scores
     from .index_search import (IndexReader, bm25_topk_indexed, doc_frame,
                                fetch_docs)
 
@@ -1380,11 +1380,12 @@ def search(
                                              F.asc("docid"))
             ranked = (scored.join(side, "docid")
                       .withColumn("_ck", F.row_number().over(w)))
-            heads = _top_hits(
-                target, ranked.filter(F.col("_ck") == 1).drop("_ck"), size)
+            heads = ranked.filter(F.col("_ck") == 1).drop("_ck")
             if not ih:
-                return finish(heads)
-            keys = heads.select(F.col(cfld), F.col("score").alias("_head"))
+                return finish(_top_hits(target, heads, size))
+            keys = (heads.orderBy(F.desc("score"), F.asc("docid"))
+                    .limit(size)
+                    .select(F.col(cfld), F.col("score").alias("_head")))
             return finish(ranked.filter(F.col("_ck") <= ih_size)
                           .withColumnRenamed("_ck", "_inner_rank")
                           .join(F.broadcast(keys), cfld)
@@ -1661,19 +1662,13 @@ def search(
             run = (synonym_match_topk_indexed if is_index
                    else synonym_match_topk)
             top = run(target, text, plan.synonyms, k=size, filter_cond=cond)
-        elif need >= 2:
-            # a matched-distinct-term floor: dense scoring (block-max
-            # bounds are OR-shaped and do not model the floor)
-            from .brute_force import bm25_scores
-            from .index_search import bm25_scores_indexed
-
-            run = bm25_scores_indexed if is_index else bm25_scores
-            top = run(target, text, filter_cond=cond, min_match=need)
         elif is_index:
-            top = bm25_topk_indexed(target, text, k=size, filter_cond=cond)
+            # the kernel prunes under no floor and scores densely under
+            # one, keeping its per-segment top-k cut either way
+            top = bm25_topk_indexed(target, text, k=size, filter_cond=cond,
+                                    _min_match=need)
         else:
-            top = bm25_topk_bruteforce(target, text, k=size,
-                                       filter_cond=cond)
+            top = bm25_scores(target, text, filter_cond=cond, min_match=need)
         out = _top_hits(target, top, size)
     else:
         out = schema_df if cond is None else schema_df.filter(cond)

@@ -66,12 +66,27 @@ SYN_MSM2 = {"match": {"text": {"query": "spark query data",
                                "synonyms": {"spark": ["flink"]}}}}
 
 
-@pytest.mark.parametrize("query", [
-    SYN_MSM2, {"bool": {"must": [SYN_MSM2]}},
-    {"dis_max": {"queries": [SYN_MSM2]}}],
-    ids=["top_level", "bool_must", "dis_max"])
+@pytest.mark.parametrize("query", [SYN_MSM2, {"bool": {"must": [SYN_MSM2]}}],
+                         ids=["top_level", "bool_must"])
 def test_match_msm_with_synonyms_scored_raises(targets, query):
-    # group-conjunctive blended scoring is out of subset: the scored
-    # contexts raise rather than drop the term floor
-    with pytest.raises(ValueError, match="synonyms"):
+    # group-conjunctive blended scoring is out of subset: a scored
+    # synonyms match with a floor of two or more terms raises rather
+    # than drop the floor
+    with pytest.raises(ValueError, match="minimum_should_match >= 2"):
         search(targets["brute"], {"query": query}).collect()
+
+
+def _plain(**opts):
+    return {"match": {"text": {"query": "spark query data", **opts}}}
+
+
+@pytest.mark.parametrize("leaf", [
+    SYN_MSM2, _plain(synonyms={"spark": ["flink"]}), _plain(fuzziness=1)],
+    ids=["synonyms_msm", "synonyms_or", "fuzziness_or"])
+def test_compound_match_synonyms_or_fuzziness_raises(targets, leaf):
+    # a compound scores its match leaves as plain BM25, which would
+    # silently drop synonyms or fuzziness whatever the floor, so any
+    # such leaf raises (also with no minimum_should_match)
+    with pytest.raises(ValueError, match="inside a compound"):
+        search(targets["brute"],
+               {"query": {"dis_max": {"queries": [leaf]}}}).collect()
