@@ -11,8 +11,7 @@ name/value list, anomaly_grade/confidence, data_start/end_time).
 This module composes the engine's pieces into exactly that surface.
 Every detection path — :func:`preview` (scalar and joint), the two
 realtime ticks :func:`run_once_stateful` / :func:`run_once_stateful_joint`
-and the :func:`run_historical` piece loop — shares one helper per step;
-only the scoring kernels differ:
+and the :func:`run_historical` piece loop — shares one helper per step:
 
     load_table(pattern) → _interval_frame (compile_filter(query JSON)
     over [lo, hi) → feature_matrix per (entity, interval)) → _melt (one
@@ -26,6 +25,13 @@ whole feature vector of an entity.
 The ticks add ``_admit`` (entity-cache admission), ``_with_presence``
 (which entities produced a bucket) and ``_swap_state_dir`` (the state
 rewrite) around their kernels.
+
+The scalar tick, the ``run_historical`` pieces and the streaming
+detector advance one shared model per (entity, feature),
+:class:`~anomaly_detection_spark.features.scoring.ScalarModel`
+(``fill`` imputes, ``step`` scores then ingests, through the
+``window_z`` formula preview's ``zscore_scorer`` uses); each kernel
+keeps only its I/O.
 
 The model stand-in is the deterministic trailing-window z-score from
 :mod:`features.scoring` (RCF lives in a library the survey scopes
@@ -48,6 +54,7 @@ from pyspark.sql import functions as F
 from .index.storage import read_table
 
 from .features import feature_matrix, score_entities
+from .features.scoring import ScalarModel, has_value
 from .functions.entity import with_entity
 from .query.planner import compile_filter
 from .sources import load_table
@@ -643,13 +650,12 @@ def run_once_stateful(spark: SparkSession, det: Detector, now_ms: int,
     ``history_intervals`` of history.
 
     Idempotent per interval: the state rows carry the last-ingested
-    bucket (``last_ms``) and its score (``last_z``), so a retry of the
-    same interval (scheduler re-fire, downstream write failure after
-    the state swap) REPLAYS the stored score without appending the
-    value into the shingle window again.  A call for an interval older
-    than ``last_ms`` is a no-op (no mutation, no rows).  The expected
-    value is not checkpointed, so a replayed row is not checked
-    against ``suppression_rules``.
+    bucket (``last_ms``), its score (``last_z``) and expected value
+    (``last_exp``), so a retry of the same interval (scheduler
+    re-fire, downstream write failure after the state swap) REPLAYS
+    the stored score and expected value without appending the value
+    into the shingle window again.  A call for an interval older
+    than ``last_ms`` is a no-op (no mutation, no rows).
 
     ``scorer_factory`` (same protocol as :func:`run_historical`'s —
     e.g. :func:`~anomaly_detection_spark.features.rcf_stream_factory`)
@@ -720,8 +726,10 @@ def run_once_stateful(spark: SparkSession, det: Detector, now_ms: int,
                        T.StructField("last_ms", T.LongType()),
                        T.StructField("last_z", T.DoubleType()),
                        T.StructField("model", T.BinaryType()),
-                       T.StructField("last_v", T.DoubleType())])
-    # older state reads last_ms / last_z / model / last_v as null
+                       T.StructField("last_v", T.DoubleType()),
+                       T.StructField("last_exp", T.DoubleType())])
+    # older state reads last_ms / last_z / model / last_v / last_exp
+    # as null
     state = read_table(spark, spath, T.StructType(state_fields))
     state, cur = _admit(spark, det, state_dir, now_ms, cache_policy,
                         state, cur, gcols)
@@ -759,138 +767,71 @@ def run_once_stateful(spark: SparkSession, det: Detector, now_ms: int,
     def fn(batches):
         for pdf in batches:
             n = len(pdf)
-            vals_list = [list(v) if v is not None and not (
-                isinstance(v, float) and pd.isna(v)) else []
-                for v in pdf["vals"]]
-            lens = np.fromiter((len(v) for v in vals_list), np.int64, n)
             v = pdf["_v"].to_numpy(dtype=np.float64)
-            havev = ~np.isnan(v)
             lm = pdf["last_ms"].to_numpy(dtype=np.float64)  # NaN = never
             lz = pdf["last_z"].to_numpy(dtype=np.float64)
-            lv = pdf["last_v"].to_numpy(dtype=np.float64)
-            imputed = np.zeros(n, dtype=bool)
-            if impute:
-                # synthesize the missing value BEFORE the replay/
-                # ingest masks so every downstream step (idempotent
-                # replay, cold-start skip, window append, model
-                # update) treats it exactly like an observed one —
-                # replays recompute the same value deterministically
-                # (zero/fixed are constants; 'previous' re-reads the
-                # carried value)
-                ent_absent = ~(pdf["_ent_present"] == True) \
-                    .to_numpy(dtype=bool)      # noqa: E712 (None-safe)
-                has_state = ~np.isnan(lm)
-                cand = ~havev & ent_absent & has_state
-                for i in np.flatnonzero(cand):
-                    if impute == "zero":
-                        v[i] = 0.0
-                    elif impute == "fixed_values":
-                        v[i] = float(fixed_vals[pdf["_feat"].iloc[i]])
-                    else:                      # previous
-                        if vals_list[i]:
-                            v[i] = float(vals_list[i][-1])
-                        elif not np.isnan(lv[i]):
-                            v[i] = lv[i]
-                        else:
-                            continue           # nothing to carry yet
-                    imputed[i] = True
-                havev = ~np.isnan(v)
-            # already-ingested interval → replay stored score, no append;
-            # an older interval than last_ms → no-op (out-of-order call)
-            replay = havev & (lm == float(start))
-            ingest = havev & ~replay & ~(lm > float(start))
+            lexp = pdf["last_exp"].to_numpy(dtype=np.float64)
+            absent = ~(pdf["_ent_present"] == True) \
+                .to_numpy(dtype=bool)      # noqa: E712 (None-safe)
             z = np.full(n, np.nan)
             # the model's expected value, for rule margins
             exp = np.full(n, np.nan)
-            models = list(pdf["model"]) if "model" in pdf.columns \
-                else [None] * n
-            extra_cnt = np.zeros(n, dtype=np.int64)
-            # historical cold start: rows with no prior state train on
-            # the joined trailing series before the live update below
-            # runs (the recurrence is the live one, so the resulting
-            # state equals a sequential run over the same history)
-            for i in range(n):
-                hv = pdf["_cs_v"].iloc[i]
-                if (hv is None or (isinstance(hv, float) and pd.isna(hv))
-                        or len(hv) == 0 or not ingest[i]
-                        or lens[i] > 0 or not (
-                            models[i] is None
-                            or (isinstance(models[i], float)
-                                and pd.isna(models[i])))):
+            imputed = np.zeros(n, dtype=bool)
+            models = [ScalarModel(k, eps, scorer_factory, *cells)
+                      for cells in zip(pdf["vals"], pdf["model"],
+                                       pdf["scored_cnt"], pdf["last_v"])]
+            for i, (m, feat, cs_ms, cs_v) in enumerate(zip(
+                    models, pdf["_feat"], pdf["_cs_ms"], pdf["_cs_v"])):
+                if (impute and np.isnan(v[i]) and absent[i]
+                        and not np.isnan(lm[i])):
+                    # synthesize the missing value BEFORE the replay /
+                    # ingest checks so it flows through them exactly
+                    # like an observed one — a replay recomputes the
+                    # same value (constants, or the carried last_v)
+                    fv = m.fill(impute, fixed_vals.get(feat))
+                    if fv is not None:
+                        v[i], imputed[i] = fv, True
+                # no value, or an interval older than last_ms (an
+                # out-of-order call): no-op
+                if np.isnan(v[i]) or lm[i] > start:
                     continue
-                times = np.asarray(pdf["_cs_ms"].iloc[i], dtype=np.float64)
-                values = np.asarray(hv, dtype=np.float64)
-                if len(times) > 1:
-                    # interpolate interior gaps between present
-                    # neighboring samples (ModelColdStart.java:346)
-                    grid = np.arange(times[0],
-                                     times[-1] + interval_ms / 2,
-                                     interval_ms)
-                    values = np.interp(grid, times, values)
-                if scorer_factory is not None:
-                    stream = scorer_factory()
+                if lm[i] == start:
+                    # already-ingested interval → replay the stored
+                    # outputs, no append
+                    z[i], exp[i] = lz[i], lexp[i]
+                    continue
+                if (has_value(cs_v) and len(cs_v) and not m.vals
+                        and m.model_bytes is None):
+                    # historical cold start: a row with no prior state
+                    # steps through the trailing series first, so its
+                    # state equals a sequential run's
+                    times = np.asarray(cs_ms, dtype=np.float64)
+                    values = np.asarray(cs_v, dtype=np.float64)
+                    if len(times) > 1:
+                        # interpolate interior gaps between present
+                        # neighboring samples (ModelColdStart.java:346)
+                        grid = np.arange(times[0],
+                                         times[-1] + interval_ms / 2,
+                                         interval_ms)
+                        values = np.interp(grid, times, values)
                     for val in values:
-                        zt, _ = stream.update(float(val))
-                        if not np.isnan(zt):
-                            extra_cnt[i] += 1
-                    models[i] = stream.to_bytes()
-                else:
-                    w: list = []
-                    for val in values:
-                        if len(w) == k:
-                            extra_cnt[i] += 1
-                        w = (w + [float(val)])[-k:]
-                    vals_list[i] = w
-                    lens[i] = len(w)
-            if scorer_factory is not None:
-                # one checkpointed streaming model per row (a row IS one
-                # entity-feature model — the per-entity loop mirrors the
-                # reference's per-model checkpoint round-trip)
-                for i in np.flatnonzero(ingest):
-                    mb = models[i]
-                    stream = (scorer_factory() if mb is None or (
-                        isinstance(mb, float) and pd.isna(mb))
-                        else scorer_factory.restore(bytes(mb)))
-                    z[i], exp[i] = stream.update(float(v[i]))
-                    models[i] = stream.to_bytes()
-            else:
-                idx = np.flatnonzero((lens == k) & ingest)
-                if len(idx):
-                    # same float sequence as zscore_scorer (sum/k twice);
-                    # expected = the prior-window mean, the baseline
-                    # preview uses for rule margins
-                    W = np.array([vals_list[i] for i in idx],
-                                 dtype=np.float64)
-                    m = W.sum(axis=1) / k
-                    m2 = (W * W).sum(axis=1) / k
-                    std = np.sqrt(np.maximum(m2 - m * m, 0.0))
-                    z[idx] = (v[idx] - m) / (std + eps)
-                    exp[idx] = m
-            z[replay] = lz[replay]
-            newvals = [
-                (vals_list[i] + [float(v[i])])[-k:]
-                if ingest[i] and scorer_factory is None
-                else vals_list[i]
-                for i in range(n)]
-            cnt = pdf["scored_cnt"].fillna(0).to_numpy(dtype=np.int64)
-            cnt = cnt + extra_cnt \
-                + ((~np.isnan(z)) & ingest).astype(np.int64)
-            new_lm = np.where(ingest, float(start), lm)
-            new_lz = np.where(ingest, z, lz)
-            new_lv = np.where(ingest, v, lv)
+                        m.step(val)
+                z[i], exp[i] = m.step(v[i])
+                lm[i], lz[i], lexp[i] = start, z[i], exp[i]
             out = pdf.drop(columns=["vals", "scored_cnt", "last_ms",
-                                    "last_z", "last_v", "_v", "model",
-                                    "_cs_ms", "_cs_v", "_ent_present"],
-                           errors="ignore").copy()
-            out["vals"] = newvals
-            out["scored_cnt"] = cnt
-            out["last_ms"] = pd.Series(new_lm).astype("Int64")
-            out["last_z"] = new_lz
-            out["model"] = models
-            out["last_v"] = new_lv
+                                    "last_z", "last_v", "last_exp", "_v",
+                                    "model", "_cs_ms", "_cs_v",
+                                    "_ent_present"]).copy()
+            out["vals"] = [m.vals for m in models]
+            out["scored_cnt"] = [m.scored_cnt for m in models]
+            out["last_ms"] = pd.Series(lm).astype("Int64")
+            out["last_z"] = lz
+            out["model"] = [m.model_bytes for m in models]
+            out["last_v"] = [m.last_v for m in models]
+            out["last_exp"] = lexp
             out["_z"] = z
             out["_exp"] = exp
-            out["_vu"] = np.where(havev, v, np.nan)
+            out["_vu"] = v
             out["_imp"] = imputed
             yield out[[f.name for f in upd_schema.fields]]
 
@@ -1050,11 +991,6 @@ def run_once_stateful_joint(spark: SparkSession, det: Detector,
             vecs = list(pdf["_vec"])
             extra_cnt = np.zeros(n, dtype=np.int64)
             imputed = np.zeros(n, dtype=bool)
-
-            def has(x):
-                return x is not None and not (isinstance(x, float)
-                                              and pd.isna(x))
-
             if impute:
                 # synthesize the missing vector BEFORE the replay/
                 # ingest logic so it flows through the identical
@@ -1064,23 +1000,23 @@ def run_once_stateful_joint(spark: SparkSession, det: Detector,
                 ent_p = (pdf["_ent_present"] == True) \
                     .to_numpy(dtype=bool)      # noqa: E712 (None-safe)
                 for i in range(n):
-                    if has(vecs[i]) or ent_p[i] or np.isnan(lm[i]):
+                    if has_value(vecs[i]) or ent_p[i] or np.isnan(lm[i]):
                         continue
                     if impute == "zero":
                         vecs[i] = [0.0] * nf
                     elif impute == "fixed_values":
                         vecs[i] = list(fixed_vec)
-                    elif has(lvecs[i]):          # previous
+                    elif has_value(lvecs[i]):          # previous
                         vecs[i] = [float(x) for x in lvecs[i]]
                     else:
                         continue                 # nothing to carry yet
                     imputed[i] = True
 
             for i in range(n):
-                if not has(vecs[i]):
+                if not has_value(vecs[i]):
                     continue
                 if lm[i] == float(start):            # replay, no ingest
-                    if has(louts[i]):
+                    if has_value(louts[i]):
                         o = pickle.loads(bytes(louts[i]))
                         z[i] = o["z"]
                         exps[i] = o["exp"]
@@ -1091,7 +1027,7 @@ def run_once_stateful_joint(spark: SparkSession, det: Detector,
                 if lm[i] > float(start):             # out-of-order call
                     continue
                 cvs = pdf["_cs_vecs"].iloc[i]
-                if (not has(models[i]) and has(cvs) and len(cvs)
+                if (not has_value(models[i]) and has_value(cvs) and len(cvs)
                         and np.isnan(lm_orig[i])):
                     # historical cold start: train the fresh joint
                     # model on the trailing complete-feature buckets
@@ -1104,7 +1040,7 @@ def run_once_stateful_joint(spark: SparkSession, det: Detector,
                         if zt == zt:
                             extra_cnt[i] += 1
                     models[i] = cs_stream.to_bytes()
-                stream = (stream_factory() if not has(models[i])
+                stream = (stream_factory() if not has_value(models[i])
                           else stream_factory.restore(bytes(models[i])))
                 # an F=1 stream takes a scalar (RCFStream.update's
                 # univariate spelling), F>1 the vector
@@ -1137,8 +1073,8 @@ def run_once_stateful_joint(spark: SparkSession, det: Detector,
             out["last_ms"] = pd.Series(lm).astype("Int64")
             out["model"] = models
             out["last_out"] = louts
-            out["last_vec"] = [lv if has(lv) else None for lv in lvecs]
-            out["_vu"] = [([float(x) for x in v] if has(v) else None)
+            out["last_vec"] = [lv if has_value(lv) else None for lv in lvecs]
+            out["_vu"] = [([float(x) for x in v] if has_value(v) else None)
                           for v in vecs]
             out["_imp"] = imputed
             out["_z"] = z
@@ -1199,28 +1135,36 @@ def prune_state(spark: SparkSession, detector_id: str, state_dir: str,
     ``<detector_id>__joint`` (:func:`run_once_stateful_joint`).  Same
     tmp+swap crash posture as the state writes; returns the total
     number of rows pruned.  A retention pass is idempotent."""
-    cutoff = now_ms - ttl_ms
-    pruned = 0
+    return _expire_state(spark, detector_id, state_dir, now_ms - ttl_ms)[1]
+
+
+def _expire_state(spark: SparkSession, detector_id: str, state_dir: str,
+                  cutoff: int) -> tuple[int, int]:
+    """Drop the rows of both state layouts whose ``last_ms`` is older
+    than ``cutoff``; returns ``(kept, pruned)`` row counts.  Rows that
+    never ingested an interval (``last_ms`` null, or a table written
+    without the column, like :func:`run_historical`'s) are KEPT: they
+    carry no timestamp to age them by, and counting them as expiries
+    would misreport the prune."""
+    kept = pruned = 0
     for ident in (detector_id, f"{detector_id}__joint"):
         spath = _state_path(state_dir, ident)
         if not os.path.exists(spath):
             continue
         state = spark.read.parquet(spath)
-        # rows that never ingested an interval (last_ms null — e.g. an
-        # entity-feature whose only interval had a null value) are
-        # KEPT: they carry no model bytes and no timestamp to age them
-        # by, and counting them as TTL expiries would misreport the
-        # prune
+        n_total = state.count()
+        if "last_ms" not in state.columns:
+            kept += n_total
+            continue
         keep = state.filter(F.col("last_ms").isNull()
                             | (F.col("last_ms") >= cutoff))
-        n_total = state.count()
-        kept = keep.localCheckpoint()        # cut lineage before swap
-        n_keep = kept.count()
-        if n_keep == n_total:
-            continue
-        _swap_state_dir(kept, spath, kept.columns)
-        pruned += n_total - n_keep
-    return pruned
+        keep = keep.localCheckpoint()        # cut lineage before swap
+        n_keep = keep.count()
+        kept += n_keep
+        if n_keep < n_total:
+            _swap_state_dir(keep, spath, keep.columns)
+            pruned += n_total - n_keep
+    return kept, pruned
 
 
 # --- historical (batch) analysis ---------------------------------------------
@@ -1433,34 +1377,14 @@ def run_historical(
         # RCF blob × 4096 buckets = 14 GB for a 2-entity piece).  With
         # cogroup the state row crosses the wire exactly once per key.
         def fn(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-            vals: list = []
-            model_b = None
-            cnt = 0
-            carry = None                  # last ingested value
-            if len(rpdf):
-                r0 = rpdf.iloc[0]
-                if r0["vals"] is not None and not (
-                        isinstance(r0["vals"], float)
-                        and pd.isna(r0["vals"])):
-                    vals = list(r0["vals"])
-                if r0["model"] is not None and not (
-                        isinstance(r0["model"], float)
-                        and pd.isna(r0["model"])):
-                    model_b = bytes(r0["model"])
-                if not pd.isna(r0["scored_cnt"]):
-                    cnt = int(r0["scored_cnt"])
-                if "last_v" in rpdf.columns and not pd.isna(r0["last_v"]):
-                    carry = float(r0["last_v"])
-            if carry is None and vals:
-                carry = float(vals[-1])
-            stream = None
-            if scorer_factory is not None:
-                stream = (scorer_factory() if model_b is None
-                          else scorer_factory.restore(model_b))
+            r0 = rpdf.iloc[0] if len(rpdf) else {}
+            m = ScalarModel(k, eps, scorer_factory, r0.get("vals"),
+                            r0.get("model"), r0.get("scored_cnt"),
+                            r0.get("last_v"))
             rows = lpdf.sort_values("bucket_ms")
             # (bucket_ms, value, was_imputed) sequence: observed rows
             # as-is, or — under imputation — the entity-extent grid
-            # with missing buckets synthesized (preview's
+            # with missing buckets marked (preview's
             # fill-missing-buckets-only semantics: a present bucket
             # whose feature aggregated to null stays null)
             has_fill = "_impin" in rows.columns
@@ -1476,60 +1400,28 @@ def run_historical(
                         ehi = int(side[f"_ehi{sfx}"].iloc[0])
                         break
                 if elo is not None:
-                    present = {b for b, _v, _i in seq}
-                    feat_name = key[-1]
-                    glo = max(elo, lo)
-                    ghi = min(ehi, hi - det.interval_ms)
-                    merged = dict()
-                    for b, v, _i in seq:
-                        merged[b] = (v, False)
-                    b = glo
-                    while b <= ghi:
-                        if b not in present:
-                            if impute == "zero":
-                                merged[b] = (0.0, True)
-                            elif impute == "fixed_values":
-                                merged[b] = (float(fixed_vals[feat_name]),
-                                             True)
-                            # 'previous' is resolved in the ingest loop
-                            # (the carry evolves as values ingest)
-                            else:
-                                merged[b] = (None, True)
-                        b += det.interval_ms
+                    merged = {b: (v, False) for b, v, _i in seq}
+                    for b in range(max(elo, lo),
+                                   min(ehi, hi - det.interval_ms) + 1,
+                                   det.interval_ms):
+                        merged.setdefault(b, (None, True))
                     seq = [(b, *merged[b]) for b in sorted(merged)]
             out = []
             for bms, v, was_imp in seq:
-                z = np.nan
-                exp = np.nan
+                if was_imp and impute != "linear":
+                    # filled at ingest time: the 'previous' carry
+                    # evolves as values ingest
+                    v = m.fill(impute, fixed_vals.get(key[-1]))
+                z = exp = np.nan
                 used = None
-                if was_imp and impute == "previous":
-                    v = carry                 # may still be None
                 if v is not None and not pd.isna(v):
                     used = float(v)
-                    if stream is not None:
-                        z, exp = stream.update(float(v))
-                        if not np.isnan(z):
-                            cnt += 1
-                    else:
-                        if len(vals) == k:
-                            # same float sequence as zscore_scorer;
-                            # expected = the prior-window mean, the same
-                            # baseline preview uses for rule margins
-                            w = np.asarray(vals, dtype=np.float64)
-                            m = w.sum() / k
-                            m2 = (w * w).sum() / k
-                            std = np.sqrt(max(m2 - m * m, 0.0))
-                            z = (float(v) - m) / (std + eps)
-                            exp = m
-                            cnt += 1
-                        vals = (vals + [float(v)])[-k:]
-                    carry = float(v)
-                out.append([*key, bms, z, exp, cnt, None, None, None,
-                            used, bool(was_imp)])
+                    z, exp = m.step(used)
+                out.append([*key, bms, z, exp, m.scored_cnt, None, None,
+                            None, used, bool(was_imp)])
             # trailing state row (bucket_ms null)
-            out.append([*key, None, None, None, cnt, vals,
-                        stream.to_bytes() if stream is not None else None,
-                        carry, None, None])
+            out.append([*key, None, None, None, m.scored_cnt, m.vals,
+                        m.model_bytes, m.last_v, None, None])
             return pd.DataFrame(
                 out, columns=[*gcols, "_feat", "bucket_ms", "_z", "_exp",
                               "cnt_after", "vals", "model", "last_v",

@@ -13,7 +13,9 @@ from .rcf import (  # noqa: F401
     rcf_stream_factory,
 )
 from .scoring import (  # noqa: F401
+    ScalarModel,
     score_entities,
     seasonal_zscore_scorer,
+    window_z,
     zscore_scorer,
 )

@@ -21,11 +21,25 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 
+def window_z(W: np.ndarray, v: np.ndarray,
+             eps: float = 1e-9) -> tuple[np.ndarray, np.ndarray]:
+    """z of each ``v[i]`` against the window row ``W[i]``, and the
+    window mean: ``(v − m) / (std + eps)`` with the variance as
+    avg(v²) − avg(v)², so the float sequence matches the SQL oracle
+    bit-for-bit.  Every scalar path scores through here — the
+    vectorized :func:`zscore_scorer` with its sliding windows, and
+    :meth:`ScalarModel.step` one window at a time."""
+    k = W.shape[1]
+    m = W.sum(axis=1) / k
+    m2 = (W * W).sum(axis=1) / k
+    std = np.sqrt(np.maximum(m2 - m * m, 0.0))
+    return (v - m) / (std + eps), m
+
+
 def zscore_scorer(k: int = 8, eps: float = 1e-9,
                   include_current: bool = True) -> Callable[[np.ndarray], np.ndarray]:
-    """Trailing-window z-score; NaN until a full k-window exists.
-    Variance via avg(v²) − avg(v)² so the float sequence matches the
-    SQL oracle bit-for-bit.
+    """Trailing-window z-score (:func:`window_z`); NaN until a full
+    k-window exists.
 
     ``include_current=True``: window is v_{i−k+1..i} (the SQL-window
     shape) — note |z| is then bounded by √(k−1), since the point damps
@@ -41,16 +55,80 @@ def zscore_scorer(k: int = 8, eps: float = 1e-9,
         if n < need:
             return out
         win = np.lib.stride_tricks.sliding_window_view(values, k)
-        m = win.sum(axis=1) / k
-        m2 = (win * win).sum(axis=1) / k
-        std = np.sqrt(np.maximum(m2 - m * m, 0.0))
         if include_current:
-            out[k - 1:] = (values[k - 1:] - m) / (std + eps)
+            out[k - 1:] = window_z(win, values[k - 1:], eps)[0]
         else:
-            out[k:] = (values[k:] - m[:n - k]) / (std[:n - k] + eps)
+            out[k:] = window_z(win[:n - k], values[k:], eps)[0]
         return out
 
     return score
+
+
+def has_value(x) -> bool:
+    """A state cell holds a value (not None / a pandas NaN)."""
+    return x is not None and not (isinstance(x, float) and np.isnan(x))
+
+
+class ScalarModel:
+    """One (entity, feature) model advanced one interval at a time —
+    the recurrence the scalar tick, the historical pieces and the
+    streaming detector all drive (the reference's ``ResultProcessor``
+    → ``CheckpointDao`` round trip).  Built from a state row's
+    ``(vals, model bytes, scored count, last value)``, nulls reading
+    as a fresh model.  The model is the prior-k window ``vals``, or,
+    given a ``scorer_factory``, the stream restored on the first
+    :meth:`step` (its bytes pass through untouched when never
+    stepped)."""
+
+    def __init__(self, k: int, eps: float = 1e-9, scorer_factory=None,
+                 vals=None, model=None, scored_cnt=None, last_v=None):
+        self.k = k
+        self.eps = eps
+        self._factory = scorer_factory
+        self._stream = None
+        self._model = bytes(model) if has_value(model) else None
+        self.vals = list(vals) if has_value(vals) else []
+        self.scored_cnt = int(scored_cnt) if has_value(scored_cnt) else 0
+        # the carry: the last ingested value, else the window's last
+        self.last_v = (float(last_v) if has_value(last_v)
+                       else float(self.vals[-1]) if self.vals else None)
+
+    def fill(self, method: str, fixed_value: float | None = None
+             ) -> float | None:
+        """The imputed value of a missing interval: 0, ``fixed_value``,
+        or (``previous``) the carry — None when there is none yet."""
+        if method == "zero":
+            return 0.0
+        if method == "fixed_values":
+            return float(fixed_value)
+        return self.last_v
+
+    def step(self, v: float) -> tuple[float, float]:
+        """Score ``v`` against the prior state, then ingest it; returns
+        ``(z, expected)`` (NaN until the model is warm)."""
+        v = float(v)
+        if self._factory is not None:
+            if self._stream is None:
+                self._stream = (self._factory() if self._model is None
+                                else self._factory.restore(self._model))
+            z, exp = self._stream.update(v)
+        else:
+            z = exp = np.nan
+            if len(self.vals) == self.k:
+                zs, ms = window_z(np.asarray([self.vals], dtype=np.float64),
+                                  np.asarray([v]), self.eps)
+                z, exp = zs[0], ms[0]
+            self.vals = (self.vals + [v])[-self.k:]
+        if z == z:
+            self.scored_cnt += 1
+        self.last_v = v
+        return z, exp
+
+    @property
+    def model_bytes(self) -> bytes | None:
+        """The serialized stream (the restored bytes until stepped)."""
+        return (self._stream.to_bytes() if self._stream is not None
+                else self._model)
 
 
 def seasonal_zscore_scorer(

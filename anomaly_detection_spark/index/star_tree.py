@@ -44,6 +44,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .storage import write_json
+
 __all__ = ["build_star_tree", "star_tree_search"]
 
 _MERGEABLE = {"sum", "value_count", "min", "max", "avg"}
@@ -145,10 +147,7 @@ def build_star_tree(
     (cube.repartition(F.col("_gid"), *[F.col(n) for n in names])
      .write.mode("overwrite").partitionBy("_gid")
      .parquet(os.path.join(dest, "cube")))
-    tmp = _meta_path(dest) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"dims": dim_meta, "metrics": metrics}, f)
-    os.replace(tmp, _meta_path(dest))
+    write_json(_meta_path(dest), {"dims": dim_meta, "metrics": metrics})
 
 
 def _filter_conds(meta_dims: list[dict], query: dict | None

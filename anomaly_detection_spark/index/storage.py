@@ -120,12 +120,19 @@ class IndexPaths:
         return os.path.join(self.ckpt_dir, f"{stage}__{batch}.json")
 
 
+def write_json(path: str, doc, **dump_kw) -> None:
+    """Write ``doc`` as JSON (``json.dump(doc, f, **dump_kw)``) to
+    ``path`` through ``path.tmp`` and an atomic ``os.replace``: a
+    reader never sees half a file, and a crash leaves the old one."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(doc, f, **dump_kw)
+    os.replace(tmp, path)
+
+
 def write_meta(paths: IndexPaths, meta: IndexMeta) -> None:
     os.makedirs(paths.root, exist_ok=True)
-    tmp = paths.meta + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(asdict(meta), f, indent=1)
-    os.replace(tmp, paths.meta)  # atomic: a reader never sees half a meta
+    write_json(paths.meta, asdict(meta), indent=1)
 
 
 def read_meta(index_dir: str) -> IndexMeta:
@@ -140,10 +147,8 @@ def is_done(paths: IndexPaths, stage: str, batch: int | str = "all") -> bool:
 def mark_done(paths: IndexPaths, stage: str, batch: int | str = "all",
               **info) -> None:
     os.makedirs(paths.ckpt_dir, exist_ok=True)
-    tmp = paths.ckpt(stage, batch) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump({"stage": stage, "batch": batch, "ts": time.time(), **info}, f)
-    os.replace(tmp, paths.ckpt(stage, batch))  # atomic: crash-safe marker
+    write_json(paths.ckpt(stage, batch),
+               {"stage": stage, "batch": batch, "ts": time.time(), **info})
 
 
 def read_ckpt(paths: IndexPaths, stage: str, batch: int | str = "all") -> dict:

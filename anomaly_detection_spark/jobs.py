@@ -38,6 +38,7 @@ from typing import Any, Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from .detector import Detector, run_once_stateful
+from .index.storage import write_json
 
 __all__ = ["EndRunError", "JobStore",
            "MAX_RETRY_FOR_END_RUN_EXCEPTION"]
@@ -85,11 +86,7 @@ class JobStore:
         return os.path.join(self.jobs_dir, f"{job_id}.json")
 
     def _write(self, doc: dict) -> None:
-        p = self._path(doc["name"])
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-        os.replace(tmp, p)
+        write_json(self._path(doc["name"]), doc)
 
     def get_job(self, job_id: str) -> dict:
         with open(self._path(job_id)) as f:

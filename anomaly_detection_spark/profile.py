@@ -20,7 +20,7 @@ import os
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from .detector import Detector, _state_path
+from .detector import Detector, _expire_state, _state_path
 
 
 def profile_detector(spark: SparkSession, det: Detector,
@@ -290,34 +290,13 @@ def maintain_state(spark: SparkSession, det: Detector, state_dir: str,
                    ) -> dict:
     """Checkpoint-maintenance analog (the reference's hourly cron
     prunes model checkpoints not updated within the TTL — default 3
-    days — so dead entities stop holding memory/disk).  Drops state
-    rows whose ``last_ms`` is older than ``now_ms - retention_ms``
-    with the same two-rename atomic rewrite the stateful tables use.
+    days — so dead entities stop holding memory/disk): the retention
+    rule of :func:`~anomaly_detection_spark.detector.prune_state`
+    over both state layouts, cut at ``now_ms - retention_ms``.
     Returns kept/pruned counts; a no-op when nothing expires."""
-    import shutil
-
-    spath = _state_path(state_dir, det.detector_id)
-    if not os.path.exists(spath):
-        return {"kept": 0, "pruned": 0}
-    st = spark.read.parquet(spath)
-    if "last_ms" not in st.columns:
-        raise ValueError(
-            f"state table at {spath} has no last_ms column — cannot "
-            f"apply a retention cut")
-    cutoff = int(now_ms) - int(retention_ms)
-    keep = st.filter(F.col("last_ms") >= F.lit(cutoff))
-    kept = keep.count()
-    total = st.count()
-    if kept == total:
-        return {"kept": kept, "pruned": 0}
-    tmp = spath + ".__tmp_maintain__"
-    trash = spath + ".__old_maintain__"
-    keep.write.mode("overwrite").parquet(tmp)
-    shutil.rmtree(trash, ignore_errors=True)
-    shutil.move(spath, trash)
-    shutil.move(tmp, spath)
-    shutil.rmtree(trash, ignore_errors=True)
-    return {"kept": kept, "pruned": total - kept}
+    kept, pruned = _expire_state(spark, det.detector_id, state_dir,
+                                 int(now_ms) - int(retention_ms))
+    return {"kept": kept, "pruned": pruned}
 
 
 def expire_results(spark: SparkSession, results_path: str,

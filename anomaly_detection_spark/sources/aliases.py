@@ -27,6 +27,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..index.storage import write_json
 from .tables import load_table, write_table
 
 
@@ -40,10 +41,7 @@ def _read(path: str) -> dict:
 
 def _write(path: str, reg: dict) -> None:
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(reg, f, indent=1, sort_keys=True)
-    os.replace(tmp, path)
+    write_json(path, reg, indent=1, sort_keys=True)
 
 
 def put_alias(

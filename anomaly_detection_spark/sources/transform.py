@@ -41,6 +41,8 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..index.storage import write_json
+
 __all__ = ["transform_run", "transform_read", "rollup_aggs"]
 
 _MERGEABLE = {"sum", "value_count", "min", "max", "avg"}
@@ -215,9 +217,7 @@ def transform_run(spark: SparkSession, source: str | DataFrame,
              "runs": int(state.get("runs", 0)) + 1,
              "version": new_version, "body_hash": _body_hash(body)}
     os.makedirs(dest, exist_ok=True)
-    with open(_meta_path(dest) + ".tmp", "w") as f:
-        json.dump(state, f)
-    os.replace(_meta_path(dest) + ".tmp", _meta_path(dest))
+    write_json(_meta_path(dest), state)
 
     # committed — older/orphaned versions are now garbage
     for d in os.listdir(dest):

@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 
 from ..data import assign_docids
 from ..index.builder import append_index, build_index
-from ..index.storage import read_meta
+from ..index.storage import read_meta, write_json
 
 
 def _ledger_path(index_dir: str) -> str:
@@ -58,10 +58,7 @@ def _read_ledger(index_dir: str) -> dict:
 
 def _write_ledger(index_dir: str, ledger: dict) -> None:
     os.makedirs(index_dir, exist_ok=True)
-    tmp = _ledger_path(index_dir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(ledger, f)
-    os.replace(tmp, _ledger_path(index_dir))
+    write_json(_ledger_path(index_dir), ledger)
 
 
 def index_stream_writer(

@@ -20,6 +20,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..features.scoring import ScalarModel
+
 
 def streaming_shingles(
     features: DataFrame,
@@ -111,11 +113,14 @@ def streaming_detector(
     events for closed intervals are dropped, the watermark contract.
 
     ``events`` must carry ``withWatermark(ts_col, ...)`` (the
-    ``window_delay`` analog).  Scores are the same float sequence as
-    the batch paths (prior-k z, grade lift-off at
-    ``anomaly_threshold`` σ, scored-count confidence ramp), so the
-    emitted rows match ``detector.preview`` exactly (tested).  State
-    survives restarts via the streaming checkpoint.
+    ``window_delay`` analog).  Each closed interval advances the
+    entity's :class:`~anomaly_detection_spark.features.scoring.
+    ScalarModel` — the one model the scalar tick and the historical
+    pieces drive too — so scores are the same float sequence as the
+    batch paths (prior-k z, grade lift-off at ``anomaly_threshold`` σ,
+    scored-count confidence ramp), and the emitted rows match
+    ``detector.preview`` exactly (tested).  State survives restarts
+    via the streaming checkpoint.
 
     ``scorer_factory`` (the same protocol as the batch stateful
     paths — e.g. :func:`~anomaly_detection_spark.features.
@@ -125,7 +130,8 @@ def streaming_detector(
     Streaming's own checkpoint), updated once per closed interval in
     bucket order — so the emitted scores are the same float sequence
     as ``preview(scorer=rcf_scorer(...))`` / ``run_once_stateful``
-    with the same config (tested).
+    with the same config (tested).  The state's ``values`` window
+    then stays empty: the stream is the model.
 
     ``imputation_method`` zero/fixed_values/previous closes EVERY
     bucket between an entity's data buckets — missing ones are
@@ -176,10 +182,9 @@ def streaming_detector(
             opens = {int(m): [int(c), float(s), float(lo), float(hi)]
                      for m, c, s, lo, hi
                      in zip(o_ms, o_cnt, o_sum, o_min, o_max)}
-            win = list(win)
-            cnt0 = int(cnt0)
         else:
             opens, win, cnt0, mb = {}, [], 0, None
+        model = ScalarModel(k, eps, scorer_factory, win, mb, cnt0, last_v)
 
         wm_in = state.getCurrentWatermarkMs()
         if not state.hasTimedOut:
@@ -232,13 +237,8 @@ def streaming_detector(
                 last_closed = b      # the bucket is closed either way
                 if impute_limit is not None and imp_run >= impute_limit:
                     continue                   # dormant until data
-                if impute == "zero":
-                    v = 0.0
-                elif impute == "fixed_values":
-                    v = float(imputation_value)
-                elif last_v is not None:       # previous
-                    v = float(last_v)
-                else:
+                v = model.fill(impute, imputation_value)
+                if v is None:
                     continue                   # nothing to carry yet
                 imp_run += 1
             else:
@@ -255,38 +255,24 @@ def streaming_detector(
                     v = lo
                 else:
                     v = hi
-            z = np.nan
-            if scorer_factory is not None:
-                stream = (scorer_factory() if mb is None
-                          else scorer_factory.restore(bytes(mb)))
-                z, _ = stream.update(float(v))
-                mb = stream.to_bytes()
-            elif len(win) == k:
-                w = np.asarray(win, dtype=np.float64)
-                m = w.sum() / k
-                m2 = (w * w).sum() / k
-                std = np.sqrt(max(m2 - m * m, 0.0))
-                z = (v - m) / (std + eps)
+            z, _ = model.step(v)
             if z == z:                        # scored (model warm)
-                cnt0 += 1
                 az = abs(z)
                 row = (key[0], pd.Timestamp(b, unit="ms"), v,
                        round(az, 6),
                        round(min(max((az - thr) / thr, 0.0), 1.0), 6),
-                       round(min(1.0, cnt0 / float(confidence_ramp)),
-                             6))
+                       round(min(1.0, model.scored_cnt
+                                 / float(confidence_ramp)), 6))
                 emit_rows.append(row + (bool(was_imp),)
                                  if impute else row)
-            win = (win + [v])[-k:]
-            last_v = float(v)
 
         ob = sorted(opens)
         base_state = (
             ob,
             [opens[b][0] for b in ob], [opens[b][1] for b in ob],
             [opens[b][2] for b in ob], [opens[b][3] for b in ob],
-            win, cnt0, mb)
-        state.update(base_state + (last_closed, last_v, imp_run)
+            model.vals, model.scored_cnt, model.model_bytes)
+        state.update(base_state + (last_closed, model.last_v, imp_run)
                      if impute else base_state)
         if (impute and last_closed is not None
                 and (impute_limit is None or imp_run < impute_limit)):

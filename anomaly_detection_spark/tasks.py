@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 
 from .detector import (Detector, TaskCancelledError, _state_path,
                        run_historical)
-from .index.storage import read_table
+from .index.storage import read_table, write_json
 
 __all__ = ["TaskStore", "start_historical_task", "profile_task",
            "update_realtime_task", "run_once_forecast_task",
@@ -82,11 +82,7 @@ class TaskStore:
         return os.path.join(self.tasks_dir, f"{task_id}.json")
 
     def _write(self, doc: dict) -> None:
-        p = self._path(doc["task_id"])
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(doc, f)
-        os.replace(tmp, p)
+        write_json(self._path(doc["task_id"]), doc)
 
     def get_task(self, task_id: str) -> dict:
         with open(self._path(task_id)) as f:

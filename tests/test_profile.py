@@ -99,6 +99,42 @@ def test_profile_index(spark, tiny_transcripts, tmp_path_factory):
     assert "index_postings" in p["stage_walls_s"] or p["stage_walls_s"]
 
 
+def test_maintain_state_keeps_unaged_rows_and_prunes_joint(spark, tmp_path):
+    """Retention is prune_state's rule: a row that never ingested an
+    interval (null ``last_ms``) is kept, and the ``__joint`` table is
+    pruned alongside the scalar one."""
+    from anomaly_detection_spark.profile import maintain_state
+
+    det = Detector(detector_id="mnt", indices=str(tmp_path / "events"),
+                   feature_specs={"v": {"avg": {"field": "value"}}},
+                   time_field="ts", interval_ms=INTERVAL,
+                   category_fields=("service",))
+    day = 86_400_000
+    now = int(BASE.value // 10**6) + 10 * day
+    state = str(tmp_path / "state")
+    spark.createDataFrame(
+        [("fresh", "v", 5, now - INTERVAL), ("stale", "v", 5, now - 5 * day),
+         ("never", "v", 0, None)],
+        "service string, _feat string, scored_cnt long, last_ms long",
+    ).write.parquet(f"{state}/mnt")
+    spark.createDataFrame(
+        [("fresh", 5, now - INTERVAL), ("stale", 5, now - 5 * day)],
+        "service string, scored_cnt long, last_ms long",
+    ).write.parquet(f"{state}/mnt__joint")
+
+    assert maintain_state(spark, det, state, now_ms=now) == {
+        "kept": 3, "pruned": 2}
+
+    def services(ident):
+        return sorted(r.service for r in
+                      spark.read.parquet(f"{state}/{ident}").collect())
+
+    assert services("mnt") == ["fresh", "never"]
+    assert services("mnt__joint") == ["fresh"]
+    assert maintain_state(spark, det, state, now_ms=now) == {
+        "kept": 3, "pruned": 0}
+
+
 def test_stats_and_maintenance(spark, tmp_path_factory):
     from anomaly_detection_spark.profile import (expire_results,
                                                  maintain_state, stats)

@@ -21,15 +21,15 @@ HOUR = 3_600_000
 BASE = pd.Timestamp("2025-03-01")
 
 
-def _spiky_pdf(hours=20, null_value_hour=None):
-    """Two entities, hourly cadence; B spikes at h=15.  If
+def _spiky_pdf(hours=20, null_value_hour=None, spike_hour=15):
+    """Two entities, hourly cadence; B spikes at ``spike_hour``.  If
     ``null_value_hour`` is set, entity A's ``value`` column is null for
     that hour (so an avg feature misses a bucket a count feature has)."""
     rows = []
     eid = 0
     for ent in ("A", "B"):
         for h in range(hours):
-            n = 100 if (ent == "B" and h == 15) else 5
+            n = 100 if (ent == "B" and h == spike_hour) else 5
             for i in range(n):
                 v = float(10 + (i % 3))
                 if ent == "A" and h == null_value_hour:
@@ -60,18 +60,34 @@ def _write(spark, pdf, path):
 # --- A3: run_once_stateful is idempotent per interval ------------------------
 
 
-def test_stateful_retry_same_interval_is_replay(spark, tmp_path_factory):
+# a rule that suppresses B's spike: its margin over the expected value
+# is far below 1000
+IGNORE_SPIKE = ({"action": "ignore_anomaly", "conditions": [{
+    "feature_name": "n_events",
+    "threshold_type": "actual_over_expected_margin",
+    "operator": "lte", "value": 1000}]},)
+
+
+@pytest.mark.parametrize("rules,spike_hour,hours", [
+    ((), 15, 20),
+    # the spike lands on the replayed hour: the replay grades it
+    # against the stored expected value, like the first call
+    (IGNORE_SPIKE, 10, 11),
+], ids=["no_rules", "ignore_rule"])
+def test_stateful_retry_same_interval_is_replay(spark, tmp_path_factory,
+                                                rules, spike_hour, hours):
     root = tmp_path_factory.mktemp("replay")
-    pdf = _spiky_pdf()
+    pdf = _spiky_pdf(spike_hour=spike_hour)
     src = _write(spark, pdf, str(root / "events"))
     state_dir = str(root / "state")
-    det = _det(src)
+    det = _det(src, suppression_rules=rules)
 
     want = preview(spark, det).toPandas()
     want = want.set_index([want.service, want.bucket_start.map(pd.Timestamp)])
+    want = want[want.bucket_start < BASE + pd.Timedelta(hours=hours)]
 
     got = []
-    for h in range(20):
+    for h in range(hours):
         now_ms = int((BASE + pd.Timedelta(hours=h + 1)).value // 10**6) + 1
         res = run_once_stateful(spark, det, now_ms, state_dir).toPandas()
         if h == 10:
@@ -97,7 +113,14 @@ def test_stateful_retry_same_interval_is_replay(spark, tmp_path_factory):
     for r in gotc.itertuples():
         w = want.loc[(r.service, pd.Timestamp(r.bucket_start))]
         assert abs(r.anomaly_score - float(w.anomaly_score)) < 1e-9, r
+        assert abs(r.anomaly_grade - float(w.anomaly_grade)) < 1e-9, r
         assert abs(r.confidence - float(w.confidence)) < 1e-9, r
+    if rules:
+        spike = gotc[(gotc.service == "B")
+                     & (gotc.bucket_start == BASE
+                        + pd.Timedelta(hours=spike_hour))]
+        assert len(spike) == 1 and spike.anomaly_score.iloc[0] > 3.0
+        assert spike.anomaly_grade.iloc[0] == 0.0
 
 
 def test_stateful_out_of_order_interval_is_noop(spark, tmp_path_factory):
