@@ -51,6 +51,7 @@ from dataclasses import dataclass, field as dc_field, replace
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from .index.storage import read_table
 
 from .features import feature_matrix, score_entities
@@ -636,6 +637,14 @@ def run_once(spark: SparkSession, det: Detector, now_ms: int,
 # delete_by_query; on a real cluster this is an Iceberg MERGE INTO).
 
 
+# a scalar state row's replay columns: the last ingested bucket, its
+# score and its expected value (the tick replays them for a retried
+# interval; run_historical publishes them for its last pieces)
+_TICK_COLS = [T.StructField("last_ms", T.LongType()),
+              T.StructField("last_z", T.DoubleType()),
+              T.StructField("last_exp", T.DoubleType())]
+
+
 def run_once_stateful(spark: SparkSession, det: Detector, now_ms: int,
                       state_dir: str, eps: float = 1e-9,
                       scorer_factory=None, cache_policy=None,
@@ -723,11 +732,9 @@ def run_once_stateful(spark: SparkSession, det: Detector, now_ms: int,
     state_fields = ([f for f in cur.schema.fields if f.name != "_v"]
                     + [T.StructField("vals", T.ArrayType(T.DoubleType())),
                        T.StructField("scored_cnt", T.LongType()),
-                       T.StructField("last_ms", T.LongType()),
-                       T.StructField("last_z", T.DoubleType()),
                        T.StructField("model", T.BinaryType()),
-                       T.StructField("last_v", T.DoubleType()),
-                       T.StructField("last_exp", T.DoubleType())])
+                       T.StructField("last_v", T.DoubleType())]
+                    + _TICK_COLS)
     # older state reads last_ms / last_z / model / last_v / last_exp
     # as null
     state = read_table(spark, spath, T.StructType(state_fields))
@@ -1317,7 +1324,8 @@ def run_historical(
            T.StructField("vals", T.ArrayType(T.DoubleType())),
            T.StructField("scored_cnt", T.LongType()),
            T.StructField("model", T.BinaryType()),
-           T.StructField("last_v", T.DoubleType())])
+           T.StructField("last_v", T.DoubleType())]
+        + _TICK_COLS)
     out_schema = T.StructType(
         gstruct
         + [T.StructField("_feat", T.StringType()),
@@ -1327,8 +1335,9 @@ def run_historical(
            T.StructField("cnt_after", T.LongType()),
            T.StructField("vals", T.ArrayType(T.DoubleType())),
            T.StructField("model", T.BinaryType()),
-           T.StructField("last_v", T.DoubleType()),
-           T.StructField("_vu", T.DoubleType()),
+           T.StructField("last_v", T.DoubleType())]
+        + _TICK_COLS
+        + [T.StructField("_vu", T.DoubleType()),
            T.StructField("_imp", T.BooleanType())])
 
     def snap(p: int) -> str:
@@ -1381,6 +1390,12 @@ def run_historical(
             m = ScalarModel(k, eps, scorer_factory, r0.get("vals"),
                             r0.get("model"), r0.get("scored_cnt"),
                             r0.get("last_v"))
+            # the tick's replay columns: the last stepped bucket, its
+            # score and expected value (the input row's when no step
+            # runs in this piece)
+            lm = r0.get("last_ms")
+            last = [None if pd.isna(lm) else int(lm), r0.get("last_z"),
+                    r0.get("last_exp")]
             rows = lpdf.sort_values("bucket_ms")
             # (bucket_ms, value, was_imputed) sequence: observed rows
             # as-is, or — under imputation — the entity-extent grid
@@ -1417,15 +1432,14 @@ def run_historical(
                 if v is not None and not pd.isna(v):
                     used = float(v)
                     z, exp = m.step(used)
+                    last = [bms, z, exp]
                 out.append([*key, bms, z, exp, m.scored_cnt, None, None,
-                            None, used, bool(was_imp)])
+                            None, None, None, None, used, bool(was_imp)])
             # trailing state row (bucket_ms null)
             out.append([*key, None, None, None, m.scored_cnt, m.vals,
-                        m.model_bytes, m.last_v, None, None])
+                        m.model_bytes, m.last_v, *last, None, None])
             return pd.DataFrame(
-                out, columns=[*gcols, "_feat", "bucket_ms", "_z", "_exp",
-                              "cnt_after", "vals", "model", "last_v",
-                              "_vu", "_imp"])
+                out, columns=[f.name for f in out_schema.fields])
 
         upd = (cur.groupBy(*gcols, "_feat")
                .cogroup(st.groupBy(*gcols, "_feat"))
@@ -1438,7 +1452,8 @@ def run_historical(
         new_state = (upd.filter(F.col("bucket_ms").isNull())
                      .select(*gcols, "_feat", "vals",
                              F.col("cnt_after").alias("scored_cnt"),
-                             "model", "last_v"))
+                             "model", "last_v",
+                             *[f.name for f in _TICK_COLS]))
         new_state.write.mode("overwrite").parquet(snap(p))
 
         scored = upd.filter(F.col("_z").isNotNull())

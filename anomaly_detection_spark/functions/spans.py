@@ -1,7 +1,10 @@
-"""Span queries: ``span_term`` / ``span_near`` / ``span_first``.
+"""Span queries and ``intervals`` sources: one span tree, one kernel.
 
 The Lucene span family the reference's search layer serves
-(SpanNearQuery / SpanFirstQuery — public semantics):
+(SpanTermQuery / SpanNearQuery / SpanFirstQuery / SpanOrQuery /
+SpanNotQuery / SpanContainingQuery / SpanWithinQuery /
+SpanMultiTermQueryWrapper / FieldMaskingSpanQuery — public semantics)
+and the ``intervals`` query share one algebra of position windows:
 
 - a ``span_term`` matches at every position p of the term, as the
   span [p, p+1);
@@ -10,27 +13,34 @@ The Lucene span family the reference's search layer serves
   clause-ordered when ``in_order``, whose enclosing window has
   total gap ``(window_len − Σ sub-span lengths) ≤ slop``;
 - ``span_first`` restricts the inner span to end at position
-  ``≤ end`` (span end is exclusive, Lucene convention).
+  ``≤ end`` (span end is exclusive, Lucene convention);
+- the compounds are set algebra over those enumerations.
 
-Matching only (filter context / candidate generation) — span SCORING
-is out of the supported subset, like the other filter-context rewrites
-(``query/compound.py`` docstring).  Two execution paths share these
-kernels: a batch pandas UDF over the analyzed token arrays (brute
-path, positions are just array indices) and a positional-postings
-kernel (``index_search.span_near_docs_indexed``) that reads only the
-clause terms' postings.
+:func:`parse_span_tree` is the one parser: it turns every span query
+body into a node tree (kinds term / pred / or / near / first / not /
+containing / within; ``query/planner._interval_tree`` builds the
+same nodes from an ``intervals`` source, plus a filter node for its
+filter rules).  :func:`enum_spans` is the one kernel: it enumerates
+a node's spans over one doc's term → positions map.  Matching only
+(filter context / candidate generation) — span SCORING is out of the
+supported subset, like the other filter-context rewrites
+(``query/compound.py`` docstring).  The kernel reads positions from
+either source: the analyzed token arrays (:func:`span_tree_match_expr`,
+a batch pandas UDF; positions are array indices) or the positional
+postings (``index_search.span_tree_docs_indexed``, which reads only
+the tree terms' postings).
 
-Algorithms: ordered matching is a greedy nearest-successor chain from
+Algorithms: ordered near is a greedy nearest-successor chain from
 each first-clause occurrence (greedy minimizes the window per start,
-so existence is decided exactly); unordered is the classic minimal
-covering window over the merged position stream with per-term
-multiplicities (duplicate clause terms need as many distinct
+so existence is decided exactly); unordered near is the classic
+minimal covering window over the merged position stream with
+per-clause multiplicities (duplicate clauses need as many distinct
 positions).
 """
 
 from __future__ import annotations
 
-from collections import Counter
+from bisect import bisect_right
 
 import numpy as np
 import pandas as pd
@@ -38,168 +48,34 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-__all__ = ["span_match", "span_match_expr", "parse_span_query",
-           "parse_span_tree", "tree_terms", "enum_spans",
-           "span_tree_match", "span_tree_match_expr",
-           "tree_preds", "pred_matcher", "rewrite_preds"]
+__all__ = ["UNBOUNDED_GAPS", "parse_span_tree", "tree_terms",
+           "tree_preds", "tree_leaf_fields", "pred_matcher",
+           "rewrite_preds", "expand_preds", "enum_spans", "span_tree_match",
+           "span_tree_match_expr", "span_tree_match_fields",
+           "span_tree_match_expr_fields"]
+
+# the near slop of an unbounded gap (intervals max_gaps -1): wider
+# than any document
+UNBOUNDED_GAPS = 1 << 30
+
+# child keys of each node kind; "cl" holds a list of nodes, every
+# other key one node.  term and pred are the leaves.
+_CHILDREN = {"term": (), "pred": (), "or": ("cl",), "near": ("cl",),
+             "first": ("inner",), "not": ("inc", "exc"),
+             "ifilter": ("src", "flt"),
+             "containing": ("little", "big"),
+             "within": ("little", "big")}
 
 
-def _ordered_match(pos_lists: list[np.ndarray], slop: int,
-                   end: int | None) -> bool:
-    m = len(pos_lists)
-    if any(len(ps) == 0 for ps in pos_lists):
-        return False
-    for p1 in pos_lists[0]:
-        prev = p1
-        ok = True
-        for ps in pos_lists[1:]:
-            i = int(np.searchsorted(ps, prev + 1))
-            if i == len(ps):
-                ok = False
-                break
-            prev = int(ps[i])
-        if not ok:
-            # chains start strictly later for later p1 — all fail too
-            return False
-        if (prev - int(p1) + 1) - m <= slop \
-                and (end is None or prev + 1 <= end):
-            return True
-    return False
-
-
-def _unordered_match(terms: list[str], positions: dict[str, np.ndarray],
-                     slop: int, end: int | None) -> bool:
-    req = Counter(terms)
-    m = len(terms)
-    if any(len(positions.get(t, ())) < c for t, c in req.items()):
-        return False
-    events = sorted(
-        (int(p), t) for t in req for p in positions[t])
-    cnt: Counter = Counter()
-    have = 0
-    lo = 0
-    for hi, (p, t) in enumerate(events):
-        cnt[t] += 1
-        if cnt[t] <= req[t]:
-            have += 1
-        while have == m:
-            p0, t0 = events[lo]
-            if cnt[t0] > req[t0]:
-                cnt[t0] -= 1
-                lo += 1
-                continue
-            if (p - p0 + 1) - m <= slop \
-                    and (end is None or p + 1 <= end):
-                return True
-            break
-    return False
-
-
-def span_match(tokens: list[str], terms: list[str], slop: int,
-               in_order: bool, end: int | None = None) -> bool:
-    """Match one doc's token list (positions = array indices)."""
-    need = set(terms)
-    positions: dict[str, list[int]] = {t: [] for t in need}
-    for i, tok in enumerate(tokens):
-        if tok in need:
-            positions[tok].append(i)
-    parr = {t: np.asarray(v, dtype=np.int64)
-            for t, v in positions.items()}
-    if in_order:
-        return _ordered_match([parr[t] for t in terms], slop, end)
-    return _unordered_match(terms, parr, slop, end)
-
-
-def span_match_expr(tokens_col: Column, terms: list[str], slop: int,
-                    in_order: bool, end: int | None = None) -> Column:
-    """Boolean Column over an analyzed token-array column — one Arrow
-    batch per partition, per-doc O(len) matching inside."""
-    terms = list(terms)
-    slop_i, ord_b, end_i = int(slop), bool(in_order), end
-
-    @F.pandas_udf(T.BooleanType())
-    def _f(tok_s: pd.Series) -> pd.Series:
-        return pd.Series(
-            [span_match(list(toks) if toks is not None else [],
-                        terms, slop_i, ord_b, end_i)
-             for toks in tok_s])
-
-    return _f(tokens_col)
-
-
-def parse_span_query(kind: str, body: dict) -> tuple[str, list[str], int,
-                                                     bool, int | None]:
-    """Normalize a span query to (field, clause_terms, slop, in_order,
-    end).  Clauses must be ``span_term`` on one shared field, each
-    analyzing to exactly one token."""
-    from .tokenizer import tokenize_query
-
-    def term_clause(c: dict) -> tuple[str, str]:
-        if set(c) != {"span_term"}:
-            raise ValueError(
-                f"span_near/span_first clauses support span_term, "
-                f"got {sorted(c)}")
-        (fld, spec), = c["span_term"].items()
-        val = spec.get("value") if isinstance(spec, dict) else spec
-        toks = tokenize_query(str(val))
-        if len(toks) != 1:
-            raise ValueError(
-                f"span_term value must analyze to one token: {val!r} "
-                f"-> {toks}")
-        return fld, toks[0]
-
-    if kind == "span_term":
-        fld, t = term_clause({"span_term": body})
-        return fld, [t], 0, True, None
-    if kind == "span_near":
-        pairs = [term_clause(c) for c in body["clauses"]]
-        if not pairs:
-            raise ValueError("span_near requires at least one clause")
-        fields = {f for f, _ in pairs}
-        if len(fields) != 1:
-            raise ValueError(
-                f"span_near clauses must share one field: {sorted(fields)}")
-        slop = int(body.get("slop", 0))
-        if slop < 0:
-            raise ValueError(f"span_near slop must be >= 0: {slop}")
-        return (pairs[0][0], [t for _, t in pairs], slop,
-                bool(body.get("in_order", True)), None)
-    if kind == "span_first":
-        e = int(body["end"])
-        if e < 1:
-            raise ValueError(f"span_first end must be >= 1: {e}")
-        inner = body["match"]
-        (ikind, ibody), = inner.items()
-        if ikind not in ("span_term", "span_near"):
-            raise ValueError(
-                f"span_first match supports span_term/span_near, "
-                f"got {ikind}")
-        fld, terms, slop, in_order, _ = parse_span_query(ikind, ibody)
-        return fld, terms, slop, in_order, e
-    raise ValueError(f"not a span query: {kind}")
-
-
-# ---------------------------------------------------------------------------
-# Compound span tree: span_or / span_not / span_containing / span_within
-# (SpanOrQuery, SpanNotQuery, SpanContainingQuery, SpanWithinQuery —
-# public Lucene semantics).  These need span ENUMERATION, not just
-# existence, so they get their own kernel: ``enum_spans`` emits, per
-# doc, the spans Lucene's iterators would enumerate — span_term at
-# every position, span_near as the per-start greedy-minimal windows
-# (NearSpansOrdered's posture), and the compounds as set algebra over
-# those enumerations.  Near clauses are restricted to unit-length
-# sub-spans (span_term / span_or of span_terms), the same subset the
-# flat kernels support.
-
-def _term_clause_any(c: dict) -> tuple[str, dict]:
-    """Parse one tree node; returns (field, node)."""
+def _parse_clause(c: dict) -> tuple[str, dict]:
+    """Parse one nested span clause; returns (field, node)."""
     (kind, body), = c.items()
     return parse_span_tree(kind, body)
 
 
 def parse_span_tree(kind: str, body: dict) -> tuple[str, dict]:
-    """Normalize a compound span query to (field, node tree).  Node
-    kinds: term / or / near / first / not / containing / within."""
+    """Normalize any span query to (field, node tree).  Node kinds:
+    term / pred / or / near / first / not / containing / within."""
     from .tokenizer import tokenize_query
 
     if kind == "span_term":
@@ -212,13 +88,13 @@ def parse_span_tree(kind: str, body: dict) -> tuple[str, dict]:
                 f"-> {toks}")
         return fld, {"k": "term", "t": toks[0]}
     if kind == "span_or":
-        subs = [_term_clause_any(c) for c in body["clauses"]]
+        subs = [_parse_clause(c) for c in body["clauses"]]
         if not subs:
             raise ValueError("span_or requires at least one clause")
         _one_field(subs)
         return subs[0][0], {"k": "or", "cl": [n for _, n in subs]}
     if kind == "span_near":
-        subs = [_term_clause_any(c) for c in body["clauses"]]
+        subs = [_parse_clause(c) for c in body["clauses"]]
         if not subs:
             raise ValueError("span_near requires at least one clause")
         _one_field(subs)
@@ -237,11 +113,11 @@ def parse_span_tree(kind: str, body: dict) -> tuple[str, dict]:
         e = int(body["end"])
         if e < 1:
             raise ValueError(f"span_first end must be >= 1: {e}")
-        fld, inner = _term_clause_any(body["match"])
+        fld, inner = _parse_clause(body["match"])
         return fld, {"k": "first", "inner": inner, "end": e}
     if kind == "span_not":
-        fi, inc = _term_clause_any(body["include"])
-        fe, exc = _term_clause_any(body["exclude"])
+        fi, inc = _parse_clause(body["include"])
+        fe, exc = _parse_clause(body["exclude"])
         if fi != fe:
             raise ValueError(
                 f"span_not include/exclude must share one field: "
@@ -282,11 +158,12 @@ def parse_span_tree(kind: str, body: dict) -> tuple[str, dict]:
         # (Lucene warns the masked scores are not meaningful — this
         # engine's span family is matching-only anyway.)
         mask = body["field"]
-        fld_inner, inner = _term_clause_any(body["query"])
-        return mask, _set_leaf_fields(inner, fld_inner)
+        fld_inner, inner = _parse_clause(body["query"])
+        return mask, _map_leaves(
+            inner, lambda n: n if n.get("f") else {**n, "f": fld_inner})
     if kind in ("span_containing", "span_within"):
-        fl, little = _term_clause_any(body["little"])
-        fb, big = _term_clause_any(body["big"])
+        fl, little = _parse_clause(body["little"])
+        fb, big = _parse_clause(body["big"])
         if fl != fb:
             raise ValueError(
                 f"{kind} little/big must share one field: "
@@ -311,165 +188,46 @@ def _unit_len(node: dict) -> bool:
             and all(_unit_len(c) for c in node["cl"]))
 
 
+def _leaves(node: dict):
+    """The term and pred leaves, in DFS order."""
+    keys = _CHILDREN[node["k"]]
+    if not keys:
+        yield node
+    for key in keys:
+        for sub in (node[key] if key == "cl" else [node[key]]):
+            yield from _leaves(sub)
+
+
+def _map_leaves(node: dict, fn) -> dict:
+    """The tree with each term / pred leaf replaced by ``fn(leaf)``;
+    leaves are visited in the DFS order :func:`tree_preds` lists."""
+    keys = _CHILDREN[node["k"]]
+    if not keys:
+        return fn(node)
+    out = dict(node)
+    for key in keys:
+        out[key] = ([_map_leaves(c, fn) for c in node[key]]
+                    if key == "cl" else _map_leaves(node[key], fn))
+    return out
+
+
 def tree_terms(node: dict) -> set[str]:
     """Fixed terms of the tree.  ``pred`` nodes (span_multi, not yet
-    expanded) contribute none — expand with :func:`rewrite_preds`
+    expanded) contribute none — expand with :func:`expand_preds`
     before any positions-map lookup."""
-    k = node["k"]
-    if k == "term":
-        return {node["t"]}
-    if k == "pred":
-        return set()
-    if k == "or":
-        return set().union(*(tree_terms(c) for c in node["cl"]))
-    if k == "near":
-        return set().union(*(tree_terms(c) for c in node["cl"]))
-    if k == "first":
-        return tree_terms(node["inner"])
-    if k == "not":
-        return tree_terms(node["inc"]) | tree_terms(node["exc"])
-    if k == "ifilter":
-        return tree_terms(node["src"]) | tree_terms(node["flt"])
-    return tree_terms(node["little"]) | tree_terms(node["big"])
+    return {n["t"] for n in _leaves(node) if n["k"] == "term"}
 
 
 def tree_preds(node: dict) -> list[dict]:
     """All ``pred`` (span_multi) nodes, DFS order — the SAME order
     :func:`rewrite_preds` visits, so expansions can be zipped."""
-    k = node["k"]
-    if k == "pred":
-        return [node]
-    if k == "term":
-        return []
-    if k in ("or", "near"):
-        return [p for c in node["cl"] for p in tree_preds(c)]
-    if k == "first":
-        return tree_preds(node["inner"])
-    if k == "not":
-        return tree_preds(node["inc"]) + tree_preds(node["exc"])
-    if k == "ifilter":
-        return tree_preds(node["src"]) + tree_preds(node["flt"])
-    return tree_preds(node["little"]) + tree_preds(node["big"])
-
-
-def _set_leaf_fields(node: dict, field: str) -> dict:
-    """Stamp ``field`` on term/pred leaves that don't carry one yet
-    (nested field_masking_span keeps the inner stamp)."""
-    k = node["k"]
-    if k in ("term", "pred"):
-        return node if node.get("f") else {**node, "f": field}
-    if k in ("or", "near"):
-        return {**node,
-                "cl": [_set_leaf_fields(c, field) for c in node["cl"]]}
-    if k == "first":
-        return {**node, "inner": _set_leaf_fields(node["inner"], field)}
-    if k == "not":
-        return {**node, "inc": _set_leaf_fields(node["inc"], field),
-                "exc": _set_leaf_fields(node["exc"], field)}
-    if k == "ifilter":
-        return {**node, "src": _set_leaf_fields(node["src"], field),
-                "flt": _set_leaf_fields(node["flt"], field)}
-    return {**node,
-            "little": _set_leaf_fields(node["little"], field),
-            "big": _set_leaf_fields(node["big"], field)}
+    return [n for n in _leaves(node) if n["k"] == "pred"]
 
 
 def tree_leaf_fields(node: dict) -> set:
     """Source fields stamped on leaves (``None`` = the tree's default
     field).  Non-trivial only for field_masking_span trees."""
-    k = node["k"]
-    if k in ("term", "pred"):
-        return {node.get("f")}
-    if k in ("or", "near"):
-        return set().union(*(tree_leaf_fields(c) for c in node["cl"]))
-    if k == "first":
-        return tree_leaf_fields(node["inner"])
-    if k == "not":
-        return tree_leaf_fields(node["inc"]) | tree_leaf_fields(
-            node["exc"])
-    if k == "ifilter":
-        return tree_leaf_fields(node["src"]) | tree_leaf_fields(
-            node["flt"])
-    return tree_leaf_fields(node["little"]) | tree_leaf_fields(
-        node["big"])
-
-
-def _qualify_tree(node: dict, default_field: str) -> dict:
-    """Rewrite term leaves to field-qualified keys
-    (``field + '\\x00' + term``) so one positions map can hold several
-    fields' occurrence streams; pred leaves get their effective field
-    stamped (the matcher expands them against that field's vocab)."""
-    k = node["k"]
-    if k == "term":
-        f = node.get("f") or default_field
-        return {"k": "term", "t": f + "\x00" + node["t"]}
-    if k == "pred":
-        return {**node, "f": node.get("f") or default_field}
-    if k in ("or", "near"):
-        return {**node,
-                "cl": [_qualify_tree(c, default_field)
-                       for c in node["cl"]]}
-    if k == "first":
-        return {**node,
-                "inner": _qualify_tree(node["inner"], default_field)}
-    if k == "not":
-        return {**node, "inc": _qualify_tree(node["inc"], default_field),
-                "exc": _qualify_tree(node["exc"], default_field)}
-    if k == "ifilter":
-        return {**node, "src": _qualify_tree(node["src"], default_field),
-                "flt": _qualify_tree(node["flt"], default_field)}
-    return {**node,
-            "little": _qualify_tree(node["little"], default_field),
-            "big": _qualify_tree(node["big"], default_field)}
-
-
-def span_tree_match_fields(tokens_by_field: dict[str, list[str]],
-                           node: dict, default_field: str) -> bool:
-    """Multi-field (field_masking_span) brute matcher: positions are
-    keyed ``field\\x00term`` across every involved field; pred nodes
-    expand against their own field's doc vocabulary."""
-    qt = _qualify_tree(node, default_field)
-    preds = tree_preds(qt)
-    if preds:
-        exps = []
-        for p in preds:
-            toks = tokens_by_field.get(p["f"]) or []
-            vocab = pd.Series(sorted(set(toks)), dtype="object")
-            matched = (sorted(vocab[pred_matcher(p)(vocab)])
-                       if len(vocab) else [])
-            exps.append([p["f"] + "\x00" + t for t in matched])
-        qt = rewrite_preds(qt, iter(exps))
-    need = tree_terms(qt)
-    positions: dict[str, list[int]] = {t: [] for t in need}
-    for f, toks in tokens_by_field.items():
-        for i, tok in enumerate(toks or []):
-            key = f + "\x00" + tok
-            if key in positions:
-                positions[key].append(i)
-    parr = {t: np.asarray(v, dtype=np.int64)
-            for t, v in positions.items()}
-    return len(enum_spans(parr, qt)) > 0
-
-
-def span_tree_match_expr_fields(tokens_cols: dict[str, Column],
-                                node: dict,
-                                default_field: str) -> Column:
-    """Boolean Column for a multi-field span tree: one Arrow batch
-    over every involved field's analyzed token array."""
-    fields = list(tokens_cols)
-    node_l = node
-
-    @F.pandas_udf(T.BooleanType())
-    def _f(*cols: pd.Series) -> pd.Series:
-        out = []
-        for row in zip(*cols):
-            by_field = {f: (list(t) if t is not None else [])
-                        for f, t in zip(fields, row)}
-            out.append(span_tree_match_fields(by_field, node_l,
-                                              default_field))
-        return pd.Series(out)
-
-    return _f(*tokens_cols.values())
+    return {n.get("f") for n in _leaves(node)}
 
 
 def _wildcard_re(pat: str):
@@ -518,34 +276,42 @@ def pred_matcher(node: dict):
 
 
 def rewrite_preds(node: dict, expansions) -> dict:
-    """Replace each ``pred`` node with a span_or of term nodes.
-    ``expansions`` is an iterator yielding one ``list[str]`` per pred,
-    in :func:`tree_preds` DFS order (Lucene's SpanRewriteMethod →
-    SpanOrQuery rewrite).  An empty expansion enumerates no spans."""
-    k = node["k"]
-    if k == "pred":
-        terms = next(expansions)
-        return {"k": "or", "cl": [{"k": "term", "t": t} for t in terms]}
-    if k == "term":
-        return node
-    if k in ("or", "near"):
-        out = dict(node)
-        out["cl"] = [rewrite_preds(c, expansions) for c in node["cl"]]
-        return out
-    if k == "first":
-        return {**node, "inner": rewrite_preds(node["inner"], expansions)}
-    if k == "not":
-        return {**node, "inc": rewrite_preds(node["inc"], expansions),
-                "exc": rewrite_preds(node["exc"], expansions)}
-    if k == "ifilter":
-        return {**node, "src": rewrite_preds(node["src"], expansions),
-                "flt": rewrite_preds(node["flt"], expansions)}
-    return {**node,
-            "little": rewrite_preds(node["little"], expansions),
-            "big": rewrite_preds(node["big"], expansions)}
+    """Replace each ``pred`` node with a span_or of term nodes (which
+    keep the pred's source field).  ``expansions`` is an iterator
+    yielding one ``list[str]`` per pred, in :func:`tree_preds` DFS
+    order (Lucene's SpanRewriteMethod → SpanOrQuery rewrite).  An
+    empty expansion enumerates no spans."""
+    def leaf(n: dict) -> dict:
+        if n["k"] != "pred":
+            return n
+        f = {"f": n["f"]} if n.get("f") else {}
+        return {"k": "or",
+                "cl": [{"k": "term", "t": t, **f} for t in next(expansions)]}
+
+    return _map_leaves(node, leaf)
+
+
+def expand_preds(node: dict, vocab_of,
+                 max_expansions: int | None = None) -> dict:
+    """Expand every ``pred`` node to the terms of ``vocab_of(pred)``
+    (an iterable of tokens) that it accepts.  More than
+    ``max_expansions`` terms for one pred raise (Lucene's
+    TooManyClauses posture)."""
+    exps: list[list[str]] = []
+    for p in tree_preds(node):
+        vs = pd.Series(sorted(set(vocab_of(p))), dtype="object")
+        matched = sorted(vs[pred_matcher(p)(vs)]) if len(vs) else []
+        if max_expansions is not None and len(matched) > max_expansions:
+            raise ValueError(
+                f"span_multi {p['kind']} {p['val']!r} expands to "
+                f"{len(matched)} terms > max_expansions "
+                f"{max_expansions} (TooManyClauses)")
+        exps.append(matched)
+    return rewrite_preds(node, iter(exps)) if exps else node
 
 
 _EMPTY_SPANS = np.empty((0, 2), dtype=np.int64)
+_UNIT_SPAN = np.array([0, 1], dtype=np.int64)
 
 
 def _dedup_sorted(sp: np.ndarray) -> np.ndarray:
@@ -569,7 +335,7 @@ def enum_spans(positions: dict[str, np.ndarray], node: dict) -> np.ndarray:
         ps = positions.get(node["t"])
         if ps is None or len(ps) == 0:
             return _EMPTY_SPANS
-        return np.stack([ps, ps + 1], axis=1).astype(np.int64)
+        return ps[:, None] + _UNIT_SPAN
     if k == "or":
         subs = [enum_spans(positions, c) for c in node["cl"]]
         return _dedup_sorted(np.concatenate([s for s in subs if len(s)]
@@ -578,60 +344,57 @@ def enum_spans(positions: dict[str, np.ndarray], node: dict) -> np.ndarray:
         cls = [enum_spans(positions, c) for c in node["cl"]]
         if any(len(c) == 0 for c in cls):
             return _EMPTY_SPANS
-        pos_lists = [c[:, 0] for c in cls]  # unit-length spans
-        m = len(pos_lists)
+        # unit-length sub-spans: each clause is its ascending starts
+        starts = [c[:, 0].tolist() for c in cls]
+        m, slop = len(starts), node["slop"]
         out = []
         if node["ord"]:
             # per first-clause start: greedy nearest-successor chain
             # (the minimal window per start — NearSpansOrdered)
-            for p1 in pos_lists[0]:
-                prev = int(p1)
-                ok = True
-                for ps in pos_lists[1:]:
-                    i = int(np.searchsorted(ps, prev + 1))
-                    if i == len(ps):
-                        ok = False
+            for p1 in starts[0]:
+                prev = p1
+                for ps in starts[1:]:
+                    i = bisect_right(ps, prev)
+                    prev = ps[i] if i < len(ps) else None
+                    if prev is None:
                         break
-                    prev = int(ps[i])
-                if not ok:
+                if prev is None:
+                    # chains from later starts cannot complete either
                     break
-                if (prev - int(p1) + 1) - m <= node["slop"]:
-                    out.append((int(p1), prev + 1))
+                if (prev - p1 + 1) - m <= slop:
+                    out.append((p1, prev + 1))
         else:
             # minimal covering windows over the merged stream, one
-            # position per clause (multiset semantics like
-            # _unordered_match, emitting every qualifying window)
+            # position per clause, emitting every qualifying window;
             # duplicate clauses (same positions list) need distinct
             # positions: group identical clauses into multiplicity
-            uniq_cls: dict[bytes, int] = {}
-            cl_of = []
-            for ps in pos_lists:
-                key = ps.tobytes()
-                if key not in uniq_cls:
-                    uniq_cls[key] = len(uniq_cls)
-                cl_of.append(uniq_cls[key])
-            req = Counter(cl_of)
-            events = sorted({(int(p), cl_of[ci])
-                             for ci, ps in enumerate(pos_lists)
-                             for p in ps})
-            need = len(cl_of)
-            cnt: Counter = Counter()
-            have = 0
-            lo = 0
-            for hi, (p, t) in enumerate(events):
+            uniq_cls: dict[tuple, int] = {}
+            cl_of = [uniq_cls.setdefault(tuple(ps), len(uniq_cls))
+                     for ps in starts]
+            req = [0] * len(uniq_cls)
+            for c in cl_of:
+                req[c] += 1
+            events = sorted({(p, cl_of[ci])
+                             for ci, ps in enumerate(starts) for p in ps})
+            cnt = [0] * len(uniq_cls)
+            have = lo = 0
+            for p, t in events:
                 cnt[t] += 1
                 if cnt[t] <= req[t]:
                     have += 1
-                while have == need:
+                while have == m:
                     p0, t0 = events[lo]
                     if cnt[t0] > req[t0]:
                         cnt[t0] -= 1
                         lo += 1
                         continue
-                    if (p - p0 + 1) - need <= node["slop"]:
+                    if (p - p0 + 1) - m <= slop \
+                            and (not out or out[-1] != (p0, p + 1)):
                         out.append((p0, p + 1))
                     break
-        return _dedup_sorted(np.asarray(out, dtype=np.int64).reshape(-1, 2))
+        # both scans emit windows in (start, end) order, so the rows
+        # come out sorted and deduped
+        return np.asarray(out, dtype=np.int64).reshape(-1, 2)
     if k == "first":
         sp = enum_spans(positions, node["inner"])
         return sp[sp[:, 1] <= node["end"]]
@@ -690,55 +453,83 @@ def enum_spans(positions: dict[str, np.ndarray], node: dict) -> np.ndarray:
     raise ValueError(f"unknown span node kind {k!r}")
 
 
-def span_tree_match(tokens: list[str], node: dict) -> bool:
-    if tree_leaf_fields(node) - {None}:
-        raise ValueError(
-            "masked (field_masking_span) trees need every field's "
-            "tokens — use span_tree_match_fields")
-    preds = tree_preds(node)
-    if preds:
-        # expand against the doc's own vocabulary — exact: a doc can
-        # only contribute spans of tokens it contains
-        vocab = pd.Series(sorted(set(tokens)), dtype="object")
-        exps = [sorted(vocab[pred_matcher(p)(vocab)])
-                if len(vocab) else [] for p in preds]
-        node = rewrite_preds(node, iter(exps))
-    need = tree_terms(node)
-    positions: dict[str, list[int]] = {t: [] for t in need}
-    for i, tok in enumerate(tokens):
-        if tok in need:
-            positions[tok].append(i)
+def _match(node: dict, tokens_by_key: dict[str, list[str]]) -> bool:
+    """Whether the expanded ``node`` enumerates any span over one doc.
+    Its term leaves are looked up as ``key + token`` for each
+    ``key → tokens`` stream (positions are array indices)."""
+    positions: dict[str, list[int]] = {t: [] for t in tree_terms(node)}
+    for key, toks in tokens_by_key.items():
+        for i, tok in enumerate(toks):
+            if key + tok in positions:
+                positions[key + tok].append(i)
     parr = {t: np.asarray(v, dtype=np.int64)
             for t, v in positions.items()}
     return len(enum_spans(parr, node)) > 0
 
 
+def span_tree_match(tokens: list[str], node: dict) -> bool:
+    """Match one doc's token list.  span_multi preds expand against the
+    doc's own vocabulary — exact: a doc can only contribute spans of
+    tokens it contains."""
+    if tree_leaf_fields(node) - {None}:
+        raise ValueError(
+            "masked (field_masking_span) trees need every field's "
+            "tokens — use span_tree_match_fields")
+    return _match(expand_preds(node, lambda p: tokens), {"": tokens})
+
+
 def span_tree_match_expr(tokens_col: Column, node: dict) -> Column:
-    """Boolean Column over an analyzed token-array column (one Arrow
-    batch per partition, like :func:`span_match_expr`).  span_multi
-    preds are expanded ONCE per Arrow batch against the batch
-    vocabulary (the fuzzy OSA kernel is batch-vectorized, so this is
-    one DP over the batch's unique tokens, not one per doc); per doc,
-    terms absent from the doc enumerate no spans, so the batch-level
-    rewrite is exactly the per-doc one."""
+    """Boolean Column over an analyzed token-array column — one Arrow
+    batch per partition, per-doc matching inside.  span_multi preds
+    are expanded ONCE per Arrow batch against the batch vocabulary
+    (the fuzzy OSA kernel is batch-vectorized, so this is one DP over
+    the batch's unique tokens, not one per doc); per doc, terms absent
+    from the doc enumerate no spans, so the batch-level rewrite is
+    exactly the per-doc one."""
     node_l = node
     has_preds = bool(tree_preds(node))
 
     @F.pandas_udf(T.BooleanType())
     def _f(tok_s: pd.Series) -> pd.Series:
+        docs = [list(toks) if toks is not None else [] for toks in tok_s]
         tree = node_l
         if has_preds:
-            vocab: set[str] = set()
-            for toks in tok_s:
-                if toks is not None:
-                    vocab.update(toks)
-            vs = pd.Series(sorted(vocab), dtype="object")
-            exps = [sorted(vs[pred_matcher(p)(vs)]) if len(vs) else []
-                    for p in tree_preds(tree)]
-            tree = rewrite_preds(tree, iter(exps))
-        return pd.Series(
-            [span_tree_match(list(toks) if toks is not None else [],
-                             tree)
-             for toks in tok_s])
+            vocab = {t for toks in docs for t in toks}
+            tree = expand_preds(tree, lambda p: vocab)
+        return pd.Series([span_tree_match(toks, tree) for toks in docs])
 
     return _f(tokens_col)
+
+
+def span_tree_match_fields(tokens_by_field: dict[str, list[str]],
+                           node: dict, default_field: str) -> bool:
+    """Multi-field (field_masking_span) matcher: each pred expands
+    against its own field's doc vocabulary, and every leaf reads the
+    positions of its source field (``default_field`` when unstamped)."""
+    node = expand_preds(node, lambda p: tokens_by_field.get(
+        p.get("f") or default_field) or [])
+    node = _map_leaves(node, lambda n: {
+        "k": "term", "t": (n.get("f") or default_field) + "\x00" + n["t"]})
+    return _match(node, {f + "\x00": toks or []
+                         for f, toks in tokens_by_field.items()})
+
+
+def span_tree_match_expr_fields(tokens_cols: dict[str, Column],
+                                node: dict,
+                                default_field: str) -> Column:
+    """Boolean Column for a multi-field span tree: one Arrow batch
+    over every involved field's analyzed token array."""
+    fields = list(tokens_cols)
+    node_l = node
+
+    @F.pandas_udf(T.BooleanType())
+    def _f(*cols: pd.Series) -> pd.Series:
+        out = []
+        for row in zip(*cols):
+            by_field = {f: (list(t) if t is not None else [])
+                        for f, t in zip(fields, row)}
+            out.append(span_tree_match_fields(by_field, node_l,
+                                              default_field))
+        return pd.Series(out)
+
+    return _f(*tokens_cols.values())

@@ -65,9 +65,8 @@ def betainc_reg(a: float, b: float, x: np.ndarray) -> np.ndarray:
     out[direct] = (front[direct] * _betacf(a, b, x[direct]) / a
                    if direct.any() else 0.0)
     if (~direct).any():
-        xs = x[~direct]
-        fr = np.exp(ln_beta + a * np.log(xs) + b * np.log1p(-xs))
-        out[~direct] = 1.0 - fr * _betacf(b, a, 1.0 - xs) / b
+        out[~direct] = (1.0 - front[~direct]
+                        * _betacf(b, a, 1.0 - x[~direct]) / b)
     out[x <= 0.0] = 0.0
     out[x >= 1.0] = 1.0
     return out

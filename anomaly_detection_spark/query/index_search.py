@@ -851,36 +851,6 @@ def multi_match_topk_indexed(
                                 id_col="docid", k=k)
 
 
-def _span_docs(reader: IndexReader, uniq: list[str],
-               filter_cond: Column | None, candidates, matches) -> DataFrame:
-    """Docids matching a span kernel over the positional postings of
-    ``uniq``.  Per segment, ``candidates(occ)`` narrows the docs from
-    the (docid, position)-ordered occurrences (None: no doc can match)
-    and ``matches(positions)`` decides each candidate from its per-term
-    position lists."""
-    cname = codec_name(reader.meta.codec)
-    dec = BLOB_DECODERS[cname]
-
-    def kernel(p: pd.DataFrame, dl: np.ndarray, seg_base: int):
-        occ = _decode_occurrences(p, seg_base, dec, cname, ordered=True)
-        cand = candidates(occ)
-        if cand is None:
-            return _NO_HITS[0]
-        hits = []
-        for doc in cand[dl[cand] >= 0]:
-            positions = {}
-            for t, (loc, ps) in occ.items():
-                a = np.searchsorted(loc, doc, side="left")
-                z = np.searchsorted(loc, doc, side="right")
-                positions[t] = ps[a:z]
-            if matches(positions):
-                hits.append(doc)
-        return np.asarray(hits, dtype=np.int64)
-
-    return _segment_scan(reader, uniq, _POSITIONAL_COLS, kernel,
-                         filter_cond, scored=False)
-
-
 def span_near_docs_indexed(
     reader: IndexReader,
     terms: list[str],
@@ -889,86 +859,52 @@ def span_near_docs_indexed(
     end: int | None = None,
     filter_cond: Column | None = None,
 ) -> DataFrame:
-    """Docids matching a span_near/span_first over the positional
-    postings (matching only — span scoring is out of subset).  Reads
-    ONLY the clause terms' posting blocks + positions; candidate docs
-    are pre-narrowed to those carrying every clause term with the
-    required multiplicity before the per-doc span kernel runs
-    (``functions/spans.py`` algorithms, identical to the brute path).
-
-    Cost is bounded by the rarest clause term's postings — the same
-    posture as the phrase kernels; never a corpus re-analysis."""
-    from ..functions.spans import _ordered_match, _unordered_match
-
-    _require_positions(reader, "span queries")
-    if not terms:
-        return local_df(reader.spark, [], _DOCIDS)
-    req = Counter(terms)
-    uniq = sorted(req)
-    dfs = reader.term_dfs(uniq)
-    if any(t not in dfs for t in uniq):
-        return local_df(reader.spark, [], _DOCIDS)
-    terms_l, slop_i = list(terms), int(slop)
-
-    def candidates(occ: dict):
-        if any(t not in occ for t in uniq):
-            return None
-        # docs with enough occurrences of every clause term
-        cand = None
-        for t, c in req.items():
-            docs_t, counts_t = np.unique(occ[t][0], return_counts=True)
-            ok = docs_t[counts_t >= c]
-            cand = ok if cand is None else np.intersect1d(
-                cand, ok, assume_unique=True)
-        return cand
-
-    def matches(positions: dict) -> bool:
-        if in_order:
-            return _ordered_match([positions[t] for t in terms_l],
-                                  slop_i, end)
-        return _unordered_match(terms_l, positions, slop_i, end)
-
-    return _span_docs(reader, uniq, filter_cond, candidates, matches)
+    """Docids matching a span_near of ``terms`` (a span_first of it when
+    ``end`` is given) over the positional postings: the near / first
+    node of the span tree, run by :func:`span_tree_docs_indexed`."""
+    node = {"k": "near", "cl": [{"k": "term", "t": t} for t in terms],
+            "slop": int(slop), "ord": bool(in_order)}
+    if end is not None:
+        node = {"k": "first", "inner": node, "end": int(end)}
+    return span_tree_docs_indexed(reader, node, filter_cond)
 
 
-def _expand_span_preds(reader: IndexReader, node: dict,
-                       max_expansions: int) -> dict:
-    """Expand span_multi pred nodes against the term DICTIONARY
-    (SpanMultiTermQueryWrapper's rewrite): per pred, a cheap codegen
-    pre-filter narrows the dictionary scan (startswith for prefix and
-    for wildcard's literal prefix, a length window for fuzzy), the
-    exact Python matcher — the SAME one the brute path uses — decides
-    driver-side, and expansions past ``max_expansions`` raise
-    (Lucene's TooManyClauses posture, default 1024 =
-    indices.query.bool.max_clause_count)."""
-    from ..functions.spans import pred_matcher, rewrite_preds, tree_preds
+def _span_dict_filter(p: dict) -> Column:
+    """A cheap codegen pre-filter on the term dictionary for one
+    span_multi pred: startswith for prefix and for wildcard's literal
+    prefix, a length window for fuzzy (the exact matcher decides)."""
+    cond = F.lit(True)
+    if p["kind"] == "prefix":
+        cond = F.col("term").startswith(p["val"].lower())
+    elif p["kind"] == "wildcard":
+        lit = p["val"].lower().split("*")[0].split("?")[0]
+        if lit and "\\" not in lit:
+            cond = F.col("term").startswith(lit)
+    elif p["kind"] == "fuzzy":
+        me = int(p["max_edits"])
+        cond = F.length("term").between(
+            len(p["val"]) - me, len(p["val"]) + me)
+    return cond
 
-    preds = tree_preds(node)
-    if not preds:
-        return node
-    exps: list[list[str]] = []
-    for p in preds:
-        cond = F.lit(True)
-        if p["kind"] == "prefix":
-            cond = F.col("term").startswith(p["val"].lower())
-        elif p["kind"] == "wildcard":
-            lit = p["val"].lower().split("*")[0].split("?")[0]
-            if lit and "\\" not in lit:
-                cond = F.col("term").startswith(lit)
-        elif p["kind"] == "fuzzy":
-            me = int(p["max_edits"])
-            cond = F.length("term").between(
-                len(p["val"]) - me, len(p["val"]) + me)
-        cand = pd.Series(list(reader.term_dfs(cond)), dtype="object")
-        matched = (sorted(cand[pred_matcher(p)(cand)])
-                   if len(cand) else [])
-        if len(matched) > max_expansions:
-            raise ValueError(
-                f"span_multi {p['kind']} {p['val']!r} expands to "
-                f"{len(matched)} terms > max_expansions "
-                f"{max_expansions} (TooManyClauses)")
-        exps.append(matched)
-    return rewrite_preds(node, iter(exps))
+
+def _required_terms(node: dict) -> Counter:
+    """Terms every doc the (expanded) tree matches must hold, each with
+    the count it needs: a near's clauses take distinct positions, so
+    their counts add up; containing / within need both sides; span_not
+    needs its include side.  Other kinds require nothing."""
+    k = node["k"]
+    if k == "term":
+        return Counter([node["t"]])
+    if k == "near":
+        return sum(map(_required_terms, node["cl"]), Counter())
+    if k == "first":
+        return _required_terms(node["inner"])
+    if k == "not":
+        return _required_terms(node["inc"])
+    if k in ("containing", "within"):
+        return (_required_terms(node["little"])
+                | _required_terms(node["big"]))
+    return Counter()
 
 
 def span_tree_docs_indexed(
@@ -977,15 +913,21 @@ def span_tree_docs_indexed(
     filter_cond: Column | None = None,
     max_expansions: int = 1024,
 ) -> DataFrame:
-    """Docids matching a compound span tree (span_or / span_not /
-    span_containing / span_within / span_multi, ``functions/spans.py``
-    enum kernel) over the positional postings.  Reads ONLY the tree's
-    terms' posting blocks; candidates are docs carrying at least one
-    tree term (the per-doc kernel decides exactly) — a superset
-    narrowing, still bounded by the tree terms' postings, never a
-    corpus re-analysis.  span_multi preds are expanded against the
-    term dictionary first (:func:`_expand_span_preds`)."""
-    from ..functions.spans import enum_spans, tree_leaf_fields, tree_terms
+    """Docids matching a span tree (``functions/spans.py`` node, run
+    by its ``enum_spans`` kernel) over the positional postings
+    (matching only — span scoring is out of subset).  Reads ONLY the
+    tree's terms' posting blocks + positions, never a corpus
+    re-analysis.  span_multi preds are first expanded against the term
+    DICTIONARY (SpanMultiTermQueryWrapper's rewrite; more than
+    ``max_expansions`` terms raise, Lucene's TooManyClauses posture,
+    default 1024 = indices.query.bool.max_clause_count).
+
+    Candidates, per segment: the docs holding every term the tree
+    requires with the count it needs (a near of repeated terms needs
+    that many occurrences), or — when the tree requires none — the
+    docs holding any tree term.  The per-doc kernel decides exactly."""
+    from ..functions.spans import (enum_spans, expand_preds,
+                                   tree_leaf_fields, tree_terms)
 
     _require_positions(reader, "span queries")
     if tree_leaf_fields(node) - {None}:
@@ -993,20 +935,43 @@ def span_tree_docs_indexed(
             "field_masking_span trees mix fields — a single-field "
             "postings index cannot serve them; use the brute path "
             "(compile_filter / span_tree_match_expr_fields)")
-    node = _expand_span_preds(reader, node, max_expansions)
+    node = expand_preds(
+        node, lambda p: reader.term_dfs(_span_dict_filter(p)),
+        max_expansions)
     uniq = sorted(tree_terms(node))
-    if not uniq:
+    need = _required_terms(node)
+    if not uniq or len(reader.term_dfs(sorted(need))) < len(need):
         return local_df(reader.spark, [], _DOCIDS)
-    node_l = dict(node)
+    cname = codec_name(reader.meta.codec)
+    dec = BLOB_DECODERS[cname]
 
-    def candidates(occ: dict):
-        # docs holding any tree term; the enum kernel decides exactly
-        return (np.unique(np.concatenate([loc for loc, _ in occ.values()]))
-                if occ else None)
+    def kernel(p: pd.DataFrame, dl: np.ndarray, seg_base: int):
+        occ = _decode_occurrences(p, seg_base, dec, cname, ordered=True)
+        if not occ or any(t not in occ for t in need):
+            return _NO_HITS[0]
+        if need:
+            cand = None
+            for t, c in need.items():
+                docs_t, counts_t = np.unique(occ[t][0], return_counts=True)
+                ok = docs_t[counts_t >= c]
+                cand = ok if cand is None else np.intersect1d(
+                    cand, ok, assume_unique=True)
+        else:
+            cand = np.unique(
+                np.concatenate([loc for loc, _ in occ.values()]))
+        hits = []
+        for doc in cand[dl[cand] >= 0]:
+            positions = {}
+            for t, (loc, ps) in occ.items():
+                a = np.searchsorted(loc, doc, side="left")
+                z = np.searchsorted(loc, doc, side="right")
+                positions[t] = ps[a:z]
+            if len(enum_spans(positions, node)) > 0:
+                hits.append(doc)
+        return np.asarray(hits, dtype=np.int64)
 
-    return _span_docs(reader, uniq, filter_cond, candidates,
-                      lambda positions: len(enum_spans(positions,
-                                                       node_l)) > 0)
+    return _segment_scan(reader, uniq, _POSITIONAL_COLS, kernel,
+                         filter_cond, scored=False)
 
 
 def fetch_docs(reader: IndexReader, topk: DataFrame) -> DataFrame:

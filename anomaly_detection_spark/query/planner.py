@@ -170,14 +170,20 @@ def compile_filter(df: DataFrame, query: dict[str, Any]) -> Column:
     return F.lit(True) if cond is None else cond
 
 
+_SPAN_KINDS = ("span_term", "span_near", "span_first", "span_or",
+               "span_not", "span_containing", "span_within", "span_multi",
+               "field_masking_span")
+
+
 def _span_tree_plan(fld: str, node: dict) -> QueryPlan:
-    """Filter plan for a parsed span tree: single-field trees run the
-    batch kernel over one token array; trees with masked leaves
+    """Filter plan for a span tree (every span_* kind and ``intervals``):
+    the shapes :func:`_lower_span` covers compile to codegen array
+    predicates; every other single-field tree runs the batch kernel
+    over one token array, and trees with masked leaves
     (field_masking_span) read every involved field's token array."""
     from ..functions.spans import (span_tree_match_expr,
                                    span_tree_match_expr_fields,
                                    tree_leaf_fields)
-    from ..functions.tokenizer import tokenize_column
 
     leaf_fields = tree_leaf_fields(node)
     if leaf_fields - {None}:
@@ -186,9 +192,45 @@ def _span_tree_plan(fld: str, node: dict) -> QueryPlan:
         return QueryPlan(
             F.coalesce(span_tree_match_expr_fields(cols, node, fld),
                        F.lit(False)))
-    return QueryPlan(
-        F.coalesce(span_tree_match_expr(tokenize_column(fld), node),
-                   F.lit(False)))
+    doc_toks = tokenize_column(fld)
+    cond = _lower_span(doc_toks, node)
+    if cond is None:
+        cond = F.coalesce(span_tree_match_expr(doc_toks, node),
+                          F.lit(False))
+    return QueryPlan(cond)
+
+
+def _lower_span(doc_toks: Column, node: dict) -> Column | None:
+    """Codegen for the span shapes that need no positions — one term,
+    ``first`` over one term, an unordered near of distinct terms with
+    unbounded slop (presence), an ``or`` whose clauses all lower — or
+    None.  A one-clause near is its unit-length clause at any slop."""
+    from ..functions.spans import UNBOUNDED_GAPS
+
+    def unwrap(n: dict) -> dict:
+        while n["k"] == "near" and len(n["cl"]) == 1:
+            n = n["cl"][0]
+        return n
+
+    node = unwrap(node)
+    k = node["k"]
+    if k == "term":
+        return F.array_contains(doc_toks, node["t"])
+    if k == "first" and unwrap(node["inner"])["k"] == "term":
+        t = unwrap(node["inner"])["t"]
+        return F.array_contains(F.slice(doc_toks, 1, node["end"]), t)
+    if k == "near" and not node["ord"] and node["slop"] >= UNBOUNDED_GAPS:
+        terms = [c["t"] for c in node["cl"] if c["k"] == "term"]
+        if len(terms) == len(node["cl"]) == len(set(terms)):
+            return F.forall(F.array(*[F.lit(t) for t in terms]),
+                            lambda t: F.array_contains(doc_toks, t))
+    if k == "or":
+        subs = [_lower_span(doc_toks, c) for c in node["cl"]]
+        if not subs:
+            return F.lit(False)
+        if all(c is not None for c in subs):
+            return _at_least(subs, 1)
+    return None
 
 
 def plan_query(df: DataFrame, query: dict[str, Any], scoring: bool = True) -> QueryPlan:
@@ -602,51 +644,17 @@ def plan_query(df: DataFrame, query: dict[str, Any], scoring: bool = True) -> Qu
                                      "simple_query_string"),
             scoring=scoring)
 
-    if kind in ("span_term", "span_near", "span_first"):
+    if kind in _SPAN_KINDS:
         # Lucene span family, filter context (matching only — span
-        # scoring is out of subset, functions/spans.py docstring).
-        # span_term degenerates to pure-codegen token containment /
-        # position bound; the general cases run the span kernels as a
-        # batch Arrow UDF over the analyzed token array.
-        from ..functions.spans import (parse_span_query, parse_span_tree,
-                                       span_match_expr,
-                                       span_tree_match_expr)
-
-        try:
-            fld, terms, slop, in_order, end = parse_span_query(kind, body)
-        except ValueError:
-            # clauses beyond plain span_term (span_or / span_multi /
-            # field_masking_span inside near/first) take the
-            # tree-enumeration kernel
-            fld, node = parse_span_tree(kind, body)
-            return _span_tree_plan(fld, node)
-        doc_toks = tokenize_column(fld)
-        if len(terms) == 1:
-            t = terms[0]
-            if end is None:
-                return QueryPlan(F.array_contains(doc_toks, t))
-            return QueryPlan(
-                F.array_contains(F.slice(doc_toks, 1, end), t))
-        return QueryPlan(
-            F.coalesce(span_match_expr(doc_toks, terms, slop, in_order,
-                                       end), F.lit(False)))
-
-    if kind in ("span_or", "span_not", "span_containing", "span_within",
-                "span_multi", "field_masking_span"):
-        # compound span family (SpanOrQuery / SpanNotQuery /
-        # SpanContainingQuery / SpanWithinQuery /
-        # SpanMultiTermQueryWrapper / FieldMaskingSpanQuery): span
-        # ENUMERATION set algebra — functions/spans.py enum_spans
-        # kernel over the analyzed token array (span_or of plain
-        # matches degenerates to a boolean OR, but the general tree
-        # needs positions); span_multi preds expand per Arrow batch
-        # against the batch vocabulary (exact — docs only contribute
-        # tokens they hold); masked trees read every involved field's
-        # token array
+        # scoring is out of subset, functions/spans.py docstring):
+        # one parser, then one plan (codegen for the shapes that need
+        # no positions, else the enum_spans kernel as a batch Arrow UDF
+        # over the analyzed token array; span_multi preds expand per
+        # Arrow batch against the batch vocabulary — exact, docs only
+        # contribute tokens they hold)
         from ..functions.spans import parse_span_tree
 
-        fld, node = parse_span_tree(kind, body)
-        return _span_tree_plan(fld, node)
+        return _span_tree_plan(*parse_span_tree(kind, body))
 
     if kind == "constant_score":
         # filter context: matching is the inner filter's; the boost
@@ -725,7 +733,10 @@ def plan_query(df: DataFrame, query: dict[str, Any], scoring: bool = True) -> Qu
                                    len(clauses) if op == "and" else 1))
 
     if kind == "intervals":
-        return QueryPlan(_intervals_filter(df, body))
+        # intervals sources are span trees (minimal-interval semantics
+        # = the near kernel's per-start minimal windows)
+        (fld, src), = body.items()
+        return _span_tree_plan(fld, _interval_tree(src))
 
     if kind == "script_score":
         # filter context: matching is the inner query's (the script
@@ -802,97 +813,16 @@ def plan_query(df: DataFrame, query: dict[str, Any], scoring: bool = True) -> Qu
     raise ValueError(f"unsupported query kind: {kind}")
 
 
-def _intervals_filter(df: DataFrame, body: dict[str, Any]) -> Column:
-    """``intervals`` query, filter context (IntervalQueryBuilder):
-    sources supported are ``match`` (ordered / max_gaps), ``any_of``
-    (disjunction of sources) and ``all_of`` over term-level sources
-    (ordered / max_gaps).  The interval semantics map onto the span
-    kernels already used for span_near: ordered+max_gaps ≡
-    span_near(slop=max_gaps, in_order) — both count total
-    non-matching positions inside the matched window.  max_gaps=-1
-    (unlimited) becomes presence (unordered) / a subsequence check
-    (ordered) via a corpus-length slop bound."""
-    from ..functions.spans import span_match_expr
-
-    (fld, src), = body.items()
-    doc_toks = tokenize_column(fld)
-
-    def compile_src(source: dict[str, Any]) -> Column:
-        (skind, sbody), = source.items()
-        if skind == "match":
-            toks = tokenize_query(str(sbody["query"]))
-            if not toks:
-                return F.lit(False)
-            ordered = bool(sbody.get("ordered", False))
-            max_gaps = int(sbody.get("max_gaps", -1))
-            if len(toks) == 1:
-                return F.array_contains(doc_toks, toks[0])
-            if max_gaps < 0 and not ordered:
-                return F.forall(
-                    F.array(*[F.lit(t) for t in toks]),
-                    lambda t: F.array_contains(doc_toks, t))
-            slop = max_gaps if max_gaps >= 0 else (1 << 30)
-            return F.coalesce(
-                span_match_expr(doc_toks, toks, slop, ordered, None),
-                F.lit(False))
-        if skind == "any_of":
-            return _at_least([compile_src(s) for s in sbody["intervals"]], 1)
-        if skind == "all_of":
-            # term-level sub-sources compose into one span_near
-            terms: list[str] = []
-            for s in sbody["intervals"]:
-                if set(s) != {"match"}:
-                    raise ValueError(
-                        "intervals all_of supports term-level match "
-                        "sub-sources only")
-                t = tokenize_query(str(s["match"]["query"]))
-                if len(t) != 1:
-                    raise ValueError(
-                        "intervals all_of sub-sources must analyze "
-                        "to single terms")
-                terms.append(t[0])
-            ordered = bool(sbody.get("ordered", False))
-            max_gaps = int(sbody.get("max_gaps", -1))
-            slop = max_gaps if max_gaps >= 0 else (1 << 30)
-            if len(terms) == 1:
-                return F.array_contains(doc_toks, terms[0])
-            return F.coalesce(
-                span_match_expr(doc_toks, terms, slop, ordered, None),
-                F.lit(False))
-        raise ValueError(f"unsupported intervals source {skind!r}")
-
-    def _needs_tree(source: dict) -> bool:
-        (skind, sbody), = source.items()
-        if skind in ("prefix", "wildcard", "fuzzy"):
-            return True
-        if not isinstance(sbody, dict):
-            return False
-        if sbody.get("filter"):
-            return True
-        subs = sbody.get("intervals") or []
-        return any(_needs_tree(s) for s in subs)
-
-    if _needs_tree(src):
-        # sources beyond the boolean fast path — prefix/wildcard/fuzzy
-        # term matchers and `filter` rules — need span ENUMERATION:
-        # compile to the span tree kernel (intervals are the
-        # minimal-window enumeration the near kernel already emits)
-        from ..functions.spans import span_tree_match_expr
-
-        node = _interval_tree(src)
-        return F.coalesce(span_tree_match_expr(doc_toks, node),
-                          F.lit(False))
-    return compile_src(src)
-
-
 def _interval_tree(source: dict[str, Any]) -> dict:
-    """Intervals source → span-tree node (enumeration semantics:
+    """``intervals`` source (IntervalQueryBuilder) → span-tree node
+    (enumeration semantics:
     match = per-start minimal windows, any_of = union, all_of =
     near over unit sub-sources; prefix/wildcard/fuzzy = dictionary
     predicates).  A ``filter`` wraps the node in the positional-
     relation rule (containing / contained_by / overlapping and the
     not_ forms) evaluated by the enum kernel."""
     from ..functions.fuzzy import parse_fuzziness
+    from ..functions.spans import UNBOUNDED_GAPS, _unit_len
     from ..functions.tokenizer import tokenize_query
 
     (skind, sbody), = source.items()
@@ -908,7 +838,7 @@ def _interval_tree(source: dict[str, Any]) -> dict:
             max_gaps = int(sbody.get("max_gaps", -1))
             node = {"k": "near",
                     "cl": [{"k": "term", "t": t} for t in toks],
-                    "slop": max_gaps if max_gaps >= 0 else (1 << 30),
+                    "slop": max_gaps if max_gaps >= 0 else UNBOUNDED_GAPS,
                     "ord": bool(sbody.get("ordered", False))}
     elif skind == "prefix":
         node = {"k": "pred", "kind": "prefix",
@@ -926,16 +856,14 @@ def _interval_tree(source: dict[str, Any]) -> dict:
                                   for s in sbody["intervals"]]}
     elif skind == "all_of":
         cl = [_interval_tree(s) for s in sbody["intervals"]]
-        from ..functions.spans import _unit_len
-
         if not all(_unit_len(c) for c in cl):
             raise ValueError(
                 "intervals all_of supports unit-length sub-sources "
-                "(match of one term / prefix / wildcard / fuzzy / "
+                "(match of single terms / prefix / wildcard / fuzzy / "
                 "any_of of those)")
         max_gaps = int(sbody.get("max_gaps", -1))
         node = {"k": "near", "cl": cl,
-                "slop": max_gaps if max_gaps >= 0 else (1 << 30),
+                "slop": max_gaps if max_gaps >= 0 else UNBOUNDED_GAPS,
                 "ord": bool(sbody.get("ordered", False))}
     else:
         raise ValueError(f"unsupported intervals source {skind!r}")
@@ -1583,7 +1511,7 @@ def search(
                 target, mm["query"], list(mm["fields"]), k=size,
                 match_type=mm.get("type", "best_fields"),
                 tie_breaker=float(mm.get("tie_breaker", 0.0)))
-        return finish(out)
+        return finish(_top_hits(target, out, size))
 
     if len(query) == 1 and next(iter(query)) in ("match_phrase",
                                                  "match_phrase_prefix"):
@@ -1629,7 +1557,7 @@ def search(
             run = (match_phrase_prefix_topk if kind == "match_phrase_prefix"
                    else match_phrase_topk)
             out = run(tgt, text, k=size, **kw)
-        return finish(out)
+        return finish(_top_hits(target, out, size))
 
     plan = plan_query(schema_df, query)
     cond = plan.filter_cond

@@ -72,8 +72,8 @@ def get_spark(
     # loop ran 3x faster with these tunables.  Keep big freed blocks in
     # the arena instead; python workers inherit the env at exec.
     # setdefault only — an explicit user environment wins.
-    os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(1 << 30))
-    os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(1 << 28))
+    os.environ.setdefault("MALLOC_MMAP_THRESHOLD_", str(2 ** 30))
+    os.environ.setdefault("MALLOC_TRIM_THRESHOLD_", str(2 ** 28))
 
     driver_mem = os.environ.get("SPARK_DRIVER_MEM") or _default_driver_mem()
     builder = (

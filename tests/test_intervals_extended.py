@@ -88,6 +88,24 @@ def test_intervals_any_of_with_pred_and_filter(docs):
             "filter": {"before": {"match": {"query": "cold"}}}}}}})
 
 
+def test_intervals_repeated_terms_need_distinct_positions(spark):
+    # a repeated term takes one position per occurrence in every form
+    # of the source (Lucene's unordered source counts repeats) — plain
+    # match included, not only its filtered / gapped / any_of forms
+    df = spark.createDataFrame([(0, "slow engine"),
+                                (1, "slow slow engine")],
+                               "docid long, text string")
+    match = {"query": "slow slow"}
+    for src in (
+            {"match": match},
+            {"match": {**match, "filter": {"not_containing": {
+                "match": {"query": "zzz"}}}}},
+            {"match": {**match, "max_gaps": 100}},
+            {"any_of": {"intervals": [{"match": match},
+                                      {"prefix": {"prefix": "zzz"}}]}}):
+        assert _ids(df, {"intervals": {"text": src}}) == [1], src
+
+
 def test_ifilter_enum_fuzz():
     """Fuzz the ifilter kernel vs a direct set-algebra oracle over
     random position maps (no Spark)."""

@@ -132,6 +132,7 @@ def _p_oracle(t, df):
     return 2 * np.trapz(pdf, x)
 
 
+@pytest.mark.filterwarnings("error::RuntimeWarning")
 def test_t_pvalue_special_function():
     from anomaly_detection_spark.functions.stats import t_sf_two_sided
 

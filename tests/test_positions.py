@@ -148,6 +148,36 @@ def test_search_routes_phrase_and_multi_match_to_index(spark, pos_env):
         shutil.rmtree(tmp2, ignore_errors=True)
 
 
+def test_scored_phrase_and_multi_match_hits_carry_doc_columns(pos_env):
+    """Scored match_phrase / match_phrase_prefix / multi_match over an
+    index end in the same hit tail as a scored match: the hits carry
+    the doc columns, and (docid, score) is the kernel's top-k."""
+    from anomaly_detection_spark.query.index_search import (
+        match_phrase_prefix_topk_indexed)
+    from anomaly_detection_spark.query.planner import search
+
+    reader, _, _, phrases, _ = pos_env
+    cols = search(reader, {"query": {"match": {"text": phrases[0]}},
+                           "size": 5}).columns
+    cases = [
+        ({"match_phrase": {"text": phrases[0]}},
+         match_phrase_topk_indexed(reader, phrases[0], k=5)),
+        ({"match_phrase_prefix": {"text": phrases[0]}},
+         match_phrase_prefix_topk_indexed(reader, phrases[0], k=5)),
+        ({"multi_match": {"query": phrases[0], "fields": ["text"]}},
+         multi_match_topk_indexed({"text": reader}, phrases[0], ["text"],
+                                  k=5)),
+    ]
+    for query, kernel in cases:
+        out = search(reader, {"query": query, "size": 5})
+        assert out.columns == cols, query
+        got = out.select("docid", "score").toPandas()
+        want = kernel.select("docid", "score").toPandas()
+        assert len(got) > 0, query
+        assert list(got.docid) == list(want.docid), query
+        assert (got.score - want.score).abs().max() < 1e-12, query
+
+
 def test_positions_decode_roundtrip():
     import numpy as np
 

@@ -295,6 +295,32 @@ def test_run_historical_pieces_match_preview_and_resume(
         got.sort_values(["service", "bucket_start"]).reset_index(drop=True),
         again.sort_values(["service", "bucket_start"]).reset_index(drop=True))
 
+    # the published state carries the tick's replay columns: a tick on
+    # the last historical interval replays it — no state change, the
+    # stored grades
+    from anomaly_detection_spark.detector import (
+        _state_path, run_once_stateful)
+
+    spath = _state_path(state_dir, det.detector_id)
+
+    def state():
+        return (spark.read.parquet(spath).toPandas()
+                .sort_values(["service", "_feat"]).reset_index(drop=True))
+
+    before = state()
+    tick = run_once_stateful(spark, det, end, state_dir).toPandas()
+    after = state()
+    assert [list(v) for v in after.vals] == [list(v) for v in before.vals]
+    assert list(after.scored_cnt) == list(before.scored_cnt)
+    last = got[got.bucket_start == got.bucket_start.max()] \
+        .set_index("service")
+    assert sorted(tick.service) == sorted(last.index)
+    for r in tick.itertuples():
+        assert abs(r.anomaly_grade
+                   - float(last.loc[r.service].anomaly_grade)) < 1e-9
+        assert abs(r.anomaly_score
+                   - float(last.loc[r.service].anomaly_score)) < 1e-9
+
 
 def test_top_hits_body_sub_agg(spark):
     from anomaly_detection_spark.query.aggs_body import run_aggs

@@ -10,13 +10,26 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
-from anomaly_detection_spark.functions.spans import span_match
+from anomaly_detection_spark.functions.spans import (parse_span_tree,
+                                                     span_tree_match)
 from anomaly_detection_spark.index import build_index
 from anomaly_detection_spark.query import IndexReader, analyze_docs
 from anomaly_detection_spark.query.index_search import (
     span_near_docs_indexed,
 )
 from anomaly_detection_spark.query.planner import compile_filter
+
+
+def _near_match(tokens, terms, slop, in_order, end=None):
+    """The span_near (span_first when ``end`` is given) body over
+    ``terms``, parsed and matched by the one span kernel."""
+    near = {"span_near": {
+        "clauses": [{"span_term": {"text": t}} for t in terms],
+        "slop": slop, "in_order": in_order}}
+    q = near if end is None else {"span_first": {"match": near,
+                                                 "end": end}}
+    (kind, body), = q.items()
+    return span_tree_match(tokens, parse_span_tree(kind, body)[1])
 
 
 def _naive(tokens, terms, slop, in_order, end=None):
@@ -49,7 +62,7 @@ def test_span_kernels_match_naive_oracle():
         slop = rng.randint(0, 4)
         in_order = rng.random() < 0.5
         end = rng.choice([None, rng.randint(1, 12)])
-        got = span_match(tokens, terms, slop, in_order, end)
+        got = _near_match(tokens, terms, slop, in_order, end)
         want = _naive(tokens, terms, slop, in_order, end)
         assert got == want, (tokens, terms, slop, in_order, end)
 
@@ -57,19 +70,19 @@ def test_span_kernels_match_naive_oracle():
 def test_span_lucene_documented_cases():
     toks = "the quick brown fox jumps over the lazy dog".split()
     # adjacent ordered pair: slop 0
-    assert span_match(toks, ["quick", "brown"], 0, True)
+    assert _near_match(toks, ["quick", "brown"], 0, True)
     # one word between: needs slop 1 ordered
-    assert not span_match(toks, ["quick", "fox"], 0, True)
-    assert span_match(toks, ["quick", "fox"], 1, True)
+    assert not _near_match(toks, ["quick", "fox"], 0, True)
+    assert _near_match(toks, ["quick", "fox"], 1, True)
     # reversed order fails ordered at any slop here, matches unordered
-    assert not span_match(toks, ["fox", "quick"], 5, True)
-    assert span_match(toks, ["fox", "quick"], 1, False)
+    assert not _near_match(toks, ["fox", "quick"], 5, True)
+    assert _near_match(toks, ["fox", "quick"], 1, False)
     # same term twice needs two distinct occurrences
-    assert span_match(toks, ["the", "the"], 10, False)
-    assert not span_match(["the"], ["the", "the"], 10, False)
+    assert _near_match(toks, ["the", "the"], 10, False)
+    assert not _near_match(["the"], ["the", "the"], 10, False)
     # span_first: "the" ends at 1 (≤ 2); "brown" ends at 3 (> 2)
-    assert span_match(toks, ["the"], 0, True, end=2)
-    assert not span_match(toks, ["brown"], 0, True, end=2)
+    assert _near_match(toks, ["the"], 0, True, end=2)
+    assert not _near_match(toks, ["brown"], 0, True, end=2)
 
 
 @pytest.fixture(scope="module")
@@ -100,8 +113,7 @@ def test_span_filter_context_plans(docs):
     assert ids({"span_term": {"text": "delta"}}) == [1, 3]
     assert ids({"span_first": {"match": {"span_term": {"text": "beta"}},
                                "end": 1}}) == [1]
-    # non-span clause: the flat kernel rejects, the tree-kernel
-    # fallback rejects too — the surviving message is the tree one
+    # non-span clause: the span parser rejects it
     with pytest.raises(ValueError, match="not a span query"):
         compile_filter(docs, {"span_near": {
             "clauses": [{"term": {"text": "x"}}]}})
