@@ -438,8 +438,8 @@ def rebalance_shared_cache(
         meta = cache.agg(F.min("landmark_ms")).first()
         landmark = meta[0] if meta[0] is not None else now_ms
         inc = priority_increment(now_ms, landmark, det_interval)
-        sp = (F.coalesce(F.col("priority"), F.lit(0.0))
-              - F.lit(float(inc))).alias("_sp")
+        sp = scaled_priority(F.coalesce(F.col("priority"), F.lit(0.0)),
+                             inc).alias("_sp")
         hosted = (cache.filter(F.col("hosted"))
                   .select(*key_cols, sp)
                   .orderBy(F.col("_sp").desc(), *key_cols).toPandas())

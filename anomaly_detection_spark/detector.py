@@ -22,16 +22,23 @@ and the :func:`run_historical` piece loop — shares one helper per step:
 The joint paths skip the melt and the pivot: their kernels score the
 whole feature vector of an entity.
 
-The ticks add ``_admit`` (entity-cache admission), ``_with_presence``
-(which entities produced a bucket) and ``_swap_state_dir`` (the state
-rewrite) around their kernels.
+Both ticks are one private ``_tick``: the state read, ``_admit``
+(entity-cache admission), ``_with_presence`` (which entities produced
+a bucket), the cold-start training frame, one row kernel (fill, skip,
+replay, cold start, step) and ``_swap_state_dir`` (the state rewrite).
+A model kind supplies only what differs: the state keys, the melt or
+the feature vector, the state columns and replay payload, and the
+result tail.
 
-The scalar tick, the ``run_historical`` pieces and the streaming
-detector advance one shared model per (entity, feature),
-:class:`~anomaly_detection_spark.features.scoring.ScalarModel`
-(``fill`` imputes, ``step`` scores then ingests, through the
-``window_z`` formula preview's ``zscore_scorer`` uses); each kernel
-keeps only its I/O.
+The models live in :mod:`features.scoring`, with the same shape
+(built from a state row; ``fill`` imputes, ``step`` scores then
+ingests): the scalar tick, the ``run_historical`` pieces and the
+streaming detector advance one
+:class:`~anomaly_detection_spark.features.scoring.ScalarModel` per
+(entity, feature), through the ``window_z`` formula preview's
+``zscore_scorer`` uses; the joint tick advances one
+:class:`~anomaly_detection_spark.features.scoring.JointModel` per
+entity.  Each kernel keeps only its I/O.
 
 The model stand-in is the deterministic trailing-window z-score from
 :mod:`features.scoring` (RCF lives in a library the survey scopes
@@ -46,6 +53,7 @@ from __future__ import annotations
 import functools
 import operator
 import os
+import pickle
 import shutil
 from dataclasses import dataclass, field as dc_field, replace
 
@@ -55,7 +63,7 @@ from pyspark.sql import types as T
 from .index.storage import read_table
 
 from .features import feature_matrix, score_entities
-from .features.scoring import ScalarModel, has_value
+from .features.scoring import JointModel, ScalarModel, has_value
 from .functions.entity import with_entity
 from .query.planner import compile_filter
 from .sources import load_table
@@ -330,6 +338,16 @@ def _complete(feats: list[str]) -> F.Column:
                             [F.col(n).isNotNull() for n in feats])
 
 
+def _expected_cols(det: Detector, out: DataFrame,
+                   feats: list[str]) -> DataFrame:
+    """The rule margins' ``_exp_<f>`` columns from a joint model's
+    expected vector ``_exp`` (only when the detector has rules)."""
+    if det.suppression_rules:
+        for j, n in enumerate(feats):
+            out = out.withColumn(f"_exp_{n}", F.element_at("_exp", j + 1))
+    return out
+
+
 def _join_scores(scored: DataFrame, keys: list[str], feats: list[str],
                  det: Detector, onto: DataFrame | None = None,
                  cnt_col: str | None = None) -> DataFrame:
@@ -518,7 +536,6 @@ def preview(spark: SparkSession, det: Detector,
         # configure imputation for gappy entities).
         import numpy as np
         import pandas as pd
-        from pyspark.sql import types as T
 
         basej = base.filter(_complete(feats))
         # a joint scorer may also attribute each anomaly across the
@@ -528,55 +545,35 @@ def preview(spark: SparkSession, det: Detector,
         # (AnomalyResult.java:66-67,171; null when the point isn't
         # anomalous, ModelUtil.normalizeAttribution's null contract)
         ret_attr = getattr(scorer, "returns_attribution", False)
-        out_fields = list(basej.schema.fields) + [
-            *[T.StructField(f"_exp_{n}", T.DoubleType()) for n in feats],
-            *([T.StructField(f"_attr_{n}", T.DoubleType())
-               for n in feats] if ret_attr else []),
-            *([T.StructField("_rel", T.DoubleType()),
-               *[T.StructField(f"_past_{n}", T.DoubleType())
-                 for n in feats]] if ret_attr else []),
-            T.StructField("_z", T.DoubleType())]
-        out_schema = T.StructType(out_fields)
-
-        def fnj(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values("bucket_start").reset_index(drop=True)
-            V = pdf[feats].to_numpy(dtype=np.float64)
-            if ret_attr:
-                z, exps, attrs, rel, past = scorer(V)
-                for j, n in enumerate(feats):
-                    pdf[f"_attr_{n}"] = attrs[:, j]
-                    pdf[f"_past_{n}"] = past[:, j]
-                pdf["_rel"] = rel
-            else:
-                z, exps = scorer(V)
-            for j, n in enumerate(feats):
-                pdf[f"_exp_{n}"] = exps[:, j]
-            pdf["_z"] = z
-            out = pdf[~pdf["_z"].isna()]
-            return out[[f.name for f in out_fields]]
-
-        out = basej.groupBy(*gcols).applyInPandas(fnj, schema=out_schema)
-        out = out.withColumn("_cnt", F.count("_z").over(conf_w))
         if ret_attr:
             _check_attr_threshold(
                 getattr(scorer, "alert_threshold", None), det)
-            # normalize the per-feature NaN-sentinel columns to the
-            # null-sentinel arrays the shared ring builder expects
-            # (_rel as NaN must be nulled BEFORE the int cast — a raw
-            # cast would turn NaN into 0)
-            attr_present = ~F.isnan(F.col(f"_attr_{feats[0]}"))
-            out = (out
-                   .withColumn("_attr", F.when(attr_present, F.array(
-                       *[F.col(f"_attr_{n}") for n in feats])))
-                   .withColumn("_exp", F.array(
-                       *[F.col(f"_exp_{n}") for n in feats]))
-                   .withColumn("_rel", F.when(
-                       ~F.isnan("_rel"), F.col("_rel").cast("int")))
-                   .withColumn("_past", F.when(
-                       ~F.isnan(F.col(f"_past_{feats[0]}")), F.array(
-                           *[F.col(f"_past_{n}") for n in feats]))))
-        return _result_rows(det, out, feats, ["_z"], imputed,
-                            ring=ret_attr)
+        out_schema = T.StructType(basej.schema.fields + [
+            T.StructField("_z", T.DoubleType()),
+            T.StructField("_exp", T.ArrayType(T.DoubleType())),
+            *(_JointKind.ring_fields if ret_attr else [])])
+
+        def fnj(pdf: pd.DataFrame) -> pd.DataFrame:
+            pdf = pdf.sort_values("bucket_start").reset_index(drop=True)
+            z, exps, *ring = scorer(pdf[feats].to_numpy(dtype=np.float64))
+            pdf["_z"], pdf["_exp"] = z, list(exps)
+            if ret_attr:
+                # the scorer's NaN rows are the ring's null cells, in
+                # the joint tick's shape
+                attrs, rel, past = ring
+                pdf["_attr"] = [None if np.isnan(a[0]) else list(a)
+                                for a in attrs]
+                pdf["_rel"] = pd.array([None if np.isnan(r) else int(r)
+                                        for r in rel], dtype="Int32")
+                pdf["_past"] = [None if np.isnan(p[0]) else list(p)
+                                for p in past]
+            out = pdf[~pdf["_z"].isna()]
+            return out[[f.name for f in out_schema.fields]]
+
+        out = (basej.groupBy(*gcols).applyInPandas(fnj, schema=out_schema)
+               .withColumn("_cnt", F.count("_z").over(conf_w)))
+        return _result_rows(det, _expected_cols(det, out, feats), feats,
+                            ["_z"], imputed, ring=ret_attr)
     # Single-pass multi-feature scoring: melt features to rows, run ONE
     # applyInPandas over (entity, feature), pivot the scores back.  An
     # F-feature detector costs one FlatMapGroupsInPandas + one pivot
@@ -645,216 +642,340 @@ _TICK_COLS = [T.StructField("last_ms", T.LongType()),
               T.StructField("last_exp", T.DoubleType())]
 
 
+class _TickKind:
+    """What one model kind brings to :func:`_tick`: ``keys`` key a
+    state row, :meth:`shape` gives a frame's value column ``_v``,
+    ``state_fields`` follow the keys in the state table and
+    ``ring_fields`` follow ``_exp`` in the kernel's output.  Per batch,
+    :meth:`cells` gives each state row's model, ``fixed_values`` fill
+    and stored replay outputs (:meth:`replay` decodes them,
+    :meth:`pack` encodes a step's), and :meth:`columns` writes the
+    state back; :meth:`training` turns a cold-start series into steps
+    and :meth:`tail` shapes the scored rows."""
+
+    suffix = ""                  # of the state dir name
+    ring_fields: list = []
+
+    def __init__(self, det: Detector, factory):
+        self.det = det
+        self.factory = factory
+        self.feats = sorted(det.feature_specs)
+        self.gcols = self.keys = list(det.category_fields) or ["_g"]
+        self.fixed_vals = det.imputation_values or {}
+
+    @staticmethod
+    def replay(stored):
+        return stored
+
+    @staticmethod
+    def pack(res):
+        return res
+
+    def training(self, times, values):
+        return values
+
+
+class _ScalarKind(_TickKind):
+    """One :class:`ScalarModel` per (entity, feature), fed by the melt;
+    the replay payload is ``(last_z, last_exp)``, and the result tail
+    pivots the per-feature scores back (:func:`_join_scores`)."""
+
+    state_fields = [T.StructField("vals", T.ArrayType(T.DoubleType())),
+                    T.StructField("scored_cnt", T.LongType()),
+                    T.StructField("model", T.BinaryType()),
+                    T.StructField("last_v", T.DoubleType()),
+                    *_TICK_COLS]
+
+    def __init__(self, det: Detector, factory, eps: float):
+        super().__init__(det, factory)
+        self.eps = eps
+        self.keys = [*self.gcols, "_feat"]
+
+    def shape(self, frame: DataFrame, *cols) -> DataFrame:
+        return _melt(frame, self.feats, *cols)
+
+    def cells(self, pdf) -> tuple[list, list, list]:
+        return ([ScalarModel(self.det.shingle_size, self.eps, self.factory,
+                             *row)
+                 for row in zip(pdf["vals"], pdf["model"],
+                                pdf["scored_cnt"], pdf["last_v"])],
+                [self.fixed_vals.get(f) for f in pdf["_feat"]],
+                list(zip(pdf["last_z"], pdf["last_exp"])))
+
+    def training(self, times, values):
+        """Interior gaps linearly interpolated between present
+        neighboring samples (``ModelColdStart.java:346``)."""
+        import numpy as np
+
+        if len(times) < 2:
+            return values
+        times = np.asarray(times, dtype=np.float64)
+        grid = np.arange(times[0], times[-1] + self.det.interval_ms / 2,
+                         self.det.interval_ms)
+        return np.interp(grid, times, np.asarray(values, dtype=np.float64))
+
+    def columns(self, models, stored, res) -> dict:
+        return {"vals": [m.vals for m in models],
+                "scored_cnt": [m.scored_cnt for m in models],
+                "model": [m.model_bytes for m in models],
+                "last_v": [m.last_v for m in models],
+                "last_z": [z for z, _ in stored],
+                "last_exp": [e for _, e in stored]}
+
+    def tail(self, scored: DataFrame, base: DataFrame):
+        # an imputed entity has NO base row this interval: its feature
+        # values and _imp flags come from the update rows
+        out = _join_scores(scored, self.gcols, self.feats, self.det,
+                           onto=None if self.det.imputation_method
+                           else base, cnt_col="scored_cnt")
+        return (out, [f"_z_{n}" for n in self.feats],
+                [F.col(f"_imp_{n}") for n in self.feats], False)
+
+
+class _JointKind(_TickKind):
+    """One :class:`JointModel` per entity, fed by the complete-feature
+    vector (cold start too, with no interpolation: the model skips an
+    incomplete bucket live); the replay payload is the pickled
+    ``last_out``, and the result tail carries the attribution ring."""
+
+    suffix = "__joint"
+    state_fields = [T.StructField("scored_cnt", T.LongType()),
+                    T.StructField("last_ms", T.LongType()),
+                    T.StructField("model", T.BinaryType()),
+                    T.StructField("last_out", T.BinaryType()),
+                    T.StructField("last_vec", T.ArrayType(T.DoubleType()))]
+    ring_fields = [T.StructField("_attr", T.ArrayType(T.DoubleType())),
+                   T.StructField("_rel", T.IntegerType()),
+                   T.StructField("_past", T.ArrayType(T.DoubleType()))]
+
+    def shape(self, frame: DataFrame, *cols) -> DataFrame:
+        return frame.filter(_complete(self.feats)).select(
+            *cols, F.array(*[F.col(n).cast("double")
+                             for n in self.feats]).alias("_v"))
+
+    def cells(self, pdf) -> tuple[list, list, list]:
+        return ([JointModel(self.factory, len(self.feats), *row)
+                 for row in zip(pdf["model"], pdf["scored_cnt"],
+                                pdf["last_vec"])],
+                [[self.fixed_vals.get(f) for f in self.feats]] * len(pdf),
+                list(pdf["last_out"]))
+
+    @staticmethod
+    def replay(stored):
+        if not has_value(stored):
+            return None
+        o = pickle.loads(bytes(stored))
+        return o["z"], o["exp"], (o["attr"], o["rel"], o["past"])
+
+    @staticmethod
+    def pack(res):
+        import numpy as np
+
+        z, exp, (attr, rel, past) = res
+        # z pickles as a numpy float, as in the tables already written
+        return pickle.dumps({"z": np.float64(z), "exp": exp, "attr": attr,
+                             "rel": rel, "past": past})
+
+    def columns(self, models, stored, res) -> dict:
+        import pandas as pd
+
+        ring = [(None, None, None) if r is None else r[2] for r in res]
+        return {"scored_cnt": [m.scored_cnt for m in models],
+                "model": [m.model_bytes for m in models],
+                "last_out": stored,
+                "last_vec": [m.last_vec for m in models],
+                "_attr": [a for a, _, _ in ring],
+                "_rel": pd.array([r for _, r, _ in ring], dtype="Int32"),
+                "_past": [p for _, _, p in ring]}
+
+    def tail(self, scored: DataFrame, base: DataFrame):
+        scored = scored.withColumnRenamed("scored_cnt", "_cnt")
+        ring_in = ["_cnt", "_z", "_exp", "_attr", "_rel", "_past"]
+        if self.det.imputation_method:
+            # imputed entities have no base row — feature values come
+            # from the vector the model actually ingested
+            out = scored.select(*self.gcols, *ring_in, "_vu", "_imp")
+            for j, n in enumerate(self.feats):
+                out = out.withColumn(n, F.element_at("_vu", j + 1))
+        else:
+            out = base.join(scored.select(*self.gcols, *ring_in),
+                            self.gcols)
+        return (_expected_cols(self.det, out, self.feats), ["_z"],
+                [F.col("_imp")] * len(self.feats), True)
+
+
+def _tick(spark: SparkSession, det: Detector, now_ms: int, state_dir: str,
+          kind: _TickKind, cache_policy, cold_start_history) -> DataFrame:
+    """One realtime interval over the checkpointed models of ``kind``
+    (both public ticks): read the interval and the state table, admit
+    entities, run one row kernel over state ⋈ interval, rewrite the
+    state, then shape the scored rows.  Per state row the kernel fills
+    a missing value, skips (no value, or an out-of-order call),
+    replays an already-ingested interval, cold-starts a new key and
+    steps the model."""
+    import numpy as np
+    import pandas as pd
+
+    _check_imputation(det, realtime=True)
+    impute = det.imputation_method
+    start, end = _closed_interval(det, now_ms)
+    gcols, keys = kind.gcols, kind.keys
+
+    src = load_table(spark, det.indices)
+    base = _interval_frame(src, det, start, end)
+    cur = kind.shape(base, *gcols)
+    vtype = cur.schema["_v"].dataType      # a double, or the joint vector
+    spath = _state_path(state_dir, det.detector_id + kind.suffix)
+    state_fields = ([f for f in cur.schema.fields if f.name != "_v"]
+                    + kind.state_fields)
+    # an older state table reads the columns it lacks as null
+    state = read_table(spark, spath, T.StructType(state_fields))
+    state, cur = _admit(spark, det, state_dir, now_ms, cache_policy,
+                        state, cur, gcols)
+    # entity presence = a bucket ROW exists (before the joint kind's
+    # complete-vector filter): a partial bucket is present but skipped,
+    # like preview's joint path over an imputed-fill grid
+    joined = _with_presence(state.join(cur, keys, "full_outer"), base,
+                            gcols, impute)
+    if cold_start_history:
+        new_keys = (cur.select(*keys).distinct()
+                    .join(state.select(*keys).distinct(), keys,
+                          "left_anti"))
+        bh = _training_frame(src, det, new_keys.select(*gcols).distinct(),
+                             start, cold_start_history)
+        cs = (kind.shape(bh, *gcols, _bucket_ms().alias("_bms"))
+              .filter(F.col("_v").isNotNull())
+              .groupBy(*keys)
+              .agg(F.array_sort(F.collect_list(F.struct("_bms", "_v")))
+                   .alias("_p"))
+              .select(*keys, F.col("_p._bms").alias("_cs_ms"),
+                      F.col("_p._v").alias("_cs_v"))
+              .join(new_keys, keys, "left_semi"))
+        joined = joined.join(cs, keys, "left_outer")
+    else:
+        joined = (joined
+                  .withColumn("_cs_ms", F.lit(None).cast("array<long>"))
+                  .withColumn("_cs_v",
+                              F.lit(None).cast(T.ArrayType(vtype))))
+    upd_schema = T.StructType(
+        state_fields + [T.StructField("_z", T.DoubleType()),
+                        T.StructField("_exp", vtype), *kind.ring_fields,
+                        T.StructField("_vu", vtype),
+                        T.StructField("_imp", T.BooleanType())])
+
+    def kernel(batches):
+        for pdf in batches:
+            n = len(pdf)
+            lm = pdf["last_ms"].to_numpy(dtype=np.float64)  # NaN = never
+            absent = ~(pdf["_ent_present"] == True) \
+                .to_numpy(dtype=bool)      # noqa: E712 (None-safe)
+            models, fixed, stored = kind.cells(pdf)
+            values = list(pdf["_v"])
+            res: list = [None] * n
+            imputed = np.zeros(n, dtype=bool)
+            for i, (m, cs_ms, cs_v) in enumerate(zip(
+                    models, pdf["_cs_ms"], pdf["_cs_v"])):
+                if (impute and not has_value(values[i]) and absent[i]
+                        and not np.isnan(lm[i])):
+                    # synthesize the missing value BEFORE the replay /
+                    # ingest checks so it flows through them exactly
+                    # like an observed one — a replay recomputes the
+                    # same value (constants, or the carried last one)
+                    fv = m.fill(impute, fixed[i])
+                    if fv is not None:
+                        values[i], imputed[i] = fv, True
+                # no value, or an interval older than last_ms (an
+                # out-of-order call): no-op
+                if not has_value(values[i]) or lm[i] > start:
+                    continue
+                if lm[i] == start:
+                    # already-ingested interval → replay the stored
+                    # outputs, no ingest
+                    res[i] = kind.replay(stored[i])
+                    continue
+                if has_value(cs_v) and len(cs_v):
+                    # historical cold start: a key with no state row
+                    # steps through its trailing series first, so its
+                    # model equals a sequential run's
+                    for x in kind.training(cs_ms, cs_v):
+                        m.step(x)
+                res[i] = m.step(values[i])
+                stored[i], lm[i] = kind.pack(res[i]), start
+            out = pdf[keys].copy()
+            out["last_ms"] = pd.Series(lm).astype("Int64")
+            out["_z"] = [np.nan if r is None else r[0] for r in res]
+            out["_exp"] = [None if r is None else r[1] for r in res]
+            out["_vu"] = values
+            out["_imp"] = imputed
+            for name, col in kind.columns(models, stored, res).items():
+                out[name] = col
+            yield out[[f.name for f in upd_schema.fields]]
+
+    upd = joined.mapInPandas(kernel, schema=upd_schema)
+    # truncate lineage before swapping the state dir the plan reads from
+    upd = upd.localCheckpoint()
+    _swap_state_dir(upd, spath, [f.name for f in state_fields])
+    out, z_cols, imputed, ring = kind.tail(
+        upd.filter(F.col("_z").isNotNull()), base)
+    out = out.withColumn("bucket_start", F.timestamp_millis(F.lit(start)))
+    return _result_rows(det, out, kind.feats, z_cols, imputed, ring=ring)
+
+
 def run_once_stateful(spark: SparkSession, det: Detector, now_ms: int,
                       state_dir: str, eps: float = 1e-9,
                       scorer_factory=None, cache_policy=None,
                       cold_start_history: int | None = None) -> DataFrame:
-    """One realtime interval using checkpointed per-entity state.
-
-    Produces rows identical to :func:`preview`'s output at the same
-    bucket (same trailing-z model, same warm-up and confidence ramp,
-    same ``suppression_rules`` margins against the prior-window mean
-    or the stream's expected value) when called once per interval in
-    order — but reads only the new interval's raw events, not
-    ``history_intervals`` of history.
+    """One realtime interval using checkpointed per-(entity, feature)
+    state: reads only the new interval's raw events, and produces rows
+    identical to :func:`preview`'s at the same bucket (same trailing-z
+    model, warm-up, confidence ramp and ``suppression_rules`` margins)
+    when called once per interval in order.
 
     Idempotent per interval: the state rows carry the last-ingested
     bucket (``last_ms``), its score (``last_z``) and expected value
     (``last_exp``), so a retry of the same interval (scheduler
     re-fire, downstream write failure after the state swap) REPLAYS
-    the stored score and expected value without appending the value
-    into the shingle window again.  A call for an interval older
-    than ``last_ms`` is a no-op (no mutation, no rows).
+    them without ingesting the value again.  A call for an interval
+    older than ``last_ms`` is a no-op (no mutation, no rows).
 
-    ``scorer_factory`` (same protocol as :func:`run_historical`'s —
-    e.g. :func:`~anomaly_detection_spark.features.rcf_stream_factory`)
-    swaps the trailing-z window for a checkpointed streaming model:
-    the per-(entity, feature) serialized model rides in the state
-    table's ``model`` column and is restored/updated/re-serialized
-    each interval — the reference's realtime checkpoint round-trip
-    (``CheckpointDao``).  Replay semantics are identical (the model is
-    NOT updated twice for a retried interval).
+    ``scorer_factory`` (:func:`run_historical`'s protocol — e.g.
+    :func:`~anomaly_detection_spark.features.rcf_stream_factory`)
+    swaps the trailing-z window for a streaming model whose serialized
+    bytes ride the state table's ``model`` column, restored and
+    re-serialized each interval — the reference's realtime checkpoint
+    round-trip (``CheckpointDao``).
 
     ``cache_policy`` (a :class:`~anomaly_detection_spark.caching.
     CachePolicy`) bounds how many entities hold state rows — the
-    reference's HC PriorityCache (doorkeeper + decayed-frequency
-    priority + dedicated/shared budget with strict-greater
-    replacement, PriorityCache.java).  Entities the cache defers
-    (``cold``) produce no result and no state mutation this interval;
-    evicted entities lose their model rows and cold-start on
-    re-admission.  With no policy every entity is hosted (the
-    single-stream posture).
+    reference's HC PriorityCache (doorkeeper, decayed-frequency
+    priority, dedicated/shared budget with strict-greater
+    replacement).  Entities the cache defers produce no result and no
+    state mutation this interval; evicted entities lose their model
+    rows and cold-start on re-admission.  With no policy every entity
+    is hosted.
 
     ``imputation_method`` zero/fixed_values/previous imputes the
     CURRENT interval for entities that hold state but produced no
-    bucket row (the reference's realtime posture: the imputer fills
-    the model's missing data point, ``ImputationMethod.java``) —
-    rows carry ``feature_imputed`` flags like preview's; sequential
-    calls over a gappy span equal preview-with-imputation row-for-row
-    inside each entity's observed extent.  ``linear`` still raises
-    (it interpolates toward the NEXT sample, unobservable in
-    realtime); ``previous`` carries the last ingested value (the new
-    ``last_v`` state column; pre-upgrade state tables null-fill and
-    start carrying on their next interval).
+    bucket row (the reference's imputer fills the model's missing data
+    point, ``ImputationMethod.java``); rows carry ``feature_imputed``
+    like preview's, and sequential calls over a gappy span equal
+    preview-with-imputation inside each entity's observed extent.
+    ``previous`` carries the last ingested value (``last_v``);
+    ``linear`` raises, since it interpolates toward the NEXT sample.
 
-    ``cold_start_history`` enables the reference's historical
-    cold-start training (``ModelColdStart.java:340-418``,
-    ``ADColdStart.java:192``): an (entity, feature) with NO state row
-    trains on up to ``max(32, cold_start_history)`` trailing interval
-    features ending at the CURRENT bucket's start (training excludes
-    the scored interval, like the reference's ``endTimeMs =
-    dataStartTime``), with interior gaps linearly interpolated
-    between present neighboring samples — so a detector started over
-    existing data initializes in ONE call instead of waiting out the
-    warm-up in live intervals.  Training replays the exact live
-    recurrence, so a cold-started state equals the state a sequential
-    interval-by-interval run over the same history would have built.
-    The trailing scan is restricted to new entities by a broadcast
-    semi-join before aggregation (at steady state new entities per
-    interval are few).
+    ``cold_start_history`` enables the reference's historical cold
+    start (``ModelColdStart.java:340-418``, ``ADColdStart.java:192``):
+    a key with NO state row first trains on up to ``max(32,
+    cold_start_history)`` trailing intervals ending at the scored
+    bucket's start, interior gaps linearly interpolated, so a detector
+    started over existing data initializes in ONE call.  Training runs
+    the live recurrence, so the state equals a sequential run's; the
+    trailing scan is restricted to new entities by a broadcast
+    semi-join.
     """
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    _check_imputation(det, realtime=True)
-    impute = det.imputation_method
-    k = det.shingle_size
-    start, end = _closed_interval(det, now_ms)
-    gcols = list(det.category_fields) or ["_g"]
-    feats = sorted(det.feature_specs)
-
-    src = load_table(spark, det.indices)
-    base = _interval_frame(src, det, start, end)
-    cur = _melt(base, feats, *gcols)
-
-    spath = _state_path(state_dir, det.detector_id)
-    state_fields = ([f for f in cur.schema.fields if f.name != "_v"]
-                    + [T.StructField("vals", T.ArrayType(T.DoubleType())),
-                       T.StructField("scored_cnt", T.LongType()),
-                       T.StructField("model", T.BinaryType()),
-                       T.StructField("last_v", T.DoubleType())]
-                    + _TICK_COLS)
-    # older state reads last_ms / last_z / model / last_v / last_exp
-    # as null
-    state = read_table(spark, spath, T.StructType(state_fields))
-    state, cur = _admit(spark, det, state_dir, now_ms, cache_policy,
-                        state, cur, gcols)
-    joined = _with_presence(
-        state.join(cur, [*gcols, "_feat"], "full_outer"), cur, gcols,
-        impute)
-    if cold_start_history:
-        new_keys = (cur.select(*gcols, "_feat").distinct()
-                    .join(state.select(*gcols, "_feat").distinct(),
-                          [*gcols, "_feat"], "left_anti"))
-        bh = _training_frame(src, det, new_keys.select(*gcols).distinct(),
-                             start, cold_start_history)
-        cs = (_melt(bh, feats, *gcols, _bucket_ms().alias("_bms"))
-              .filter(F.col("_v").isNotNull())
-              .groupBy(*gcols, "_feat")
-              .agg(F.array_sort(F.collect_list(F.struct("_bms", "_v")))
-                   .alias("_p"))
-              .select(*gcols, "_feat",
-                      F.col("_p._bms").alias("_cs_ms"),
-                      F.col("_p._v").alias("_cs_v"))
-              .join(new_keys, [*gcols, "_feat"], "left_semi"))
-        joined = joined.join(cs, [*gcols, "_feat"], "left_outer")
-    else:
-        joined = (joined
-                  .withColumn("_cs_ms", F.lit(None).cast("array<long>"))
-                  .withColumn("_cs_v", F.lit(None).cast("array<double>")))
-    interval_ms = det.interval_ms
-    fixed_vals = dict(det.imputation_values or {})
-    upd_schema = T.StructType(list(state_fields)
-                              + [T.StructField("_z", T.DoubleType()),
-                                 T.StructField("_exp", T.DoubleType()),
-                                 T.StructField("_vu", T.DoubleType()),
-                                 T.StructField("_imp", T.BooleanType())])
-
-    def fn(batches):
-        for pdf in batches:
-            n = len(pdf)
-            v = pdf["_v"].to_numpy(dtype=np.float64)
-            lm = pdf["last_ms"].to_numpy(dtype=np.float64)  # NaN = never
-            lz = pdf["last_z"].to_numpy(dtype=np.float64)
-            lexp = pdf["last_exp"].to_numpy(dtype=np.float64)
-            absent = ~(pdf["_ent_present"] == True) \
-                .to_numpy(dtype=bool)      # noqa: E712 (None-safe)
-            z = np.full(n, np.nan)
-            # the model's expected value, for rule margins
-            exp = np.full(n, np.nan)
-            imputed = np.zeros(n, dtype=bool)
-            models = [ScalarModel(k, eps, scorer_factory, *cells)
-                      for cells in zip(pdf["vals"], pdf["model"],
-                                       pdf["scored_cnt"], pdf["last_v"])]
-            for i, (m, feat, cs_ms, cs_v) in enumerate(zip(
-                    models, pdf["_feat"], pdf["_cs_ms"], pdf["_cs_v"])):
-                if (impute and np.isnan(v[i]) and absent[i]
-                        and not np.isnan(lm[i])):
-                    # synthesize the missing value BEFORE the replay /
-                    # ingest checks so it flows through them exactly
-                    # like an observed one — a replay recomputes the
-                    # same value (constants, or the carried last_v)
-                    fv = m.fill(impute, fixed_vals.get(feat))
-                    if fv is not None:
-                        v[i], imputed[i] = fv, True
-                # no value, or an interval older than last_ms (an
-                # out-of-order call): no-op
-                if np.isnan(v[i]) or lm[i] > start:
-                    continue
-                if lm[i] == start:
-                    # already-ingested interval → replay the stored
-                    # outputs, no append
-                    z[i], exp[i] = lz[i], lexp[i]
-                    continue
-                if (has_value(cs_v) and len(cs_v) and not m.vals
-                        and m.model_bytes is None):
-                    # historical cold start: a row with no prior state
-                    # steps through the trailing series first, so its
-                    # state equals a sequential run's
-                    times = np.asarray(cs_ms, dtype=np.float64)
-                    values = np.asarray(cs_v, dtype=np.float64)
-                    if len(times) > 1:
-                        # interpolate interior gaps between present
-                        # neighboring samples (ModelColdStart.java:346)
-                        grid = np.arange(times[0],
-                                         times[-1] + interval_ms / 2,
-                                         interval_ms)
-                        values = np.interp(grid, times, values)
-                    for val in values:
-                        m.step(val)
-                z[i], exp[i] = m.step(v[i])
-                lm[i], lz[i], lexp[i] = start, z[i], exp[i]
-            out = pdf.drop(columns=["vals", "scored_cnt", "last_ms",
-                                    "last_z", "last_v", "last_exp", "_v",
-                                    "model", "_cs_ms", "_cs_v",
-                                    "_ent_present"]).copy()
-            out["vals"] = [m.vals for m in models]
-            out["scored_cnt"] = [m.scored_cnt for m in models]
-            out["last_ms"] = pd.Series(lm).astype("Int64")
-            out["last_z"] = lz
-            out["model"] = [m.model_bytes for m in models]
-            out["last_v"] = [m.last_v for m in models]
-            out["last_exp"] = lexp
-            out["_z"] = z
-            out["_exp"] = exp
-            out["_vu"] = v
-            out["_imp"] = imputed
-            yield out[[f.name for f in upd_schema.fields]]
-
-    upd = joined.mapInPandas(fn, schema=upd_schema)
-    # truncate lineage before swapping the state dir the plan reads from
-    upd = upd.localCheckpoint()
-    _swap_state_dir(upd, spath, [f.name for f in state_fields])
-
-    scored = upd.filter(F.col("_z").isNotNull())
-    # an imputed entity has NO base row this interval: its feature
-    # values and _imp flags come from the update rows
-    out = _join_scores(scored, gcols, feats, det,
-                       onto=None if impute else base, cnt_col="scored_cnt")
-    out = out.withColumn("bucket_start", F.timestamp_millis(F.lit(start)))
-    return _result_rows(det, out, feats, [f"_z_{n}" for n in feats],
-                        [F.col(f"_imp_{n}") for n in feats])
+    return _tick(spark, det, now_ms, state_dir,
+                 _ScalarKind(det, scorer_factory, eps), cache_policy,
+                 cold_start_history)
 
 
 def run_once_stateful_joint(spark: SparkSession, det: Detector,
@@ -879,40 +1000,21 @@ def run_once_stateful_joint(spark: SparkSession, det: Detector,
     ``approx_anomaly_start_time``, ``past_values`` — for anomalous
     intervals (null at grade 0, like preview's joint path).
 
-    Same replay/idempotency contract as :func:`run_once_stateful`
-    (retried intervals replay the stored outputs without double-
-    ingesting; the serialized replay outputs ride the state table).
-    Buckets missing any feature are skipped, like preview's joint
-    path.  ``imputation_method`` zero/fixed_values/previous imputes the
-    WHOLE vector for stateful entities with no bucket row this
-    interval (``previous`` carries the last ingested vector via the
-    ``last_vec`` state column; partial buckets stay skipped, matching
-    preview's impute-then-complete-vector semantics; ``linear``
-    raises).  State lives under ``<detector_id>__joint`` so the two
-    stateful modes never read each other's schema.
-
-    ``cold_start_history`` trains a NEW entity's joint model on up to
-    ``max(32, N)`` trailing complete-feature buckets ending at the
-    scored bucket's start (the scalar path's historical cold start,
-    ``ModelColdStart.java:340-418``) — feeding the exact live
-    recurrence, so the cold-started model is byte-identical to a
-    sequential run's.  Unlike the scalar path no interior
-    interpolation happens: the joint path skips incomplete buckets
-    live, and cold start mirrors that.
-
-    ``cache_policy`` applies the same HC entity-cache admission as the
-    scalar path (:func:`run_once_stateful`) — the cache table is
-    shared per detector across both state layouts, like the
-    reference's one EntityCache per detector.
+    Replay, out-of-order calls, ``cache_policy`` and
+    ``cold_start_history`` behave as in :func:`run_once_stateful`,
+    per entity instead of per (entity, feature): a retried interval
+    replays the pickled outputs in ``last_out``, and the cache table
+    is shared per detector across both state layouts, like the
+    reference's one EntityCache per detector.  Buckets missing any
+    feature are skipped, like preview's joint path, so cold start
+    trains on the trailing complete-feature buckets with no
+    interpolation.  ``imputation_method`` zero/fixed_values/previous
+    imputes the WHOLE vector for stateful entities with no bucket row
+    this interval (``previous`` carries the last ingested vector via
+    the ``last_vec`` state column; partial buckets stay skipped;
+    ``linear`` raises).  State lives under ``<detector_id>__joint`` so
+    the two stateful modes never read each other's schema.
     """
-    import pickle
-
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
-    _check_imputation(det, realtime=True)
-    impute = det.imputation_method
     # scorer_factory is the JobStore.tick runner-seam spelling of the
     # same argument (tick calls run(..., scorer_factory=...)) — accept
     # either name so the joint path schedules like the scalar one
@@ -924,196 +1026,9 @@ def run_once_stateful_joint(spark: SparkSession, det: Detector,
                          "n_features=F))")
     _check_attr_threshold(
         getattr(stream_factory, "alert_threshold", None), det)
-    start, end = _closed_interval(det, now_ms)
-    gcols = list(det.category_fields) or ["_g"]
-    feats = sorted(det.feature_specs)
-    nf = len(feats)
-
-    def vector(frame: DataFrame, *cols) -> DataFrame:
-        """Complete-feature buckets as one double vector ``_vec``."""
-        return frame.filter(_complete(feats)).select(
-            *cols, F.array(*[F.col(n).cast("double")
-                             for n in feats]).alias("_vec"))
-
-    src = load_table(spark, det.indices)
-    base = _interval_frame(src, det, start, end)
-    cur = vector(base, *gcols)
-
-    spath = _state_path(state_dir, f"{det.detector_id}__joint")
-    state_fields = ([f for f in cur.schema.fields if f.name != "_vec"]
-                    + [T.StructField("scored_cnt", T.LongType()),
-                       T.StructField("last_ms", T.LongType()),
-                       T.StructField("model", T.BinaryType()),
-                       T.StructField("last_out", T.BinaryType()),
-                       T.StructField("last_vec",
-                                     T.ArrayType(T.DoubleType()))])
-    # pre-imputation tables read last_vec as null
-    state = read_table(spark, spath, T.StructType(state_fields))
-    state, cur = _admit(spark, det, state_dir, now_ms, cache_policy,
-                        state, cur, gcols)
-    # entity presence = a bucket ROW exists (pre-complete-vector
-    # filter): partial buckets are present-but-skipped, exactly like
-    # preview's joint path over an imputed-fill grid
-    joined = _with_presence(state.join(cur, gcols, "full_outer"), base,
-                            gcols, impute)
-    if cold_start_history:
-        new_ent = (cur.select(*gcols).distinct()
-                   .join(state.select(*gcols).distinct(), gcols,
-                         "left_anti"))
-        bh = _training_frame(src, det, new_ent, start, cold_start_history)
-        csj = (vector(bh, *gcols, _bucket_ms().alias("_bms"))
-               .groupBy(*gcols)
-               .agg(F.array_sort(F.collect_list(
-                   F.struct("_bms", "_vec"))).alias("_p"))
-               .select(*gcols, F.col("_p._vec").alias("_cs_vecs"))
-               .join(new_ent, gcols, "left_semi"))
-        joined = joined.join(csj, gcols, "left_outer")
-    else:
-        joined = joined.withColumn(
-            "_cs_vecs", F.lit(None).cast("array<array<double>>"))
-    fixed_vec = ([float((det.imputation_values or {})[f])
-                  for f in feats] if impute == "fixed_values" else None)
-    out_extra = [T.StructField("_z", T.DoubleType()),
-                 T.StructField("_exp", T.ArrayType(T.DoubleType())),
-                 T.StructField("_attr", T.ArrayType(T.DoubleType())),
-                 T.StructField("_rel", T.IntegerType()),
-                 T.StructField("_past", T.ArrayType(T.DoubleType())),
-                 T.StructField("_vu", T.ArrayType(T.DoubleType())),
-                 T.StructField("_imp", T.BooleanType())]
-    upd_schema = T.StructType(list(state_fields) + out_extra)
-
-    def fn(batches):
-        for pdf in batches:
-            n = len(pdf)
-            z = np.full(n, np.nan)
-            exps: list = [None] * n
-            attrs: list = [None] * n
-            rels: list = [None] * n
-            pasts: list = [None] * n
-            models = list(pdf["model"])
-            louts = list(pdf["last_out"])
-            lvecs = list(pdf["last_vec"])
-            lm = pdf["last_ms"].to_numpy(dtype=np.float64)
-            lm_orig = lm.copy()                  # pre-ingest snapshot
-            vecs = list(pdf["_vec"])
-            extra_cnt = np.zeros(n, dtype=np.int64)
-            imputed = np.zeros(n, dtype=bool)
-            if impute:
-                # synthesize the missing vector BEFORE the replay/
-                # ingest logic so it flows through the identical
-                # recurrence; replays recompute the same vector
-                # (zero/fixed constants; previous re-reads last_vec,
-                # which the imputed ingest itself carried forward)
-                ent_p = (pdf["_ent_present"] == True) \
-                    .to_numpy(dtype=bool)      # noqa: E712 (None-safe)
-                for i in range(n):
-                    if has_value(vecs[i]) or ent_p[i] or np.isnan(lm[i]):
-                        continue
-                    if impute == "zero":
-                        vecs[i] = [0.0] * nf
-                    elif impute == "fixed_values":
-                        vecs[i] = list(fixed_vec)
-                    elif has_value(lvecs[i]):          # previous
-                        vecs[i] = [float(x) for x in lvecs[i]]
-                    else:
-                        continue                 # nothing to carry yet
-                    imputed[i] = True
-
-            for i in range(n):
-                if not has_value(vecs[i]):
-                    continue
-                if lm[i] == float(start):            # replay, no ingest
-                    if has_value(louts[i]):
-                        o = pickle.loads(bytes(louts[i]))
-                        z[i] = o["z"]
-                        exps[i] = o["exp"]
-                        attrs[i] = o["attr"]
-                        rels[i] = o["rel"]
-                        pasts[i] = o["past"]
-                    continue
-                if lm[i] > float(start):             # out-of-order call
-                    continue
-                cvs = pdf["_cs_vecs"].iloc[i]
-                if (not has_value(models[i]) and has_value(cvs) and len(cvs)
-                        and np.isnan(lm_orig[i])):
-                    # historical cold start: train the fresh joint
-                    # model on the trailing complete-feature buckets
-                    # through the live recurrence
-                    cs_stream = stream_factory()
-                    for hv in cvs:
-                        zt, _ = cs_stream.update(
-                            float(hv[0]) if nf == 1
-                            else [float(x) for x in hv])
-                        if zt == zt:
-                            extra_cnt[i] += 1
-                    models[i] = cs_stream.to_bytes()
-                stream = (stream_factory() if not has_value(models[i])
-                          else stream_factory.restore(bytes(models[i])))
-                # an F=1 stream takes a scalar (RCFStream.update's
-                # univariate spelling), F>1 the vector
-                zi, ei = stream.update(
-                    float(vecs[i][0]) if nf == 1
-                    else [float(x) for x in vecs[i]])
-                z[i] = zi
-                if zi == zi:                          # scored (warm)
-                    exps[i] = ([float(x) for x in ei]
-                               if nf > 1 else [float(ei)])
-                attrs[i] = stream.last_attribution
-                rels[i] = stream.last_relative_index
-                pasts[i] = stream.last_past_values
-                models[i] = stream.to_bytes()
-                louts[i] = pickle.dumps(
-                    {"z": z[i], "exp": exps[i], "attr": attrs[i],
-                     "rel": rels[i], "past": pasts[i]})
-                lvecs[i] = [float(x) for x in vecs[i]]
-                lm[i] = float(start)
-            cnt = pdf["scored_cnt"].fillna(0).to_numpy(dtype=np.int64)
-            # count only fresh scores (replays already counted)
-            fresh = (~np.isnan(z)) & (np.isnan(lm_orig)
-                                      | (lm_orig != float(start)))
-            cnt = cnt + extra_cnt + fresh.astype(np.int64)
-            out = pdf.drop(columns=["_vec", "scored_cnt", "last_ms",
-                                    "model", "last_out", "last_vec",
-                                    "_cs_vecs", "_ent_present"],
-                           errors="ignore").copy()
-            out["scored_cnt"] = cnt
-            out["last_ms"] = pd.Series(lm).astype("Int64")
-            out["model"] = models
-            out["last_out"] = louts
-            out["last_vec"] = [lv if has_value(lv) else None for lv in lvecs]
-            out["_vu"] = [([float(x) for x in v] if has_value(v) else None)
-                          for v in vecs]
-            out["_imp"] = imputed
-            out["_z"] = z
-            out["_exp"] = exps
-            out["_attr"] = attrs
-            out["_rel"] = pd.array(
-                [r if r is not None else None for r in rels],
-                dtype="Int32")
-            out["_past"] = pasts
-            yield out[[f.name for f in upd_schema.fields]]
-
-    upd = joined.mapInPandas(fn, schema=upd_schema)
-    upd = upd.localCheckpoint()
-    _swap_state_dir(upd, spath, [f.name for f in state_fields])
-
-    scored = (upd.filter(F.col("_z").isNotNull())
-              .withColumnRenamed("scored_cnt", "_cnt"))
-    ring_in = ["_cnt", "_z", "_exp", "_attr", "_rel", "_past"]
-    if impute:
-        # imputed entities have no base row — feature values come
-        # from the vector the model actually ingested
-        out = scored.select(*gcols, *ring_in, "_vu", "_imp")
-        for j, nm in enumerate(feats):
-            out = out.withColumn(nm, F.element_at("_vu", j + 1))
-    else:
-        out = base.join(scored.select(*gcols, *ring_in), gcols)
-    if det.suppression_rules:
-        for j, n in enumerate(feats):
-            out = out.withColumn(f"_exp_{n}", F.element_at("_exp", j + 1))
-    out = out.withColumn("bucket_start", F.timestamp_millis(F.lit(start)))
-    return _result_rows(det, out, feats, ["_z"], [F.col("_imp")] * nf,
-                        ring=True)
+    return _tick(spark, det, now_ms, state_dir,
+                 _JointKind(det, stream_factory), cache_policy,
+                 cold_start_history)
 
 
 #: the reference's checkpoint TTL (AnomalyDetectorSettings.java:213-218)
@@ -1249,7 +1164,6 @@ def run_historical(
     """
     import numpy as np
     import pandas as pd
-    from pyspark.sql import types as T
 
     _check_imputation(det, realtime=False)
     impute = det.imputation_method
@@ -1319,13 +1233,8 @@ def run_historical(
     gstruct = ([src.schema[c] for c in ent] if ent
                else [T.StructField("_g", T.StringType())])
     state_schema = T.StructType(
-        gstruct
-        + [T.StructField("_feat", T.StringType()),
-           T.StructField("vals", T.ArrayType(T.DoubleType())),
-           T.StructField("scored_cnt", T.LongType()),
-           T.StructField("model", T.BinaryType()),
-           T.StructField("last_v", T.DoubleType())]
-        + _TICK_COLS)
+        gstruct + [T.StructField("_feat", T.StringType())]
+        + _ScalarKind.state_fields)
     out_schema = T.StructType(
         gstruct
         + [T.StructField("_feat", T.StringType()),

@@ -13,6 +13,7 @@ from .rcf import (  # noqa: F401
     rcf_stream_factory,
 )
 from .scoring import (  # noqa: F401
+    JointModel,
     ScalarModel,
     score_entities,
     seasonal_zscore_scorer,

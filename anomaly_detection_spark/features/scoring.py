@@ -69,7 +69,31 @@ def has_value(x) -> bool:
     return x is not None and not (isinstance(x, float) and np.isnan(x))
 
 
-class ScalarModel:
+class _StreamModel:
+    """The checkpointed-stream half of a model: ``factory()`` builds a
+    fresh stream, ``factory.restore(bytes)`` revives a serialized one.
+    The stream is restored on first use, and its bytes pass through
+    untouched while it is never used."""
+
+    def __init__(self, factory, model):
+        self._factory = factory
+        self._stream = None
+        self._model = bytes(model) if has_value(model) else None
+
+    def _live(self):
+        if self._stream is None:
+            self._stream = (self._factory() if self._model is None
+                            else self._factory.restore(self._model))
+        return self._stream
+
+    @property
+    def model_bytes(self) -> bytes | None:
+        """The serialized stream (the restored bytes until stepped)."""
+        return (self._stream.to_bytes() if self._stream is not None
+                else self._model)
+
+
+class ScalarModel(_StreamModel):
     """One (entity, feature) model advanced one interval at a time —
     the recurrence the scalar tick, the historical pieces and the
     streaming detector all drive (the reference's ``ResultProcessor``
@@ -77,16 +101,13 @@ class ScalarModel:
     ``(vals, model bytes, scored count, last value)``, nulls reading
     as a fresh model.  The model is the prior-k window ``vals``, or,
     given a ``scorer_factory``, the stream restored on the first
-    :meth:`step` (its bytes pass through untouched when never
-    stepped)."""
+    :meth:`step`."""
 
     def __init__(self, k: int, eps: float = 1e-9, scorer_factory=None,
                  vals=None, model=None, scored_cnt=None, last_v=None):
+        super().__init__(scorer_factory, model)
         self.k = k
         self.eps = eps
-        self._factory = scorer_factory
-        self._stream = None
-        self._model = bytes(model) if has_value(model) else None
         self.vals = list(vals) if has_value(vals) else []
         self.scored_cnt = int(scored_cnt) if has_value(scored_cnt) else 0
         # the carry: the last ingested value, else the window's last
@@ -108,10 +129,7 @@ class ScalarModel:
         ``(z, expected)`` (NaN until the model is warm)."""
         v = float(v)
         if self._factory is not None:
-            if self._stream is None:
-                self._stream = (self._factory() if self._model is None
-                                else self._factory.restore(self._model))
-            z, exp = self._stream.update(v)
+            z, exp = self._live().update(v)
         else:
             z = exp = np.nan
             if len(self.vals) == self.k:
@@ -124,11 +142,56 @@ class ScalarModel:
         self.last_v = v
         return z, exp
 
-    @property
-    def model_bytes(self) -> bytes | None:
-        """The serialized stream (the restored bytes until stepped)."""
-        return (self._stream.to_bytes() if self._stream is not None
-                else self._model)
+
+class JointModel(_StreamModel):
+    """One entity's model over its whole feature vector, advanced one
+    interval at a time — the joint tick's counterpart of
+    :class:`ScalarModel`, and the reference's model shape (one
+    ThresholdedRandomCutForest per entity, ``ADModelManager``).  Built
+    from a joint state row's ``(model bytes, scored count, last
+    vector)``, nulls reading as a fresh model, plus the stream factory
+    (e.g. ``rcf_stream_factory(n_features=F)``) and the feature count
+    ``F``."""
+
+    def __init__(self, stream_factory, n_features: int, model=None,
+                 scored_cnt=None, last_vec=None):
+        super().__init__(stream_factory, model)
+        self.n_features = n_features
+        self.scored_cnt = int(scored_cnt) if has_value(scored_cnt) else 0
+        # the carry: the last ingested vector
+        self.last_vec = last_vec if has_value(last_vec) else None
+
+    def fill(self, method: str, fixed_vec=None) -> list[float] | None:
+        """The imputed vector of a missing interval: zeros,
+        ``fixed_vec``, or (``previous``) the carry — None when there is
+        none yet."""
+        if method == "zero":
+            return [0.0] * self.n_features
+        if method == "fixed_values":
+            return [float(x) for x in fixed_vec]
+        return (None if self.last_vec is None
+                else [float(x) for x in self.last_vec])
+
+    def step(self, vec) -> tuple[float, list[float] | None, tuple]:
+        """Score ``vec`` against the prior state, then ingest it; returns
+        ``(z, expected, ring)``: ``z`` is NaN until the model is warm,
+        ``expected`` the per-feature expected vector once ``z`` is not
+        NaN (None before), and ``ring`` the stream's ``(attribution,
+        relative index, past values)``.  An F=1 stream takes a scalar
+        (``RCFStream.update``'s univariate spelling)."""
+        vec = [float(x) for x in vec]
+        stream = self._live()
+        z, exp = stream.update(vec[0] if self.n_features == 1 else vec)
+        if z == z:
+            self.scored_cnt += 1
+            exp = ([float(x) for x in exp] if self.n_features > 1
+                   else [float(exp)])
+        else:
+            exp = None
+        self.last_vec = vec
+        return z, exp, (stream.last_attribution,
+                        stream.last_relative_index,
+                        stream.last_past_values)
 
 
 def seasonal_zscore_scorer(

@@ -11,7 +11,10 @@ and the ``intervals`` query share one algebra of position windows:
 - ``span_near`` (clauses, ``slop``, ``in_order``) matches a doc iff
   one sub-span per clause can be chosen, pairwise non-overlapping and
   clause-ordered when ``in_order``, whose enclosing window has
-  total gap ``(window_len − Σ sub-span lengths) ≤ slop``;
+  total gap ``(window_len − Σ sub-span lengths) ≤ slop``.  Unordered,
+  EVERY pair of clauses needs distinct positions, whether their
+  position lists are equal, overlapping or disjoint: one ``a`` cannot
+  serve both ``span_or(a, b)`` and ``span_term a``;
 - ``span_first`` restricts the inner span to end at position
   ``≤ end`` (span end is exclusive, Lucene convention);
 - the compounds are set algebra over those enumerations.
@@ -32,15 +35,15 @@ the tree terms' postings).
 
 Algorithms: ordered near is a greedy nearest-successor chain from
 each first-clause occurrence (greedy minimizes the window per start,
-so existence is decided exactly); unordered near is the classic
-minimal covering window over the merged position stream with
-per-clause multiplicities (duplicate clauses need as many distinct
-positions).
+so existence is decided exactly); unordered near emits every window
+within the slop that an assignment of distinct positions, one per
+clause, spans exactly — an assignment check (a bipartite matching of
+clauses to positions) inside each window.
 """
 
 from __future__ import annotations
 
-from bisect import bisect_right
+from bisect import bisect_left, bisect_right
 
 import numpy as np
 import pandas as pd
@@ -324,6 +327,31 @@ def _dedup_sorted(sp: np.ndarray) -> np.ndarray:
     return sp[keep]
 
 
+def _clauses_at(starts: list[list[int]], p: int) -> list[int]:
+    """The clauses whose ascending ``starts`` hold position ``p``."""
+    return [ci for ci, ps in enumerate(starts)
+            if (i := bisect_left(ps, p)) < len(ps) and ps[i] == p]
+
+
+def _assignable(starts: list[list[int]], lo: int, hi: int) -> bool:
+    """Whether every clause can take a DISTINCT position of its own
+    ascending ``starts`` inside ``[lo, hi]`` — a bipartite matching
+    of clauses to positions by augmenting paths."""
+    cands = [ps[bisect_left(ps, lo):bisect_right(ps, hi)] for ps in starts]
+    owner: dict[int, int] = {}
+
+    def place(ci: int, seen: set) -> bool:
+        for x in cands[ci]:
+            if x not in seen:
+                seen.add(x)
+                if x not in owner or place(owner[x], seen):
+                    owner[x] = ci
+                    return True
+        return False
+
+    return all(place(ci, set()) for ci in range(len(cands)))
+
+
 def enum_spans(positions: dict[str, np.ndarray], node: dict) -> np.ndarray:
     """All spans (rows of [start, end), end exclusive) the node
     enumerates over one doc's term→positions map — sorted, deduped."""
@@ -364,34 +392,21 @@ def enum_spans(positions: dict[str, np.ndarray], node: dict) -> np.ndarray:
                 if (prev - p1 + 1) - m <= slop:
                     out.append((p1, prev + 1))
         else:
-            # minimal covering windows over the merged stream, one
-            # position per clause, emitting every qualifying window;
-            # duplicate clauses (same positions list) need distinct
-            # positions: group identical clauses into multiplicity
-            uniq_cls: dict[tuple, int] = {}
-            cl_of = [uniq_cls.setdefault(tuple(ps), len(uniq_cls))
-                     for ps in starts]
-            req = [0] * len(uniq_cls)
-            for c in cl_of:
-                req[c] += 1
-            events = sorted({(p, cl_of[ci])
-                             for ci, ps in enumerate(starts) for p in ps})
-            cnt = [0] * len(uniq_cls)
-            have = lo = 0
-            for p, t in events:
-                cnt[t] += 1
-                if cnt[t] <= req[t]:
-                    have += 1
-                while have == m:
-                    p0, t0 = events[lo]
-                    if cnt[t0] > req[t0]:
-                        cnt[t0] -= 1
-                        lo += 1
-                        continue
-                    if (p - p0 + 1) - m <= slop \
-                            and (not out or out[-1] != (p0, p + 1)):
-                        out.append((p0, p + 1))
-                    break
+            # every window [s, p] that some assignment of DISTINCT
+            # positions, one per clause, spans exactly: clause ci at s,
+            # clause cj at p (another one unless s == p), the rest
+            # strictly inside
+            merged = sorted(set().union(*starts))
+            for i, s in enumerate(merged):
+                for p in merged[i:]:
+                    if (p - s + 1) - m > slop:
+                        break
+                    if any(_assignable([ps for c, ps in enumerate(starts)
+                                        if c not in (ci, cj)], s + 1, p - 1)
+                           for ci in _clauses_at(starts, s)
+                           for cj in _clauses_at(starts, p)
+                           if (cj != ci) == (p != s)):
+                        out.append((s, p + 1))
         # both scans emit windows in (start, end) order, so the rows
         # come out sorted and deduped
         return np.asarray(out, dtype=np.int64).reshape(-1, 2)

@@ -14,7 +14,12 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
-from anomaly_detection_spark.detector import Detector, run_once_stateful
+from anomaly_detection_spark.detector import (
+    Detector,
+    run_once_stateful,
+    run_once_stateful_joint,
+)
+from anomaly_detection_spark.features import rcf_stream_factory
 from anomaly_detection_spark.index import build_index
 from anomaly_detection_spark.query import IndexReader, bm25_topk_indexed
 from anomaly_detection_spark.query.index_search import (
@@ -28,6 +33,7 @@ BUDGET = {
     "search_match_msm": 7,
     "match_phrase": 4,
     "detector_tick": 13,
+    "detector_joint_tick": 9,
 }
 
 HOUR_MS = 3600_000
@@ -97,10 +103,10 @@ def tick_source(spark, tmp_path_factory):
     return path, int(base.value // 10**6)
 
 
-def test_detector_tick_job_budget(spark, tick_source, tmp_path):
-    """A steady-state scalar ``run_once_stateful`` tick (every shingle
-    window full, so every entity scores) collected like perfbench's
-    ``serve`` ticks."""
+def _tick_jobs(spark, tick_source, state_dir, name, run) -> int:
+    """Jobs of the 6th hourly tick ``run(det, now_ms, state_dir)`` on the
+    two-entity, two-feature fixture (shingle 3), after five warm-up
+    ticks; the tick must score both entities."""
     path, t0 = tick_source
     det = Detector(
         detector_id="budget", indices=path,
@@ -108,16 +114,40 @@ def test_detector_tick_job_budget(spark, tick_source, tmp_path):
                        "v": {"avg": {"field": "value"}}},
         time_field="ts", interval_ms=HOUR_MS, category_fields=("service",),
         shingle_size=3)
-    state_dir = str(tmp_path / "state")
 
     def tick(h):
         now_ms = t0 + (h + 1) * HOUR_MS + 60_000
-        return run_once_stateful(spark, det, now_ms, state_dir).collect()
+        return run(det, now_ms, state_dir).collect()
 
-    for h in range(5):        # ticks from the 4th on score
+    for h in range(5):
         tick(h)
     rows = []
-    got = _count_jobs(spark, "detector_tick", lambda: rows.extend(tick(5)))
+    got = _count_jobs(spark, name, lambda: rows.extend(tick(5)))
     assert len(rows) == 2
+    return got
+
+
+def test_detector_tick_job_budget(spark, tick_source, tmp_path):
+    """A steady-state scalar ``run_once_stateful`` tick (every shingle
+    window full, so every entity scores) collected like perfbench's
+    ``serve`` ticks."""
+    got = _tick_jobs(spark, tick_source, str(tmp_path / "state"),
+                     "detector_tick",
+                     lambda det, now_ms, sd: run_once_stateful(
+                         spark, det, now_ms, sd))
     assert got <= BUDGET["detector_tick"], (
         f"detector tick ran {got} jobs, budget {BUDGET['detector_tick']}")
+
+
+def test_detector_joint_tick_job_budget(spark, tick_source, tmp_path):
+    """The same steady-state tick through ``run_once_stateful_joint``
+    with a small two-feature RCF stream (warm from the 4th tick)."""
+    factory = rcf_stream_factory(n_features=2, shingle=2, n_trees=5,
+                                 sample_size=16, min_samples=2)
+    got = _tick_jobs(spark, tick_source, str(tmp_path / "state"),
+                     "detector_joint_tick",
+                     lambda det, now_ms, sd: run_once_stateful_joint(
+                         spark, det, now_ms, sd, stream_factory=factory))
+    assert got <= BUDGET["detector_joint_tick"], (
+        f"joint tick ran {got} jobs, "
+        f"budget {BUDGET['detector_joint_tick']}")

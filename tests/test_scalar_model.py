@@ -1,11 +1,19 @@
-"""The scalar model every stateful path drives (no Spark): one ``step``
-at a time reproduces the vectorized preview scorer bit for bit, and
-``fill`` imputes a missing interval per method."""
+"""The models the stateful paths drive (no Spark): one ``step`` at a
+time reproduces the vectorized preview scorer bit for bit (the scalar
+window against ``zscore_scorer``, the joint stream against
+``rcf_scorer_joint``), and ``fill`` imputes a missing interval per
+method."""
 
 import numpy as np
 import pytest
 
-from anomaly_detection_spark.features import ScalarModel, zscore_scorer
+from anomaly_detection_spark.features import (
+    JointModel,
+    ScalarModel,
+    rcf_scorer_joint,
+    rcf_stream_factory,
+    zscore_scorer,
+)
 
 
 def test_step_equals_zscore_scorer_bitwise():
@@ -83,3 +91,58 @@ def test_untouched_stream_keeps_its_bytes():
                        scored_cnt=3)
     assert warm.step(2.0) == (2.0, 2.0)
     assert warm.model_bytes == b"6" and warm.scored_cnt == 4
+
+
+def test_joint_step_equals_rcf_scorer_joint():
+    conf = dict(shingle=4, n_trees=10, sample_size=32, min_samples=8,
+                seed=3)
+    rng = np.random.default_rng(11)
+    series = rng.normal([100.0, 5.0], [10.0, 1.0], size=(120, 2))
+    series[[70, 100], 0] += 300.0                   # spikes
+    series[90, 1] += 40.0
+    z, exp, attr, rel, past = rcf_scorer_joint(2, **conf)(series)
+    factory = rcf_stream_factory(n_features=2, **conf)
+
+    def steps(model, rows):
+        return [model.step(v) for v in rows]
+
+    whole = JointModel(factory, 2)
+    got_whole = steps(whole, series)
+    # rebuilt from its state row halfway, the model continues the same
+    # sequence
+    half = JointModel(factory, 2)
+    got_half = steps(half, series[:60])
+    rebuilt = JointModel(factory, 2, model=half.model_bytes,
+                         scored_cnt=half.scored_cnt, last_vec=half.last_vec)
+    got_half += steps(rebuilt, series[60:])
+
+    warm = ~np.isnan(z)
+    assert (~np.isnan(attr[:, 0])).any()           # some point attributed
+    for got, model in ((got_whole, whole), (got_half, rebuilt)):
+        gz = np.array([g[0] for g in got])
+        assert np.array_equal(np.isnan(gz), ~warm)
+        assert gz[warm].tobytes() == z[warm].tobytes()
+        for i, (_, e, (a, r, p)) in enumerate(got):
+            assert e == (list(exp[i]) if warm[i] else None)
+            if np.isnan(attr[i, 0]):
+                assert a is None and r is None
+            else:
+                assert a == list(attr[i]) and r == rel[i]
+            assert (p is None if np.isnan(past[i, 0])
+                    else p == list(past[i]))
+        assert model.scored_cnt == int(warm.sum())
+        assert model.last_vec == list(series[-1])
+
+
+@pytest.mark.parametrize("method,fixed,last_vec,want", [
+    ("zero", None, None, [0.0, 0.0]),
+    ("zero", None, [4.0, 5.0], [0.0, 0.0]),
+    ("fixed_values", [7.5, 1.0], None, [7.5, 1.0]),
+    ("fixed_values", [7.5, 1.0], [4.0, 5.0], [7.5, 1.0]),
+    ("previous", None, None, None),                # nothing to carry
+    ("previous", None, float("nan"), None),        # a null state cell
+    ("previous", None, np.array([4.0, 5.0]), [4.0, 5.0]),
+])
+def test_joint_fill(method, fixed, last_vec, want):
+    m = JointModel(None, 2, last_vec=last_vec)
+    assert m.fill(method, fixed) == want
