@@ -27,12 +27,14 @@ Both ticks are one private ``_tick``: the state read, ``_admit``
 a bucket), the cold-start training frame, one row kernel (fill, skip,
 replay, cold start, step) and ``_swap_state_dir`` (the state rewrite).
 A model kind supplies only what differs: the state keys, the melt or
-the feature vector, the state columns and replay payload, and the
-result tail.
+the feature vector, the state schema, the model it rebuilds from a
+state row, and the result tail.
 
 The models live in :mod:`features.scoring`, with the same shape
-(built from a state row; ``fill`` imputes, ``step`` scores then
-ingests): the scalar tick, the ``run_historical`` pieces and the
+(built from a state row's columns, ``state()`` gives them back;
+``fill`` imputes, ``step`` scores then ingests, ``replay`` gives the
+last step's outputs again): the scalar tick, the ``run_historical``
+pieces and the
 streaming detector advance one
 :class:`~anomaly_detection_spark.features.scoring.ScalarModel` per
 (entity, feature), through the ``window_z`` formula preview's
@@ -53,16 +55,19 @@ from __future__ import annotations
 import functools
 import operator
 import os
-import pickle
 import shutil
 from dataclasses import dataclass, field as dc_field, replace
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 from .index.storage import read_table
 
-from .features import feature_matrix, score_entities
+from .features import (feature_matrix, impute_fill, impute_linear,
+                       score_entities, zscore_scorer)
 from .features.scoring import JointModel, ScalarModel, has_value
 from .functions.entity import with_entity
 from .query.planner import compile_filter
@@ -494,10 +499,6 @@ def preview(spark: SparkSession, det: Detector,
     result-shaped rows; intervals inside the model's warm-up window
     (``shingle_size`` points) are omitted, like the reference's
     cold-start."""
-    from pyspark.sql.window import Window
-
-    from .features import zscore_scorer
-
     # detection scores a point against history that EXCLUDES it
     scorer = scorer or zscore_scorer(det.shingle_size,
                                      include_current=False)
@@ -509,8 +510,6 @@ def preview(spark: SparkSession, det: Detector,
         # densify + fill missing buckets per the configured
         # ImputationMethod before scoring (the reference imputes the
         # feature series ahead of the model, FeatureManager.java:459-466)
-        from .features import impute_fill, impute_linear
-
         if det.imputation_method == "linear":
             base = impute_linear(base, det.interval_ms, feats,
                                  entity_cols=tuple(gcols))
@@ -534,9 +533,6 @@ def preview(spark: SparkSession, det: Detector,
         # plus per-feature expected values.  Buckets missing any
         # feature are skipped (the joint model needs the full vector;
         # configure imputation for gappy entities).
-        import numpy as np
-        import pandas as pd
-
         basej = base.filter(_complete(feats))
         # a joint scorer may also attribute each anomaly across the
         # feature vector (returns_attribution — e.g. rcf_scorer_joint's
@@ -634,24 +630,15 @@ def run_once(spark: SparkSession, det: Detector, now_ms: int,
 # delete_by_query; on a real cluster this is an Iceberg MERGE INTO).
 
 
-# a scalar state row's replay columns: the last ingested bucket, its
-# score and its expected value (the tick replays them for a retried
-# interval; run_historical publishes them for its last pieces)
-_TICK_COLS = [T.StructField("last_ms", T.LongType()),
-              T.StructField("last_z", T.DoubleType()),
-              T.StructField("last_exp", T.DoubleType())]
-
-
 class _TickKind:
     """What one model kind brings to :func:`_tick`: ``keys`` key a
     state row, :meth:`shape` gives a frame's value column ``_v``,
-    ``state_fields`` follow the keys in the state table and
-    ``ring_fields`` follow ``_exp`` in the kernel's output.  Per batch,
-    :meth:`cells` gives each state row's model, ``fixed_values`` fill
-    and stored replay outputs (:meth:`replay` decodes them,
-    :meth:`pack` encodes a step's), and :meth:`columns` writes the
-    state back; :meth:`training` turns a cold-start series into steps
-    and :meth:`tail` shapes the scored rows."""
+    ``state_fields`` follow the keys in the state table (``last_ms``
+    and the model's own row, which :meth:`model` rebuilds and the
+    model's ``state()`` gives back), ``ring_fields`` follow ``_exp`` in
+    the kernel's output, :meth:`fixed` gives each row's
+    ``fixed_values`` fill, :meth:`training` turns a cold-start series
+    into steps and :meth:`tail` shapes the scored rows."""
 
     suffix = ""                  # of the state dir name
     ring_fields: list = []
@@ -663,14 +650,6 @@ class _TickKind:
         self.gcols = self.keys = list(det.category_fields) or ["_g"]
         self.fixed_vals = det.imputation_values or {}
 
-    @staticmethod
-    def replay(stored):
-        return stored
-
-    @staticmethod
-    def pack(res):
-        return res
-
     def training(self, times, values):
         return values
 
@@ -680,11 +659,15 @@ class _ScalarKind(_TickKind):
     the replay payload is ``(last_z, last_exp)``, and the result tail
     pivots the per-feature scores back (:func:`_join_scores`)."""
 
+    # run_historical's state schema too: it publishes last_ms and the
+    # replay columns for its last pieces
     state_fields = [T.StructField("vals", T.ArrayType(T.DoubleType())),
                     T.StructField("scored_cnt", T.LongType()),
                     T.StructField("model", T.BinaryType()),
                     T.StructField("last_v", T.DoubleType()),
-                    *_TICK_COLS]
+                    T.StructField("last_ms", T.LongType()),
+                    T.StructField("last_z", T.DoubleType()),
+                    T.StructField("last_exp", T.DoubleType())]
 
     def __init__(self, det: Detector, factory, eps: float):
         super().__init__(det, factory)
@@ -694,33 +677,22 @@ class _ScalarKind(_TickKind):
     def shape(self, frame: DataFrame, *cols) -> DataFrame:
         return _melt(frame, self.feats, *cols)
 
-    def cells(self, pdf) -> tuple[list, list, list]:
-        return ([ScalarModel(self.det.shingle_size, self.eps, self.factory,
-                             *row)
-                 for row in zip(pdf["vals"], pdf["model"],
-                                pdf["scored_cnt"], pdf["last_v"])],
-                [self.fixed_vals.get(f) for f in pdf["_feat"]],
-                list(zip(pdf["last_z"], pdf["last_exp"])))
+    def model(self, **row) -> ScalarModel:
+        return ScalarModel(self.det.shingle_size, self.eps, self.factory,
+                           **row)
+
+    def fixed(self, pdf) -> list:
+        return [self.fixed_vals.get(f) for f in pdf["_feat"]]
 
     def training(self, times, values):
         """Interior gaps linearly interpolated between present
         neighboring samples (``ModelColdStart.java:346``)."""
-        import numpy as np
-
         if len(times) < 2:
             return values
         times = np.asarray(times, dtype=np.float64)
         grid = np.arange(times[0], times[-1] + self.det.interval_ms / 2,
                          self.det.interval_ms)
         return np.interp(grid, times, np.asarray(values, dtype=np.float64))
-
-    def columns(self, models, stored, res) -> dict:
-        return {"vals": [m.vals for m in models],
-                "scored_cnt": [m.scored_cnt for m in models],
-                "model": [m.model_bytes for m in models],
-                "last_v": [m.last_v for m in models],
-                "last_z": [z for z, _ in stored],
-                "last_exp": [e for _, e in stored]}
 
     def tail(self, scored: DataFrame, base: DataFrame):
         # an imputed entity has NO base row this interval: its feature
@@ -753,40 +725,11 @@ class _JointKind(_TickKind):
             *cols, F.array(*[F.col(n).cast("double")
                              for n in self.feats]).alias("_v"))
 
-    def cells(self, pdf) -> tuple[list, list, list]:
-        return ([JointModel(self.factory, len(self.feats), *row)
-                 for row in zip(pdf["model"], pdf["scored_cnt"],
-                                pdf["last_vec"])],
-                [[self.fixed_vals.get(f) for f in self.feats]] * len(pdf),
-                list(pdf["last_out"]))
+    def model(self, **row) -> JointModel:
+        return JointModel(self.factory, len(self.feats), **row)
 
-    @staticmethod
-    def replay(stored):
-        if not has_value(stored):
-            return None
-        o = pickle.loads(bytes(stored))
-        return o["z"], o["exp"], (o["attr"], o["rel"], o["past"])
-
-    @staticmethod
-    def pack(res):
-        import numpy as np
-
-        z, exp, (attr, rel, past) = res
-        # z pickles as a numpy float, as in the tables already written
-        return pickle.dumps({"z": np.float64(z), "exp": exp, "attr": attr,
-                             "rel": rel, "past": past})
-
-    def columns(self, models, stored, res) -> dict:
-        import pandas as pd
-
-        ring = [(None, None, None) if r is None else r[2] for r in res]
-        return {"scored_cnt": [m.scored_cnt for m in models],
-                "model": [m.model_bytes for m in models],
-                "last_out": stored,
-                "last_vec": [m.last_vec for m in models],
-                "_attr": [a for a, _, _ in ring],
-                "_rel": pd.array([r for _, r, _ in ring], dtype="Int32"),
-                "_past": [p for _, _, p in ring]}
+    def fixed(self, pdf) -> list:
+        return [[self.fixed_vals.get(f) for f in self.feats]] * len(pdf)
 
     def tail(self, scored: DataFrame, base: DataFrame):
         scored = scored.withColumnRenamed("scored_cnt", "_cnt")
@@ -813,9 +756,6 @@ def _tick(spark: SparkSession, det: Detector, now_ms: int, state_dir: str,
     a missing value, skips (no value, or an out-of-order call),
     replays an already-ingested interval, cold-starts a new key and
     steps the model."""
-    import numpy as np
-    import pandas as pd
-
     _check_imputation(det, realtime=True)
     impute = det.imputation_method
     start, end = _closed_interval(det, now_ms)
@@ -843,6 +783,8 @@ def _tick(spark: SparkSession, det: Detector, now_ms: int, state_dir: str,
                           "left_anti"))
         bh = _training_frame(src, det, new_keys.select(*gcols).distinct(),
                              start, cold_start_history)
+        # the bucket times order the series for both kinds; only the
+        # scalar kind's interpolation reads them back (_cs_ms)
         cs = (kind.shape(bh, *gcols, _bucket_ms().alias("_bms"))
               .filter(F.col("_v").isNotNull())
               .groupBy(*keys)
@@ -863,13 +805,18 @@ def _tick(spark: SparkSession, det: Detector, now_ms: int, state_dir: str,
                         T.StructField("_vu", vtype),
                         T.StructField("_imp", T.BooleanType())])
 
+    # the model's own state columns: all but the tick's last_ms
+    model_cols = [f.name for f in kind.state_fields if f.name != "last_ms"]
+
     def kernel(batches):
         for pdf in batches:
             n = len(pdf)
             lm = pdf["last_ms"].to_numpy(dtype=np.float64)  # NaN = never
             absent = ~(pdf["_ent_present"] == True) \
                 .to_numpy(dtype=bool)      # noqa: E712 (None-safe)
-            models, fixed, stored = kind.cells(pdf)
+            models = [kind.model(**dict(zip(model_cols, row)))
+                      for row in zip(*(pdf[c] for c in model_cols))]
+            fixed = kind.fixed(pdf)
             values = list(pdf["_v"])
             res: list = [None] * n
             imputed = np.zeros(n, dtype=bool)
@@ -891,7 +838,7 @@ def _tick(spark: SparkSession, det: Detector, now_ms: int, state_dir: str,
                 if lm[i] == start:
                     # already-ingested interval → replay the stored
                     # outputs, no ingest
-                    res[i] = kind.replay(stored[i])
+                    res[i] = m.replay()
                     continue
                 if has_value(cs_v) and len(cs_v):
                     # historical cold start: a key with no state row
@@ -899,16 +846,20 @@ def _tick(spark: SparkSession, det: Detector, now_ms: int, state_dir: str,
                     # model equals a sequential run's
                     for x in kind.training(cs_ms, cs_v):
                         m.step(x)
-                res[i] = m.step(values[i])
-                stored[i], lm[i] = kind.pack(res[i]), start
+                res[i], lm[i] = m.step(values[i]), start
             out = pdf[keys].copy()
             out["last_ms"] = pd.Series(lm).astype("Int64")
             out["_z"] = [np.nan if r is None else r[0] for r in res]
             out["_exp"] = [None if r is None else r[1] for r in res]
+            for j, f in enumerate(kind.ring_fields):
+                out[f.name] = pd.Series(
+                    [None if r is None else r[2][j] for r in res],
+                    dtype=object)
             out["_vu"] = values
             out["_imp"] = imputed
-            for name, col in kind.columns(models, stored, res).items():
-                out[name] = col
+            states = [m.state() for m in models]
+            for c in model_cols:
+                out[c] = [st[c] for st in states]
             yield out[[f.name for f in upd_schema.fields]]
 
     upd = joined.mapInPandas(kernel, schema=upd_schema)
@@ -1162,9 +1113,6 @@ def run_historical(
     n_pieces, snapshot_path)`` fires after piece ``p`` completes (or is
     skipped on resume) so a task store can record progress.
     """
-    import numpy as np
-    import pandas as pd
-
     _check_imputation(det, realtime=False)
     impute = det.imputation_method
     fixed_vals = dict(det.imputation_values or {})
@@ -1203,8 +1151,6 @@ def run_historical(
         # extended one present bucket each side suffice) is the
         # escape hatch if that profile ever bites; not done while the
         # fill table stays preview-identical by construction here.
-        from .features import impute_linear
-
         lin = impute_linear(_interval_frame(src, det, start_ms, end_ms),
                             det.interval_ms, feats, entity_cols=tuple(gcols))
         fills = (_melt(lin.filter(F.col("is_filled")), feats, *gcols,
@@ -1235,19 +1181,18 @@ def run_historical(
     state_schema = T.StructType(
         gstruct + [T.StructField("_feat", T.StringType())]
         + _ScalarKind.state_fields)
+    # a bucket row fills scored_cnt (the count after it) and the bucket
+    # columns; the trailing row (bucket_ms null) fills the state
     out_schema = T.StructType(
-        gstruct
-        + [T.StructField("_feat", T.StringType()),
-           T.StructField("bucket_ms", T.LongType()),
+        state_schema.fields
+        + [T.StructField("bucket_ms", T.LongType()),
            T.StructField("_z", T.DoubleType()),
            T.StructField("_exp", T.DoubleType()),
-           T.StructField("cnt_after", T.LongType()),
-           T.StructField("vals", T.ArrayType(T.DoubleType())),
-           T.StructField("model", T.BinaryType()),
-           T.StructField("last_v", T.DoubleType())]
-        + _TICK_COLS
-        + [T.StructField("_vu", T.DoubleType()),
+           T.StructField("_vu", T.DoubleType()),
            T.StructField("_imp", T.BooleanType())])
+    model_cols = [f.name for f in _ScalarKind.state_fields
+                  if f.name != "last_ms"]
+    blank = dict.fromkeys(out_schema.names)   # every column null
 
     def snap(p: int) -> str:
         return os.path.join(results_dir, f"_state_piece_{p}")
@@ -1296,15 +1241,11 @@ def run_historical(
         # cogroup the state row crosses the wire exactly once per key.
         def fn(key, lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
             r0 = rpdf.iloc[0] if len(rpdf) else {}
-            m = ScalarModel(k, eps, scorer_factory, r0.get("vals"),
-                            r0.get("model"), r0.get("scored_cnt"),
-                            r0.get("last_v"))
-            # the tick's replay columns: the last stepped bucket, its
-            # score and expected value (the input row's when no step
-            # runs in this piece)
-            lm = r0.get("last_ms")
-            last = [None if pd.isna(lm) else int(lm), r0.get("last_z"),
-                    r0.get("last_exp")]
+            m = ScalarModel(k, eps, scorer_factory,
+                            **{c: r0.get(c) for c in model_cols})
+            # the tick's last_ms: the last stepped bucket (the input
+            # row's when no step runs in this piece)
+            last_ms = r0.get("last_ms")
             rows = lpdf.sort_values("bucket_ms")
             # (bucket_ms, value, was_imputed) sequence: observed rows
             # as-is, or — under imputation — the entity-extent grid
@@ -1341,14 +1282,14 @@ def run_historical(
                 if v is not None and not pd.isna(v):
                     used = float(v)
                     z, exp = m.step(used)
-                    last = [bms, z, exp]
-                out.append([*key, bms, z, exp, m.scored_cnt, None, None,
-                            None, None, None, None, used, bool(was_imp)])
-            # trailing state row (bucket_ms null)
-            out.append([*key, None, None, None, m.scored_cnt, m.vals,
-                        m.model_bytes, m.last_v, *last, None, None])
-            return pd.DataFrame(
-                out, columns=[f.name for f in out_schema.fields])
+                    last_ms = bms
+                out.append({**blank, "bucket_ms": bms, "_z": z,
+                            "_exp": exp, "scored_cnt": m.scored_cnt,
+                            "_vu": used, "_imp": bool(was_imp)})
+            out.append({**blank, **m.state(), "last_ms": last_ms})
+            out = pd.DataFrame(out, columns=out_schema.names)
+            out[[*gcols, "_feat"]] = key
+            return out
 
         upd = (cur.groupBy(*gcols, "_feat")
                .cogroup(st.groupBy(*gcols, "_feat"))
@@ -1359,10 +1300,7 @@ def run_historical(
         # until every piece is done, so a crashed piece always re-runs
         # against the state it started from
         new_state = (upd.filter(F.col("bucket_ms").isNull())
-                     .select(*gcols, "_feat", "vals",
-                             F.col("cnt_after").alias("scored_cnt"),
-                             "model", "last_v",
-                             *[f.name for f in _TICK_COLS]))
+                     .select(*state_schema.names))
         new_state.write.mode("overwrite").parquet(snap(p))
 
         scored = upd.filter(F.col("_z").isNotNull())
@@ -1371,12 +1309,12 @@ def run_historical(
             # imputed buckets have no base row — feature values come
             # from what the model actually ingested
             out = (_join_scores(scored, keys, feats, det,
-                                cnt_col="cnt_after")
+                                cnt_col="scored_cnt")
                    .withColumn("bucket_start",
                                F.timestamp_millis(F.col("bucket_ms"))))
         else:
             out = _join_scores(
-                scored, keys, feats, det, cnt_col="cnt_after",
+                scored, keys, feats, det, cnt_col="scored_cnt",
                 onto=base.withColumn("bucket_ms", _bucket_ms()))
         (_result_rows(det, out, feats, [f"_z_{n}" for n in feats],
                       [F.col(f"_imp_{n}") for n in feats])

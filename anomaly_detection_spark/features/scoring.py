@@ -13,6 +13,7 @@ scorer (an actual RCF binding included) plugs into the same signature.
 
 from __future__ import annotations
 
+import pickle
 from typing import Callable
 
 import numpy as np
@@ -73,7 +74,10 @@ class _StreamModel:
     """The checkpointed-stream half of a model: ``factory()`` builds a
     fresh stream, ``factory.restore(bytes)`` revives a serialized one.
     The stream is restored on first use, and its bytes pass through
-    untouched while it is never used."""
+    untouched while it is never used.  A model is built from its state
+    row's columns (the constructor's keyword arguments) and
+    :meth:`state` gives them back; :meth:`replay` gives the outputs of
+    the last :meth:`step`, which a retried interval emits again."""
 
     def __init__(self, factory, model):
         self._factory = factory
@@ -104,7 +108,8 @@ class ScalarModel(_StreamModel):
     :meth:`step`."""
 
     def __init__(self, k: int, eps: float = 1e-9, scorer_factory=None,
-                 vals=None, model=None, scored_cnt=None, last_v=None):
+                 vals=None, model=None, scored_cnt=None, last_v=None,
+                 last_z=None, last_exp=None):
         super().__init__(scorer_factory, model)
         self.k = k
         self.eps = eps
@@ -113,6 +118,15 @@ class ScalarModel(_StreamModel):
         # the carry: the last ingested value, else the window's last
         self.last_v = (float(last_v) if has_value(last_v)
                        else float(self.vals[-1]) if self.vals else None)
+        self.last_out = (last_z, last_exp)
+
+    def state(self) -> dict:
+        return {"vals": self.vals, "model": self.model_bytes,
+                "scored_cnt": self.scored_cnt, "last_v": self.last_v,
+                "last_z": self.last_out[0], "last_exp": self.last_out[1]}
+
+    def replay(self) -> tuple:
+        return self.last_out
 
     def fill(self, method: str, fixed_value: float | None = None
              ) -> float | None:
@@ -140,6 +154,7 @@ class ScalarModel(_StreamModel):
         if z == z:
             self.scored_cnt += 1
         self.last_v = v
+        self.last_out = (z, exp)
         return z, exp
 
 
@@ -149,17 +164,29 @@ class JointModel(_StreamModel):
     :class:`ScalarModel`, and the reference's model shape (one
     ThresholdedRandomCutForest per entity, ``ADModelManager``).  Built
     from a joint state row's ``(model bytes, scored count, last
-    vector)``, nulls reading as a fresh model, plus the stream factory
-    (e.g. ``rcf_stream_factory(n_features=F)``) and the feature count
-    ``F``."""
+    vector, last outputs)``, nulls reading as a fresh model, plus the
+    stream factory (e.g. ``rcf_stream_factory(n_features=F)``) and the
+    feature count ``F``."""
 
     def __init__(self, stream_factory, n_features: int, model=None,
-                 scored_cnt=None, last_vec=None):
+                 scored_cnt=None, last_vec=None, last_out=None):
         super().__init__(stream_factory, model)
         self.n_features = n_features
         self.scored_cnt = int(scored_cnt) if has_value(scored_cnt) else 0
         # the carry: the last ingested vector
         self.last_vec = last_vec if has_value(last_vec) else None
+        # the last step's outputs, pickled
+        self.last_out = bytes(last_out) if has_value(last_out) else None
+
+    def state(self) -> dict:
+        return {"model": self.model_bytes, "scored_cnt": self.scored_cnt,
+                "last_vec": self.last_vec, "last_out": self.last_out}
+
+    def replay(self) -> tuple | None:
+        if self.last_out is None:
+            return None
+        o = pickle.loads(self.last_out)
+        return o["z"], o["exp"], (o["attr"], o["rel"], o["past"])
 
     def fill(self, method: str, fixed_vec=None) -> list[float] | None:
         """The imputed vector of a missing interval: zeros,
@@ -189,9 +216,13 @@ class JointModel(_StreamModel):
         else:
             exp = None
         self.last_vec = vec
-        return z, exp, (stream.last_attribution,
-                        stream.last_relative_index,
-                        stream.last_past_values)
+        ring = (stream.last_attribution, stream.last_relative_index,
+                stream.last_past_values)
+        # z pickles as a numpy float, as in the tables already written
+        self.last_out = pickle.dumps({"z": np.float64(z), "exp": exp,
+                                      "attr": ring[0], "rel": ring[1],
+                                      "past": ring[2]})
+        return z, exp, ring
 
 
 def seasonal_zscore_scorer(

@@ -35,10 +35,11 @@ the tree terms' postings).
 
 Algorithms: ordered near is a greedy nearest-successor chain from
 each first-clause occurrence (greedy minimizes the window per start,
-so existence is decided exactly); unordered near emits every window
-within the slop that an assignment of distinct positions, one per
-clause, spans exactly — an assignment check (a bipartite matching of
-clauses to positions) inside each window.
+so existence is decided exactly); unordered near is the classic
+minimal covering window over the merged position stream, one window
+per right end with its start pushed as far right as it goes, where
+"covering" is an assignment check (a bipartite matching of clauses
+to distinct positions) inside the window.
 """
 
 from __future__ import annotations
@@ -327,12 +328,6 @@ def _dedup_sorted(sp: np.ndarray) -> np.ndarray:
     return sp[keep]
 
 
-def _clauses_at(starts: list[list[int]], p: int) -> list[int]:
-    """The clauses whose ascending ``starts`` hold position ``p``."""
-    return [ci for ci, ps in enumerate(starts)
-            if (i := bisect_left(ps, p)) < len(ps) and ps[i] == p]
-
-
 def _assignable(starts: list[list[int]], lo: int, hi: int) -> bool:
     """Whether every clause can take a DISTINCT position of its own
     ascending ``starts`` inside ``[lo, hi]`` — a bipartite matching
@@ -392,21 +387,35 @@ def enum_spans(positions: dict[str, np.ndarray], node: dict) -> np.ndarray:
                 if (prev - p1 + 1) - m <= slop:
                     out.append((p1, prev + 1))
         else:
-            # every window [s, p] that some assignment of DISTINCT
-            # positions, one per clause, spans exactly: clause ci at s,
-            # clause cj at p (another one unless s == p), the rest
-            # strictly inside
-            merged = sorted(set().union(*starts))
-            for i, s in enumerate(merged):
-                for p in merged[i:]:
-                    if (p - s + 1) - m > slop:
-                        break
-                    if any(_assignable([ps for c, ps in enumerate(starts)
-                                        if c not in (ci, cj)], s + 1, p - 1)
-                           for ci in _clauses_at(starts, s)
-                           for cj in _clauses_at(starts, p)
-                           if (cj != ci) == (p != s)):
-                        out.append((s, p + 1))
+            # minimal covering windows over the merged stream: per
+            # right end p the rightmost start whose window gives every
+            # clause a DISTINCT position (the start never moves left as
+            # p grows).  Per-clause counts of window positions decide
+            # that when no position serves two clauses; else a
+            # matching over the window does
+            at: dict[int, list[int]] = {}
+            for ci, ps in enumerate(starts):
+                for x in ps:
+                    at.setdefault(x, []).append(ci)
+            merged = sorted(at)
+            shared = len(merged) < sum(map(len, starts))
+            cnt = [0] * m
+            have = lo = 0
+            for p in merged:
+                for ci in at[p]:
+                    have += cnt[ci] == 0
+                    cnt[ci] += 1
+                if have < m or (shared and not _assignable(
+                        starts, merged[lo], p)):
+                    continue
+                while all(cnt[ci] > 1 for ci in at[merged[lo]]) and (
+                        not shared
+                        or _assignable(starts, merged[lo + 1], p)):
+                    for ci in at[merged[lo]]:
+                        cnt[ci] -= 1
+                    lo += 1
+                if (p - merged[lo] + 1) - m <= slop:
+                    out.append((merged[lo], p + 1))
         # both scans emit windows in (start, end) order, so the rows
         # come out sorted and deduped
         return np.asarray(out, dtype=np.int64).reshape(-1, 2)

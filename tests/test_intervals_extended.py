@@ -159,3 +159,14 @@ def test_ifilter_enum_fuzz():
             want = {s for s in ss
                     if any(rel(s, f) for f in ff) != neg}
             assert got == want, (rule, toks, src, flt)
+
+
+def test_intervals_filter_sees_minimal_windows_only(spark):
+    # unordered "a b" over "a c a b" has one minimal window, [a@2, b@3];
+    # the wider [a@0 .. b@3] holds "c" but is not an interval of the
+    # source, so a containing filter must not match through it
+    df = spark.createDataFrame([(0, "a c a b"), (1, "a c b")],
+                               "docid long, text string")
+    q = {"intervals": {"text": {"match": {
+        "query": "a b", "filter": {"containing": {"match": {"query": "c"}}}}}}}
+    assert _ids(df, q) == [1]

@@ -35,11 +35,18 @@ def test_step_equals_zscore_scorer_bitwise():
     # same float sequence
     m1 = ScalarModel(k)
     for v in series[:100]:
-        m1.step(v)
+        last = m1.step(v)
     m2 = ScalarModel(k, vals=np.asarray(m1.vals), scored_cnt=m1.scored_cnt,
                      last_v=m1.last_v)
     tail = np.array([m2.step(v)[0] for v in series[100:]])
     assert tail.tobytes() == want[100:].tobytes()
+    # ... and so does one rebuilt from state(), which replays the last
+    # step's outputs until it steps again
+    m3 = ScalarModel(k, **m1.state())
+    assert m3.replay() == last and m3.state() == m1.state()
+    outs = [m3.step(v) for v in series[100:]]
+    assert np.array([z for z, _ in outs]).tobytes() == want[100:].tobytes()
+    assert m3.replay() == outs[-1]
 
 
 def test_step_expected_is_prior_window_mean():
@@ -112,9 +119,12 @@ def test_joint_step_equals_rcf_scorer_joint():
     # sequence
     half = JointModel(factory, 2)
     got_half = steps(half, series[:60])
-    rebuilt = JointModel(factory, 2, model=half.model_bytes,
-                         scored_cnt=half.scored_cnt, last_vec=half.last_vec)
+    rebuilt = JointModel(factory, 2, **half.state())
+    # until it steps, the rebuilt model replays the last step's outputs
+    assert rebuilt.replay()[0] == got_half[-1][0]
+    assert rebuilt.replay()[1:] == got_half[-1][1:]
     got_half += steps(rebuilt, series[60:])
+    assert rebuilt.replay()[2] == got_half[-1][2]
 
     warm = ~np.isnan(z)
     assert (~np.isnan(attr[:, 0])).any()           # some point attributed

@@ -51,15 +51,18 @@ def _oracle(positions, node):
                         best[s] = e
             out = set(best.items())
         else:
-            # every window spanned by a combo of DISTINCT positions,
-            # window gap <= slop
+            # all combos of DISTINCT positions; per distinct end the
+            # maximal start (the minimal covering window per right end)
+            best = {}
             for combo in itertools.product(*subs):
                 pos_used = [c[0] for c in combo]
                 if len(set(pos_used)) != len(pos_used):
                     continue
                 s, e = min(pos_used), max(pos_used) + 1
                 if (e - s) - len(combo) <= node["slop"]:
-                    out.add((s, e))
+                    if e not in best or s > best[e]:
+                        best[e] = s
+            out = {(s, e) for e, s in best.items()}
         return out
     if k == "first":
         return {(s, e) for s, e in _oracle(positions, node["inner"])
