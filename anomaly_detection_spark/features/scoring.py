@@ -102,8 +102,8 @@ class ScalarModel(_StreamModel):
     the recurrence the scalar tick, the historical pieces and the
     streaming detector all drive (the reference's ``ResultProcessor``
     → ``CheckpointDao`` round trip).  Built from a state row's
-    ``(vals, model bytes, scored count, last value)``, nulls reading
-    as a fresh model.  The model is the prior-k window ``vals``, or,
+    ``(vals, model bytes, scored count, last value, last z, last
+    expected)``, nulls reading as a fresh model.  The model is the prior-k window ``vals``, or,
     given a ``scorer_factory``, the stream restored on the first
     :meth:`step`."""
 
